@@ -356,7 +356,7 @@ object Bench {
       (cur, flag)
     } catch { case e: Throwable =>
       (cur0,
-        s"""{"guard_error":"${esc(String.valueOf(e.getMessage).take(300))}"}""")
+        s"""{"guard_error":"${Json.esc(String.valueOf(e.getMessage).take(300))}"}""")
     }
 
   // ---- run-over-run state diagnostics (r15 verdict #3; r16 #2) ----
@@ -516,27 +516,6 @@ object Bench {
   private def num(v: Double): String =
     "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
-  /** JSON string-literal escape for hand-assembled artifact lines: a
-    * note containing a quote or backslash must never corrupt the line
-    * (r13, ADVICE) — and neither may a NEWLINE or control char (r15:
-    * exception messages carry plan trees; a raw \n would split the
-    * one-line artifact, poisoning BENCH_LOCAL.jsonl's line-oriented
-    * lineage and the driver's JSON parse). */
-  private def esc(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '"' => sb.append("\\\"")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' =>
-        sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
   /** Flag-note discipline, enforced at JSON-assembly time (r12): a
     * flagged key WITHOUT a diagnosis is indistinguishable from an
     * undiagnosed super-linear shape, so every flagged key maps to a
@@ -559,7 +538,7 @@ object Bench {
         "exists for this key; auto-note inserted by the flag-note " +
         "discipline - needs a stage-counted diagnosis next round"))
     } ++ voluntary.toSeq.sortBy(_._1).filterNot(v => flaggedKeys.contains(v._1))
-    entries.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
+    entries.map { case (k, v) => "\"" + Json.esc(k) + "\":\"" + Json.esc(v) + "\"" }
       .mkString("{", ",", "}")
   }
 
@@ -664,28 +643,7 @@ object Bench {
         s"[bench] tmp sweep: $n stale fixture dirs, $b bytes reclaimed")
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the shipped extensions (r16): the bench session now runs the
-      // library's user-facing configuration — the graft SQL parser
-      // (needed by the lifecycle's optimize_waved_sql campaign), the
-      // registered functions, and the scan-stats rule — exactly what a
-      // production session built per the README gets. Pre-r16 numbers
-      // ran without the stats rule; the code fingerprint in each
-      // artifact line attributes any resulting plan shift.
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // at bench scale the shuffles are KB-sized: let AQE coalesce to the
-      // advisory size instead of splitting to max parallelism — task
-      // launch overhead dominates otherwise (local[32] was 2x local[4])
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val queries = SparkEntry.queries
     val names = Headline.filter(queries.contains)
     // JVM/codegen warmup outside the measured window: touch every fact
@@ -763,7 +721,7 @@ object Bench {
         val mismatchJson =
           (if (setMismatch) """"set_mismatch":true,""" else "") +
             (if (codeMismatch)
-              s""""prior_code":"${esc(p.code.getOrElse("unknown"))}",""" +
+              s""""prior_code":"${Json.esc(p.code.getOrElse("unknown"))}",""" +
                 """"code_mismatch":true,"""
             else "")
         val (med0, _, _) = inflationStats(results.toMap, p.queries)
@@ -810,7 +768,7 @@ object Bench {
       // truncated: an unbounded message could push the compact
       // last-resort line past the driver's 2000-char stdout tail
       loadFlagJson =
-        s"""{"guard_error":"${esc(String.valueOf(e.getMessage).take(300))}"}"""
+        s"""{"guard_error":"${Json.esc(String.valueOf(e.getMessage).take(300))}"}"""
     }
     // the guard re-run counts as a run: a query whose CONTRACT runs all
     // failed but whose re-run succeeded must surface in partial_failure
@@ -877,7 +835,7 @@ object Bench {
       // label had drifted to 72 queries) and the hash pins its exact
       // membership for guard comparisons; "code" is the fingerprint the
       // guard uses to prefer same-code priors
-      val line = s"""{"metric":"total","value":$total,"unit":"sec","query_set":"r16-${results.size}q","query_set_hash":"$qsHash","code":"${esc(codeFingerprint)}","runs_per_query":$RunsPerQuery,"partial":$partial,"elapsed_sec":${num(elapsedSec)},"budget_sec":${num(budgetSec)},"noise_band":$noiseBand,"load_flag":$loadFlagJson,"total_r4set":$totalR4,"failed":$failedJson,"partial_failure":${partialFailed.mkString("[", ",", "]")},"queries":$qs,$sj,"sf":"$sfDir"}"""
+      val line = s"""{"metric":"total","value":$total,"unit":"sec","query_set":"r16-${results.size}q","query_set_hash":"$qsHash","code":"${Json.esc(codeFingerprint)}","runs_per_query":$RunsPerQuery,"partial":$partial,"elapsed_sec":${num(elapsedSec)},"budget_sec":${num(budgetSec)},"noise_band":$noiseBand,"load_flag":$loadFlagJson,"total_r4set":$totalR4,"failed":$failedJson,"partial_failure":${partialFailed.mkString("[", ",", "]")},"queries":$qs,$sj,"sf":"$sfDir"}"""
       println(line)
       // durable full-JSON trail: the driver records only a 2000-char
       // tail of stdout, so every emission also lands on disk
@@ -907,7 +865,7 @@ object Bench {
           try body
           catch { case e: Throwable =>
             System.err.println(s"[bench] section $key failed: ${e.getMessage}")
-            s"""{"error":"${esc(String.valueOf(e.getMessage))}"}"""
+            s"""{"error":"${Json.esc(String.valueOf(e.getMessage))}"}"""
           }
       sections(key) = withTmpDelta(sections(key),
         graft.GraftTmp.entries() - tmpBefore)
@@ -999,7 +957,7 @@ object Bench {
     // headline partial, the full final artifact, or this) parses. The
     // full artifact with the per-query map is the line above and every
     // BENCH_LOCAL.jsonl entry.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","query_set":"r16-${results.size}q","query_set_hash":"$qsHash","code":"${esc(codeFingerprint)}","n_queries":${results.size},"partial":false,"total_r4set":$totalR4,"failed":$failedJson,"partial_failure":${partialFailed.mkString("[", ",", "]")},"compact":true,"load_flag":$loadFlagJson,"elapsed_sec":${num(elapsedSec)},"budget_sec":${num(budgetSec)},"full_artifact":"BENCH_LOCAL.jsonl","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","query_set":"r16-${results.size}q","query_set_hash":"$qsHash","code":"${Json.esc(codeFingerprint)}","n_queries":${results.size},"partial":false,"total_r4set":$totalR4,"failed":$failedJson,"partial_failure":${partialFailed.mkString("[", ",", "]")},"compact":true,"load_flag":$loadFlagJson,"elapsed_sec":${num(elapsedSec)},"budget_sec":${num(budgetSec)},"full_artifact":"BENCH_LOCAL.jsonl","sf":"$sfDir"}""")
     spark.stop()
   }
 
@@ -1113,7 +1071,7 @@ object Bench {
         (System.nanoTime() - b0) / 1e9
       } catch { case e: Throwable =>
         System.err.println(s"[bench] postings build failed: ${e.getMessage}")
-        return s"""{"skipped":"postings build failed: ${esc(String.valueOf(e.getMessage))}"}"""
+        return s"""{"skipped":"postings build failed: ${Json.esc(String.valueOf(e.getMessage))}"}"""
       } finally releaseCaches(spark)
     def measureOnce(idx: String): Double = {
       val q0 = System.nanoTime()
@@ -1995,12 +1953,10 @@ object Bench {
     * bytes. */
   private def writeParts(spark: SparkSession,
       df: org.apache.spark.sql.DataFrame): Int = {
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    // clamp in BigInt BEFORE toInt: an unknown-stats sentinel
-    // (Long.MaxValue) or future huge estimate must saturate at the cap,
-    // never wrap through the low 32 bits into an arbitrary count
-    val byBytes = ((est / BigInt(32L * 1024 * 1024)) + 1).min(BigInt(2048)).toInt
-    math.max(spark.sparkContext.defaultParallelism, byBytes)
+    // unknown stats fall back to the parallelism floor
+    graft.tables.Tables.pinnedParts(df, 0L,
+        bytesPerPart = 32L * 1024 * 1024, maxParts = 2048)
+      .getOrElse(spark.sparkContext.defaultParallelism)
   }
 
   private[graft] def maintenanceLifecycle(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {

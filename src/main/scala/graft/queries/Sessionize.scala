@@ -36,11 +36,8 @@ object Sessionize {
     val raw = Tables.events(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"))
-    val sc = spark.sparkContext
-    (if (raw.queryExecution.optimizedPlan.stats.sizeInBytes >=
-        BigInt(512L * 1024) * sc.defaultParallelism)
-      raw.repartition(sc.defaultParallelism, col("user_id"))
-    else raw)
+    Tables.pinnedParts(raw, 512L * 1024)
+      .fold(raw)(raw.repartition(_, col("user_id")))
       .withColumn("brk",
         when(col("ts_us") - lag("ts_us", 1).over(order) > GapUs, 1)
           .otherwise(0))

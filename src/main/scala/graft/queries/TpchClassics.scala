@@ -101,23 +101,18 @@ object TpchClassics {
     // CPU-dense agg stage to 2 tasks at sf1 (stage-counted: 5.9 s on
     // 2 of 32 cores). Bytes-gated per core so KB-scale fixtures keep
     // their coalesced 1-task plans (the r16 c8 anti-scaling lesson).
-    val sc = spark.sparkContext
     val liRaw = lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-    val liEst = liRaw.queryExecution.optimizedPlan.stats.sizeInBytes
-    val li =
-      if (liEst >= BigInt(512L * 1024) * sc.defaultParallelism) {
-        // partition count scales with input (≈32 MB of scan per
-        // partition, floored at the core count): the fused
-        // join+aggregate stage holds a per-task hash-join build AND a
-        // per-task (okey, skey) agg map — at one-partition-per-core
-        // grain the sf10 stage spilled 1.3 GB into sort-based agg
-        // fallback; halving per-task state keeps both structures
-        // resident (guide §5 "more partitions, smaller per-task state")
-        val parts = math.max(sc.defaultParallelism,
-          (liEst / BigInt(8L * 1024 * 1024)).toInt + 1)
-        liRaw.repartition(parts, col("l_orderkey"))
-      } else liRaw
+    // partition count scales with input (one per 8 MB of estimate,
+    // floored at the core count): the fused join+aggregate stage holds a
+    // per-task hash-join build AND a per-task (okey, skey) agg map — at
+    // one-partition-per-core grain the sf10 stage spilled 1.3 GB into
+    // sort-based agg fallback; halving per-task state keeps both
+    // structures resident (guide §5 "more partitions, smaller per-task
+    // state")
+    val li = pinnedParts(liRaw, 512L * 1024,
+        bytesPerPart = 8L * 1024 * 1024)
+      .fold(liRaw)(liRaw.repartition(_, col("l_orderkey")))
     // at the decades orders outgrows the broadcast region and the
     // planner fell back to sort-merge: two full sorts of the billion-
     // row side for an equi-join (stage-counted at sf10: 209 s cpu,
@@ -126,8 +121,7 @@ object TpchClassics {
     // (guide §3.1); below the gate the auto-broadcast keeps winning.
     val ordRaw = orders(spark, dir).select(col("o_orderkey"), col("o_orderdate"))
     val ord =
-      if (ordRaw.queryExecution.optimizedPlan.stats.sizeInBytes >=
-          BigInt(1024L * 1024) * sc.defaultParallelism)
+      if (pinnedParts(ordRaw, 1024L * 1024).isDefined)
         ordRaw.hint("shuffle_hash")
       else ordRaw
     val l = li

@@ -86,9 +86,25 @@ final class GraftTable private (
   // ---- snapshot reconstruction (incremental action log) ----------------
 
   private def rootKey: String = root.toUri.getPath
-  private def actionsPath(v: Long) = new Path(logDir, f"v$v%020d.actions.tsv")
-  private def legacyFilesPath(v: Long) = new Path(logDir, f"v$v%020d.files")
-  private def manifestCkptPath(v: Long) = new Path(logDir, f"v$v%020d.ckpt.parquet")
+  private def logPath(v: Long, ext: String) = new Path(logDir, f"v$v%020d.$ext")
+  private def actionsPath(v: Long) = logPath(v, "actions.tsv")
+  private def legacyFilesPath(v: Long) = logPath(v, "files")
+  private def constraintsPath(v: Long) = logPath(v, "constraints.tsv")
+  private def statsPath(v: Long) = logPath(v, "stats.tsv")
+  private def generatedPath(v: Long) = logPath(v, "generated.tsv")
+  private def dvPath(v: Long) = logPath(v, "dv.tsv")
+  private def colmapPath(v: Long) = logPath(v, "colmap.tsv")
+  private def schemaPath(v: Long) = logPath(v, "schema")
+  private def propertiesPath(v: Long) = logPath(v, "properties.tsv")
+  private def claimPath(v: Long) = logPath(v, "claim")
+  private def manifestCkptPath(v: Long) = logPath(v, "ckpt.parquet")
+  /** Every per-version sidecar except the `.json` commit marker and the
+    * checkpoints, claim last: what a failed commit sweeps and what
+    * `cleanupLog` drops with the marker. */
+  private def versionSidecars(v: Long): Seq[Path] =
+    Seq(actionsPath(v), legacyFilesPath(v), constraintsPath(v), statsPath(v),
+      generatedPath(v), dvPath(v), colmapPath(v), schemaPath(v),
+      propertiesPath(v), claimPath(v))
 
   private def encU(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
   private def decU(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
@@ -116,8 +132,8 @@ final class GraftTable private (
 
   /** Pre-r6 full-snapshot manifest (vN.files + full sidecars). */
   private def legacySnapshot(v: Long): Snapshot = {
-    val statsP = new Path(logDir, f"v$v%020d.stats.tsv")
-    val dvP = new Path(logDir, f"v$v%020d.dv.tsv")
+    val statsP = statsPath(v)
+    val dvP = dvPath(v)
     Snapshot(
       readLines(legacyFilesPath(v)).toVector,
       if (fs.exists(statsP)) parseStatsLines(readLines(statsP)) else Map.empty,
@@ -135,8 +151,8 @@ final class GraftTable private (
 
   private[graft] def readActionRecord(v: Long): Actions = {
     val lines = readLines(actionsPath(v))
-    val statsP = new Path(logDir, f"v$v%020d.stats.tsv")
-    val dvP = new Path(logDir, f"v$v%020d.dv.tsv")
+    val statsP = statsPath(v)
+    val dvP = dvPath(v)
     Actions(
       lines.collect { case l if l.startsWith("a\t") =>
         l.substring(2).split('\t') match {
@@ -309,7 +325,7 @@ final class GraftTable private (
     * table. */
   private def claimVersion(v: Long): Unit =
     LogStore.resolve(spark)
-      .createExclusive(fs, new Path(logDir, f"v$v%020d.claim"))
+      .createExclusive(fs, claimPath(v))
 
   /** Commit version `currentVersion + 1` as an ACTION RECORD: `adds`
     * enter the live set, `removes(base)` leave it — computed AFTER the
@@ -413,18 +429,13 @@ final class GraftTable private (
         val landed = scala.util.Try(
           fs.exists(new Path(logDir, f"v$v%020d.json"))).getOrElse(true)
         if (!landed) {
-          Seq(f"v$v%020d.actions.tsv", f"v$v%020d.constraints.tsv",
-              f"v$v%020d.generated.tsv", f"v$v%020d.stats.tsv",
-              f"v$v%020d.dv.tsv", f"v$v%020d.colmap.tsv",
-              f"v$v%020d.schema", f"v$v%020d.properties.tsv",
-              f"v$v%020d.claim")
-            .foreach(n => scala.util.Try(fs.delete(new Path(logDir, n), false)))
+          versionSidecars(v).foreach(p => scala.util.Try(fs.delete(p, false)))
           // deleting the claim FILE frees the slot on the filesystem;
           // stores with JVM-side claim state (single-driver registry)
           // must also forget it or every retry of v throws "claimed in
           // this JVM" and the table wedges at currentVersion+1 == v
           scala.util.Try(LogStore.resolve(spark)
-            .release(fs, new Path(logDir, f"v$v%020d.claim")))
+            .release(fs, claimPath(v)))
         }
         throw e
     }
@@ -540,11 +551,6 @@ final class GraftTable private (
           .warn(s"bloom index build skipped for $v: ${e.getMessage}") }
     val dvc = dvChanges.map(f => f(v - 1)).getOrElse(Map.empty)
     val actionsP = actionsPath(v)
-    val constraintsPath = new Path(logDir, f"v$v%020d.constraints.tsv")
-    val generatedPath = new Path(logDir, f"v$v%020d.generated.tsv")
-    val statsPath = new Path(logDir, f"v$v%020d.stats.tsv")
-    val dvPath = new Path(logDir, f"v$v%020d.dv.tsv")
-    val colmapPath = new Path(logDir, f"v$v%020d.colmap.tsv")
     val jsonPath = new Path(logDir, f"v$v%020d.json")
     def writeAtomic(target: Path, content: String): Unit = {
       val tmp = new Path(target.getParent, s".${target.getName}.tmp")
@@ -563,24 +569,24 @@ final class GraftTable private (
         case (f, Some(sz)) => s"a\t${encU(f)}\t$sz"
         case (f, None) => s"a\t${encU(f)}"
       }).mkString("\n"))
-    writeAtomic(constraintsPath, cs.toSeq.sortBy(_._1)
+    writeAtomic(constraintsPath(v), cs.toSeq.sortBy(_._1)
       .map { case (n, e) => s"$n\t$e" }.mkString("\n"))
-    writeAtomic(generatedPath, gen.toSeq.sortBy(_._1)
+    writeAtomic(generatedPath(v), gen.toSeq.sortBy(_._1)
       .map { case (n, e) => s"$n\t$e" }.mkString("\n"))
-    writeAtomic(new Path(logDir, f"v$v%020d.properties.tsv"),
+    writeAtomic(propertiesPath(v),
       props.toSeq.sortBy(_._1)
         .map { case (k, vl) => s"${encU(k)}\t${encU(vl)}" }.mkString("\n"))
-    writeAtomic(statsPath, stats.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
+    writeAtomic(statsPath(v), stats.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
       cols.toSeq.sortBy(_._1).map { case (c, (tag, lo, hi)) =>
         s"${encU(f)}\t${encU(c)}\t$tag\t${encU(lo)}\t${encU(hi)}" }
     }.mkString("\n"))
-    writeAtomic(dvPath, dvc.toSeq.sortBy(_._1).map { case (f, runs) =>
+    writeAtomic(dvPath(v), dvc.toSeq.sortBy(_._1).map { case (f, runs) =>
       s"${encU(f)}\t${GraftTable.encodeRuns(runs)}" }.mkString("\n"))
-    writeAtomic(colmapPath,
+    writeAtomic(colmapPath(v),
       (cmap.entries.map { case (l, ph) => s"${encU(l)}\t${encU(ph)}\ta" } ++
         cmap.retired.map(ph => s"-\t${encU(ph)}\tr")).mkString("\n"))
     schemaRec.foreach(s =>
-      writeAtomic(new Path(logDir, f"v$v%020d.schema"), s.json))
+      writeAtomic(schemaPath(v), s.json))
     val metricsJson = metrics.toSeq.sortBy(_._1)
       .map { case (k, vv) => s""""${jsonEscape(k)}":"${jsonEscape(vv)}"""" }
       .mkString("{", ",", "}")
@@ -769,7 +775,7 @@ final class GraftTable private (
   /** Physical schema recorded with `version`, if any. */
   def schemaOf(version: Long): Option[StructType] = {
     if (version < 0) return None
-    val p = new Path(logDir, f"v$version%020d.schema")
+    val p = schemaPath(version)
     if (!fs.exists(p)) return None
     val in = fs.open(p)
     try scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(
@@ -832,7 +838,7 @@ final class GraftTable private (
 
   def colMapOf(version: Long): ColMap = {
     if (version < 0) return ColMap(Nil, Nil)
-    val p = new Path(logDir, f"v$version%020d.colmap.tsv")
+    val p = colmapPath(version)
     if (!fs.exists(p)) return ColMap(Nil, Nil)
     val in = fs.open(p)
     def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
@@ -1645,7 +1651,7 @@ final class GraftTable private (
     * or nonexistent versions). */
   def constraintsOf(version: Long): Map[String, String] = {
     if (version < 0) return Map.empty
-    val p = new Path(logDir, f"v$version%020d.constraints.tsv")
+    val p = constraintsPath(version)
     if (!fs.exists(p)) return Map.empty
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
@@ -1692,7 +1698,7 @@ final class GraftTable private (
   /** Property map committed with `version` (empty before any SET). */
   def propertiesOf(version: Long): Map[String, String] = {
     if (version < 0) return Map.empty
-    val p = new Path(logDir, f"v$version%020d.properties.tsv")
+    val p = propertiesPath(version)
     if (!fs.exists(p)) return Map.empty
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
@@ -1842,7 +1848,7 @@ final class GraftTable private (
   /** Generated-column set committed with `version`. */
   def generatedOf(version: Long): Map[String, String] = {
     if (version < 0) return Map.empty
-    val p = new Path(logDir, f"v$version%020d.generated.tsv")
+    val p = generatedPath(version)
     if (!fs.exists(p)) return Map.empty
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
@@ -4293,12 +4299,7 @@ final class GraftTable private (
       if (fs.exists(json)) {
         // delete the commit marker LAST so a crash mid-cleanup never
         // leaves a committed version with missing sidecars
-        Seq(f"v$v%020d.actions.tsv", f"v$v%020d.files",
-            f"v$v%020d.constraints.tsv", f"v$v%020d.stats.tsv",
-            f"v$v%020d.generated.tsv", f"v$v%020d.dv.tsv",
-            f"v$v%020d.colmap.tsv", f"v$v%020d.schema",
-            f"v$v%020d.properties.tsv", f"v$v%020d.claim")
-          .foreach(n => fs.delete(new Path(logDir, n), false))
+        versionSidecars(v).foreach(fs.delete(_, false))
         fs.delete(json, false)
         dropped += 1
       }

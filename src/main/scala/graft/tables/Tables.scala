@@ -74,14 +74,33 @@ object Tables {
     // measured: +0.3-0.7 s per query at the 2.5 MB sf0.1 fixtures),
     // while at the sf1/sf10 decades the same sites win. md5-class
     // kernels (~200 ops/byte) pass 0 — they win even on MB-sized input.
-    if (minBytesPerCore > 0L) {
-      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (est < BigInt(minBytesPerCore) * sc.defaultParallelism) return df
-    }
+    if (minBytesPerCore > 0L && pinnedParts(df, minBytesPerCore).isEmpty)
+      return df
     // partition count pinned (derived from the session's cores, never a
     // constant): an unpinned repartition(key) is AQE-coalescible, and
     // with KB-sized inputs AQE folds it straight back to one partition —
     // re-serializing the very kernel work this exchange exists to spread
     df.repartition(sc.defaultParallelism, key)
+  }
+
+  /** The byte gate for pinned exchanges: reads `df`'s optimizer size
+    * estimate once and returns the partition count to pin, or None to
+    * keep the unpinned plan. None when the estimate is below
+    * `minBytesPerCore` per core, or unknown — at or above
+    * `spark.sql.defaultSizeInBytes`, the size Spark assigns to relations
+    * it cannot measure (RDD-backed frames), so a sentinel never reads as
+    * "huge input". The count is the session's parallelism, raised to one
+    * partition per `bytesPerPart` of estimate capped at `maxParts`; the
+    * cap is applied in BigInt, so no estimate wraps through `toInt`. */
+  def pinnedParts(df: DataFrame, minBytesPerCore: Long,
+      bytesPerPart: Long = Long.MaxValue,
+      maxParts: Int = Int.MaxValue): Option[Int] = {
+    val spark = df.sparkSession
+    val cores = spark.sparkContext.defaultParallelism
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (est >= spark.sessionState.conf.defaultSizeInBytes ||
+        est < BigInt(minBytesPerCore) * cores) None
+    else Some(math.max(cores,
+      (est / bytesPerPart + 1).min(BigInt(maxParts)).toInt))
   }
 }

@@ -430,12 +430,8 @@ object TextAnalysis {
     // postings win from the spread; sf0.1's ~0.8 MB table stays under
     // it (sf1's 7.9 MB estimate sat just under the 256 KB/core gate
     // the first cut used, leaving the 9 s stage serial)
-    val sc = postings.sparkSession.sparkContext
-    val in =
-      if (postings.queryExecution.optimizedPlan.stats.sizeInBytes >=
-          BigInt(64L * 1024) * sc.defaultParallelism)
-        postings.repartition(sc.defaultParallelism, col("doc_id"))
-      else postings
+    val in = graft.tables.Tables.pinnedParts(postings, 64L * 1024)
+      .fold(postings)(postings.repartition(_, col("doc_id")))
     in.groupBy("doc_id")
       .agg(collect_list(struct(col("positions"), col("word"))).as("es"))
       .select(col("doc_id"), array_sort(flatten(expr(

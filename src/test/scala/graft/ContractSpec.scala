@@ -78,4 +78,29 @@ class ContractSpec extends AnyFunSuite {
         s"unjustified: ${rowsOnly -- justified}; " +
         s"stale justifications: ${justified -- rowsOnly}")
   }
+
+  test("GraftSession.scala is the only place a SparkSession is built") {
+    // comment lines are skipped (docs may name the builder); spans are
+    // not stripped, since `/*` and `//` also occur inside string literals
+    def isComment(line: String): Boolean = {
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
+    }
+    val builder = """SparkSession\s*\.\s*builder\s*\(""".r
+    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val files = Seq("src/main", "src/test").flatMap(d => scalaFiles(new java.io.File(d)))
+    assert(files.exists(_.getName == "GraftSession.scala"))
+    val builders = files.filter { f =>
+      val src = scala.io.Source.fromFile(f)(scala.io.Codec.UTF8)
+      // code lines rejoined, so a chain split over lines still matches
+      try builder.findFirstIn(src.getLines().filterNot(isComment).mkString("\n")).isDefined
+      finally src.close()
+    }.map(_.getPath)
+    assert(builders == Seq("src/main/scala/graft/GraftSession.scala"),
+      s"SparkSession builders outside GraftSession.scala: $builders")
+  }
 }
