@@ -115,20 +115,25 @@ object Dedup {
     // the md5 kernel into a Filter below this pipeline — every doc was
     // sketched TWICE in the cache build (stage-counted at sf10: 126 s
     // cpu → 79 s with the raw-text gate).
-    // The doc_id repartition before the persist is DELIBERATE and was
-    // measured load-bearing (r17: removing it forced two 373 MB skV
-    // exchanges at sf10): the cache's hashpartitioning(doc_id) output
-    // partitioning satisfies BOTH verify joins' requirements (keys a
-    // and b are doc_ids), so the sketch table is shuffled once here and
-    // never again — two exchange-free sort-merge arms for one build-
-    // time exchange (guide §2.4 "two operations keyed the same way can
-    // share one exchange").
+    // The doc_id repartition before the persist is DELIBERATE (r17:
+    // removing it forced two 373 MB skV exchanges at sf10): the cache's
+    // hashpartitioning(doc_id) satisfies BOTH verify joins (keys a and b
+    // are doc_ids), so the sketch table is shuffled once here and never
+    // again. Its count is PINNED to the session's cores because the
+    // cache freezes it: an unpinned repartition takes
+    // spark.sql.shuffle.partitions, which AQE cannot coalesce inside a
+    // cached plan, so in a session left at Spark's default every stage
+    // reading the sketch ran 200 tasks on a few hundred docs (805 tasks
+    // for the warm operator vs 21 pinned). Pinned, it is semantically
+    // equal to spread's exchange, and EnsureRequirements drops it
+    // whenever spread fired; AQE then sizes the candidate side of each
+    // verify join to match (plan-checked with shuffle.partitions = 200).
     val sk = spread(documents(spark, dir).filter(hasShingleWindow),
         col("doc_id"))
       .select(col("doc_id"),
         graft.functions.SigKernelColumns.md5_perm_sketch(
           col("text"), 5, NumPerm).as("sketch"))
-      .repartition(col("doc_id"))
+      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // band identity as PACKED 62-bit longs (r17): a band's signature is
     // its RowsPerBand consecutive int lanes; two lanes (each < 2^31)
@@ -571,7 +576,13 @@ object Dedup {
     // that is the full LSH candidate funnel, for clusterMinsh the
     // min-md5 census join (guide §2.4: don't compute things twice).
     // The union of two scans of the materialized half is cheap.
-    val e0 = edges.cache()
+    // The cache freezes the partitioning of `edges`' last exchange,
+    // which a caller's plan sizes from spark.sql.shuffle.partitions and
+    // AQE cannot coalesce inside a cache: the narrow coalesce caps it at
+    // the session's cores, so no round's stages track that setting (a
+    // no-op when `edges` already has at most one partition per core).
+    val e0 = edges.coalesce(edges.sparkSession.sparkContext.defaultParallelism)
+      .cache()
     val sym = e0.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(e0.select(col("b").as("src"), col("a").as("dst")))
       .cache()

@@ -3303,11 +3303,13 @@ final class GraftTable private (
     // time. With up to 16 writers open per task the sort disappears;
     // tables with more concurrent partition values per task fall back
     // to the sorted path automatically (Spark sorts the remainder).
-    // Scoped to this write and restored — the session's value is the
-    // user's. Pre-sorted inputs (OPTIMIZE's range bins) plan no sort
-    // either way and are unaffected.
+    // Scoped to this write and restored exactly — the session's value
+    // is the user's: a key the user never set is unset again (conf.get
+    // would return the default, and writing that back left the key set
+    // after every partitioned write). Pre-sorted inputs (OPTIMIZE's
+    // range bins) plan no sort either way and are unaffected.
     val confKey = "spark.sql.maxConcurrentOutputFileWriters"
-    val prior = scala.util.Try(spark.conf.get(confKey)).toOption
+    val prior = spark.conf.getAll.get(confKey)
     try {
       if (partitionColumns.nonEmpty) {
         scala.util.Try(spark.conf.set(confKey, "16"))
@@ -3672,16 +3674,20 @@ final class GraftTable private (
     val metaScan = extendEvolved(alignToRecorded(
       toLogical(readFilesMeta(manifestFiles(), dvNow,
         widenHint(currentVersion)), colMap), currentVersion))
-    // measured broadcast for the key probe (r17, guide §3.1): the
-    // semi-join's key side comes from a distinct over the CACHED
-    // source, so counting it is cheap, and below the gate an explicit
-    // broadcast keeps the planner (whose estimate for a derived
-    // distinct is useless) from shuffling the whole __path-carrying
-    // meta scan against it — stage-counted at sf10: a 495 MB exchange
-    // + 597 MB sort spill to probe 190 K keys. Above the gate the
-    // shuffle is the right plan and stays.
+    // measured broadcast for the key probe (r17, guide §3.1): below
+    // the gate an explicit broadcast keeps the planner from shuffling
+    // the whole __path-carrying meta scan against the key side —
+    // stage-counted at sf10: a 495 MB exchange + 597 MB sort spill to
+    // probe 190 K keys. The gate is in BYTES, so a wide or composite
+    // key cannot slip a huge broadcast under it. The key side is a
+    // distinct over the CACHED source: its estimate is the cache's
+    // measured bytes scaled to the key columns' share of the row once
+    // the multi-match guard above has materialized the cache, else the
+    // source plan's estimate (unknown reads as huge). No job runs to
+    // decide. Above the gate the shuffle is the right plan.
     val srcKeysB =
-      if (srcKeys.limit(4000001).count() <= 4000000L) broadcast(srcKeys)
+      if (srcKeys.queryExecution.optimizedPlan.stats.sizeInBytes <=
+          GraftTable.MergeBroadcastKeyBytes) broadcast(srcKeys)
       else srcKeys
     val affected = (if (notMatchedBySource.isEmpty)
         metaScan.join(srcKeysB, tKeys, "left_semi")
@@ -4533,6 +4539,11 @@ object GraftTable {
     * rewrite deliberately emitted below target/2 — the churn guard
     * treats them as converged (r17; plain rewrites carry "keys"). */
   val ClusteredKindSplit = "keys-split"
+
+  /** Largest MERGE key set, in estimated bytes, whose affected-file probe
+    * broadcasts it: the footprint of the former 4 M-key gate for one
+    * long key. */
+  private[table] val MergeBroadcastKeyBytes: Long = 32L << 20
 
   /** Commits between txn-map checkpoints — the SetTransaction lookup
     * reads one checkpoint + at most this many commit-record tails. */
