@@ -30,7 +30,7 @@ object Streaming {
 
   private def eventStream(spark: SparkSession, dir: String): DataFrame = {
     // events.parquet may store TIMESTAMP(NANOS); a bare session fails at
-    // read time without this (Tables.table sets it for batch, not streams).
+    // read time without this (Tables.events sets it for batch, not streams).
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     catch { case _: Throwable => () }
     val tsType = spark.read.parquet(s"$dir/events.parquet")

@@ -192,13 +192,13 @@ object BloomIndex {
               Option(r.get(i + 1)).map(b => c -> b.asInstanceOf[Array[Byte]])
             }
             if (blooms.nonEmpty) {
-              val target = indexPath(logDir, fileKey)
-              val tmp = new Path(target.getParent, s".${target.getName}.tmp")
-              val out = fs.create(tmp, true)
-              try out.write(render(fileKey, blooms).getBytes(StandardCharsets.UTF_8))
-              finally out.close()
-              if (fs.rename(tmp, target)) written += 1
-              else fs.delete(tmp, false) // a concurrent builder won: same bits
+              try {
+                LogStore.writeAtomic(fs, indexPath(logDir, fileKey),
+                  render(fileKey, blooms).getBytes(StandardCharsets.UTF_8))
+                written += 1
+              } catch { // a concurrent builder won: same bits
+                case _: GraftTable.CommitConflictException => ()
+              }
             }
           }
         }

@@ -51,9 +51,11 @@ object Bucketing {
   /** Query entry: write → join → materialize → drop catalog entries. */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     // disable auto-broadcast so the plan is the bucketed SortMergeJoin
-    // being demonstrated (the spec asserts zero Exchanges around it)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // being demonstrated (the spec asserts zero Exchanges around it);
+    // restored exactly: a key the session never set is unset again
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, "-1")
     try {
       val pair = writeBucketed(spark, dir)
       val out = join(spark, pair)
@@ -62,7 +64,10 @@ object Bucketing {
       spark.sql(s"DROP TABLE IF EXISTS ${pair.ordersTable}")
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

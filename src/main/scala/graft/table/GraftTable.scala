@@ -59,7 +59,7 @@ final class GraftTable private (
 
   private val root = new Path(path)
   private val logDir = new Path(root, "_graft_log")
-  private def fs: FileSystem = root.getFileSystem(spark.sessionState.newHadoopConf())
+  private lazy val fs: FileSystem = root.getFileSystem(spark.sessionState.newHadoopConf())
 
   // ---- manifest plumbing ----------------------------------------------
 
@@ -552,18 +552,10 @@ final class GraftTable private (
     val dvc = dvChanges.map(f => f(v - 1)).getOrElse(Map.empty)
     val actionsP = actionsPath(v)
     val jsonPath = new Path(logDir, f"v$v%020d.json")
-    def writeAtomic(target: Path, content: String): Unit = {
-      val tmp = new Path(target.getParent, s".${target.getName}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
-      if (!fs.rename(tmp, target)) {
-        // unreachable once claimVersion held (the claim is the mutex);
-        // kept as belt-and-braces for filesystems that fail the rename
-        fs.delete(tmp, false)
-        throw new GraftTable.CommitConflictException(
-          s"commit conflict renaming to $target")
-      }
-    }
+    // a rename conflict is unreachable once claimVersion held (the
+    // claim is the mutex); LogStore still throws on a failed rename
+    def writeAtomic(target: Path, content: String): Unit =
+      LogStore.writeAtomic(fs, target, content.getBytes(StandardCharsets.UTF_8))
     writeAtomic(actionsP,
       (removed.map(f => s"r\t${encU(f)}") ++ sizedAdds.map {
         case (f, Some(sz)) => s"a\t${encU(f)}\t$sz"
@@ -671,20 +663,17 @@ final class GraftTable private (
         inputs
       }))
 
-  /** All data files currently on disk (relative paths), manifest or not. */
-  private def listDataFiles(): Seq[(String, Long, Long)] = {
+  /** All data files currently on disk (relative paths), manifest or
+    * not; the log and leftover staging dirs are not walked. */
+  private[graft] def listDataFiles(): Seq[(String, Long, Long)] = {
     if (!fs.exists(root)) return Nil
-    val it = fs.listFiles(root, true)
-    val out = Seq.newBuilder[(String, Long, Long)]
     val rootUri = root.toUri.getPath
-    while (it.hasNext) {
-      val s = it.next()
-      val p = s.getPath.toUri.getPath
-      if (p.endsWith(".parquet") && !p.contains("_graft_log") &&
-          !p.contains("/.staging-"))
-        out += ((p.stripPrefix(rootUri).stripPrefix("/"), s.getLen, s.getModificationTime))
-    }
-    out.result()
+    GraftTable.listTree(fs, root,
+        d => d != "_graft_log" && !d.startsWith(".staging-"))
+      .map(s => (s.getPath.toUri.getPath, s))
+      .collect { case (p, s) if p.endsWith(".parquet") =>
+        (p.stripPrefix(rootUri).stripPrefix("/"), s.getLen, s.getModificationTime)
+      }
   }
 
   // ---- per-file min/max stats → data skipping (Delta parity) -----------
@@ -2456,11 +2445,8 @@ final class GraftTable private (
     try {
       val content = txnMapAt(v).toSeq.sortBy(_._1)
         .map { case (a, tv) => s"${encU(a)}\t$tv" }.mkString("\n")
-      val target = new Path(logDir, f"v$v%020d.ckpt.tsv")
-      val tmp = new Path(logDir, f".v$v%020d.ckpt.tsv.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
-      fs.rename(tmp, target)
+      LogStore.writeAtomic(fs, new Path(logDir, f"v$v%020d.ckpt.tsv"),
+        content.getBytes(StandardCharsets.UTF_8))
     } catch { case _: Exception => () }
     writeManifestCheckpoint(v)
     ()
@@ -2510,15 +2496,9 @@ final class GraftTable private (
       if (source.exists("*?[{".contains(_)))
         sfs.globStatus(src).toSeq.filter(_.isFile).map(_.getPath)
       else if (sfs.getFileStatus(src).isFile) Seq(src)
-      else {
-        val it = sfs.listFiles(src, true)
-        val out = Seq.newBuilder[Path]
-        while (it.hasNext) {
-          val st = it.next()
-          val n = st.getPath.getName
-          if (!n.startsWith("_") && !n.startsWith(".")) out += st.getPath
-        }
-        out.result()
+      else GraftTable.listTree(sfs, src).map(_.getPath).filter { p =>
+        val n = p.getName
+        !n.startsWith("_") && !n.startsWith(".")
       }
     def markerOf(p: Path): String = s"graft-copy-into:${p.toUri.getPath}"
     val known = txnMapAt(currentVersion)
@@ -3323,9 +3303,7 @@ final class GraftTable private (
     // the staging listing already knows each file's length — carried to
     // the commit's add actions so nothing re-stats the files later
     val moved = Seq.newBuilder[(String, Long)]
-    val it = fs.listFiles(staging, true)
-    while (it.hasNext) {
-      val s = it.next()
+    GraftTable.listTree(fs, staging).foreach { s =>
       val p = s.getPath.toUri.getPath
       if (p.endsWith(".parquet")) {
         val rel = p.stripPrefix(stagingUri).stripPrefix("/")
@@ -5027,6 +5005,21 @@ object GraftTable {
     * new manifest); snapshot-derived commits (OPTIMIZE/DELETE/MERGE)
     * propagate it — their inputs may be stale. */
   final class CommitConflictException(msg: String) extends RuntimeException(msg)
+
+  /** Every file under `dir`, depth first in `listStatus` order (the
+    * order `fs.listFiles(dir, recursive = true)` yields), skipping
+    * subdirectories whose name fails `descend`. Plain `listStatus`
+    * statuses carry path, length and mtime without the owner and
+    * permission `listFiles` fills in — which Hadoop's local filesystem
+    * gets by running `ls` once per file when its native library is
+    * absent. */
+  def listTree(fs: FileSystem, dir: Path,
+      descend: String => Boolean = _ => true): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap { s =>
+      if (s.isDirectory)
+        if (descend(s.getPath.getName)) listTree(fs, s.getPath, descend) else Nil
+      else Seq(s)
+    }
 
   def apply(spark: SparkSession, path: String,
       partitionColumns: Seq[String] = Nil): GraftTable =

@@ -115,6 +115,47 @@ object LogStore {
   /** Session conf key selecting the commit-claim implementation. */
   val ConfKey = "spark.graft.logStore"
 
+  /** Publish `bytes` at `path` in one observable step: write a hidden
+    * temp file beside it, then rename it into place (replacing any file
+    * already there). Every log write goes through here — commit
+    * sidecars and the `.json` marker, txn checkpoints, bloom sidecars.
+    * Throws [[GraftTable.CommitConflictException]] when the rename
+    * fails.
+    *
+    * Local paths use `java.nio` directly, the same special case
+    * [[AtomicCreateLogStore]] makes: Hadoop's local `create` runs a
+    * `chmod` process for the file and again for its `.crc` when the
+    * native library is absent. An older `.crc` of a replaced file is
+    * deleted before the move, since the local filesystem verifies reads
+    * against it. Other stores keep `create` + `rename`. */
+  def writeAtomic(fs: FileSystem, path: Path, bytes: Array[Byte]): Unit = {
+    val tmp = new Path(path.getParent, s".${path.getName}.tmp")
+    def conflict() = new GraftTable.CommitConflictException(
+      s"commit conflict renaming to $path")
+    fs match {
+      case l: org.apache.hadoop.fs.LocalFileSystem =>
+        import java.nio.file.{Files, StandardCopyOption}
+        val raw = l.getRaw.asInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
+        val target = raw.pathToFile(path).toPath
+        val tmpFile = raw.pathToFile(tmp).toPath
+        Files.createDirectories(target.getParent)
+        Files.write(tmpFile, bytes)
+        Files.deleteIfExists(raw.pathToFile(l.getChecksumFile(path)).toPath)
+        try Files.move(tmpFile, target, StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: java.io.IOException =>
+          Files.deleteIfExists(tmpFile)
+          throw conflict()
+        }
+      case other =>
+        val out = other.create(tmp, true)
+        try out.write(bytes) finally out.close()
+        if (!other.rename(tmp, path)) {
+          other.delete(tmp, false)
+          throw conflict()
+        }
+    }
+  }
+
   def resolve(spark: SparkSession): LogStore =
     spark.conf.get(ConfKey, "atomic") match {
       case "atomic" => AtomicCreateLogStore

@@ -11,14 +11,8 @@ import org.apache.spark.sql.types.LongType
   * identically, so nothing here assumes single-file inputs.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // events.parquet carries TIMESTAMP(NANOS) which Spark 4 refuses by
-    // default; read nanos as Long and convert below. Runtime-settable, so
-    // this also covers driver-owned sessions we didn't configure.
-    try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
-  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")
@@ -35,6 +29,13 @@ object Tables {
     *    → cast to session-zone timestamp; sessions here run UTC, so the
     *    wall-clock values keep the same epoch meaning DuckDB reads. */
   def events(spark: SparkSession, dir: String): DataFrame = {
+    // events is the one table that has shipped TIMESTAMP(NANOS), which
+    // Spark 4 refuses by default; read nanos as Long and convert below.
+    // Runtime-settable, so this also covers driver-owned sessions we
+    // didn't configure. The scan reads the conf again when it runs, so
+    // it stays set; no other table's read touches it.
+    try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    catch { case _: Throwable => () }
     val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType =>
