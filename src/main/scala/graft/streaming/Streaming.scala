@@ -29,10 +29,6 @@ object Streaming {
       StructField("value", DoubleType), StructField("props", StringType)))
 
   private def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    // events.parquet may store TIMESTAMP(NANOS); a bare session fails at
-    // read time without this (Tables.events sets it for batch, not streams).
-    try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
     val tsType = spark.read.parquet(s"$dir/events.parquet")
       .schema("ts").dataType
     val raw = spark.readStream

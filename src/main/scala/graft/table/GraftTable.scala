@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftFileIndex
 import org.apache.spark.sql.types.StructType
 
 /** Partitioned-parquet table with a versioned, INCREMENTAL commit log —
@@ -479,8 +480,8 @@ final class GraftTable private (
     val props0 = newProperties.map(f => f(v - 1)).getOrElse(propertiesOf(v - 1))
     val cmap = newColMap.map(f => f(v - 1)).getOrElse(colMapOf(v - 1))
     // physical schema carried forward when this commit doesn't change it
-    // (legacy versions without a sidecar carry nothing — reads stay
-    // footer-derived until a schema-recording commit lands)
+    // (legacy versions without a sidecar carry nothing — reads infer
+    // from footers until a schema-recording commit lands)
     val schemaRec: Option[StructType] =
       newSchema.map(f => f(v - 1)).orElse(schemaOf(v - 1))
     // per-file column min/max stats (Delta data-skipping parity): only
@@ -753,13 +754,14 @@ final class GraftTable private (
   // ---- schema in the log (Delta metadata-action parity) ----------------
   //
   // Every commit records the table's PHYSICAL schema as a vN.schema JSON
-  // sidecar. Data-file footers stay the source of truth for scans (no
-  // behavior change for populated tables); the sidecar is what makes a
-  // FILE-LESS table well-defined: SQL CREATE TABLE establishes a schema
-  // before any data exists, DELETE-everything keeps the table readable,
-  // and ALTER TABLE ADD COLUMN can introduce a column no file carries
-  // yet (reads align it in as nulls). Legacy versions without the
-  // sidecar behave exactly as before.
+  // sidecar, and it is the schema every scan reads under (Delta's
+  // metadata action): no footer is merged to plan a read. A file
+  // written before ALTER TABLE ADD COLUMN or a mergeSchema append reads
+  // the columns it lacks as nulls, a narrow file under a widened column
+  // upcasts in the reader, and a FILE-LESS version (SQL CREATE TABLE,
+  // DELETE-everything) still has its schema. Only a legacy version
+  // recorded without the sidecar infers one from its files'
+  // footers ([[physicalSchemaAt]]).
 
   /** Physical schema recorded with `version`, if any. */
   def schemaOf(version: Long): Option[StructType] = {
@@ -795,7 +797,7 @@ final class GraftTable private (
         "column; re-run against the new snapshot")
       val bm0 = colMapOf(base)
       if (bm0.isIdentity) {
-        val cur = schemaOf(base).getOrElse(physicalSchemaAt(base))
+        val cur = physicalSchemaAt(base)
         if (cur.fieldNames.contains(name)) throw conflict()
         name
       } else {
@@ -812,18 +814,26 @@ final class GraftTable private (
         else bm0.copy(entries = bm0.entries :+ (name -> physFor(base)))
       },
       newSchema = Some { base =>
-        val cur = schemaOf(base).getOrElse(physicalSchemaAt(base))
+        val cur = physicalSchemaAt(base)
         cur.add(org.apache.spark.sql.types.StructField(physFor(base), dataType))
       })
   }
 
-  /** Physical schema of `base`, derived from its files when no sidecar
-    * exists (legacy versions). */
-  private def physicalSchemaAt(base: Long): StructType = {
-    val files = manifestFiles(base)
-    if (files.isEmpty) new StructType()
-    else readFiles(files).schema
-  }
+  /** Physical schema of `version`: its sidecar, or, for a legacy version
+    * recorded without one, the footers of its files (or of the latest
+    * earlier version whose files still read) merged with their hive
+    * partition columns. The one data-file read that plans no scan. */
+  private def physicalSchemaAt(version: Long): StructType =
+    schemaOf(version).filter(_.nonEmpty).getOrElse {
+      (version to 0L by -1).iterator.flatMap { v =>
+        scala.util.Try {
+          val files = manifestFiles(v).filterNot(_.startsWith("/"))
+          require(files.nonEmpty)
+          spark.read.option("basePath", path).option("mergeSchema", "true")
+            .parquet(files.map(f => s"$path/$f"): _*).schema
+        }.toOption
+      }.nextOption().getOrElse(new StructType())
+    }
 
   def colMapOf(version: Long): ColMap = {
     if (version < 0) return ColMap(Nil, Nil)
@@ -990,7 +1000,7 @@ final class GraftTable private (
       Map("column" -> name, "from" -> f.dataType.simpleString,
         "to" -> to.simpleString),
       newSchema = Some { base =>
-        val cur = schemaOf(base).getOrElse(physicalSchemaAt(base))
+        val cur = physicalSchemaAt(base)
         val bf = cur.fields.find(_.name == phys).getOrElse(
           throw new java.util.ConcurrentModificationException(
             s"ALTER COLUMN TYPE $name aborted: the column vanished under " +
@@ -1184,23 +1194,14 @@ final class GraftTable private (
     val snap = snapshotAt(version)
     val perFile: Seq[Option[(Seq[Option[String]], Long)]] =
       snap.files.toSeq.map { f =>
-        val segs = f.split('/').dropRight(1).iterator
-          .filter(_.contains('='))
-          .map { s =>
-            val i = s.indexOf('=')
-            s.take(i) -> GraftTable.unescapePathValue(s.drop(i + 1))
-          }.toMap
+        val segs = GraftTable.partitionValues(f).toMap
         val rows = snap.stats.get(f).flatMap(_.get("")).collect {
           case ("rows", lo, _) =>
             math.max(0L, lo.toLong -
               snap.dv.getOrElse(f, Nil).iterator.map(_._2).sum)
         }
         val vals: Option[Seq[Option[String]]] =
-          if (cols.forall(segs.contains))
-            Some(cols.map(c => segs(c) match {
-              case "__HIVE_DEFAULT_PARTITION__" => None
-              case v => Some(v)
-            }))
+          if (cols.forall(segs.contains)) Some(cols.map(segs))
           else None // segment missing → no proof
         for { r <- rows; v <- vals } yield (v, r)
       }
@@ -1232,18 +1233,9 @@ final class GraftTable private (
       val snap = snapshotAt(version)
       val perFile: Seq[Option[(Seq[Option[String]], (String, Long, Long))]] =
         snap.files.toSeq.map { f =>
-          val segs = f.split('/').dropRight(1).iterator
-            .filter(_.contains('='))
-            .map { s =>
-              val i = s.indexOf('=')
-              s.take(i) -> GraftTable.unescapePathValue(s.drop(i + 1))
-            }.toMap
+          val segs = GraftTable.partitionValues(f).toMap
           val vals: Option[Seq[Option[String]]] =
-            if (cols.forall(segs.contains))
-              Some(cols.map(c => segs(c) match {
-                case "__HIVE_DEFAULT_PARTITION__" => None
-                case v => Some(v)
-              }))
+            if (cols.forall(segs.contains)) Some(cols.map(segs))
             else None
           val b = snap.stats.get(f).flatMap(_.get(column)).collect {
             case (tag, lo, hi) if tag == "long" || tag == "date" =>
@@ -1404,12 +1396,12 @@ final class GraftTable private (
   // Activation (spark.graft.distributedPlanning = auto|always|never,
   // default auto): auto engages when no Snapshot is cached for the
   // version, a manifest checkpoint exists, and the checkpoint dataset
-  // is at least spark.graft.distributedPlanning.minCheckpointBytes
-  // (default 64 MB ≈ hundreds of thousands of files) — below that the
-  // driver path is cheaper than a Spark job. Falls back to the driver
-  // path whenever its preconditions fail (no checkpoint, no schema
-  // sidecar, an action tail larger than maxTailEntries); results are
-  // byte-identical either way, which DistributedPlanningSpec pins.
+  // is at least DistributedPlanningMinCheckpointBytes (64 MB ≈ hundreds
+  // of thousands of files) — below that the driver path is cheaper
+  // than a Spark job. Falls back to the driver path whenever its
+  // preconditions fail (no checkpoint, an action tail longer than
+  // DistributedPlanningMaxTailEntries); results are byte-identical
+  // either way, which DistributedPlanningSpec pins.
 
   import GraftTable.TailOutcome
 
@@ -1476,16 +1468,12 @@ final class GraftTable private (
       return None // snapshot already paid for — pruning it is free
     val ckptV = latestManifestCheckpoint(version).getOrElse(return None)
     if (mode != "always") {
-      val minBytes = spark.conf
-        .get("spark.graft.distributedPlanning.minCheckpointBytes",
-          (64L << 20).toString).toLong
       val ckptBytes = scala.util.Try(
         fs.getContentSummary(manifestCkptPath(ckptV)).getLength).getOrElse(0L)
-      if (ckptBytes < minBytes) return None
+      if (ckptBytes < GraftTable.DistributedPlanningMinCheckpointBytes) return None
     }
-    val maxTail = spark.conf
-      .get("spark.graft.distributedPlanning.maxTailEntries", "100000").toInt
-    val outcomes = tailOutcomes(ckptV, version, maxTail).getOrElse(return None)
+    val outcomes = tailOutcomes(ckptV, version,
+      GraftTable.DistributedPlanningMaxTailEntries).getOrElse(return None)
     // filters carry LOGICAL names; checkpoint stats are keyed PHYSICAL —
     // rename the filters once, driver-side (inverse of the driver
     // path's stats re-key; same proofs reachable)
@@ -1586,42 +1574,14 @@ final class GraftTable private (
     readVersionPrunedAug(version, augmentedFilters(version, rawFilters))
 
   /** [[readVersionPruned]] over already-augmented filters (see
-    * [[dataSkippedFilesAug]]). */
+    * [[dataSkippedFilesAug]]). The file list comes from distributed
+    * planning when it engages, from the driver's snapshot otherwise; the
+    * scan carries the version's full schema either way. */
   private[graft] def readVersionPrunedAug(version: Long,
       filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
-    schemaOf(version).filter(_.nonEmpty) match {
-      case Some(phys) =>
-        planPrunedDistributed(version, filters) match {
-          case Some((kept, dv)) =>
-            val cm = colMapOf(version)
-            val schema = logicalSchema(phys, cm)
-            if (kept.isEmpty)
-              return spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-            val pruned = toLogical(readFilesDv(kept, dv, widenHint(version)), cm)
-            val have = pruned.columns.toSet
-            val aligned = schema.fields.foldLeft(pruned) { (d, f) =>
-              if (have(f.name)) d else d.withColumn(f.name, lit(null).cast(f.dataType))
-            }
-            return aligned.select(schema.fields
-              .map(f => col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-          case None => ()
-        }
-      case None => () // no schema sidecar: the driver path derives it
-    }
-    val full = readVersion(version)
-    val kept = dataSkippedFilesAug(version, filters)
-    if (kept.size == manifestFiles(version).size) return full
-    if (kept.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full.schema)
-    val pruned = toLogical(
-      readFilesDv(kept, dvOf(version), widenHint(version)), colMapOf(version))
-    val have = pruned.columns.toSet
-    val aligned = full.schema.fields.foldLeft(pruned) { (d, f) =>
-      if (have(f.name)) d else d.withColumn(f.name, lit(null).cast(f.dataType))
-    }
-    aligned.select(full.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+    val (kept, dv) = planPrunedDistributed(version, filters)
+      .getOrElse((dataSkippedFilesAug(version, filters), dvOf(version)))
+    toLogical(scan(version, kept, dv), colMapOf(version))
   }
 
   // ---- CHECK constraints (Delta table-constraint parity) ---------------
@@ -1984,7 +1944,7 @@ final class GraftTable private (
   private def withFieldMetadata(base: Long, name: String,
       f: org.apache.spark.sql.types.MetadataBuilder =>
          org.apache.spark.sql.types.MetadataBuilder): StructType = {
-    val cur = schemaOf(base).getOrElse(physicalSchemaAt(base))
+    val cur = physicalSchemaAt(base)
     val cm = colMapOf(base)
     val phys =
       if (cm.isIdentity) name
@@ -2163,7 +2123,7 @@ final class GraftTable private (
     val partialOverwrite = replaceWhere.isDefined || dynamicPartitionOverwrite
     val nextSchema: Option[Long => StructType] =
       if (mode == SaveMode.Append || partialOverwrite) Some { base =>
-        val cur = schemaOf(base).getOrElse(physicalSchemaAt(base))
+        val cur = physicalSchemaAt(base)
         val have = cur.fieldNames.toSet
         physDf.schema.fields.filterNot(f => have(f.name)).foldLeft(cur)(_ add _)
       }
@@ -2295,13 +2255,10 @@ final class GraftTable private (
     if (smallByPart.isEmpty) return
     val where =
       if (partitionColumns.isEmpty) None
-      else Some(smallByPart.keys.map { dir =>
-        dir.split('/').filter(_.contains('=')).map { kv =>
-          val i = kv.indexOf('=')
-          val c = kv.take(i)
-          val value = GraftTable.unescapePathValue(kv.drop(i + 1))
-          if (value == "__HIVE_DEFAULT_PARTITION__") s"$c IS NULL"
-          else s"$c = '${value.replace("'", "''")}'"
+      else Some(smallByPart.values.map { files =>
+        GraftTable.partitionValues(files.head).map {
+          case (c, None) => s"$c IS NULL"
+          case (c, Some(value)) => s"$c = '${value.replace("'", "''")}'"
         }.mkString("(", " AND ", ")")
       }.mkString(" OR "))
     scala.util.Try(optimize(Nil, where = where))
@@ -2319,12 +2276,9 @@ final class GraftTable private (
       partitionColumns.map(c => org.apache.spark.sql.types.StructField(
         c, org.apache.spark.sql.types.StringType)))
     val rows = live.map { f =>
-      val kvs = f.split('/').filter(_.contains('=')).map { s =>
-        val i = s.indexOf('=')
-        s.take(i) -> GraftTable.unescapePathValue(s.drop(i + 1))
-      }.toMap
+      val kvs = GraftTable.partitionValues(f).toMap
       org.apache.spark.sql.Row.fromSeq(f +: partitionColumns.map(c =>
-        kvs.get(c).filterNot(_ == "__HIVE_DEFAULT_PARTITION__").orNull))
+        kvs.get(c).flatten.orNull))
     }
     // parsed values are strings; cast them to the TABLE'S partition
     // column types before evaluating the predicate, so `year > 9`
@@ -2527,9 +2481,7 @@ final class GraftTable private (
     * recent commit that recorded them (CREATE TABLE). */
   def layoutPartitionColumns(version: Long = currentVersion): Seq[String] =
     manifestFiles(version).headOption match {
-      case Some(f) =>
-        f.split('/').dropRight(1).filter(_.contains('='))
-          .map(_.takeWhile(_ != '=')).toSeq
+      case Some(f) => GraftTable.partitionValues(f).map(_._1)
       case None =>
         (version to 0L by -1).iterator
           .flatMap(v => commitMetric(v, "partitionColumns"))
@@ -2601,47 +2553,27 @@ final class GraftTable private (
     None
   }
 
-  /** Time travel: scan the file set of an older committed version. Files
-    * of past versions remain on disk until VACUUM reclaims them, so any
-    * un-vacuumed version stays readable (vacuumed versions fail at scan
-    * time with missing files — same contract as Delta). */
   /** Physical sidecar schema → logical view (mapped names, map order). */
   private def logicalSchema(phys: StructType, cm: ColMap): StructType =
     if (cm.isIdentity) phys
     else StructType(cm.entries.flatMap { case (l, ph) =>
       phys.fields.find(_.name == ph).map(f => f.copy(name = l)) })
 
+  /** Time travel: scan the file set of an older committed version. Files
+    * of past versions remain on disk until VACUUM reclaims them, so any
+    * un-vacuumed version stays readable (vacuumed versions fail at scan
+    * time with missing files — same contract as Delta). A committed
+    * version CAN be legitimately FILE-LESS (SQL CREATE TABLE before any
+    * data, DELETE that matched every row): it reads as an empty frame
+    * with the version's schema. Only a table that never had data or
+    * schema — or whose history was fully vacuumed — is unreadable. */
   def readVersion(version: Long): DataFrame = {
     val files = manifestFiles(version)
-    val cm = colMapOf(version)
-    if (files.isEmpty) {
-      // a committed version CAN be legitimately FILE-LESS (SQL CREATE
-      // TABLE before any data, DELETE that matched every row): serve an
-      // empty frame with the version's recorded schema — or, for legacy
-      // versions without a schema sidecar, the schema of the latest
-      // earlier version that still has readable files. Only a table
-      // that never had data or schema — or whose history was fully
-      // vacuumed — is unreadable.
-      if (!hasVersion(version) && version != currentVersion)
-        throw new IllegalStateException(
-          s"graft table at $path has no committed version $version")
-      val schema = schemaOf(version).map(logicalSchema(_, cm))
-        .filter(_.nonEmpty)
-        .orElse(((version - 1) to 0L by -1).iterator
-          .map(v => scala.util.Try {
-            val fs = manifestFiles(v)
-            if (fs.isEmpty) throw new IllegalStateException("empty")
-            toLogical(readFilesDv(fs, Map.empty), cm).schema
-          }).collectFirst { case scala.util.Success(s) => s })
-      schema match {
-        case Some(s) => return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-        case None => throw new IllegalStateException(
-          s"graft table at $path has no committed version $version")
-      }
-    }
-    alignToRecorded(toLogical(
-      readFilesDv(files, dvOf(version), widenHint(version)), cm), version)
+    if (files.isEmpty && ((!hasVersion(version) && version != currentVersion) ||
+        physicalSchemaAt(version).isEmpty))
+      throw new IllegalStateException(
+        s"graft table at $path has no committed version $version")
+    toLogical(scan(version, files, dvOf(version)), colMapOf(version))
   }
 
   /** Snapshot read surfacing each row's stable `_row_id`
@@ -2655,43 +2587,17 @@ final class GraftTable private (
     require(RowTracking.enabled(propertiesOf(version)),
       s"row tracking is not enabled on the graft table at $path — set " +
       s"TBLPROPERTIES('${RowTracking.Prop}'='true') and write data first")
-    val files = manifestFiles(version)
-    val ref = readVersion(version)
-    if (files.isEmpty)
-      return ref.withColumn("_row_id", lit(null).cast("bigint"))
-    val cm = colMapOf(version)
     val baseRows = RowTracking.bases(statsOf(version)).toSeq
       .map { case (f, b) => (dataPath(f).toUri.getPath, b) }
     import spark.implicits._
-    val baseDf = baseRows.toDF("__path", "__base")
-    val meta = toLogical(
-      readFilesMeta(files, dvOf(version), widenHint(version)), cm)
-    val withId = meta.join(broadcast(baseDf), Seq("__path"), "left")
+    toLogical(scan(version, manifestFiles(version), dvOf(version), withMeta = true),
+        colMapOf(version))
+      .join(broadcast(baseRows.toDF("__path", "__base")), Seq("__path"), "left")
       .withColumn("_row_id",
         when(col("__base").isNotNull, col("__base") + col("__pos"))
           .cast("bigint"))
       .drop("__path", "__pos", "__base")
-    val have = withId.columns.toSet
-    val filled = ref.schema.fields.foldLeft(withId) { (d, f) =>
-      if (have(f.name)) d else d.withColumn(f.name, lit(null).cast(f.dataType))
-    }
-    filled.select(ref.schema.fields
-      .map(f => col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq :+
-      col("_row_id"): _*)
   }
-
-  /** ALTER TABLE ADD COLUMN: a recorded column no live file carries yet
-    * aligns in as nulls (appended in schema order). Applied by every
-    * logical read — including the rewrite scans, so DML predicates and
-    * clauses can reference a column added a commit ago. */
-  private def alignToRecorded(frame: DataFrame, version: Long): DataFrame =
-    schemaOf(version).map(logicalSchema(_, colMapOf(version))) match {
-      case Some(logical) =>
-        val have = frame.columns.toSet
-        logical.fields.filterNot(f => have(f.name))
-          .foldLeft(frame)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-      case None => frame
-    }
 
   // ---- M1: OPTIMIZE (compact + cluster + bin-pack) ---------------------
 
@@ -3154,81 +3060,47 @@ final class GraftTable private (
   private def dataPath(f: String): Path =
     if (f.startsWith("/")) new Path(f) else new Path(root, f)
 
-  /** basePath for an absolute (clone) entry: everything before the first
-    * hive `k=v` segment, so partition columns still infer. */
-  private def baseOf(absFile: String): String = {
-    val segs = absFile.split('/')
-    val i = segs.indexWhere(_.contains('='))
-    if (i < 0) segs.dropRight(1).mkString("/") else segs.take(i).mkString("/")
-  }
-
-  /** Explicit read schema when type widening is active at `v`
-    * ([[TypeWidening]]): the recorded PHYSICAL sidecar schema drives
-    * the scan, so a narrow old file (int32 under a now-long column)
-    * upcasts in the reader instead of failing schema merge. None for
-    * every un-widened table — their plans stay byte-identical. */
-  private def widenHint(v: Long): Option[StructType] =
-    if (v >= 0 && propertiesOf(v).contains(TypeWidening.Prop)) schemaOf(v)
-    else None
-
-  private def readFiles(files: Seq[String],
-      hint: Option[StructType] = None): DataFrame = {
-    val (abs, rel) = files.partition(_.startsWith("/"))
-    def group(base: String, paths: Seq[String]): DataFrame = {
-      val r = spark.read.option("basePath", base)
-      hint.fold(r.option("mergeSchema", "true"))(r.schema)
-        .parquet(paths: _*)
+  /** The one scan of table files: `files` read under `version`'s
+    * recorded physical schema through a [[GraftFileIndex]] built from the
+    * log — sizes from the snapshot, partition values from the hive paths
+    * typed by the schema — so planning lists nothing and merges no
+    * footers, and clone entries outside the root sit in the same index.
+    * `dv`'s deleted positions are filtered INSIDE the scan by the
+    * codegen'd [[DvDeleted]] predicate over `_metadata` (no join, whatever
+    * the vector size; see [[DeletionVectors]]). `withMeta` keeps `__path`
+    * (the file's filesystem path, scheme stripped) and `__pos` (its
+    * `_metadata.row_index`) on every row. Physical column names. */
+  private def scan(version: Long, files: Seq[String],
+      dv: Map[String, Seq[(Long, Long)]], withMeta: Boolean = false): DataFrame = {
+    val schema = physicalSchemaAt(version)
+    val layout = files.headOption.map(GraftTable.partitionValues(_).map(_._1))
+      .getOrElse(layoutPartitionColumns(version))
+    val partSchema = StructType(layout.flatMap(c => schema.find(_.name == c)))
+    val partCols = partSchema.fieldNames.toSeq
+    val sizes = snapshotAt(version).sizes
+    val entries = files.map { f =>
+      val vals = GraftTable.partitionValues(f).toMap
+      GraftFileIndex.Entry(fs.makeQualified(dataPath(f)),
+        sizes.getOrElse(f, fs.getFileStatus(dataPath(f)).getLen),
+        partCols.map(c => vals.get(c).flatten))
     }
-    val frames =
-      (if (rel.nonEmpty) Seq(group(path, rel.map(f => s"$path/$f"))) else Nil) ++
-      abs.groupBy(baseOf).toSeq.sortBy(_._1).map { case (b, fs) => group(b, fs) }
-    frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-  }
-
-  /** Like [[readFiles]] but each row carries `__path` (the file's
-    * filesystem path, scheme stripped) and `__pos` (`_metadata
-    * .row_index`), and `dv`'s deleted positions are filtered away INSIDE
-    * the scan by the codegen'd [[DvDeleted]] predicate over the file's
-    * broadcast RLE runs — no join in the plan regardless of vector size
-    * (see [[DeletionVectors]]). The metadata columns must be
-    * materialized per scan group BEFORE any union/join — `_metadata`
-    * only resolves directly on a file scan. */
-  private def readFilesMeta(files: Seq[String],
-      dv: Map[String, Seq[(Long, Long)]],
-      hint: Option[StructType] = None): DataFrame = {
-    val (abs, rel) = files.partition(_.startsWith("/"))
-    def group(base: String, paths: Seq[String]): DataFrame = {
-      val r = spark.read.option("basePath", base)
-      hint.fold(r.option("mergeSchema", "true"))(r.schema)
-        .parquet(paths: _*)
-        .withColumn("__path", regexp_extract(
-          col("_metadata.file_path"), GraftTable.UriPathRegex, 1))
-        .withColumn("__pos", col("_metadata.row_index"))
+    val index = new GraftFileIndex(entries, partSchema,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    val all = GraftFileIndex.scan(spark, index,
+      StructType(schema.filterNot(f => partCols.contains(f.name))))
+    lazy val live = files.toSet
+    val runs = dv.collect {
+      case (f, rs) if rs.nonEmpty && live(f) => dataPath(f).toUri.getPath -> rs
     }
-    val frames =
-      (if (rel.nonEmpty) Seq(group(path, rel.map(f => s"$path/$f"))) else Nil) ++
-      abs.groupBy(baseOf).toSeq.sortBy(_._1).map { case (b, fs) => group(b, fs) }
-    val all = frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-    val runs: Map[String, Seq[(Long, Long)]] = dv.toSeq.collect {
-      case (f, rs) if rs.nonEmpty && files.contains(f) =>
-        (dataPath(f).toUri.getPath, rs)
-    }.toMap
-    if (runs.isEmpty) return all
-    all.filter(!DeletionVectors.deletedColumn(spark, runs,
-      col("__path"), col("__pos")))
-  }
-
-  /** DV-applied scan: files WITHOUT a deletion vector keep the plain
-    * parquet-scan plan; only vectored files pay the position anti-join. */
-  private def readFilesDv(files: Seq[String],
-      dv: Map[String, Seq[(Long, Long)]],
-      hint: Option[StructType] = None): DataFrame = {
-    val vectored = files.filter(f => dv.get(f).exists(_.nonEmpty))
-    if (vectored.isEmpty) return readFiles(files, hint)
-    val clean = files.filterNot(vectored.toSet)
-    val live = readFilesMeta(vectored, dv, hint).drop("__path", "__pos")
-    if (clean.isEmpty) live
-    else readFiles(clean, hint).unionByName(live, allowMissingColumns = true)
+    if (!withMeta && runs.isEmpty) return all
+    val meta = all
+      .withColumn("__path", regexp_extract(
+        col("_metadata.file_path"), GraftTable.UriPathRegex, 1))
+      .withColumn("__pos", col("_metadata.row_index"))
+    val kept = if (runs.isEmpty) meta
+      else meta.filter(!DeletionVectors.deletedColumn(spark, runs,
+        col("__path"), col("__pos")))
+    if (withMeta) kept else kept.drop("__path", "__pos")
   }
 
   /** Manifest files holding at least one LIVE row matching `cond`
@@ -3236,9 +3108,7 @@ final class GraftTable private (
     * into this scan, so at scale the scan touches only candidate files. */
   private def affectedFiles(cond: Column,
       dv: Map[String, Seq[(Long, Long)]]): Seq[String] =
-    alignToRecorded(
-        toLogical(readFilesMeta(manifestFiles(), dv, widenHint(currentVersion)),
-          colMap), currentVersion)
+    toLogical(scan(currentVersion, manifestFiles(), dv, withMeta = true), colMap)
       .filter(cond)
       .select("__path").distinct()
       .collect().map(r => relPath(r.getString(0))).toSeq
@@ -3250,7 +3120,7 @@ final class GraftTable private (
     * DELETE moved any input file's vector past what was read. */
   private def readLive(files: Seq[String],
       dv: Map[String, Seq[(Long, Long)]]): DataFrame =
-    alignToRecorded(toLogical(readFilesDv(files, dv), colMap), currentVersion)
+    toLogical(scan(currentVersion, files, dv), colMap)
 
   /** Physically write `df`'s files into the table layout and return
     * exactly the relative paths written. Staged through a unique temp
@@ -3347,8 +3217,8 @@ final class GraftTable private (
       // is kilobytes where the raw position list would be gigabytes.
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("__path")).orderBy(col("__pos"))
-      val hit = toLogical(readFilesMeta(affected, dvRead,
-        widenHint(currentVersion)), colMap).filter(matches)
+      val hit = toLogical(scan(currentVersion, affected, dvRead, withMeta = true),
+        colMap).filter(matches)
         .select(col("__path"), col("__pos"))
         .withColumn("__rk", col("__pos") - row_number().over(w))
         .groupBy(col("__path"), col("__rk"))
@@ -3649,9 +3519,8 @@ final class GraftTable private (
     // clause applies to (clause conditions reference the target only,
     // so they evaluate on the scan; a sync-merge whose source covers a
     // partition's keys rewrites only files with genuinely retired rows)
-    val metaScan = extendEvolved(alignToRecorded(
-      toLogical(readFilesMeta(manifestFiles(), dvNow,
-        widenHint(currentVersion)), colMap), currentVersion))
+    val metaScan = extendEvolved(toLogical(
+      scan(currentVersion, manifestFiles(), dvNow, withMeta = true), colMap))
     // measured broadcast for the key probe (r17, guide §3.1): below
     // the gate an explicit broadcast keeps the planner from shuffling
     // the whole __path-carrying meta scan against the key side —
@@ -3845,7 +3714,7 @@ final class GraftTable private (
       newSchema =
         if (evolveCols.isEmpty) None
         else Some { base =>
-          val cur = schemaOf(base).getOrElse(physicalSchemaAt(base))
+          val cur = physicalSchemaAt(base)
           val have = cur.fieldNames.toSet
           physOut.schema.fields.filterNot(f => have(f.name))
             .foldLeft(cur)(_ add _)
@@ -3914,7 +3783,7 @@ final class GraftTable private (
     * exactly as [[changes]] delivers an append-only commit: raw file
     * contents under v's column map and deletion vectors. */
   def readAddedFiles(v: Long, files: Seq[String]): DataFrame =
-    toLogical(readFilesDv(files, dvOf(v), widenHint(v)), colMapOf(v))
+    toLogical(scan(v, files, dvOf(v)), colMapOf(v))
 
   def changes(from: Long, to: Long): DataFrame = {
     require(from >= 0 && to <= currentVersion && from <= to,
@@ -3966,7 +3835,7 @@ final class GraftTable private (
     // an added file's rows AT v exclude its current vector
     def snap(files: Seq[String], dv: Map[String, Seq[(Long, Long)]]): Option[DataFrame] =
       if (files.isEmpty) None
-      else Some(toLogical(readFilesDv(files, dv, widenHint(v)), cmTo))
+      else Some(toLogical(scan(v, files, dv), cmTo))
     // files live at BOTH versions whose vector differs: positions in
     // `drop` but not `keep` surface as row-level changes (a merge-on-read
     // delete grows the vector → deletes; RESTORE across one shrinks it →
@@ -3988,7 +3857,7 @@ final class GraftTable private (
         val runMap = diff.map { case (f, rs) =>
           dataPath(f).toUri.getPath -> rs }.toMap
         val withMeta = toLogical(
-          readFilesMeta(diff.map(_._1), Map.empty, widenHint(v)), cmTo)
+          scan(v, diff.map(_._1), Map.empty, withMeta = true), cmTo)
         Some(withMeta.filter(DeletionVectors.deletedColumn(spark, runMap,
             col("__path"), col("__pos")))
           .drop("__path", "__pos"))
@@ -4070,7 +3939,7 @@ final class GraftTable private (
       // RESTORE across an ADD COLUMN / SET DEFAULT must not leave the
       // later schema (or its metadata) grafted onto the older file set
       newSchema = Some(_ =>
-        schemaOf(version).getOrElse(physicalSchemaAt(version))),
+        physicalSchemaAt(version)),
       dvChanges = Some { base =>
         val target = dvOf(version)
         val cur = dvOf(base)
@@ -4117,7 +3986,7 @@ final class GraftTable private (
       // the recorded schema travels with the clone: without it a
       // metadata-only ADD COLUMN or a column DEFAULT would vanish
       // (clone reads would fall back to data-file footers)
-      newSchema = Some(_ => schemaOf(srcV).getOrElse(physicalSchemaAt(srcV))),
+      newSchema = Some(_ => physicalSchemaAt(srcV)),
       carriedStats = carried, collectStats = false,
       addSizes = carriedSizes,
       dvChanges = Some(_ => carriedDv),
@@ -4189,7 +4058,7 @@ final class GraftTable private (
       newConstraints = Some(constraintsOf(srcV)),
       newGenerated = Some(generatedOf(srcV)),
       newProperties = Some(_ => propertiesOf(srcV)),
-      newSchema = Some(_ => schemaOf(srcV).getOrElse(physicalSchemaAt(srcV))),
+      newSchema = Some(_ => physicalSchemaAt(srcV)),
       carriedStats = statsOf(srcV).map { case (f, c) => renamed(f) -> c },
       collectStats = false,
       addSizes = snapshotAt(srcV).sizes.flatMap { case (f, sz) =>
@@ -4626,6 +4495,16 @@ object GraftTable {
     * below it, job-launch overhead beats the driver loop. */
   val DistributedStatsThreshold: Int = 12
 
+  /** Distributed scan planning in `auto` mode engages only over a
+    * manifest checkpoint at least this large (≈ hundreds of thousands of
+    * files); below it the driver's snapshot walk beats a Spark job. */
+  val DistributedPlanningMinCheckpointBytes: Long = 64L << 20
+
+  /** Longest action tail (files touched since the checkpoint) that
+    * distributed planning folds on the driver; a longer one, such as a
+    * full-table rewrite right after a checkpoint, takes the driver path. */
+  val DistributedPlanningMaxTailEntries: Int = 100000
+
   /** StructField metadata key carrying a column's DEFAULT expression in
     * the schema sidecar — Spark's own key for DSv2 column defaults, so
     * the recorded schema stays interoperable with engines that read it. */
@@ -4744,17 +4623,21 @@ object GraftTable {
   def partitionValueStats(file: String,
       refs: Set[String]): Map[String, (String, String, String)] =
     if (refs.isEmpty) Map.empty
-    else file.split('/').dropRight(1).iterator.filter(_.contains('='))
-      .flatMap { seg =>
-        val i = seg.indexOf('=')
-        val c = seg.take(i)
-        if (!refs(c)) None
-        else {
-          val raw = unescapePathValue(seg.drop(i + 1))
-          if (raw == "__HIVE_DEFAULT_PARTITION__") None
-          else Some(c -> encodePartitionStat(raw))
-        }
-      }.toMap
+    else partitionValues(file).collect {
+      case (c, Some(raw)) if refs(c) => c -> encodePartitionStat(raw)
+    }.toMap
+
+  /** Hive partition values of a manifest entry, in path order: every
+    * `k=v` directory segment as (k, unescaped v), Spark's
+    * `__HIVE_DEFAULT_PARTITION__` marker as None (a null value). The one
+    * parser of partition paths. PURE (shipped into the distributed
+    * planning closure). */
+  def partitionValues(entry: String): Seq[(String, Option[String])] =
+    entry.split('/').toSeq.dropRight(1).filter(_.contains('=')).map { seg =>
+      val i = seg.indexOf('=')
+      seg.take(i) -> Some(unescapePathValue(seg.drop(i + 1)))
+        .filter(_ != "__HIVE_DEFAULT_PARTITION__")
+    }
 
   /** Most specific [[statCmp]] encoding a raw partition string admits.
     * A mis-guess is SOUND by construction: statCmp only compares when

@@ -12,18 +12,18 @@ import org.apache.spark.sql.types._
   * data file, and appends keep mixing narrow old files with wide new
   * ones.
   *
-  * Reads on a widened table pass the recorded physical schema to the
-  * scan explicitly (schema-merge of int and long files would otherwise
-  * fail); the [[GraftTable.TypeWidening.Prop]] marker gates that path
-  * so un-widened tables keep byte-identical plans. Stats-based data
-  * skipping is unaffected: integral bounds share the "long" tag and
-  * compare through BigDecimal regardless of physical width.
+  * Every scan reads under the version's recorded physical schema, so
+  * narrow and wide files mix in one scan with no schema merge; the
+  * [[TypeWidening.Prop]] marker gates the write side, where a narrower
+  * incoming column upcasts instead of failing enforcement. Stats-based
+  * data skipping is unaffected: integral bounds share the "long" tag
+  * and compare through BigDecimal regardless of physical width.
   */
 object TypeWidening {
 
   /** Marker property: set (never unset) by the first ALTER COLUMN TYPE
     * commit; version-scoped like every property, so time travel before
-    * the widening still reads with inferred schemas. */
+    * the widening still reads the narrow type. */
   val Prop = "graft.typeWidening"
 
   private val chains: Map[DataType, Set[DataType]] = Map(

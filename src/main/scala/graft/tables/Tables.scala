@@ -21,21 +21,17 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame      = table(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "lineitem")
-  /** `ts` normalization across the encodings the driver has shipped:
-    *  - TIMESTAMP(NANOS) read as Long under nanosAsLong → exact integer
-    *    `DIV 1000` to micros (epoch-ns ~1.7e18 exceeds double's exact
-    *    range) — matches DuckDB's own ns→µs conversion;
-    *  - timestamp[us] with isAdjustedToUTC=false (inferred TIMESTAMP_NTZ)
-    *    → cast to session-zone timestamp; sessions here run UTC, so the
-    *    wall-clock values keep the same epoch meaning DuckDB reads. */
+  /** `ts` normalization across the encodings the fixtures have used:
+    *  - timestamp[us] with isAdjustedToUTC=false (inferred TIMESTAMP_NTZ,
+    *    every current fixture) → cast to session-zone timestamp; sessions
+    *    here run UTC, so the wall-clock values keep the same epoch
+    *    meaning DuckDB reads;
+    *  - TIMESTAMP(NANOS), which only a session that sets
+    *    `spark.sql.legacy.parquet.nanosAsLong` reads (as Long) → exact
+    *    integer `DIV 1000` to micros (epoch-ns ~1.7e18 exceeds double's
+    *    exact range) — matches DuckDB's own ns→µs conversion.
+    * The reader sets no session conf. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    // events is the one table that has shipped TIMESTAMP(NANOS), which
-    // Spark 4 refuses by default; read nanos as Long and convert below.
-    // Runtime-settable, so this also covers driver-owned sessions we
-    // didn't configure. The scan reads the conf again when it runs, so
-    // it stays set; no other table's read touches it.
-    try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
     val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType =>

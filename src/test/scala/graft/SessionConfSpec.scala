@@ -26,4 +26,8 @@ class SessionConfSpec extends SparkSpec {
   test("reading documents leaves the session conf identical") {
     unchangedBy(s => Tables.documents(s, sf).collect())
   }
+
+  test("reading events leaves the session conf identical") {
+    unchangedBy(s => Tables.events(s, sf).collect())
+  }
 }

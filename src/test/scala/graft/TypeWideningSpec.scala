@@ -9,8 +9,7 @@ import graft.table.{GraftTable, TypeWidening}
 
 /** ALTER COLUMN TYPE widening (Delta type-widening parity): the commit
   * is metadata-only — old files keep their narrow physical type and
-  * upcast at scan time via the explicit-read-schema path the
-  * `graft.typeWidening` marker gates. */
+  * upcast at scan time under the recorded schema every scan reads. */
 class TypeWideningSpec extends SparkSpec {
   import spark.implicits._
 
@@ -86,6 +85,34 @@ class TypeWideningSpec extends SparkSpec {
     // history records the operation
     val ops = t.history().select("operation").as[String].collect()
     assert(ops.contains("ALTER COLUMN TYPE"))
+  }
+
+  test("UPDATE, MERGE and OPTIMIZE rewrite a file set spanning narrow and wide files") {
+    // one int32 file written before the widening, one int64 file after:
+    // each rewrite below reads both files in one scan
+    def mixed(prefix: String): GraftTable = {
+      val (t, _) = fresh(prefix)
+      t.write(Seq((1, "a"), (2, "b")).toDF("v", "s").coalesce(1))
+      t.alterColumnType("v", LongType)
+      t.write(Seq((10000000000L, "c")).toDF("v", "s").coalesce(1), SaveMode.Append)
+      assert(t.manifestFiles().size == 2)
+      t
+    }
+    def rows(t: GraftTable): Seq[(Long, String)] =
+      t.read().as[(Long, String)].collect().sortBy(_._1).toSeq
+
+    val u = mixed("tw_update")
+    u.update(col("v") > 0L, Map("s" -> upper(col("s"))))
+    assert(rows(u) == Seq((1L, "A"), (2L, "B"), (10000000000L, "C")))
+
+    val m = mixed("tw_merge")
+    m.merge(Seq((2L, "m"), (10000000000L, "n"), (3L, "new")).toDF("v", "s"), Seq("v"))
+    assert(rows(m) == Seq((1L, "a"), (2L, "m"), (3L, "new"), (10000000000L, "n")))
+
+    val o = mixed("tw_optimize")
+    o.optimize(Nil)
+    assert(o.manifestFiles().size == 1)
+    assert(rows(o) == Seq((1L, "a"), (2L, "b"), (10000000000L, "c")))
   }
 
   test("streaming from a widened table: narrow old files flow under the wide schema") {
