@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -181,13 +181,12 @@ final case class GraftV2Table(spark: SparkSession, path: String,
         "version" -> pinnedVersion.toString)).asJava
 
   // the shim augments a scan's pushed filters exactly ONCE and feeds
-  // the pruned reader / stats / NDV hooks the augmented sequence, so
-  // those bind to the pre-augmented GraftTable variants — re-augmenting
-  // per layer would re-parse every generated definition and pay a
-  // driver-side local select 2-3x per query for identical results
+  // the stats and NDV hooks the augmented sequence, so those bind to
+  // the pre-augmented GraftTable variants — re-augmenting per layer
+  // would re-parse every generated definition and pay a driver-side
+  // local select 2-3x per query for identical results
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(snapshot,
-      filters => table.readVersionPrunedAug(pinnedVersion, filters),
       filters => table.scanStatsAug(pinnedVersion, filters),
       filters => table.augmentedFilters(pinnedVersion, filters),
       filters => table.columnNdvAug(pinnedVersion, filters),
@@ -275,7 +274,6 @@ final case class GraftV2Table(spark: SparkSession, path: String,
   * hint, never a correctness dependency (same contract as the DSv1
   * relation). */
 final class GraftScanBuilder(snapshot: DataFrame,
-    prunedReader: Seq[Filter] => DataFrame,
     scanStats: Seq[Filter] => (Long, Option[Long]),
     augment: Seq[Filter] => Seq[Filter] = identity _,
     columnNdv: Seq[Filter] => Map[String, Long] = _ => Map.empty,
@@ -485,7 +483,7 @@ final class GraftScanBuilder(snapshot: DataFrame,
   override def build(): Scan = aggAnswer match {
     case Some((schema, values)) => new GraftMetadataAggScan(schema, values)
     case None =>
-      new GraftV1ScanShim(prunedReader, required, pushed, scanStats, augment,
+      new GraftV1ScanShim(snapshot, required, pushed, scanStats, augment,
         columnNdv)
   }
 }
@@ -508,11 +506,11 @@ final class GraftMetadataAggScan(schema: StructType, rows: Seq[Seq[Any]])
 }
 
 /** DSv2 scan executing through the V1 relation machinery ([[V1Scan]],
-  * the built-in migration shim): manifest-stats file skipping prunes
-  * the file list, then the filtered+pruned frame becomes the scan RDD,
-  * so predicate pushdown and hive-partition pruning hit the parquet
-  * source exactly as in the DSv1 path. */
-final class GraftV1ScanShim(prunedReader: Seq[Filter] => DataFrame,
+  * the built-in migration shim): the pinned snapshot frame, filtered
+  * and pruned, becomes the scan RDD, so predicate pushdown, partition
+  * pruning and the file index's data skipping hit the parquet scan
+  * exactly as in the DSv1 path. */
+final class GraftV1ScanShim(snapshot: DataFrame,
     required: StructType, filters: Array[Filter],
     scanStats: Seq[Filter] => (Long, Option[Long]),
     augment: Seq[Filter] => Seq[Filter] = identity _,
@@ -521,8 +519,8 @@ final class GraftV1ScanShim(prunedReader: Seq[Filter] => DataFrame,
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
   /** Pushed filters plus generated-column-derived implications,
-    * computed ONCE per scan — estimateStatistics, columnStats and the
-    * executed frame all read this sequence. */
+    * computed ONCE per scan — estimateStatistics and columnStats both
+    * read this sequence. */
   private lazy val augmentedOnce: Seq[Filter] = augment(filters.toIndexedSeq)
 
   override def readSchema(): StructType = required
@@ -567,15 +565,8 @@ final class GraftV1ScanShim(prunedReader: Seq[Filter] => DataFrame,
     * plan audits can assert that pushed predicates reach the underlying
     * parquet scan as PartitionFilters/PushedFilters (the V1 shim node
     * hides the inner plan from the outer executedPlan string). */
-  def scanFrame: DataFrame = {
-    // generated-column-derived filters are applied as columns alongside
-    // the pushed ones so hive directory pruning sees them in-scan
-    val all = augmentedOnce
-    val filtered = all.flatMap(GraftFilters.translate)
-      .foldLeft(prunedReader(all))((d, c) => d.filter(c))
-    if (required.isEmpty) filtered.select(lit(1).as("__one"))
-    else filtered.select(required.fieldNames.toIndexedSeq.map(col): _*)
-  }
+  def scanFrame: DataFrame =
+    GraftFilters.scan(snapshot, filters.toIndexedSeq, required.fieldNames.toIndexedSeq)
 
   override def toV1TableScan[T <: BaseRelation with TableScan](
       context: SQLContext): T =

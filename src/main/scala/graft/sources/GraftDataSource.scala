@@ -605,22 +605,8 @@ final case class GraftRelation(sqlContext: SQLContext, path: String,
     GraftTable(sqlContext.sparkSession, path).sizeInBytes(pinnedVersion)
 
   override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    // manifest-stats data skipping first (prunes the FILE LIST), then
-    // the translated predicates push into the parquet scan of what's
-    // left. Filters implied by generated-column definitions are applied
-    // as columns too, so a predicate on a generated PARTITION column
-    // derived from its base prunes hive directories inside the scan.
-    val t = GraftTable(sqlContext.sparkSession, path)
-    val all = t.augmentedFilters(pinnedVersion, filters.toIndexedSeq)
-    val base = t.readVersionPrunedAug(pinnedVersion, all)
-    val filtered = all.flatMap(GraftFilters.translate)
-      .foldLeft(base)((d, c) => d.filter(c))
-    val pruned =
-      if (requiredColumns.isEmpty) filtered.select(lit(1).as("__one"))
-      else filtered.select(requiredColumns.toIndexedSeq.map(col): _*)
-    pruned.rdd
-  }
+      filters: Array[Filter]): RDD[Row] =
+    GraftFilters.scan(snapshot, filters.toIndexedSeq, requiredColumns.toIndexedSeq).rdd
 }
 
 /** Batch change-feed relation (`readChangeFeed=true` +
@@ -643,6 +629,16 @@ final case class GraftChangesRelation(sqlContext: SQLContext, path: String,
   * (Spark re-applies everything above the scan regardless). Shared by
   * the DSv1 relation and the DSv2 scan shim. */
 private[sources] object GraftFilters {
+  /** The rows of a relation's pinned snapshot `frame` under the pushed
+    * `filters`, projected to `required` (one constant `__one` column when
+    * no column is required). The translated filters reach the frame's
+    * parquet scan, where the table's file index skips files by them. */
+  def scan(frame: DataFrame, filters: Seq[Filter], required: Seq[String]): DataFrame = {
+    val filtered = filters.flatMap(translate).foldLeft(frame)(_.filter(_))
+    if (required.isEmpty) filtered.select(lit(1).as("__one"))
+    else filtered.select(required.map(col): _*)
+  }
+
   def translate(f: Filter): Option[Column] = f match {
     case EqualTo(a, v) => Some(col(a) === lit(v))
     case GreaterThan(a, v) => Some(col(a) > lit(v))

@@ -296,18 +296,6 @@ final class GraftTable private (
     Snapshot(files.result(), stats.result(), dv.result(), sizes.result())
   }
 
-  /** Latest manifest checkpoint at or below `upTo`, if any. */
-  def latestManifestCheckpoint(upTo: Long = currentVersion): Option[Long] = {
-    if (!fs.exists(logDir)) return None
-    val vs = fs.listStatus(logDir).flatMap { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("v") && n.endsWith(".ckpt.parquet"))
-        scala.util.Try(n.stripPrefix("v").stripSuffix(".ckpt.parquet").toLong).toOption
-      else None
-    }.filter(_ <= upTo)
-    if (vs.isEmpty) None else Some(vs.max)
-  }
-
   private def jsonEscape(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
@@ -681,9 +669,9 @@ final class GraftTable private (
   //
   // Every commit writes a vN.stats.tsv sidecar holding, for each live
   // data file, the min/max of its top-level primitive columns (read once
-  // from the parquet footer when the file is first committed). Readers
-  // with pushed-down predicates prune the FILE LIST against these bounds
-  // before the scan plans — at 100 TB a time-range query on a
+  // from the parquet footer when the file is first committed). Every
+  // scan's file index prunes its FILE LIST against these bounds under
+  // the scan's filters (`Skipping`) — at 100 TB a time-range query on a
   // cluster-sorted table opens the handful of files whose range
   // intersects, not every file of the partition (hive pruning handles
   // partition columns; this handles everything OPTIMIZE sorted).
@@ -1040,98 +1028,122 @@ final class GraftTable private (
     * bloom skipping can act on when the table is laid out by `d`. */
   def augmentedFilters(version: Long,
       filters: Seq[org.apache.spark.sql.sources.Filter])
-      : Seq[org.apache.spark.sql.sources.Filter] = {
-    if (filters.isEmpty) return filters
-    val defs = generatedOf(version)
-    if (defs.isEmpty) return filters
-    // the schema sidecar answers base-column types without constructing
-    // a scan frame; legacy versions fall back to the frame's schema
-    lazy val schema = schemaOf(version).filter(_.nonEmpty)
-      .map(phys => logicalSchema(phys, colMapOf(version)))
-      .orElse(scala.util.Try(readVersion(version).schema).toOption)
-    val baseType = (c: String) =>
-      schema.flatMap(_.fields.find(_.name == c).map(_.dataType))
-    val props = propertiesOf(version)
-    (filters ++ GeneratedPruning.derive(spark, defs, baseType, filters,
-      g => props.get(GraftTable.GeneratedTzKey + g))).distinct
-  }
+      : Seq[org.apache.spark.sql.sources.Filter] =
+    new Skipping(version).augment(filters)
 
   /** The subset of `version`'s files that MAY contain rows matching all
     * `filters` (conservative: a file is kept unless its stats prove no
     * row can match). */
   def dataSkippedFiles(version: Long,
-      rawFilters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] =
-    dataSkippedFilesAug(version, augmentedFilters(version, rawFilters))
+      rawFilters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] = {
+    val skipping = new Skipping(version)
+    skipping.kept(skipping.augment(rawFilters), manifestFiles(version))
+  }
 
   /** [[dataSkippedFiles]] over ALREADY-AUGMENTED filters: internal
     * entry for callers that ran [[augmentedFilters]] once up front (the
     * DSv2 scan shim augments a scan's pushed filters exactly once and
-    * feeds pruning, stats and NDV from the same sequence — augmentation
+    * feeds stats and NDV from the same sequence — augmentation
     * re-parses every generated definition and pays a driver-side local
     * select, so repeating it per layer doubles planning latency). */
   private[graft] def dataSkippedFilesAug(version: Long,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] = {
-    val rawStats = statsOf(version)
-    // pushed filters carry LOGICAL names; footer stats are keyed by the
-    // PHYSICAL column name — re-key through the version's column map
-    // (identity map: no-op). A dropped column's stats become unreachable
-    // (no logical name maps to them) — conservative, never wrong.
-    val cm = colMapOf(version)
-    val stats =
-      if (cm.isIdentity) rawStats
+      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] =
+    new Skipping(version).kept(filters, manifestFiles(version))
+
+  /** Data skipping at `version`: generated-column augmentation, then
+    * [[GraftTable.statsMayMatch]] over each file's footer stats and
+    * partition-value point intervals, then bloom sidecars. The
+    * version's metadata is read at most once per instance — the file
+    * index of a scan holds one and asks it each time Spark lists files.
+    * Filters carry LOGICAL column names. */
+  private final class Skipping(version: Long) {
+    private type Filter = org.apache.spark.sql.sources.Filter
+    private lazy val cm = colMapOf(version)
+    private lazy val defs = generatedOf(version)
+    private lazy val props = propertiesOf(version)
+    private lazy val partitionCols = layoutPartitionColumns(version).toSet
+    // footer stats are keyed by the PHYSICAL column name — re-keyed to
+    // the logical names through the version's column map (identity map:
+    // no-op). A dropped column's stats become unreachable (no logical
+    // name maps to them) — conservative, never wrong.
+    private lazy val stats = {
+      val raw = statsOf(version)
+      if (cm.isIdentity) raw
       else {
         val logicalOf = cm.entries.map(_.swap).toMap
-        rawStats.view.mapValues(_.flatMap { case (ph, b) =>
+        raw.view.mapValues(_.flatMap { case (ph, b) =>
           logicalOf.get(ph).map(_ -> b) }).toMap
       }
-    // hive-path partition values join the proof set as point intervals:
-    // a partition predicate (pushed directly, or derived above from a
-    // generated-column definition) prunes the FILE LIST here, not just
-    // directories inside the parquet scan — so scan estimates and
-    // distributed planning see the pruned list too
-    val prefs = {
-      val pcols = layoutPartitionColumns(version).toSet
-      if (pcols.isEmpty) Set.empty[String]
-      else filters.iterator.flatMap(_.references).filter(pcols).toSet
     }
-    val ranged = manifestFiles(version).filter { f =>
-      val cols = stats.getOrElse(f, Map.empty) ++
-        GraftTable.partitionValueStats(f, prefs)
-      filters.forall(GraftTable.statsMayMatch(cols, _))
-    }
-    // bloom proofs: only equality/IN conjuncts on indexed columns, only
-    // over the min/max survivors, and only when the table declares an
-    // index — a point lookup on a high-cardinality column skips every
-    // file whose filter proves absence (interval proofs can't).
-    bloomSkippedFiles(version, filters, ranged)
-  }
+    // the schema sidecar answers base-column types without constructing
+    // a scan frame; legacy versions fall back to the frame's schema
+    private lazy val schema = schemaOf(version).filter(_.nonEmpty)
+      .map(phys => logicalSchema(phys, cm))
+      .orElse(scala.util.Try(readVersion(version).schema).toOption)
 
-  /** The subset of `candidates` whose bloom sidecars (if any) admit the
-    * equality probes in `filters`. Missing sidecar/column ⇒ kept. */
-  private def bloomSkippedFiles(version: Long,
-      filters: Seq[org.apache.spark.sql.sources.Filter],
-      candidates: Seq[String]): Seq[String] = {
-    if (candidates.isEmpty) return candidates
-    // the property gates PROBING cheaply (no sidecar lookups on
-    // unindexed tables); which columns are actually provable comes from
-    // each sidecar's own keys — rename-stable, and stale property
-    // spellings can't disable files already indexed
-    if (BloomIndex.declaredColumns(propertiesOf(version)).isEmpty)
-      return candidates
-    val demandedLogical = BloomIndex.probes(filters)
-    if (demandedLogical.isEmpty) return candidates
-    // sidecars are keyed by PHYSICAL column name (rename-stable, like
-    // the stats sidecar): re-key the demanded probes through the map
-    val cm = colMapOf(version)
-    val demanded =
-      if (cm.isIdentity) demandedLogical
+    /** A scan's filters, which name PHYSICAL columns, in logical names;
+      * a conjunct the renaming cannot carry is dropped. */
+    def logical(filters: Seq[Filter]): Seq[Filter] =
+      if (cm.isIdentity) filters
       else {
-        val physOf = cm.entries.toMap
-        demandedLogical.flatMap { case (l, s) => physOf.get(l).map(_ -> s) }
+        val logicalOf = cm.entries.map(_.swap).toMap
+        filters.flatMap(GraftTable.renameFilterAttrs(_, logicalOf))
       }
-    if (demanded.isEmpty) return candidates
-    candidates.filter(f => BloomIndex.mayContain(
-      BloomIndex.filtersOf(fs, logDir, rootKey, f), demanded))
+
+    def augment(filters: Seq[Filter]): Seq[Filter] =
+      if (filters.isEmpty || defs.isEmpty) filters
+      else {
+        val baseType = (c: String) =>
+          schema.flatMap(_.fields.find(_.name == c).map(_.dataType))
+        (filters ++ GeneratedPruning.derive(spark, defs, baseType, filters,
+          g => props.get(GraftTable.GeneratedTzKey + g))).distinct
+      }
+
+    /** The subset of `files` that MAY hold rows matching all of the
+      * (augmented) `filters`. */
+    def kept(filters: Seq[Filter], files: Seq[String]): Seq[String] = {
+      if (filters.isEmpty) return files
+      // hive-path partition values join the proof set as point
+      // intervals: a partition predicate (pushed directly, or derived
+      // from a generated-column definition) prunes the FILE LIST, so
+      // scan estimates see the pruned list too
+      val prefs = filters.iterator.flatMap(_.references).filter(partitionCols).toSet
+      val ranged = files.filter { f =>
+        val cols = stats.getOrElse(f, Map.empty) ++
+          GraftTable.partitionValueStats(f, prefs)
+        filters.forall(GraftTable.statsMayMatch(cols, _))
+      }
+      // bloom proofs: only equality/IN conjuncts on indexed columns, only
+      // over the min/max survivors, and only when the table declares an
+      // index — a point lookup on a high-cardinality column skips every
+      // file whose filter proves absence (interval proofs can't).
+      bloomSkipped(filters, ranged)
+    }
+
+    /** The subset of `candidates` whose bloom sidecars (if any) admit
+      * the equality probes in `filters`. Missing sidecar/column ⇒ kept. */
+    private def bloomSkipped(filters: Seq[Filter],
+        candidates: Seq[String]): Seq[String] = {
+      if (candidates.isEmpty) return candidates
+      // the property gates PROBING cheaply (no sidecar lookups on
+      // unindexed tables); which columns are actually provable comes
+      // from each sidecar's own keys — rename-stable, and stale property
+      // spellings can't disable files already indexed
+      if (BloomIndex.declaredColumns(props).isEmpty) return candidates
+      val demandedLogical = BloomIndex.probes(filters)
+      if (demandedLogical.isEmpty) return candidates
+      // sidecars are keyed by PHYSICAL column name (rename-stable, like
+      // the stats sidecar): re-key the demanded probes through the map
+      val demanded =
+        if (cm.isIdentity) demandedLogical
+        else {
+          val physOf = cm.entries.toMap
+          demandedLogical.flatMap { case (l, s) => physOf.get(l).map(_ -> s) }
+        }
+      if (demanded.isEmpty) return candidates
+      candidates.filter(f => BloomIndex.mayContain(
+        BloomIndex.filtersOf(fs, logDir, rootKey, f), demanded))
+    }
   }
 
   /** Total live data bytes at `version`. Sizes come from the commit log
@@ -1380,208 +1392,13 @@ final class GraftTable private (
     n
   }
 
-  // ---- distributed planning (scan planning past driver memory) ---------
-  //
-  // The driver path above materializes the full live-file list (the
-  // Snapshot) before pruning — the same ceiling Delta's driver-side log
-  // replay has, fine at millions of files, not at tens of millions.
-  // The distributed path never builds the Snapshot: it evaluates the
-  // SAME pruning predicate (GraftTable.statsMayMatch — shared code, not
-  // a reimplementation) as a Spark job over the manifest-checkpoint
-  // parquet, folds the O(delta) action tail into a small override map
-  // broadcast to the job, and collects ONLY the surviving files. At a
-  // 10 M-file table with a selective predicate the driver holds the
-  // survivors (and the tail), never the 10 M-entry list.
-  //
-  // Activation (spark.graft.distributedPlanning = auto|always|never,
-  // default auto): auto engages when no Snapshot is cached for the
-  // version, a manifest checkpoint exists, and the checkpoint dataset
-  // is at least DistributedPlanningMinCheckpointBytes (64 MB ≈ hundreds
-  // of thousands of files) — below that the driver path is cheaper
-  // than a Spark job. Falls back to the driver path whenever its
-  // preconditions fail (no checkpoint, an action tail longer than
-  // DistributedPlanningMaxTailEntries); results are byte-identical
-  // either way, which DistributedPlanningSpec pins.
-
-  import GraftTable.TailOutcome
-
-  /** Fold the action records (ckptV, version] into per-file outcomes.
-    * Insertion order of first-touch approximates manifest order for
-    * tail-added files (exact for pure appends). Returns None when the
-    * tail exceeds `maxEntries` (a full-table rewrite right after a
-    * checkpoint) — the driver path handles those. */
-  private def tailOutcomes(ckptV: Long, version: Long,
-      maxEntries: Int): Option[scala.collection.mutable.LinkedHashMap[String, TailOutcome]] = {
-    val out = scala.collection.mutable.LinkedHashMap.empty[String, TailOutcome]
-    var v = ckptV + 1
-    while (v <= version) {
-      val a = readActionRecord(v)
-      a.removes.foreach { f =>
-        out(f) = TailOutcome(live = false, Some(None), Some(None))
-      }
-      a.adds.foreach { case (f, _) =>
-        val prev = out.get(f)
-        val wasDead = prev.exists(!_.live)
-        val statsOv: Option[Option[Map[String, (String, String, String)]]] =
-          a.addStats.get(f) match {
-            case Some(m) => Some(Some(m))
-            // a re-add after removal lost its stats at the removal (the
-            // incremental fold drops them with `base.stats -- removed`);
-            // an add of a still-live or unknown file keeps base stats
-            case None => if (wasDead) Some(None) else prev.flatMap(_.statsOv) match {
-              case s @ Some(_) => s
-              case None => None
-            }
-          }
-        val dvOv = if (wasDead) Some(None) else prev.map(_.dvOv).getOrElse(None)
-        out(f) = TailOutcome(live = true, statsOv, dvOv)
-      }
-      a.dvChanges.foreach { case (f, runs) =>
-        out.get(f) match {
-          case Some(o) if !o.live => () // dv change to a dead file: no-op
-          case cur =>
-            val enc = if (runs.isEmpty) None
-              else Some(GraftTable.encodeRuns(runs))
-            out(f) = TailOutcome(live = true,
-              cur.flatMap(_.statsOv) match {
-                case s @ Some(_) => s
-                case None => None
-              },
-              Some(enc))
-        }
-      }
-      if (out.size > maxEntries) return None
-      v += 1
-    }
-    Some(out)
-  }
-
-  /** Distributed pruned plan of `version` under `filters`: the live
-    * (file → deletion-vector runs) surviving the stats proofs, computed
-    * without materializing the snapshot. None ⇒ use the driver path. */
-  private def planPrunedDistributed(version: Long,
-      filters: Seq[org.apache.spark.sql.sources.Filter])
-      : Option[(Seq[String], Map[String, Seq[(Long, Long)]])] = {
-    val mode = spark.conf.get("spark.graft.distributedPlanning", "auto")
-    if (mode == "never") return None
-    if (GraftTable.cachedSnapshot(rootKey, version).isDefined && mode != "always")
-      return None // snapshot already paid for — pruning it is free
-    val ckptV = latestManifestCheckpoint(version).getOrElse(return None)
-    if (mode != "always") {
-      val ckptBytes = scala.util.Try(
-        fs.getContentSummary(manifestCkptPath(ckptV)).getLength).getOrElse(0L)
-      if (ckptBytes < GraftTable.DistributedPlanningMinCheckpointBytes) return None
-    }
-    val outcomes = tailOutcomes(ckptV, version,
-      GraftTable.DistributedPlanningMaxTailEntries).getOrElse(return None)
-    // filters carry LOGICAL names; checkpoint stats are keyed PHYSICAL —
-    // rename the filters once, driver-side (inverse of the driver
-    // path's stats re-key; same proofs reachable)
-    val cm = colMapOf(version)
-    val physFilters =
-      if (cm.isIdentity) filters.toList
-      else {
-        val m = cm.entries.toMap
-        filters.map(GraftTable.renameFilterAttrs(_, m)).toList
-      }
-    // partition columns referenced by the filters (partition columns
-    // are never renamed, so no column-map round trip): each task
-    // synthesizes the point-interval stats from its files' hive paths
-    val partRefs = {
-      val pcols = layoutPartitionColumns(version).toSet
-      if (pcols.isEmpty) Set.empty[String]
-      else physFilters.iterator.flatMap(_.references).filter(pcols).toSet
-    }
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(outcomes.toMap)
-    val collected =
-      try spark.read.parquet(manifestCkptPath(ckptV).toString)
-        .select("seq", "file", "dv", "stats")
-        .mapPartitions { it =>
-          val oc = bc.value
-          it.flatMap { r =>
-            val f = r.getString(1)
-            val touched = oc.get(f)
-            if (touched.exists(!_.live)) Iterator.empty
-            else {
-              val baseDv = if (r.isNullAt(2)) None else Option(r.getString(2))
-              val dv = touched.flatMap(_.dvOv) match {
-                case Some(ov) => ov
-                case None => baseDv
-              }
-              val stats: Option[Map[String, (String, String, String)]] =
-                touched.flatMap(_.statsOv) match {
-                  case Some(ov) => ov
-                  case None =>
-                    if (r.isNullAt(3)) None
-                    else {
-                      val st = r.getSeq[org.apache.spark.sql.Row](3)
-                      if (st == null || st.isEmpty) None
-                      else Some(st.map(s => s.getString(0) ->
-                        ((s.getString(1), s.getString(2), s.getString(3)))).toMap)
-                    }
-                }
-              val cols = stats.getOrElse(
-                Map.empty[String, (String, String, String)]) ++
-                GraftTable.partitionValueStats(f, partRefs)
-              val keep = physFilters.forall(GraftTable.statsMayMatch(cols, _))
-              // touched non-survivors still report their presence so the
-              // driver can tell tail-ADDED files from checkpoint re-adds
-              if (keep || touched.isDefined)
-                Iterator.single((r.getLong(0), f, dv, touched.isDefined, keep))
-              else Iterator.empty
-            }
-          }
-        }.collect()
-      finally bc.destroy()
-    val seenInCkpt = collected.collect { case (_, f, _, true, _) => f }.toSet
-    val keptCkpt = collected.filter(_._5).sortBy(_._1)
-    val keptTail = outcomes.iterator.collect {
-      case (f, o) if o.live && !seenInCkpt(f) && {
-          val cols = o.statsOv.flatten.getOrElse(
-            Map.empty[String, (String, String, String)]) ++
-            GraftTable.partitionValueStats(f, partRefs)
-          physFilters.forall(GraftTable.statsMayMatch(cols, _))
-        } =>
-        (f, o.dvOv.flatten)
-    }.toSeq
-    val files = keptCkpt.map(_._2) ++ keptTail.map(_._1)
-    val dv = (keptCkpt.iterator.map(t => t._2 -> t._3) ++
-        keptTail.iterator.map(t => t._1 -> t._2)).collect {
-      case (f, Some(enc)) =>
-        val runs = GraftTable.decodeRuns(enc)
-        f -> runs
-    }.filter(_._2.nonEmpty).toMap
-    Some((files.toIndexedSeq, dv))
-  }
-
   /** Force a checkpoint at the current version (Delta's
     * `DeltaLog.checkpoint()` parity): writes the txn-map sidecar and the
-    * parquet manifest checkpoint that distributed planning reads. */
+    * parquet manifest checkpoint that snapshot reconstruction starts
+    * from instead of replaying the whole action log. */
   def checkpoint(): Unit = {
     require(currentVersion >= 0, "nothing to checkpoint: no committed version")
     writeCheckpoint(currentVersion)
-  }
-
-  /** Scan `version` reading only files that can match `filters`; result
-    * carries exactly the full version's schema even when the pruned
-    * subset lacks evolved columns (or is empty). */
-  def readVersionPruned(version: Long,
-      rawFilters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame =
-    // generated-column derivation up front so BOTH planning paths
-    // (distributed checkpoint scan and driver stats walk) see the
-    // implied predicates
-    readVersionPrunedAug(version, augmentedFilters(version, rawFilters))
-
-  /** [[readVersionPruned]] over already-augmented filters (see
-    * [[dataSkippedFilesAug]]). The file list comes from distributed
-    * planning when it engages, from the driver's snapshot otherwise; the
-    * scan carries the version's full schema either way. */
-  private[graft] def readVersionPrunedAug(version: Long,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
-    val (kept, dv) = planPrunedDistributed(version, filters)
-      .getOrElse((dataSkippedFilesAug(version, filters), dvOf(version)))
-    toLogical(scan(version, kept, dv), colMapOf(version))
   }
 
   // ---- CHECK constraints (Delta table-constraint parity) ---------------
@@ -2154,7 +1971,7 @@ final class GraftTable private (
         val affected =
           if (currentVersion < 0 || manifestFiles().isEmpty) Nil
           else if (partitionOnly) partitionScopedFiles(w, manifestFiles())
-          else affectedFiles(matches, dvRead)
+          else affectedFiles(expr(w), dvRead)
         // data-predicate files keep their rows NOT matching the
         // predicate; partition-scoped files match wholesale (no read)
         val kept =
@@ -2287,9 +2104,11 @@ final class GraftTable private (
     val partTypes = read().schema.fields
       .filter(f => partitionColumns.contains(f.name))
       .map(f => f.name -> f.dataType).toMap
-    val typed = partTypes.foldLeft(
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)) {
-        case (d, (c, t)) => d.withColumn(c, col(c).cast(t)) }
+    // a local relation: the optimizer folds the casts and the predicate
+    // into it, so the driver evaluates them and no Spark job runs
+    import scala.jdk.CollectionConverters._
+    val typed = partTypes.foldLeft(spark.createDataFrame(rows.asJava, schema)) {
+      case (d, (c, t)) => d.withColumn(c, col(c).cast(t)) }
     typed.filter(expr(w)).select("__file").collect().map(_.getString(0)).toSeq
   }
 
@@ -3065,6 +2884,8 @@ final class GraftTable private (
     * log — sizes from the snapshot, partition values from the hive paths
     * typed by the schema — so planning lists nothing and merges no
     * footers, and clone entries outside the root sit in the same index.
+    * The index skips files by `version`'s [[Skipping]] under whatever
+    * filters Spark pushes into the scan.
     * `dv`'s deleted positions are filtered INSIDE the scan by the
     * codegen'd [[DvDeleted]] predicate over `_metadata` (no join, whatever
     * the vector size; see [[DeletionVectors]]). `withMeta` keeps `__path`
@@ -3084,8 +2905,13 @@ final class GraftTable private (
         sizes.getOrElse(f, fs.getFileStatus(dataPath(f)).getLen),
         partCols.map(c => vals.get(c).flatten))
     }
+    val skipping = new Skipping(version)
+    lazy val keyOf = entries.iterator.map(_.path).zip(files).toMap
     val index = new GraftFileIndex(entries, partSchema,
-      spark.sessionState.conf.sessionLocalTimeZone)
+      spark.sessionState.conf.sessionLocalTimeZone, { filters =>
+        val survivors = skipping.kept(skipping.augment(skipping.logical(filters)), files).toSet
+        p => keyOf.get(p).forall(survivors)
+      })
     val all = GraftFileIndex.scan(spark, index,
       StructType(schema.filterNot(f => partCols.contains(f.name))))
     lazy val live = files.toSet
@@ -3103,9 +2929,11 @@ final class GraftTable private (
     if (withMeta) kept else kept.drop("__path", "__pos")
   }
 
-  /** Manifest files holding at least one LIVE row matching `cond`
-    * (logical column names). Partition and data-skipping filters push
-    * into this scan, so at scale the scan touches only candidate files. */
+  /** Manifest files holding at least one LIVE row for which `cond`
+    * (logical column names) is TRUE. The raw predicate, not its
+    * `coalesce(_, false)`, reaches the scan: the two keep the same rows,
+    * but only the raw one translates into the filters the file index
+    * skips by, so the scan touches only candidate files. */
   private def affectedFiles(cond: Column,
       dv: Map[String, Seq[(Long, Long)]]): Seq[String] =
     toLogical(scan(currentVersion, manifestFiles(), dv, withMeta = true), colMap)
@@ -3205,7 +3033,7 @@ final class GraftTable private (
   def delete(cond: Column, mergeOnRead: Boolean = false): Long = {
     val matches = coalesce(cond, lit(false))
     val dvRead = dvOf(currentVersion)
-    val affected = affectedFiles(matches, dvRead)
+    val affected = affectedFiles(cond, dvRead)
     if (affected.isEmpty)
       return commitRewrite("DELETE", Nil, Nil, Map("numFilesRewritten" -> "0"))
     if (mergeOnRead) {
@@ -3288,7 +3116,7 @@ final class GraftTable private (
       s"cannot UPDATE identity columns: ${idTouched.mkString(", ")}")
     val matches = coalesce(cond, lit(false))
     val dvRead = dvOf(currentVersion)
-    val affected = affectedFiles(matches, dvRead)
+    val affected = affectedFiles(cond, dvRead)
     if (affected.isEmpty)
       return commitRewrite("UPDATE", Nil, Nil, Map("numFilesRewritten" -> "0"))
     // assignments cast to the column's existing type — schema enforcement
@@ -4495,16 +4323,6 @@ object GraftTable {
     * below it, job-launch overhead beats the driver loop. */
   val DistributedStatsThreshold: Int = 12
 
-  /** Distributed scan planning in `auto` mode engages only over a
-    * manifest checkpoint at least this large (≈ hundreds of thousands of
-    * files); below it the driver's snapshot walk beats a Spark job. */
-  val DistributedPlanningMinCheckpointBytes: Long = 64L << 20
-
-  /** Longest action tail (files touched since the checkpoint) that
-    * distributed planning folds on the driver; a longer one, such as a
-    * full-table rewrite right after a checkpoint, takes the driver path. */
-  val DistributedPlanningMaxTailEntries: Int = 100000
-
   /** StructField metadata key carrying a column's DEFAULT expression in
     * the schema sidecar — Spark's own key for DSv2 column defaults, so
     * the recorded schema stays interoperable with engines that read it. */
@@ -4516,19 +4334,7 @@ object GraftTable {
     * [[GeneratedPruning]] evaluates derived predicates under. */
   val GeneratedTzKey: String = "graft.generated.tz."
 
-  /** Per-file outcome of folding an action tail over a symbolic
-    * checkpoint base — mirrors the incremental Snapshot fold exactly,
-    * but as overrides keyed by file instead of a materialized list.
-    * `statsOv`/`dvOv`: None = keep the checkpoint row's value,
-    * Some(None) = dropped/cleared, Some(Some(x)) = replaced. A
-    * top-level case class (NOT inner) so broadcasting the outcome map
-    * never drags a table handle into the closure. */
-  private[table] final case class TailOutcome(
-      live: Boolean,
-      statsOv: Option[Option[Map[String, (String, String, String)]]],
-      dvOv: Option[Option[String]])
-
-  // ---- pruning predicate (shared by driver + distributed planning) -----
+  // ---- pruning predicate ------------------------------------------------
 
   /** Try-wrapped: a non-numeric stat (legacy "Infinity" sidecar, NaN
     * filter value) yields None → no proof → the file is kept. */
@@ -4556,10 +4362,8 @@ object GraftTable {
   }
 
   /** True when the interval proofs over `cols` (column → (type-tag,
-    * min, max)) cannot exclude the file for filter `f`. A PURE function
-    * in the companion so the driver path and the distributed planning
-    * job evaluate the IDENTICAL predicate (the distributed path ships
-    * it inside a Spark closure).
+    * min, max)) cannot exclude the file for filter `f` — the interval
+    * proof of every scan's data skipping (see `Skipping`).
     *
     * Parquet FP min/max ignore NaN while Spark orders NaN LARGEST, so
     * "hi <= v" never proves a double file has no x > v row (a NaN row
@@ -4597,7 +4401,7 @@ object GraftTable {
     * non-Spark layout. A malformed escape is kept literally: the only
     * writer that produces it meant it literally, and for pruning a
     * kept-literal value can never be less correct than failing the
-    * scan. PURE (shipped into the distributed planning closure). */
+    * scan. */
   def unescapePathValue(s: String): String = {
     if (s.indexOf('%') < 0) return s
     val sb = new java.lang.StringBuilder(s.length)
@@ -4618,8 +4422,7 @@ object GraftTable {
     * synthesized as point intervals (lo = hi = the value) in
     * [[statsMayMatch]]'s encoding — partition predicates then prune the
     * FILE LIST through the same proof engine as footer stats, instead
-    * of relying solely on directory pruning inside the parquet scan.
-    * PURE (shipped into the distributed planning closure). */
+    * of relying solely on directory pruning inside the parquet scan. */
   def partitionValueStats(file: String,
       refs: Set[String]): Map[String, (String, String, String)] =
     if (refs.isEmpty) Map.empty
@@ -4630,8 +4433,7 @@ object GraftTable {
   /** Hive partition values of a manifest entry, in path order: every
     * `k=v` directory segment as (k, unescaped v), Spark's
     * `__HIVE_DEFAULT_PARTITION__` marker as None (a null value). The one
-    * parser of partition paths. PURE (shipped into the distributed
-    * planning closure). */
+    * parser of partition paths. */
   def partitionValues(entry: String): Seq[(String, Option[String])] =
     entry.split('/').toSeq.dropRight(1).filter(_.contains('=')).map { seg =>
       val i = seg.indexOf('=')
@@ -4654,23 +4456,23 @@ object GraftTable {
       case None => ("string", raw, raw)
     }
 
-  /** Rewrite the attribute names of the filter shapes [[statsMayMatch]]
-    * understands (logical → physical); shapes it ignores pass through
-    * unchanged (they prove nothing either way). */
+  /** `f` renamed through `m`, for the filter shapes the skipping proofs
+    * read ([[statsMayMatch]], bloom probes, generated-column
+    * derivation); None for any other shape or a column `m` lacks — such
+    * a conjunct proves nothing, and callers drop it. */
   def renameFilterAttrs(f: org.apache.spark.sql.sources.Filter,
-      m: Map[String, String]): org.apache.spark.sql.sources.Filter = {
+      m: Map[String, String]): Option[org.apache.spark.sql.sources.Filter] = {
     import org.apache.spark.sql.sources._
-    def n(a: String) = m.getOrElse(a, a)
     f match {
-      case EqualTo(a, v) => EqualTo(n(a), v)
-      case In(a, vs) => In(n(a), vs)
-      case GreaterThan(a, v) => GreaterThan(n(a), v)
-      case GreaterThanOrEqual(a, v) => GreaterThanOrEqual(n(a), v)
-      case LessThan(a, v) => LessThan(n(a), v)
-      case LessThanOrEqual(a, v) => LessThanOrEqual(n(a), v)
-      case And(l, r) => And(renameFilterAttrs(l, m), renameFilterAttrs(r, m))
-      case Or(l, r) => Or(renameFilterAttrs(l, m), renameFilterAttrs(r, m))
-      case other => other
+      case EqualTo(a, v) => m.get(a).map(EqualTo(_, v))
+      case In(a, vs) => m.get(a).map(In(_, vs))
+      case GreaterThan(a, v) => m.get(a).map(GreaterThan(_, v))
+      case GreaterThanOrEqual(a, v) => m.get(a).map(GreaterThanOrEqual(_, v))
+      case LessThan(a, v) => m.get(a).map(LessThan(_, v))
+      case LessThanOrEqual(a, v) => m.get(a).map(LessThanOrEqual(_, v))
+      case And(l, r) => for (x <- renameFilterAttrs(l, m); y <- renameFilterAttrs(r, m)) yield And(x, y)
+      case Or(l, r) => for (x <- renameFilterAttrs(l, m); y <- renameFilterAttrs(r, m)) yield Or(x, y)
+      case _ => None
     }
   }
 

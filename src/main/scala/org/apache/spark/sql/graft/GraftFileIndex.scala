@@ -3,10 +3,11 @@ package org.apache.spark.sql.graft
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, DynamicPruning, Expression, FileSourceMetadataAttribute, Literal, Predicate}
 import org.apache.spark.sql.classic.Dataset
-import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 /** A [[FileIndex]] over a fixed list of table files that the table's log
@@ -15,15 +16,19 @@ import org.apache.spark.sql.types.StructType
   * filesystem call — no listing, no status probe, no footer read — which
   * is how Delta plans from its log (`TahoeFileIndex`). Partition values
   * are typed by the recorded partition schema, and `listFiles` prunes
-  * on them; data filters are left to the parquet reader.
+  * on them; it then skips the files `skip` rules out for the scan's
+  * filters, translated to source filters over the scan's column names.
   *
   * Two indexes over the same files and partition schema are equal, so a
-  * plan reading one snapshot twice still reuses exchanges and caches.
+  * plan reading one snapshot twice still reuses exchanges and caches;
+  * `skip` only drops files no row of the scan can come from, so it
+  * changes no result and takes no part in equality.
   */
 final class GraftFileIndex(
     val files: Seq[GraftFileIndex.Entry],
     partitionColumns: StructType,
-    timeZoneId: String) extends FileIndex {
+    timeZoneId: String,
+    skip: Seq[Filter] => Path => Boolean) extends FileIndex {
 
   /** File columns are always nullable, as in every Spark file source. */
   override val partitionSchema: StructType = partitionColumns.asNullable
@@ -54,13 +59,25 @@ final class GraftFileIndex(
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val names = partitionSchema.fieldNames
     val pruning = partitionFilters.filter(_.references.forall(a => names.contains(a.name)))
-    if (pruning.isEmpty) return partitions
-    val keep = Predicate.createInterpreted(pruning.reduce(And).transform {
-      case a: AttributeReference =>
-        val i = names.indexOf(a.name)
-        BoundReference(i, partitionSchema(i).dataType, nullable = true)
-    })
-    partitions.filter(p => keep.eval(p.values))
+    val dirs = if (pruning.isEmpty) partitions else {
+      val keep = Predicate.createInterpreted(pruning.reduce(And).transform {
+        case a: AttributeReference =>
+          val i = names.indexOf(a.name)
+          BoundReference(i, partitionSchema(i).dataType, nullable = true)
+      })
+      partitions.filter(p => keep.eval(p.values))
+    }
+    // a conjunct that does not translate is dropped, which only keeps
+    // more files; deletion-vector filters over `_metadata` and runtime
+    // (dynamic) pruning filters never reach the skipping proofs
+    val proofs = (partitionFilters ++ dataFilters)
+      .filterNot(e => e.exists(_.isInstanceOf[DynamicPruning]) ||
+        e.references.exists(a => FileSourceMetadataAttribute.isValid(a.metadata)))
+      .flatMap(DataSourceStrategy.translateFilter(_, supportNestedPredicatePushdown = false))
+    if (proofs.isEmpty) return dirs
+    val kept = skip(proofs)
+    dirs.map(d => d.copy(files = d.files.filter(f => kept(f.getPath))))
+      .filter(_.files.nonEmpty)
   }
 
   override def equals(other: Any): Boolean = other match {

@@ -79,19 +79,34 @@ class ContractSpec extends AnyFunSuite {
         s"stale justifications: ${justified -- rowsOnly}")
   }
 
-  test("GraftSession.scala is the only place a SparkSession is built") {
-    // comment lines are skipped (docs may name the builder); spans are
-    // not stripped, since `/*` and `//` also occur inside string literals
-    def isComment(line: String): Boolean = {
-      val t = line.trim
-      t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
+  test("the engine reads no spark.graft.* session key beyond its two knobs") {
+    val allowed = Set("spark.graft.logStore", "spark.graft.retentionDurationCheck.enabled")
+    val key = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
+    val read = scalaFiles(new java.io.File("src/main")).flatMap { f =>
+      val src = scala.io.Source.fromFile(f)(scala.io.Codec.UTF8)
+      try src.getLines().filterNot(isComment).flatMap(l => key.findAllMatchIn(l).map(_.group(1))).toList
+      finally src.close()
+    }.toSet
+    assert(read.nonEmpty, "no spark.graft.* key found: the scan is broken")
+    assert(read.subsetOf(allowed), s"session keys beyond the two knobs: ${read -- allowed}")
+  }
+
+  // comment lines are skipped (docs may name what code must not use);
+  // spans are not stripped, since `/*` and `//` also occur inside string
+  // literals
+  private def isComment(line: String): Boolean = {
+    val t = line.trim
+    t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
+  }
+
+  private def scalaFiles(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) scalaFiles(f)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     }
+
+  test("GraftSession.scala is the only place a SparkSession is built") {
     val builder = """SparkSession\s*\.\s*builder\s*\(""".r
-    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
-      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-      }
     val files = Seq("src/main", "src/test").flatMap(d => scalaFiles(new java.io.File(d)))
     assert(files.exists(_.getName == "GraftSession.scala"))
     val builders = files.filter { f =>

@@ -107,11 +107,15 @@ class GeneratedPruningSpec extends SparkSpec {
       s"derived partition bound must prune: kept ${kept.size} of $all")
     assert(kept.forall(f => f.contains("d=2024-03-05") || f.contains("d=2024-03-06")))
 
-    // soundness end-to-end through the relation
+    // soundness end-to-end through the relation and the table's read,
+    // whose file index derives the same bound
     val got = spark.read.format("graft").load(path)
       .filter(col("ev_ts") >= lit(ts("2024-03-05 00:00:00")))
       .select("id").collect().map(_.getInt(0)).sorted
     assert(got.toSeq == (200 until 300))
+    val read = t.read().filter(col("ev_ts") >= lit(ts("2024-03-05 00:00:00")))
+      .select("id").collect().map(_.getInt(0)).sorted
+    assert(read.toSeq == (200 until 300))
   }
 
   test("equality derives through any deterministic definition") {

@@ -146,7 +146,6 @@ class GraftSourceSpec extends SparkSpec {
     // (the V1 shim node hides the inner plan, so assert on the exact
     // frame the shim executes)
     val sb = new graft.sources.GraftScanBuilder(t.read(),
-      fs => t.readVersionPruned(t.currentVersion, fs),
       fs => t.scanStats(t.currentVersion, fs))
     sb.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("ticker", "MSFT")))
     sb.pruneColumns(org.apache.spark.sql.types.StructType(
