@@ -180,16 +180,10 @@ final case class GraftV2Table(spark: SparkSession, path: String,
       Map("provider" -> "graft", "location" -> path,
         "version" -> pinnedVersion.toString)).asJava
 
-  // the shim augments a scan's pushed filters exactly ONCE and feeds
-  // the stats and NDV hooks the augmented sequence, so those bind to
-  // the pre-augmented GraftTable variants — re-augmenting per layer
-  // would re-parse every generated definition and pay a driver-side
-  // local select 2-3x per query for identical results
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(snapshot,
-      filters => table.scanStatsAug(pinnedVersion, filters),
-      filters => table.augmentedFilters(pinnedVersion, filters),
-      filters => table.columnNdvAug(pinnedVersion, filters),
+      filters => table.scanStats(pinnedVersion, filters),
+      filters => table.columnNdv(pinnedVersion, filters),
       column => table.foldedBounds(pinnedVersion, column),
       cols => table.partitionGroupCounts(pinnedVersion, cols),
       (cols, c) => table.partitionGroupBounds(pinnedVersion, cols, c))
@@ -275,7 +269,6 @@ final case class GraftV2Table(spark: SparkSession, path: String,
   * relation). */
 final class GraftScanBuilder(snapshot: DataFrame,
     scanStats: Seq[Filter] => (Long, Option[Long]),
-    augment: Seq[Filter] => Seq[Filter] = identity _,
     columnNdv: Seq[Filter] => Map[String, Long] = _ => Map.empty,
     foldedBounds: String => Option[(String, String, String)] = _ => None,
     partitionGroupCounts: Seq[String] => Option[Seq[(Seq[Option[String]], Long)]] =
@@ -483,8 +476,7 @@ final class GraftScanBuilder(snapshot: DataFrame,
   override def build(): Scan = aggAnswer match {
     case Some((schema, values)) => new GraftMetadataAggScan(schema, values)
     case None =>
-      new GraftV1ScanShim(snapshot, required, pushed, scanStats, augment,
-        columnNdv)
+      new GraftV1ScanShim(snapshot, required, pushed, scanStats, columnNdv)
   }
 }
 
@@ -513,15 +505,9 @@ final class GraftMetadataAggScan(schema: StructType, rows: Seq[Seq[Any]])
 final class GraftV1ScanShim(snapshot: DataFrame,
     required: StructType, filters: Array[Filter],
     scanStats: Seq[Filter] => (Long, Option[Long]),
-    augment: Seq[Filter] => Seq[Filter] = identity _,
     columnNdv: Seq[Filter] => Map[String, Long] = _ => Map.empty)
     extends V1Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-
-  /** Pushed filters plus generated-column-derived implications,
-    * computed ONCE per scan — estimateStatistics and columnStats both
-    * read this sequence. */
-  private lazy val augmentedOnce: Seq[Filter] = augment(filters.toIndexedSeq)
 
   override def readSchema(): StructType = required
 
@@ -536,8 +522,8 @@ final class GraftV1ScanShim(snapshot: DataFrame,
     * and join reordering consume. */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
-    val (bytes, rows) = scanStats(augmentedOnce)
-    val ndv = columnNdv(augmentedOnce)
+    val (bytes, rows) = scanStats(filters.toIndexedSeq)
+    val ndv = columnNdv(filters.toIndexedSeq)
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(bytes)

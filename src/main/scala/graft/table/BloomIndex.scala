@@ -75,16 +75,33 @@ object BloomIndex {
     props.get(ColumnsProp).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 
-  /** The probe hash of a pushed-filter literal — must agree with the
-    * build side's `xxhash64(col)` for the column's type, which it does
-    * as long as the pushed value arrives in the column's own type (the
-    * DSv1/DSv2 pushdown contract). */
-  private[table] def probeHash(v: Any): Option[Long] = v match {
-    case null => None
-    case _ => scala.util.Try {
-      import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-      XxHash64(Seq(Literal(v)), 42L).eval(null).asInstanceOf[Long]
-    }.toOption
+  /** Every hash a file's filter may hold pushed-filter value `v` under;
+    * empty when `v` is unhashable. The build side hashes
+    * `xxhash64(col)` in the column's own type, which the pushed value
+    * carries (the DSv1/DSv2 pushdown contract) up to two gaps, covered
+    * by also hashing an alternate form of `v`:
+    *  - a file indexed before an ALTER COLUMN TYPE widening
+    *    ([[TypeWidening]]) hashed the narrower type: Spark hashes byte,
+    *    short and int alike, but long and double unlike int and float;
+    *  - a decimal column wider than 18 digits hashes its unscaled bytes,
+    *    a narrower one its unscaled long, and a value's own precision
+    *    does not say which. */
+  private def probeHashes(v: Any): Seq[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    import org.apache.spark.sql.types.{Decimal, DecimalType}
+    def hash(l: => Literal): Option[Long] =
+      scala.util.Try(XxHash64(Seq(l), 42L).eval(null).asInstanceOf[Long]).toOption
+    val alternate: Option[Literal] = scala.util.Try(v match {
+      case l: java.lang.Long if l.longValue == l.intValue => Some(Literal(l.intValue))
+      case d: java.lang.Double
+          if java.lang.Double.compare(d.floatValue.toDouble, d.doubleValue) == 0 =>
+        Some(Literal(d.floatValue))
+      case d: java.math.BigDecimal if d.scale >= 0 && d.scale <= DecimalType.MAX_SCALE =>
+        Some(Literal(Decimal(d), DecimalType(DecimalType.MAX_PRECISION, d.scale)))
+      case _ => None
+    }).toOption.flatten
+    if (v == null) Nil
+    else hash(Literal(v)).fold(Seq.empty[Long])(_ +: alternate.flatMap(hash(_)).toSeq)
   }
 
   /** Build-side per-column aggregate: partial blooms on the mappers,
@@ -263,12 +280,12 @@ object BloomIndex {
       filters: Seq[org.apache.spark.sql.sources.Filter]): Map[String, Seq[Seq[Long]]] = {
     import org.apache.spark.sql.sources._
     def oneFilter(f: Filter): Seq[(String, Seq[Long])] = f match {
-      case EqualTo(a, v) => probeHash(v).map(h => a -> Seq(h)).toSeq
+      case EqualTo(a, v) => Some(probeHashes(v)).filter(_.nonEmpty).map(a -> _).toSeq
       case In(a, vs) =>
-        val hs = vs.toSeq.flatMap(probeHash)
+        val hs = vs.toSeq.filter(_ != null).map(probeHashes)
         // a NULL among the IN list can never match either; but an
         // unhashable value means no proof for this conjunct
-        if (hs.size == vs.count(_ != null) && hs.nonEmpty) Seq(a -> hs) else Nil
+        if (hs.nonEmpty && hs.forall(_.nonEmpty)) Seq(a -> hs.flatten) else Nil
       case And(l, r) => oneFilter(l) ++ oneFilter(r)
       case _ => Nil
     }

@@ -1029,26 +1029,29 @@ final class GraftTable private (
   def augmentedFilters(version: Long,
       filters: Seq[org.apache.spark.sql.sources.Filter])
       : Seq[org.apache.spark.sql.sources.Filter] =
-    new Skipping(version).augment(filters)
+    skippingAt(version).augment(filters)
 
   /** The subset of `version`'s files that MAY contain rows matching all
     * `filters` (conservative: a file is kept unless its stats prove no
     * row can match). */
   def dataSkippedFiles(version: Long,
       rawFilters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] = {
-    val skipping = new Skipping(version)
+    val skipping = skippingAt(version)
     skipping.kept(skipping.augment(rawFilters), manifestFiles(version))
   }
 
-  /** [[dataSkippedFiles]] over ALREADY-AUGMENTED filters: internal
-    * entry for callers that ran [[augmentedFilters]] once up front (the
-    * DSv2 scan shim augments a scan's pushed filters exactly once and
-    * feeds stats and NDV from the same sequence — augmentation
-    * re-parses every generated definition and pays a driver-side local
-    * select, so repeating it per layer doubles planning latency). */
-  private[graft] def dataSkippedFilesAug(version: Long,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] =
-    new Skipping(version).kept(filters, manifestFiles(version))
+  // the last Skipping built, reused at the same version while that
+  // version's snapshot stays cached (a recreated table drops it): a
+  // scan's statistics and its file index then augment the same filters
+  // once
+  @volatile private var lastSkipping: Skipping = _
+
+  private def skippingAt(version: Long): Skipping = {
+    val snap = snapshotAt(version)
+    val last = lastSkipping
+    if (last != null && last.version == version && (last.snap eq snap)) last
+    else { val s = new Skipping(version, snap); lastSkipping = s; s }
+  }
 
   /** Data skipping at `version`: generated-column augmentation, then
     * [[GraftTable.statsMayMatch]] over each file's footer stats and
@@ -1056,7 +1059,7 @@ final class GraftTable private (
     * version's metadata is read at most once per instance — the file
     * index of a scan holds one and asks it each time Spark lists files.
     * Filters carry LOGICAL column names. */
-  private final class Skipping(version: Long) {
+  private final class Skipping(val version: Long, val snap: Snapshot) {
     private type Filter = org.apache.spark.sql.sources.Filter
     private lazy val cm = colMapOf(version)
     private lazy val defs = generatedOf(version)
@@ -1067,7 +1070,7 @@ final class GraftTable private (
     // no-op). A dropped column's stats become unreachable (no logical
     // name maps to them) — conservative, never wrong.
     private lazy val stats = {
-      val raw = statsOf(version)
+      val raw = snap.stats
       if (cm.isIdentity) raw
       else {
         val logicalOf = cm.entries.map(_.swap).toMap
@@ -1090,13 +1093,23 @@ final class GraftTable private (
         filters.flatMap(GraftTable.renameFilterAttrs(_, logicalOf))
       }
 
+    // the last augmentation and the filter set it answered: a scan's
+    // statistics and its file index ask with the same filters
+    @volatile private var lastAugmented: (Set[Filter], Seq[Filter]) = (Set.empty, Nil)
+
     def augment(filters: Seq[Filter]): Seq[Filter] =
       if (filters.isEmpty || defs.isEmpty) filters
       else {
-        val baseType = (c: String) =>
-          schema.flatMap(_.fields.find(_.name == c).map(_.dataType))
-        (filters ++ GeneratedPruning.derive(spark, defs, baseType, filters,
-          g => props.get(GraftTable.GeneratedTzKey + g))).distinct
+        val (key, last) = lastAugmented
+        if (key == filters.toSet) last
+        else {
+          val baseType = (c: String) =>
+            schema.flatMap(_.fields.find(_.name == c).map(_.dataType))
+          val out = (filters ++ GeneratedPruning.derive(spark, defs, baseType, filters,
+            g => props.get(GraftTable.GeneratedTzKey + g))).distinct
+          lastAugmented = (filters.toSet, out)
+          out
+        }
       }
 
     /** The subset of `files` that MAY hold rows matching all of the
@@ -1164,15 +1177,9 @@ final class GraftTable private (
     * `None` when any surviving file lacks a footer row count (estimate
     * must never under-claim). */
   def scanStats(version: Long,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): (Long, Option[Long]) =
-    scanStatsAug(version, augmentedFilters(version, filters))
-
-  /** [[scanStats]] over already-augmented filters (see
-    * [[dataSkippedFilesAug]]). */
-  private[graft] def scanStatsAug(version: Long,
       filters: Seq[org.apache.spark.sql.sources.Filter]): (Long, Option[Long]) = {
     val snap = snapshotAt(version)
-    val kept = dataSkippedFilesAug(version, filters)
+    val kept = dataSkippedFiles(version, filters)
     val bytes = kept.iterator.map(f =>
       snap.sizes.getOrElse(f, fs.getFileStatus(dataPath(f)).getLen)).sum
     val perFile = kept.map(f =>
@@ -1349,20 +1356,12 @@ final class GraftTable private (
     * selectivity, the direction that mis-plans. */
   def columnNdv(version: Long = currentVersion,
       filters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
-      : Map[String, Long] =
-    columnNdvAug(version,
-      if (filters.isEmpty) Nil else augmentedFilters(version, filters))
-
-  /** [[columnNdv]] over already-augmented filters (see
-    * [[dataSkippedFilesAug]]). */
-  private[graft] def columnNdvAug(version: Long,
-      filters: Seq[org.apache.spark.sql.sources.Filter])
       : Map[String, Long] = {
     if (version < 0) return Map.empty
     val snap = snapshotAt(version)
     if (snap.files.isEmpty) return Map.empty
     val kept =
-      if (filters.isEmpty) snap.files else dataSkippedFilesAug(version, filters)
+      if (filters.isEmpty) snap.files else dataSkippedFiles(version, filters)
     val cm = colMapOf(version)
     val logicalOf: String => Option[String] =
       if (cm.isIdentity) Some(_)
@@ -2905,7 +2904,7 @@ final class GraftTable private (
         sizes.getOrElse(f, fs.getFileStatus(dataPath(f)).getLen),
         partCols.map(c => vals.get(c).flatten))
     }
-    val skipping = new Skipping(version)
+    val skipping = skippingAt(version)
     lazy val keyOf = entries.iterator.map(_.path).zip(files).toMap
     val index = new GraftFileIndex(entries, partSchema,
       spark.sessionState.conf.sessionLocalTimeZone, { filters =>
@@ -4336,18 +4335,43 @@ object GraftTable {
 
   // ---- pruning predicate ------------------------------------------------
 
-  /** Try-wrapped: a non-numeric stat (legacy "Infinity" sidecar, NaN
-    * filter value) yields None → no proof → the file is kept. */
-  private def statCmp(tag: String, stat: String, v: Any): Option[Int] = {
+  /** `stat`, the `lower` or upper bound of a file's column, compared
+    * with filter value `v`. Try-wrapped: a non-numeric stat (legacy
+    * "Infinity" sidecar, NaN filter value) yields None → no proof → the
+    * file is kept.
+    *
+    * A FLOAT or DOUBLE bound is stored as the shortest decimal that
+    * reads back as the stored value — "0.7" for the float 0.699999988…
+    * — and a float column widened to double is filtered by doubles. So
+    * a "double" bound, or any numeric bound met by a Float or Double
+    * value, widens outward over the nearest float and nearest double of
+    * its decimal (one of them is the stored value, whatever the file's
+    * width), and the filter value compares by its exact binary value. */
+  private def statCmp(tag: String, stat: String, v: Any, lower: Boolean): Option[Int] = {
+    import java.math.BigDecimal
     import org.apache.spark.sql.catalyst.util.DateTimeUtils
     def num(n: Long): Option[Int] = scala.util.Try(
-      new java.math.BigDecimal(stat)
-        .compareTo(java.math.BigDecimal.valueOf(n))).toOption
+      new BigDecimal(stat).compareTo(BigDecimal.valueOf(n))).toOption
     (tag, v) match {
       case ("string", s: String) => Some(utf8Compare(stat, s))
-      case (("long" | "double"), n: Number) =>
-        scala.util.Try(new java.math.BigDecimal(stat)
-          .compareTo(new java.math.BigDecimal(n.toString))).toOption
+      case (("long" | "double"), n: Number) => scala.util.Try {
+        val (value, approx) = n match {
+          case f: java.lang.Float => (new BigDecimal(f.doubleValue), true)
+          case d: java.lang.Double => (new BigDecimal(d.doubleValue), true)
+          case _ => (new BigDecimal(n.toString), tag == "double")
+        }
+        val bound =
+          if (!approx) new BigDecimal(stat)
+          else {
+            val nearest = Seq(stat.toDouble, stat.toFloat.toDouble)
+              .filterNot(_.isInfinite).map(new BigDecimal(_))
+            // a "long" bound (integer, decimal or partition value) may
+            // also be its decimal exactly
+            (if (tag == "long") new BigDecimal(stat) +: nearest else nearest)
+              .reduce((a, b) => if ((a.compareTo(b) < 0) == lower) a else b)
+          }
+        bound.compareTo(value)
+      }.toOption
       // date bounds are EPOCH DAYS, timestamp bounds EPOCH MICROS —
       // the parquet physical encodings — so pushed java.sql/java.time
       // values convert through the same DateTimeUtils the scan uses
@@ -4376,16 +4400,17 @@ object GraftTable {
     def upperBoundSound(t: String): Boolean = t != "double"
     f match {
       case EqualTo(a, v) => cols.get(a).forall { case (t, lo, hi) =>
-        !(statCmp(t, lo, v).exists(_ > 0) || statCmp(t, hi, v).exists(_ < 0)) }
+        !(statCmp(t, lo, v, lower = true).exists(_ > 0) ||
+          statCmp(t, hi, v, lower = false).exists(_ < 0)) }
       case In(a, vs) => vs.exists(v => statsMayMatch(cols, EqualTo(a, v)))
       case GreaterThan(a, v) => cols.get(a).forall { case (t, _, hi) =>
-        !upperBoundSound(t) || !statCmp(t, hi, v).exists(_ <= 0) }
+        !upperBoundSound(t) || !statCmp(t, hi, v, lower = false).exists(_ <= 0) }
       case GreaterThanOrEqual(a, v) => cols.get(a).forall { case (t, _, hi) =>
-        !upperBoundSound(t) || !statCmp(t, hi, v).exists(_ < 0) }
+        !upperBoundSound(t) || !statCmp(t, hi, v, lower = false).exists(_ < 0) }
       case LessThan(a, v) => cols.get(a).forall { case (t, lo, _) =>
-        !statCmp(t, lo, v).exists(_ >= 0) }
+        !statCmp(t, lo, v, lower = true).exists(_ >= 0) }
       case LessThanOrEqual(a, v) => cols.get(a).forall { case (t, lo, _) =>
-        !statCmp(t, lo, v).exists(_ > 0) }
+        !statCmp(t, lo, v, lower = true).exists(_ > 0) }
       case And(l, r) => statsMayMatch(cols, l) && statsMayMatch(cols, r)
       case Or(l, r) => statsMayMatch(cols, l) || statsMayMatch(cols, r)
       case _ => true // IsNull / Not / string ops: no interval proof → keep

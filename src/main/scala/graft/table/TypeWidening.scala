@@ -15,9 +15,11 @@ import org.apache.spark.sql.types._
   * Every scan reads under the version's recorded physical schema, so
   * narrow and wide files mix in one scan with no schema merge; the
   * [[TypeWidening.Prop]] marker gates the write side, where a narrower
-  * incoming column upcasts instead of failing enforcement. Stats-based
-  * data skipping is unaffected: integral bounds share the "long" tag
-  * and compare through BigDecimal regardless of physical width.
+  * incoming column upcasts instead of failing enforcement. Data
+  * skipping stays sound across widths: integral bounds share the "long"
+  * tag and compare through BigDecimal, a float file's bounds widen over
+  * the float their decimal names (`GraftTable.statsMayMatch`), and bloom
+  * probes also hash a value's narrower form (`BloomIndex`).
   */
 object TypeWidening {
 

@@ -178,6 +178,31 @@ class IncrementalLogSpec extends SparkSpec {
     assert(t.dataSkippedFiles(t.currentVersion, Seq(GreaterThan("id", 1000))).isEmpty)
   }
 
+  test("checkpoint() writes the current version's base; a fresh handle rebuilds from it") {
+    import spark.implicits._
+    val path = graft.GraftTmp.dir("il_force_ckpt").toString
+    val fs = hfs(path)
+    val t = GraftTable(spark, path, Nil)
+    t.write((0 until 100).map(_.toLong).toDF("id").repartition(2))
+    t.delete(col("id") < 10L, mergeOnRead = true)
+    t.write(Seq(500L).toDF("id").coalesce(1), org.apache.spark.sql.SaveMode.Append)
+    val v = t.currentVersion
+    val ckpt = logFile(path, f"v$v%020d.ckpt.parquet")
+    assert(!fs.exists(ckpt))
+    t.checkpoint()
+    assert(fs.exists(ckpt))
+    val (files, dv, stats) = (t.manifestFiles(v), t.dvOf(v), t.statsOf(v))
+    assert(dv.values.flatten.map(_._2).sum == 10 && stats.keySet == files.toSet)
+    // without the earlier action records only the checkpoint can serve v
+    GraftTable.invalidateSnapshotsFrom(new Path(path).toUri.getPath, 0L)
+    (0L until v).foreach(i => fs.delete(logFile(path, f"v$i%020d.actions.tsv"), false))
+    val fresh = GraftTable(spark, path)
+    assert(fresh.manifestFiles(v) == files)
+    assert(fresh.dvOf(v) == dv)
+    assert(fresh.statsOf(v) == stats)
+    assert(fresh.read().count() == 91)
+  }
+
   test("legacy full-snapshot manifests remain readable and take precedence") {
     import spark.implicits._
     val path = graft.GraftTmp.dir("il_legacy").toString

@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.table.{GraftTable, TypeWidening}
+import graft.table.{BloomIndex, GraftTable, TypeWidening}
 
 /** ALTER COLUMN TYPE widening (Delta type-widening parity): the commit
   * is metadata-only — old files keep their narrow physical type and
@@ -68,6 +68,41 @@ class TypeWideningSpec extends SparkSpec {
     // below-bounds rows still read (no over-pruning of narrow files)
     assert(spark.read.format("graft").load(path)
       .filter(col("v") <= 100L).count() == 100)
+  }
+
+  test("skipping by float bounds stays sound after widening to double") {
+    val (t, _) = fresh("tw_float_skip")
+    // the float file's bounds are stored as "0.7" and "0.9"; the widened
+    // value of 0.7f is 0.699999988…, below the double 0.7
+    t.write(Seq((0.7f, "a"), (0.9f, "b")).toDF("x", "s").coalesce(1))
+    t.write(Seq((5.0f, "c")).toDF("x", "s").coalesce(1), SaveMode.Append)
+    t.alterColumnType("x", DoubleType)
+    val opaque = udf((b: Boolean) => b)
+    def rows(df: DataFrame) = df.select("s").as[String].collect().sorted.toSeq
+    val widened = 0.7f.toDouble
+    for (cond <- Seq(col("x") < 0.7, col("x") <= widened, col("x") === widened,
+        col("x").isin(widened, 2.0), col("x") > 0.6999999, col("x") >= widened))
+      assert(rows(t.read().where(cond)) == rows(t.read().where(opaque(cond))), cond)
+    assert(rows(t.read().where(col("x") < 0.7)) == Seq("a"))
+    t.delete(col("x") < 0.7)
+    assert(rows(t.read()) == Seq("b", "c"))
+  }
+
+  test("bloom skipping stays sound after widening int to long and float to double") {
+    val (t, _) = fresh("tw_bloom")
+    // round-robin files: every file's range spans the probes, so only
+    // the bloom filters can skip
+    t.write((1 to 100).map(i => (i, i / 4.0f, s"r$i")).toDF("v", "x", "s").repartition(4))
+    t.setProperties(Map(BloomIndex.ColumnsProp -> "v,x"))
+    assert(t.buildBloomIndex() == 4)
+    t.alterColumnType("v", LongType)
+    t.alterColumnType("x", DoubleType)
+    def names(cond: Column) = t.read().where(cond).select("s").as[String].collect().sorted.toSeq
+    assert(names(col("v") === 42L) == Seq("r42"))
+    assert(names(col("v").isin(7L, 42L)) == Seq("r42", "r7"))
+    assert(names(col("x") === 10.5) == Seq("r42"))
+    t.delete(col("v") === 7L)
+    assert(t.read().count() == 99 && names(col("v") === 7L).isEmpty)
   }
 
   test("time travel before the widening keeps the narrow type; DML reads widened") {
