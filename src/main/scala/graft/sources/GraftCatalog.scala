@@ -146,7 +146,7 @@ final class GraftCatalog extends TableCatalog {
   * INTO` appends, `INSERT OVERWRITE` logical truncate-and-write) bridge
   * through DSv2's official [[org.apache.spark.sql.connector.write.V1Write]]
   * shim onto [[GraftTable.write]], so schema enforcement, constraint
-  * validation, the version-claim commit protocol and append conflict
+  * validation, the put-if-absent commit protocol and append conflict
   * retry all apply identically to SQL and API writers. */
 final case class GraftV2Table(spark: SparkSession, path: String,
     versionAsOf: Option[Long]) extends Table

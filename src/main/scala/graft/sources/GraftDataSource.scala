@@ -557,7 +557,7 @@ final class GraftStreamSource(
   * across restarts, distinct across streams), the txn version is the
   * batch id, so `idempotentAppend` turns a replayed batch into a no-op.
   * Concurrent batch writers to the same table are safe: appends retry
-  * through the version-claim conflict path. */
+  * through the put-if-absent conflict path. */
 final class GraftStreamSink(path: String, partitionColumns: Seq[String],
     queryName: Option[String], checkpointLocation: Option[String])
     extends org.apache.spark.sql.execution.streaming.Sink {

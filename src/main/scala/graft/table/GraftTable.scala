@@ -8,42 +8,44 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftFileIndex
 import org.apache.spark.sql.types.StructType
 
-/** Partitioned-parquet table with a versioned, INCREMENTAL commit log —
-  * the engine's replacement for the reference's Delta Lake layer
-  * (SURVEY.md §7.3; the environment ships no delta jar).
+/** Partitioned-parquet table with a versioned commit log — the engine's
+  * replacement for the reference's Delta Lake layer (SURVEY.md §7.3; the
+  * environment ships no delta jar).
   *
   * Layout:
   * {{{
   *   <path>/<part>=.../part-*.parquet        data files (never mutated)
-  *   <path>/_graft_log/v<N>.actions.tsv      file adds/removes of commit N
-  *   <path>/_graft_log/v<N>.stats.tsv        min/max stats of N's ADDED files
-  *   <path>/_graft_log/v<N>.dv.tsv           deletion vectors CHANGED by N
-  *   <path>/_graft_log/v<N>.json             commit record (the commit point)
-  *   <path>/_graft_log/v<N>.ckpt.parquet/    manifest checkpoint (periodic)
+  *   <path>/_graft_log/v<N>.json             the record of commit N (the commit)
+  *   <path>/_graft_log/v<N>.ckpt.parquet/    table-state checkpoint (periodic)
   *   <path>/_graft_log/index/<md5>.bloom     per-data-file bloom filters
+  *   <path>/_graft_log/cdc/<id>/             change rows of an UPDATE/MERGE
   * }}}
   *
-  * Commits record ACTIONS, not snapshots (Delta's add/remove-action log
-  * design): a one-row append to a million-file table writes O(1) log
-  * entries, never an O(live-files) manifest. Every CheckpointInterval
-  * commits — and before log truncation — the full snapshot (file list +
-  * per-file stats + vectors) is checkpointed as a parquet dataset
-  * written and readable as a DataFrame; readers reconstruct any
-  * version from the nearest checkpoint (or legacy full-snapshot
-  * `vN.files` manifest, still readable) plus the action tail, with an
-  * LRU snapshot cache making the common v-1 → v step incremental.
-  * Schema/constraint/column-map sidecars stay full per commit — they
-  * are O(columns), not O(files).
+  * Every commit writes exactly one record, published put-if-absent through
+  * the [[LogStore]]: JSON lines after Delta's protocol — `commitInfo`
+  * (operation, timestamp, metrics, txn markers), then the files it `add`s
+  * (path, size, stats) and `remove`s, the deletion vectors it replaces
+  * (`dv`), and `metaData` (physical schema, column map, constraints,
+  * generated columns, properties) only when the commit changed it. A
+  * one-row append to a million-file table writes one small record, never
+  * an O(live-files) manifest. Every `graft.checkpointInterval` commits
+  * (and before log truncation) the whole state — files, stats, vectors,
+  * metadata, txn map — goes into a parquet checkpoint written and read as
+  * a DataFrame. A reader rebuilds any version from the nearest checkpoint
+  * plus the records after it into one [[GraftTable.Snapshot]], cached per
+  * version, so the common v-1 → v step reads one record.
   *
   * Every operation writes NEW data files and commits NEW actions; files
   * leaving the live set become orphans that `vacuum` reclaims after a
   * retention window. Readers resolve the snapshot and scan only its
   * files — this is what makes OPTIMIZE (M1), VACUUM (M2), history (M3)
-  * and DESCRIBE DETAIL (D5) expressible over plain parquet. The `.json`
-  * rename is the commit point; the version claim file is the writer
-  * mutex, blind appends retry on claim races and snapshot-derived
-  * rewrites retry iff their inputs are still live (Delta's
-  * WriteSerializable conflict rules).
+  * and DESCRIBE DETAIL (D5) expressible over plain parquet. Everything a
+  * commit derives from its predecessor is computed against the version
+  * it is about to follow; losing the put-if-absent race means recomputing
+  * against the winner: blind appends retry, and snapshot-derived rewrites
+  * retry iff their inputs are still live (Delta's WriteSerializable
+  * conflict rules). A writer that dies before its put leaves orphaned
+  * data files and at most a temp file, both for VACUUM.
   *
   * Scale notes: data files are hive-partitioned so partition pruning is
   * free. Planning a scan still materializes the file list on the
@@ -56,283 +58,183 @@ final class GraftTable private (
     val path: String,
     val partitionColumns: Seq[String]) {
 
-  import GraftTable.{ColMap, Snapshot}
+  import GraftTable.{ColMap, Meta, Snapshot}
 
   private val root = new Path(path)
   private val logDir = new Path(root, "_graft_log")
   private lazy val fs: FileSystem = root.getFileSystem(spark.sessionState.newHadoopConf())
 
-  // ---- manifest plumbing ----------------------------------------------
+  // ---- the log: one record per commit ---------------------------------
 
-  private def versionOf(p: Path): Option[Long] = {
-    val n = p.getName
-    if (n.startsWith("v") && n.endsWith(".json"))
-      scala.util.Try(n.stripPrefix("v").stripSuffix(".json").toLong).toOption
+  private def rootKey: String = root.toUri.getPath
+  private def recordPath(v: Long) = new Path(logDir, f"v$v%020d.json")
+  private def checkpointPath(v: Long) = new Path(logDir, f"v$v%020d.ckpt.parquet")
+
+  private def versionOf(name: String, ext: String): Option[Long] =
+    if (name.startsWith("v") && name.endsWith(ext))
+      name.stripPrefix("v").stripSuffix(ext).toLongOption
     else None
-  }
 
-  def currentVersion: Long =
-    if (!fs.exists(logDir)) -1L
-    else fs.listStatus(logDir).flatMap(s => versionOf(s.getPath)).foldLeft(-1L)(Math.max)
+  private def listLog(): Seq[String] =
+    if (!fs.exists(logDir)) Nil else fs.listStatus(logDir).toSeq.map(_.getPath.getName)
+
+  private def logNames(): Seq[String] = { legacyConverted; listLog() }
+
+  /** Retained committed versions, ascending. */
+  private def versions(): Seq[Long] = logNames().flatMap(versionOf(_, ".json")).sorted
+
+  def currentVersion: Long = versions().lastOption.getOrElse(-1L)
 
   /** Whether `version`'s commit record is still retained (false once
     * `cleanupLog` truncated it — time travel/CDF from it is gone). */
-  def hasVersion(version: Long): Boolean =
-    version >= 0 && fs.exists(new Path(logDir, f"v$version%020d.json"))
+  def hasVersion(version: Long): Boolean = version >= 0 && fs.exists(recordPath(version))
 
   /** Live data files (relative paths) of a version's snapshot. */
   def manifestFiles(version: Long = currentVersion): Seq[String] =
     snapshotAt(version).files
 
-  // ---- snapshot reconstruction (incremental action log) ----------------
+  // A version-1 log (a marker plus eight sidecars per commit) is converted
+  // once, when a handle first lists or reads the log: a v2 checkpoint of
+  // its latest version N, `vN.json` rewritten as a v2 record, every other
+  // v1 file deleted. Only [[LegacyLog]] reads v1 files.
+  private lazy val legacyConverted: Unit = {
+    val names = listLog().toSet
+    names.flatMap(versionOf(_, ".json")).maxOption
+      .filter(n => LegacyLog.isLegacy(names, n) &&
+        !firstLine(recordPath(n)).exists(_.startsWith("{\"commitInfo\"")))
+      .foreach { n =>
+        val (snap, record) = LegacyLog.read(spark, fs, logDir, names, n)
+        if (!writeCheckpoint(n, snap)) throw new IllegalStateException(
+          s"could not write the checkpoint converting the graft log at $logDir")
+        LogStore.writeAtomic(fs, recordPath(n),
+          LogRecord.encode(record).getBytes(StandardCharsets.UTF_8))
+        names.filter(x => LegacyLog.isSidecar(x) ||
+            versionOf(x, ".json").exists(_ < n) || versionOf(x, ".ckpt.parquet").exists(_ < n))
+          .foreach(x => fs.delete(new Path(logDir, x), true))
+        GraftTable.invalidateSnapshotsFrom(rootKey, 0L)
+      }
+  }
 
-  private def rootKey: String = root.toUri.getPath
-  private def logPath(v: Long, ext: String) = new Path(logDir, f"v$v%020d.$ext")
-  private def actionsPath(v: Long) = logPath(v, "actions.tsv")
-  private def legacyFilesPath(v: Long) = logPath(v, "files")
-  private def constraintsPath(v: Long) = logPath(v, "constraints.tsv")
-  private def statsPath(v: Long) = logPath(v, "stats.tsv")
-  private def generatedPath(v: Long) = logPath(v, "generated.tsv")
-  private def dvPath(v: Long) = logPath(v, "dv.tsv")
-  private def colmapPath(v: Long) = logPath(v, "colmap.tsv")
-  private def schemaPath(v: Long) = logPath(v, "schema")
-  private def propertiesPath(v: Long) = logPath(v, "properties.tsv")
-  private def claimPath(v: Long) = logPath(v, "claim")
-  private def manifestCkptPath(v: Long) = logPath(v, "ckpt.parquet")
-  /** Every per-version sidecar except the `.json` commit marker and the
-    * checkpoints, claim last: what a failed commit sweeps and what
-    * `cleanupLog` drops with the marker. */
-  private def versionSidecars(v: Long): Seq[Path] =
-    Seq(actionsPath(v), legacyFilesPath(v), constraintsPath(v), statsPath(v),
-      generatedPath(v), dvPath(v), colmapPath(v), schemaPath(v),
-      propertiesPath(v), claimPath(v))
-
-  private def encU(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-  private def decU(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-
-  private def readLines(p: Path): Seq[String] = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).toList
+  /** Commit `v`'s record, parsed. */
+  private[graft] def readRecord(v: Long): Record = {
+    legacyConverted
+    val in = fs.open(recordPath(v))
+    try LogRecord.decode(new String(in.readAllBytes(), StandardCharsets.UTF_8))
     finally in.close()
   }
 
-  private def parseStatsLines(lines: Seq[String])
-      : Map[String, Map[String, (String, String, String)]] =
-    lines.map(_.split('\t')).collect {
-      case Array(f, c, tag, lo, hi) => (decU(f), decU(c), tag, decU(lo), decU(hi))
-    }.groupBy(_._1).map { case (f, rows) =>
-      f -> rows.map(r => r._2 -> ((r._3, r._4, r._5))).toMap
-    }
+  private def firstLine(p: Path): Option[String] =
+    try {
+      val in = fs.open(p)
+      try Option(new java.io.BufferedReader(new java.io.InputStreamReader(
+        in, StandardCharsets.UTF_8)).readLine()) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
 
-  private def parseDvLines(lines: Seq[String]): Map[String, Seq[(Long, Long)]] =
-    lines.map { l =>
-      val i = l.indexOf('\t')
-      decU(l.substring(0, i)) -> GraftTable.decodeRuns(l.substring(i + 1))
-    }.toMap
-
-  /** Pre-r6 full-snapshot manifest (vN.files + full sidecars). */
-  private def legacySnapshot(v: Long): Snapshot = {
-    val statsP = statsPath(v)
-    val dvP = dvPath(v)
-    Snapshot(
-      readLines(legacyFilesPath(v)).toVector,
-      if (fs.exists(statsP)) parseStatsLines(readLines(statsP)) else Map.empty,
-      if (fs.exists(dvP)) parseDvLines(readLines(dvP)).filter(_._2.nonEmpty)
-      else Map.empty)
+  /** The first line of `v`'s record — its commit info — or None once the
+    * record is gone. */
+  private def commitInfoLine(v: Long): Option[String] = {
+    legacyConverted
+    firstLine(recordPath(v))
   }
 
-  /** One commit's action record: file adds/removes (adds carry their
-    * byte size), stats of the adds, and per-file deletion-vector
-    * REPLACEMENTS (empty runs = clear). */
-  private[graft] final case class Actions(adds: Seq[(String, Option[Long])],
-      removes: Seq[String],
-      addStats: Map[String, Map[String, (String, String, String)]],
-      dvChanges: Map[String, Seq[(Long, Long)]])
+  /** Commit `v`'s commit info (no actions), if the record is retained. */
+  private def commitInfo(v: Long): Option[Record] =
+    if (v < 0) None else commitInfoLine(v).map(LogRecord.decode)
 
-  private[graft] def readActionRecord(v: Long): Actions = {
-    val lines = readLines(actionsPath(v))
-    val statsP = statsPath(v)
-    val dvP = dvPath(v)
-    Actions(
-      lines.collect { case l if l.startsWith("a\t") =>
-        l.substring(2).split('\t') match {
-          case Array(f, sz) => decU(f) -> scala.util.Try(sz.toLong).toOption
-          case parts => decU(parts(0)) -> None
-        }
-      },
-      lines.collect { case l if l.startsWith("r\t") => decU(l.substring(2)) },
-      if (fs.exists(statsP)) parseStatsLines(readLines(statsP)) else Map.empty,
-      if (fs.exists(dvP)) parseDvLines(readLines(dvP)) else Map.empty)
-  }
-
-  /** Roll `base` (state at v-1) forward through commit v's actions. */
-  private def applyActions(base: Snapshot, v: Long): Snapshot = {
-    val a = readActionRecord(v)
-    val removed = a.removes.toSet
-    val kept = base.files.filterNot(removed)
-    val keptSet = kept.toSet
-    val newAdds = a.adds.map(_._1).filterNot(keptSet) // re-adds (RESTORE) dedup here
-    val files = kept ++ newAdds
-    val fileSet = keptSet ++ newAdds
-    val stats = (base.stats -- removed) ++
-      a.addStats.view.filterKeys(fileSet).toMap
-    val sizes = (base.sizes -- removed) ++
-      a.adds.collect { case (f, Some(sz)) if fileSet(f) => f -> sz }
-    val dv0 = base.dv -- removed
-    val dv = a.dvChanges.foldLeft(dv0) { case (m, (f, runs)) =>
-      if (!fileSet(f)) m
-      else if (runs.isEmpty) m - f
-      else m + (f -> runs)
-    }
-    Snapshot(files, stats, dv, sizes)
-  }
-
-  /** Full table state at `version`: nearest base (cached snapshot,
-    * checkpoint, or legacy manifest) + the action tail. Cached per
-    * (table, version) — committed versions are immutable. */
-  private def snapshotAt(version: Long): Snapshot = {
-    if (version < 0) return Snapshot(Vector.empty, Map.empty, Map.empty)
-    GraftTable.cachedSnapshot(rootKey, version) match {
-      case Some(s) => return s
-      case None => ()
-    }
-    val snap =
-      if (fs.exists(legacyFilesPath(version))) legacySnapshot(version)
-      else if (fs.exists(actionsPath(version))) {
-        GraftTable.cachedSnapshot(rootKey, version - 1) match {
-          case Some(prev) => applyActions(prev, version) // the hot v-1 → v step
+  /** Full table state at `version`: the nearest base (a cached snapshot
+    * or a checkpoint) plus the records after it. Cached per (table,
+    * version) — committed versions are immutable. */
+  private[graft] def snapshotAt(version: Long): Snapshot = {
+    if (version < 0) return Snapshot.Empty
+    GraftTable.cachedSnapshot(rootKey, version).getOrElse {
+      val names = logNames().toSet
+      if (!names(recordPath(version).getName) && !names(checkpointPath(version).getName))
+        throw new IllegalStateException(s"graft table at $path has no committed version $version")
+      // walk down to the nearest base — a checkpoint AT the version itself
+      // counts (the post-truncation shape: the oldest retained version
+      // keeps a checkpoint, its ancestry is gone)
+      var b = version
+      var base: Snapshot = null
+      while (base == null && b >= 0) {
+        GraftTable.cachedSnapshot(rootKey, b) match {
+          case Some(s) => base = s
           case None =>
-            // walk down to the nearest base — a checkpoint AT the version
-            // itself counts (that's the post-truncation shape: the oldest
-            // retained version keeps a checkpoint, its ancestry is gone)
-            var b = version
-            var base: Snapshot = null
-            while (base == null && b >= 0) {
-              GraftTable.cachedSnapshot(rootKey, b) match {
-                case Some(s) => base = s
-                case None =>
-                  if (fs.exists(manifestCkptPath(b))) base = readManifestCheckpoint(b)
-                  else if (fs.exists(legacyFilesPath(b))) base = legacySnapshot(b)
-                  else if (fs.exists(actionsPath(b))) b -= 1
-                  else throw new IllegalStateException(
-                    s"cannot reconstruct version $version of the graft table " +
-                    s"at $path: no log record for v$b (log cleaned up?)")
-              }
-            }
-            if (base == null) base = Snapshot(Vector.empty, Map.empty, Map.empty)
-            ((b + 1) to version).foldLeft(base)(applyActions)
+            if (names(checkpointPath(b).getName)) base = readCheckpoint(b)
+            else if (names(recordPath(b).getName)) b -= 1
+            else throw new IllegalStateException(
+              s"cannot reconstruct version $version of the graft table " +
+              s"at $path: no log record for v$b (log cleaned up?)")
         }
       }
-      else if (fs.exists(manifestCkptPath(version)))
-        readManifestCheckpoint(version) // truncated ancestry: ckpt is the base
-      else throw new IllegalStateException(
-        s"graft table at $path has no committed version $version")
-    GraftTable.cacheSnapshot(rootKey, version, snap)
-    snap
+      val snap = ((b + 1) to version).foldLeft(Option(base).getOrElse(Snapshot.Empty)) {
+        (s, v) => GraftTable.applyRecord(s, readRecord(v))
+      }
+      GraftTable.cacheSnapshot(rootKey, version, snap)
+      snap
+    }
   }
 
-  /** Periodic full-snapshot checkpoint as a PARQUET DATASET written and
-    * read through Spark — at a million files this is a distributed
-    * write/scan, not a driver-serialized text blob (Delta's multi-part
-    * parquet checkpoint design). Row shape: (file, encoded dv runs,
-    * array of per-column stats). Best-effort: a failed checkpoint write
-    * only costs replay length, never correctness. Returns success. */
-  private def writeManifestCheckpoint(v: Long): Boolean = try {
+  /** Checkpoint of `snap`, the state at `v`, as a PARQUET DATASET written
+    * and read through Spark — at a million files a distributed write/scan,
+    * not a driver-serialized text blob (Delta's multi-part parquet
+    * checkpoint). One row per live file (seq, file, size, dv runs, stats)
+    * plus a state row (seq −1) holding metadata, txn map and commit
+    * timestamp. Best-effort: a failed write only costs replay length.
+    * Returns success. */
+  private def writeCheckpoint(v: Long, snap: Snapshot): Boolean = try {
     import org.apache.spark.sql.types._
-    val snap = snapshotAt(v)
     val schema = StructType(Seq(
       StructField("seq", LongType, nullable = false),
-      StructField("file", StringType, nullable = false),
+      StructField("file", StringType),
       StructField("size", LongType),
       StructField("dv", StringType),
       StructField("stats", ArrayType(StructType(Seq(
         StructField("c", StringType), StructField("t", StringType),
-        StructField("lo", StringType), StructField("hi", StringType)))))))
-    val rows = snap.files.zipWithIndex.map { case (f, i) =>
-      org.apache.spark.sql.Row(i.toLong, f,
-        snap.sizes.get(f).map(java.lang.Long.valueOf).orNull,
-        snap.dv.get(f).map(GraftTable.encodeRuns).orNull,
-        snap.stats.get(f).map(_.toSeq.sortBy(_._1).map {
-          case (c, (t, lo, hi)) => org.apache.spark.sql.Row(c, t, lo, hi)
-        }).getOrElse(Seq.empty))
-    }
-    val target = manifestCkptPath(v)
-    val tmp = new Path(logDir, f".v$v%020d.ckpt.parquet.tmp")
-    fs.delete(tmp, true)
+        StructField("lo", StringType), StructField("hi", StringType))))),
+      StructField("state", StringType)))
+    val rows = org.apache.spark.sql.Row(-1L, null, null, null, Seq.empty,
+        LogRecord.encodeState(snap)) +:
+      snap.files.zipWithIndex.map { case (f, i) =>
+        org.apache.spark.sql.Row(i.toLong, f,
+          snap.sizes.get(f).map(java.lang.Long.valueOf).orNull,
+          snap.dv.get(f).map(GraftTable.encodeRuns).orNull,
+          snap.stats.get(f).map(_.toSeq.sortBy(_._1).map {
+            case (c, (t, lo, hi)) => org.apache.spark.sql.Row(c, t, lo, hi)
+          }).getOrElse(Seq.empty), null)
+      }
+    val target = checkpointPath(v)
+    val tmp = new Path(logDir, s".${target.getName}.${java.util.UUID.randomUUID}.tmp")
     val slices = math.max(1, math.min(rows.size / 50000 + 1,
       spark.sparkContext.defaultParallelism))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, slices), schema)
-      .write.mode("overwrite").parquet(tmp.toString)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema)
+      .write.parquet(tmp.toString)
+    fs.delete(target, true)
     fs.rename(tmp, target) || { fs.delete(tmp, true); false }
-  } catch { case _: Exception => false }
+  } catch { case scala.util.control.NonFatal(_) => false }
 
-  private def readManifestCheckpoint(v: Long): Snapshot = {
-    val df = spark.read.parquet(manifestCkptPath(v).toString)
-    val hasSize = df.columns.contains("size") // absent in pre-size ckpts
-    val rows = (if (hasSize) df.select("seq", "file", "dv", "stats", "size")
-                else df.select("seq", "file", "dv", "stats")).collect()
-    val files = Vector.newBuilder[String]
-    val stats = Map.newBuilder[String, Map[String, (String, String, String)]]
-    val dv = Map.newBuilder[String, Seq[(Long, Long)]]
-    val sizes = Map.newBuilder[String, Long]
-    // the seq ordinal restores MANIFEST order exactly (parquet row order
-    // is write-partition-dependent): a checkpoint-based reconstruction
-    // is indistinguishable from an incremental one
-    rows.sortBy(_.getLong(0)).foreach { r =>
-      val f = r.getString(1)
-      files += f
-      if (!r.isNullAt(2)) {
-        val runs = GraftTable.decodeRuns(r.getString(2))
-        if (runs.nonEmpty) dv += f -> runs
-      }
-      val st = r.getSeq[org.apache.spark.sql.Row](3)
-      if (st != null && st.nonEmpty)
-        stats += f -> st.map(s =>
-          s.getString(0) -> ((s.getString(1), s.getString(2), s.getString(3)))).toMap
-      if (hasSize && !r.isNullAt(4)) sizes += f -> r.getLong(4)
-    }
-    Snapshot(files.result(), stats.result(), dv.result(), sizes.result())
+  private def readCheckpoint(v: Long): Snapshot = {
+    val rows = spark.read.parquet(checkpointPath(v).toString)
+      .select("seq", "file", "dv", "stats", "size", "state").collect()
+      .sortBy(_.getLong(0))
+    val (meta, txn, ts) = LogRecord.decodeState(rows.head.getString(5))
+    GraftTable.checkpointFiles(rows.tail.toSeq).copy(meta = meta, txn = txn, timestamp = ts)
   }
 
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  /** Claim version `v` exclusively — the writer mutex. Exclusive CREATE
-    * (not rename) because POSIX rename silently replaces an existing
-    * target, so rename collisions can't detect a lost race. HOW the
-    * exclusive create happens is the [[LogStore]] seam: the default
-    * store uses the filesystem's atomic create-no-overwrite
-    * (HDFS/GCS/ABFS/S3-with-conditional-writes; O_EXCL locally), and
-    * stores without that primitive configure `spark.graft.logStore =
-    * single-driver` — see LogStore.scala for the store-requirements
-    * table. */
-  private def claimVersion(v: Long): Unit =
-    LogStore.resolve(spark)
-      .createExclusive(fs, claimPath(v))
-
-  /** Commit version `currentVersion + 1` as an ACTION RECORD: `adds`
-    * enter the live set, `removes(base)` leave it — computed AFTER the
-    * version claim against the claimed predecessor, so a concurrent
-    * commit landing between a caller's snapshot read and the claim is
-    * never clobbered. Commit I/O is O(adds + removes), never
-    * O(live-files).
-    *
-    * `carriedStats` supplies bounds for added files whose footers this
-    * table has never read (clone/convert/restore adopting files) —
-    * consulted before falling back to a footer read; `collectStats =
-    * false` skips the fallback entirely (files without stats are simply
-    * never pruned — correct, just unoptimized).
-    *
-    * `dvChanges(base)` returns per-file deletion-vector REPLACEMENTS
-    * computed on top of the claimed predecessor (empty runs = clear the
-    * file's vector); unnamed surviving files keep their vectors, and
-    * removed files drop theirs with the file, both by replay. */
+  /** Commit version `currentVersion + 1`: publish one record through the
+    * [[LogStore]]. Per-add work runs once per operation, before the first
+    * put — footer stats of files this table has never read (skipped for
+    * `carriedStats` files, and entirely when `collectStats = false`;
+    * files without stats are simply never pruned) and bloom sidecars.
+    * Everything derived from the predecessor — `removes`, `dvChanges`
+    * (per-file vector REPLACEMENTS, empty runs clear), metadata,
+    * row-tracking ids, `extraStats` (stat additions for live files) — is
+    * computed on every attempt against the version the record is about
+    * to follow, so a concurrent commit is never clobbered. With
+    * `retry`, losing the race re-runs the attempt against the winner.
+    * Commit I/O is O(adds + removes), never O(live-files). The commit
+    * info carries the operation's `metrics` plus `numAddedFiles`,
+    * `numRemovedFiles`, `numOutputBytes` and `numOutputRows`, read from
+    * the adds' logged sizes and row counts. */
   private def commit(operation: String, adds: Seq[String],
       metrics: Map[String, String],
       removes: Long => Seq[String] = _ => Nil,
@@ -347,136 +249,18 @@ final class GraftTable private (
       newProperties: Option[Long => Map[String, String]] = None,
       statsAnnotation: Option[(String, (String, String, String))] = None,
       extraStats: Long => Map[String, Map[String, (String, String, String)]] =
-        _ => Map.empty): Long = {
-    val v = currentVersion + 1
-    // manifest-compatibility tables validate the POST-commit state
-    // BEFORE the commit lands (Delta parity: raw-parquet symlink
-    // consumers cannot see DV masks or physical column names, so the
-    // write is refused rather than landing a commit whose auto
-    // regeneration can only throw — a lands-then-throws commit would
-    // make the caller observe failure for a write that actually
-    // happened, and every later commit on the table would repeat it).
-    // Covers all three ways a commit can reach an unrepresentable
-    // state: new DVs on a symlink table, ENABLING the property while
-    // DVs / column mapping already exist, and a column-mapping change
-    // (RENAME COLUMN) on a symlink table.
-    val postSymlink = newProperties.map(f => f(v - 1))
-      .getOrElse(propertiesOf(v - 1))
-      .get(GraftTable.SymlinkManifestProp).contains("true")
-    if (postSymlink) {
-      // mirror the snapshot fold exactly: base minus removes, then
-      // dvChanges (empty runs clear, non-empty replace, non-live drop)
-      val base = snapshotAt(v - 1)
-      val removedNow = removes(v - 1).toSet
-      val liveSet = base.files.filterNot(removedNow).toSet ++ adds
-      val dvc = dvChanges.map(f => f(v - 1)).getOrElse(Map.empty)
-      val postDv = dvc.foldLeft(base.dv -- removedNow) {
-        case (m, (f, runs)) =>
-          if (!liveSet(f)) m
-          else if (runs.isEmpty) m - f
-          else m + (f -> runs)
-      }
-      if (postDv.values.exists(_.nonEmpty))
-        throw new IllegalStateException(
-          "deletion vectors are not representable in a symlink " +
-          s"manifest: disable ${GraftTable.SymlinkManifestProp}, use " +
-          "copy-on-write DELETE/UPDATE (mergeOnRead=false), or REORG " +
-          "TABLE ... APPLY (PURGE) before enabling the property")
-      val postCm = newColMap.map(f => f(v - 1)).getOrElse(colMapOf(v - 1))
-      if (!(postCm.entries.forall { case (l, p) => l == p } &&
-            postCm.retired.isEmpty))
-        throw new IllegalStateException(
-          "column mapping is not representable in a symlink manifest " +
-          "(raw-parquet consumers would see physical column names): " +
-          s"disable ${GraftTable.SymlinkManifestProp} before renaming " +
-          "columns, or keep the table on identity mapping")
-    }
-    fs.mkdirs(logDir)
-    claimVersion(v) // fail fast, before any footer reads
-    // from here to the .json rename, any failure must RELEASE the claim
-    // (and sweep partial sidecars) or the version slot wedges forever
-    try {
-      val committed = commitClaimed(v, operation, adds, metrics,
-        newConstraints, removes, carriedStats, collectStats, newGenerated,
-        dvChanges, newColMap, newSchema, addSizes, newProperties,
-        statsAnnotation, extraStats)
-      // auto-regenerated symlink manifest (Delta's
-      // delta.compatibility.symlinkFormatManifest.enabled parity):
-      // tables that opted in keep _symlink_format_manifest/ current
-      // after every landed commit, so external raw-parquet consumers
-      // never read a stale file list. Runs AFTER the commit point — a
-      // regeneration failure (e.g. a DV delete made the table
-      // unrepresentable) surfaces loudly but never unwinds the commit.
-      if (propertiesOf(committed)
-          .get(GraftTable.SymlinkManifestProp).contains("true"))
-        generateSymlinkManifest()
-      committed
-    } catch {
-      case e: Throwable =>
-        // sweep ONLY if the commit point (.json) was not reached — a
-        // failure after it (none today) must never unwind a landed commit
-        val landed = scala.util.Try(
-          fs.exists(new Path(logDir, f"v$v%020d.json"))).getOrElse(true)
-        if (!landed) {
-          versionSidecars(v).foreach(p => scala.util.Try(fs.delete(p, false)))
-          // deleting the claim FILE frees the slot on the filesystem;
-          // stores with JVM-side claim state (single-driver registry)
-          // must also forget it or every retry of v throws "claimed in
-          // this JVM" and the table wedges at currentVersion+1 == v
-          scala.util.Try(LogStore.resolve(spark)
-            .release(fs, claimPath(v)))
-        }
-        throw e
-    }
-  }
-
-  private def commitClaimed(v: Long, operation: String, adds: Seq[String],
-      metrics: Map[String, String],
-      newConstraints: Option[Map[String, String]],
-      removes: Long => Seq[String],
-      carriedStats: Map[String, Map[String, (String, String, String)]],
-      collectStats: Boolean,
-      newGenerated: Option[Map[String, String]],
-      dvChanges: Option[Long => Map[String, Seq[(Long, Long)]]],
-      newColMap: Option[Long => ColMap],
-      newSchema: Option[Long => StructType],
-      addSizes: Map[String, Long],
-      newProperties: Option[Long => Map[String, String]] = None,
-      statsAnnotation: Option[(String, (String, String, String))] = None,
-      extraStats: Long => Map[String, Map[String, (String, String, String)]] =
-        _ => Map.empty): Long = {
-    val removed = removes(v - 1)
+        _ => Map.empty,
+      retry: Boolean = false): Long = {
     // every add records its byte size (Delta's AddFile.size): writers
     // that staged the files know it for free; adoption paths
     // (clone/convert/restore) carry it; the residual fallback is one
     // status RPC per ADDED file — the delta, never the live set
-    val sizedAdds: Seq[(String, Option[Long])] = adds.map { f =>
-      f -> addSizes.get(f).orElse(
-        scala.util.Try(fs.getFileStatus(dataPath(f)).getLen).toOption)
-    }
-    // constraints and generated-column definitions are table METADATA
-    // versioned with the commit (Delta records them as metadata actions
-    // in the log): carried forward unchanged unless this commit alters
-    // them. These sidecars stay full per commit — O(columns), not
-    // O(files).
-    val cs = newConstraints.getOrElse(constraints)
-    val gen = newGenerated.getOrElse(generatedColumns)
-    // properties are a FUNCTION of the claimed base (like removes /
-    // dvChanges): a SET/UNSET delta recomputes over the predecessor that
-    // actually won the claim, so a concurrent property commit's keys
-    // survive instead of being reverted by a stale pre-claim snapshot
-    val props0 = newProperties.map(f => f(v - 1)).getOrElse(propertiesOf(v - 1))
-    val cmap = newColMap.map(f => f(v - 1)).getOrElse(colMapOf(v - 1))
-    // physical schema carried forward when this commit doesn't change it
-    // (legacy versions without a sidecar carry nothing — reads infer
-    // from footers until a schema-recording commit lands)
-    val schemaRec: Option[StructType] =
-      newSchema.map(f => f(v - 1)).orElse(schemaOf(v - 1))
+    val sizes: Map[String, Long] = adds.flatMap(f => addSizes.get(f).orElse(
+      scala.util.Try(fs.getFileStatus(dataPath(f)).getLen).toOption).map(f -> _)).toMap
     // per-file column min/max stats (Delta data-skipping parity): only
-    // files ADDED by this commit pay a parquet-footer read — surviving
-    // files' stats live in the snapshot and carry by replay. Wide
-    // commits (bulk ingest, full-table OPTIMIZE) read footers in a
-    // Spark job so commit latency doesn't scale with driver serial I/O.
+    // files ADDED by this commit pay a parquet-footer read. Wide commits
+    // (bulk ingest, full-table OPTIMIZE) read footers in a Spark job so
+    // commit latency doesn't scale with driver serial I/O.
     val needFooter = adds.filterNot(carriedStats.contains)
     val collected: Map[String, Map[String, (String, String, String)]] =
       if (!collectStats || needFooter.isEmpty) Map.empty
@@ -499,7 +283,7 @@ final class GraftTable private (
       carriedStats.get(f).orElse(collected.get(f)).map(f -> _)
     }.toMap
     // operation-level stats annotation (e.g. OPTIMIZE's cluster-key
-    // provenance) lands on every FRESH add's sidecar entry
+    // provenance) lands on every FRESH add's stats
     val preStats = statsAnnotation match {
       case Some((k, triple)) =>
         adds.filterNot(carriedStats.contains).foldLeft(preStats0) { (m, f) =>
@@ -507,111 +291,128 @@ final class GraftTable private (
         }
       case None => preStats0
     }
-    // row tracking: per-added-file base row ids above the hwm property,
-    // advanced in THIS commit (claim-protected — concurrent appends
-    // can't overlap ranges); carried bases (RESTORE/CLONE) preserved
-    val (props, stats0) = RowTracking.assign(props0, preStats, adds,
-      carriedStats.contains)
-    // post-hoc stat annotations for EXISTING files (ANALYZE's per-file
-    // NDV sketches): a sidecar entry REPLACES the file's whole stat map
-    // on replay, so each annotated entry is base-map ++ additions,
-    // computed against the predecessor that actually won the claim
-    val stats = {
-      val extra = extraStats(v - 1)
-      if (extra.isEmpty) stats0
-      else {
-        val baseStats = snapshotAt(v - 1).stats
-        extra.foldLeft(stats0) { case (m, (f, add)) =>
-          m.updated(f,
-            baseStats.getOrElse(f, Map.empty) ++ m.getOrElse(f, Map.empty) ++ add)
+    fs.mkdirs(logDir)
+    var bloomsBuilt = !collectStats || adds.isEmpty
+    def attempt(): Long = {
+      val v = currentVersion + 1
+      val base = snapshotAt(v - 1)
+      val removed = removes(v - 1)
+      // metadata rides the version like Delta's metaData action: carried
+      // unchanged unless this commit alters it; property, column-map and
+      // schema changes are functions of the predecessor, so a concurrent
+      // commit's keys survive
+      val props0 = newProperties.fold(base.meta.properties)(_(v - 1))
+      val cmap = newColMap.fold(base.meta.colMap)(_(v - 1))
+      val dvc = dvChanges.fold(Map.empty[String, Seq[(Long, Long)]])(_(v - 1))
+      val live = base.files.toSet -- removed
+      // manifest-compatibility tables validate the POST-commit state
+      // before the commit lands (Delta parity: raw-parquet symlink
+      // consumers cannot see DV masks or physical column names, so the
+      // write is refused rather than landing a commit whose manifest
+      // regeneration can only throw)
+      if (props0.get(GraftTable.SymlinkManifestProp).contains("true")) {
+        val liveSet = live ++ adds
+        val postDv = dvc.foldLeft(base.dv -- removed) { case (m, (f, runs)) =>
+          if (!liveSet(f)) m else if (runs.isEmpty) m - f else m + (f -> runs)
         }
+        if (postDv.values.exists(_.nonEmpty))
+          throw new IllegalStateException(
+            "deletion vectors are not representable in a symlink " +
+            s"manifest: disable ${GraftTable.SymlinkManifestProp}, use " +
+            "copy-on-write DELETE/UPDATE (mergeOnRead=false), or REORG " +
+            "TABLE ... APPLY (PURGE) before enabling the property")
+        if (!(cmap.entries.forall { case (l, p) => l == p } && cmap.retired.isEmpty))
+          throw new IllegalStateException(
+            "column mapping is not representable in a symlink manifest " +
+            "(raw-parquet consumers would see physical column names): " +
+            s"disable ${GraftTable.SymlinkManifestProp} before renaming " +
+            "columns, or keep the table on identity mapping")
       }
+      // row tracking: per-added-file base row ids above the hwm property,
+      // advanced in THIS commit (the put decides the order, so concurrent
+      // appends can't overlap ranges); carried bases (RESTORE/CLONE) kept
+      val (props, stats) = RowTracking.assign(props0, preStats, adds,
+        carriedStats.contains)
+      val meta = Meta(newSchema.map(f => f(v - 1)).orElse(base.meta.schema), cmap,
+        newConstraints.getOrElse(base.meta.constraints),
+        newGenerated.getOrElse(base.meta.generated), props)
+      // bloom index for freshly ADDED files (Delta bloom-index parity), once
+      // per operation, under the first attempt's properties and column map.
+      // Adoption paths (clone/convert pass collectStats = false) skip —
+      // their files either already carry sidecars (same data file, same md5
+      // key) or backfill via buildBloomIndex(). Sidecars are pure
+      // optimization: a build failure must not lose the commit.
+      if (!bloomsBuilt) {
+        bloomsBuilt = true
+        if (BloomIndex.declaredColumns(props).nonEmpty)
+          try buildBloomsFor(adds, props, cmap, stats)
+          catch { case scala.util.control.NonFatal(e) =>
+            org.slf4j.LoggerFactory.getLogger(getClass)
+              .warn(s"bloom index build skipped for $v: ${e.getMessage}") }
+      }
+      // post-hoc stat additions for live files (ANALYZE's NDV sketches):
+      // a re-add replaces the file's whole stat map, so each is the
+      // predecessor's map plus the additions
+      val extra = extraStats(v - 1)
+      val added = adds.map(f => Add(f, sizes.get(f),
+        stats.getOrElse(f, Map.empty) ++ extra.getOrElse(f, Map.empty)))
+      val restats = extra.collect { case (f, st) if live(f) && !adds.contains(f) =>
+        Add(f, base.sizes.get(f), base.stats.getOrElse(f, Map.empty) ++ st, dataChange = false)
+      }
+      val fresh = added.filterNot(a => live(a.path))
+      val rows = fresh.map(_.stats.get("").collect { case ("rows", n, _) => n.toLong })
+      val out = Map("numAddedFiles" -> fresh.size.toString,
+        "numRemovedFiles" -> removed.size.toString,
+        "numOutputBytes" -> fresh.flatMap(_.size).sum.toString) ++
+        (if (rows.forall(_.isDefined)) Map("numOutputRows" -> rows.flatten.sum.toString)
+         else Map.empty)
+      // in-commit timestamp, strictly after the predecessor's:
+      // versionAtTime/versionBeforeTime walk the log under a monotonicity
+      // contract wall clocks alone don't keep (NTP step-backs, multi-writer
+      // skew) — Delta's inCommitTimestamp makes the same max(prev+1, now)
+      // promise
+      val record = Record(v, math.max(base.timestamp + 1, System.currentTimeMillis()),
+        operation, metrics ++ out, added ++ restats, removed, dvc,
+        if (v == 0 || meta != base.meta) Some(meta) else None)
+      LogStore.resolve(spark).putIfAbsent(fs, recordPath(v),
+        LogRecord.encode(record).getBytes(StandardCharsets.UTF_8))
+      // a landed commit invalidates any STALE cache entries at >= v (a
+      // table recreated at the same path after external deletion), then
+      // caches its own state — the next read at v replays nothing
+      GraftTable.invalidateSnapshotsFrom(rootKey, v)
+      GraftTable.cacheSnapshot(rootKey, v, GraftTable.applyRecord(base, record))
+      // checkpoint cadence: `graft.checkpointInterval` (Delta's
+      // delta.checkpointInterval), default CheckpointInterval
+      val ckptEvery: Long = props.get("graft.checkpointInterval")
+        .flatMap(_.toLongOption).filter(_ > 0)
+        .getOrElse(GraftTable.CheckpointInterval)
+      if (v > 0 && v % ckptEvery == 0) writeCheckpoint(v, snapshotAt(v))
+      v
     }
-    // bloom index for freshly ADDED files (Delta bloom-index parity):
-    // one distributed pass inside the commit, like the stats job.
-    // Adoption paths (clone/convert pass collectStats = false) skip —
-    // their files either already carry sidecars (same data file, same
-    // md5 key) or backfill via buildBloomIndex(). Sidecars are pure
-    // optimization: a build failure must not lose the commit.
-    if (collectStats && adds.nonEmpty && BloomIndex.declaredColumns(props).nonEmpty)
-      try buildBloomsFor(adds, props, cmap, stats)
-      catch { case scala.util.control.NonFatal(e) =>
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"bloom index build skipped for $v: ${e.getMessage}") }
-    val dvc = dvChanges.map(f => f(v - 1)).getOrElse(Map.empty)
-    val actionsP = actionsPath(v)
-    val jsonPath = new Path(logDir, f"v$v%020d.json")
-    // a rename conflict is unreachable once claimVersion held (the
-    // claim is the mutex); LogStore still throws on a failed rename
-    def writeAtomic(target: Path, content: String): Unit =
-      LogStore.writeAtomic(fs, target, content.getBytes(StandardCharsets.UTF_8))
-    writeAtomic(actionsP,
-      (removed.map(f => s"r\t${encU(f)}") ++ sizedAdds.map {
-        case (f, Some(sz)) => s"a\t${encU(f)}\t$sz"
-        case (f, None) => s"a\t${encU(f)}"
-      }).mkString("\n"))
-    writeAtomic(constraintsPath(v), cs.toSeq.sortBy(_._1)
-      .map { case (n, e) => s"$n\t$e" }.mkString("\n"))
-    writeAtomic(generatedPath(v), gen.toSeq.sortBy(_._1)
-      .map { case (n, e) => s"$n\t$e" }.mkString("\n"))
-    writeAtomic(propertiesPath(v),
-      props.toSeq.sortBy(_._1)
-        .map { case (k, vl) => s"${encU(k)}\t${encU(vl)}" }.mkString("\n"))
-    writeAtomic(statsPath(v), stats.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (c, (tag, lo, hi)) =>
-        s"${encU(f)}\t${encU(c)}\t$tag\t${encU(lo)}\t${encU(hi)}" }
-    }.mkString("\n"))
-    writeAtomic(dvPath(v), dvc.toSeq.sortBy(_._1).map { case (f, runs) =>
-      s"${encU(f)}\t${GraftTable.encodeRuns(runs)}" }.mkString("\n"))
-    writeAtomic(colmapPath(v),
-      (cmap.entries.map { case (l, ph) => s"${encU(l)}\t${encU(ph)}\ta" } ++
-        cmap.retired.map(ph => s"-\t${encU(ph)}\tr")).mkString("\n"))
-    schemaRec.foreach(s =>
-      writeAtomic(schemaPath(v), s.json))
-    val metricsJson = metrics.toSeq.sortBy(_._1)
-      .map { case (k, vv) => s""""${jsonEscape(k)}":"${jsonEscape(vv)}"""" }
-      .mkString("{", ",", "}")
-    // in-commit timestamp, clamped to strictly after the predecessor's:
-    // versionAtTime/versionBeforeTime binary-walk the log under a
-    // monotonicity contract, which wall clocks alone don't guarantee
-    // (NTP step-backs, multi-writer skew). Delta's inCommitTimestamp
-    // feature makes the same max(prev+1, now) promise.
-    val commitTs = {
-      val now = System.currentTimeMillis()
-      val prev = if (v > 0) commitTimestamp(v - 1) else None
-      java.time.Instant.ofEpochMilli(prev.fold(now)(p => math.max(p + 1, now)))
-    }
-    // .json rename is the commit point; actions without .json are garbage
-    writeAtomic(jsonPath,
-      s"""{"version":$v,"timestamp":"$commitTs","operation":"${jsonEscape(operation)}","operationMetrics":$metricsJson}""")
-    // a landed commit invalidates any STALE cache entries at >= v (a
-    // table recreated at the same path after external deletion); the
-    // fresh snapshot re-caches on first read
-    GraftTable.invalidateSnapshotsFrom(rootKey, v)
-    // checkpoint cadence: `graft.checkpointInterval` table property
-    // (Delta's delta.checkpointInterval), default CheckpointInterval —
-    // a high-commit-rate table shortens its action-tail replay, a
-    // metadata-churn table cuts checkpoint write amplification
-    val ckptEvery: Long = propertiesOf(v).get("graft.checkpointInterval")
-      .flatMap(x => scala.util.Try(x.toLong).toOption).filter(_ > 0)
-      .getOrElse(GraftTable.CheckpointInterval.toLong)
-    if (v > 0 && v % ckptEvery == 0) writeCheckpoint(v)
-    v
+    val committed = if (retry) retryOnConflict()(attempt()) else attempt()
+    // auto-regenerated symlink manifest (Delta's
+    // delta.compatibility.symlinkFormatManifest.enabled parity): tables
+    // that opted in keep _symlink_format_manifest/ current after every
+    // landed commit. Runs AFTER the commit point — a regeneration failure
+    // surfaces loudly but never unwinds the commit.
+    if (propertiesOf(committed).get(GraftTable.SymlinkManifestProp).contains("true"))
+      generateSymlinkManifest()
+    committed
   }
 
   /** Commit for SNAPSHOT-DERIVED rewrites (OPTIMIZE/DELETE/UPDATE/MERGE
-    * and metadata-only commits): the new manifest is computed INSIDE the
-    * version claim from the claimed predecessor, so files added by a
-    * concurrent append between this operation's snapshot read and its
-    * commit are carried over instead of silently dropped (Delta's
-    * WriteSerializable rule: concurrent inserts survive a snapshot-based
-    * rewrite). If any of this operation's INPUT files is no longer live
-    * — a concurrent commit rewrote or removed it — or its deletion
-    * vector differs from the state this rewrite READ (`readDv`; a
-    * concurrent merge-on-read DELETE touched rows the rewrite copied),
-    * the rewrite's outputs are stale and the commit aborts (the orphaned
-    * output files await VACUUM; Delta likewise conflicts on DV changes
-    * to read files). Claim-race losers retry. */
+    * and metadata-only commits): the new manifest is computed against the
+    * version the record follows, so files added by a concurrent append
+    * between this operation's snapshot read and its commit are carried
+    * over instead of silently dropped (Delta's WriteSerializable rule:
+    * concurrent inserts survive a snapshot-based rewrite). If any of this
+    * operation's INPUT files is no longer live — a concurrent commit
+    * rewrote or removed it — or its deletion vector differs from the state
+    * this rewrite READ (`readDv`; a concurrent merge-on-read DELETE
+    * touched rows the rewrite copied), the rewrite's outputs are stale and
+    * the commit aborts (the orphaned output files await VACUUM; Delta
+    * likewise conflicts on DV changes to read files). Put-race losers
+    * retry. */
   private def commitRewrite(operation: String, inputs: Seq[String],
       added: Seq[(String, Long)], metrics: Map[String, String],
       readDv: Map[String, Seq[(Long, Long)]] = Map.empty,
@@ -624,12 +425,12 @@ final class GraftTable private (
       statsAnnotation: Option[(String, (String, String, String))] = None,
       extraStats: Long => Map[String, Map[String, (String, String, String)]] =
         _ => Map.empty): Long =
-    retryOnConflict()(commit(operation, added.map(_._1), metrics,
+    commit(operation, added.map(_._1), metrics,
       addSizes = added.toMap,
       newConstraints = newConstraints, newGenerated = newGenerated,
       newColMap = newColMap, newSchema = newSchema,
       newProperties = newProperties, statsAnnotation = statsAnnotation,
-      extraStats = extraStats,
+      extraStats = extraStats, retry = true,
       removes = { base =>
         preCommitCheck(base)
         val nowLive = manifestFiles(base)
@@ -650,7 +451,8 @@ final class GraftTable private (
               "snapshot")
         }
         inputs
-      }))
+      })
+
 
   /** All data files currently on disk (relative paths), manifest or
     * not; the log and leftover staging dirs are not walked. */
@@ -667,9 +469,9 @@ final class GraftTable private (
 
   // ---- per-file min/max stats → data skipping (Delta parity) -----------
   //
-  // Every commit writes a vN.stats.tsv sidecar holding, for each live
-  // data file, the min/max of its top-level primitive columns (read once
-  // from the parquet footer when the file is first committed). Every
+  // Every add action carries, for its data file, the min/max of its
+  // top-level primitive columns (read once from the parquet footer when
+  // the file is first committed). Every
   // scan's file index prunes its FILE LIST against these bounds under
   // the scan's filters (`Skipping`) — at 100 TB a time-range query on a
   // cluster-sorted table opens the handful of files whose range
@@ -683,15 +485,15 @@ final class GraftTable private (
   // ---- deletion vectors (Delta merge-on-read DELETE parity) ------------
   //
   // A merge-on-read DELETE records the POSITIONS of deleted rows instead
-  // of rewriting data files: the commit writes a vN.dv.tsv sidecar
-  // mapping each file to the run-length-encoded sorted row indices of
-  // its deleted rows, and the manifest's file list is unchanged. Readers
+  // of rewriting data files: the commit's `dv` actions map each file to
+  // the run-length-encoded sorted row indices of its deleted rows, and
+  // the manifest's file list is unchanged. Readers
   // anti-join `_metadata.row_index` against the vector — only files that
   // HAVE a vector pay that join; clean files keep today's plan. This is
   // what makes "delete 0.1% of a 100 TB table" a metadata-sized commit
   // instead of a 100 TB rewrite (Delta's deletion-vector feature; at
   // that scale Delta stores roaring bitmaps in sidecar bin files —
-  // the tsv lives under the same "commit metadata fits on the driver"
+  // the runs live under the same "commit metadata fits on the driver"
   // assumption as the manifest, isolated in the same place).
   // File min/max stats stay sound under a vector (they bound a superset
   // of the live rows), OPTIMIZE/PURGE materialize vectors away, and a
@@ -708,12 +510,11 @@ final class GraftTable private (
     dvOf(version).values.flatten.map(_._2).sum
 
   /** Exact row count served from commit metadata alone — the per-file
-    * counts recorded in the stats sidecar (reserved "" pseudo-column)
-    * minus deletion-vector rows. None when any live file predates
-    * count recording (clone/convert with stats skipped, legacy
-    * commits) — callers fall back to a scan. This is Delta's
-    * count-from-log fast path: `count(*)` on a 100 TB table reads one
-    * sidecar, not the table. */
+    * counts recorded in the file stats (reserved "" pseudo-column)
+    * minus deletion-vector rows. None when any live file lacks a count
+    * (clone/convert with stats skipped) — callers fall back to a scan.
+    * This is Delta's count-from-log fast path: `count(*)` on a 100 TB
+    * table reads the log, not the table. */
   def rowCountFromStats(version: Long = currentVersion): Option[Long] = {
     val stats = statsOf(version)
     val perFile = manifestFiles(version).map(f =>
@@ -727,10 +528,10 @@ final class GraftTable private (
 
   // ---- column mapping (Delta column-mapping parity) --------------------
   //
-  // RENAME/DROP COLUMN without touching data files: a versioned
-  // vN.colmap.tsv sidecar maps LOGICAL column names (what users see)
-  // to PHYSICAL names (what parquet files store). An empty/absent
-  // sidecar is the identity mapping and pays zero overhead — the
+  // RENAME/DROP COLUMN without touching data files: the column map in
+  // each version's metadata maps LOGICAL column names (what users see)
+  // to PHYSICAL names (what parquet files store). An empty map is the
+  // identity mapping and pays zero overhead — the
   // mapping only materializes on the first rename/drop. Physical names
   // are stable across renames (stats, files and vectors never change);
   // a DROPPED column's physical name is recorded as RETIRED so a later
@@ -741,27 +542,17 @@ final class GraftTable private (
 
   // ---- schema in the log (Delta metadata-action parity) ----------------
   //
-  // Every commit records the table's PHYSICAL schema as a vN.schema JSON
-  // sidecar, and it is the schema every scan reads under (Delta's
-  // metadata action): no footer is merged to plan a read. A file
-  // written before ALTER TABLE ADD COLUMN or a mergeSchema append reads
-  // the columns it lacks as nulls, a narrow file under a widened column
-  // upcasts in the reader, and a FILE-LESS version (SQL CREATE TABLE,
-  // DELETE-everything) still has its schema. Only a legacy version
-  // recorded without the sidecar infers one from its files'
-  // footers ([[physicalSchemaAt]]).
+  // The table's PHYSICAL schema is part of every version's metadata, and
+  // it is the schema every scan reads under (Delta's metadata action): no
+  // footer is merged to plan a read. A file written before ALTER TABLE ADD
+  // COLUMN or a mergeSchema append reads the columns it lacks as nulls, a
+  // narrow file under a widened column upcasts in the reader, and a
+  // FILE-LESS version (SQL CREATE TABLE, DELETE-everything) still has its
+  // schema. Only a table adopted without one (CONVERT) infers it from its
+  // files' footers ([[physicalSchemaAt]]).
 
   /** Physical schema recorded with `version`, if any. */
-  def schemaOf(version: Long): Option[StructType] = {
-    if (version < 0) return None
-    val p = schemaPath(version)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    try scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(
-        scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      .asInstanceOf[StructType]).toOption
-    finally in.close()
-  }
+  def schemaOf(version: Long): Option[StructType] = snapshotAt(version).meta.schema
 
   /** ALTER TABLE ADD COLUMN (metadata-only): the column joins the
     * recorded schema; no file carries it, so reads align it in as
@@ -772,9 +563,9 @@ final class GraftTable private (
       "column names must not contain tabs or newlines")
     val logical = read().columns.toSeq
     require(!logical.contains(name), s"column $name already exists")
-    // the physical name derives from the CLAIMED predecessor inside the
+    // the physical name derives from the predecessor the commit lands on inside the
     // commit closures (deterministically: both closures agree given the
-    // same base), never from pre-claim state — under the conflict retry
+    // same base), never from pre-commit state — under the conflict retry
     // the commit can land on a different base where a concurrent commit
     // took the name (or materialized the map), and a stale-derived
     // physical would silently alias two logical columns onto one
@@ -807,7 +598,7 @@ final class GraftTable private (
       })
   }
 
-  /** Physical schema of `version`: its sidecar, or, for a legacy version
+  /** Physical schema of `version`: the recorded one, or, for a version
     * recorded without one, the footers of its files (or of the latest
     * earlier version whose files still read) merged with their hive
     * partition columns. The one data-file read that plans no scan. */
@@ -823,20 +614,7 @@ final class GraftTable private (
       }.nextOption().getOrElse(new StructType())
     }
 
-  def colMapOf(version: Long): ColMap = {
-    if (version < 0) return ColMap(Nil, Nil)
-    val p = colmapPath(version)
-    if (!fs.exists(p)) return ColMap(Nil, Nil)
-    val in = fs.open(p)
-    def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-    try {
-      val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map(_.split('\t')).toList
-      ColMap(
-        lines.collect { case Array(l, ph, "a") => dec(l) -> dec(ph) },
-        lines.collect { case Array(_, ph, "r") => dec(ph) })
-    } finally in.close()
-  }
+  def colMapOf(version: Long): ColMap = snapshotAt(version).meta.colMap
 
   def colMap: ColMap = colMapOf(currentVersion)
 
@@ -868,12 +646,12 @@ final class GraftTable private (
     (df.select(df.columns.toIndexedSeq.map(c => col(c).as(physOf(c))): _*), additions)
   }
 
-  /** Commit closure extending the CLAIMED predecessor's map with
+  /** Commit closure extending the predecessor the commit lands on's map with
     * pre-chosen (logical → physical) additions: a concurrent rename's
     * entries survive (physical names are stable, so the additions stay
     * valid), and an addition a concurrent writer already registered is
     * not duplicated. The data files were ALREADY written under the
-    * pre-claim physical names, so if the claimed base disagrees — a
+    * pre-commit physical names, so if the base the commit lands on disagrees — a
     * concurrent commit registered the same logical under a different
     * physical, or took/retired a chosen physical — the commit must
     * ABORT (the staged files would read back null or alias another
@@ -938,9 +716,9 @@ final class GraftTable private (
     require(logical.contains(oldName), s"no such column $oldName (have: ${logical.mkString(", ")})")
     require(!logical.contains(newName), s"column $newName already exists")
     guardMappable(oldName, "rename")
-    // the transformation applies to the CLAIMED predecessor's map, so a
+    // the transformation applies to the predecessor the commit lands on's map, so a
     // concurrent commit's map changes (e.g. an evolving append) are
-    // never overwritten by this rename's pre-claim snapshot
+    // never overwritten by this rename's pre-commit snapshot
     commitRewrite("RENAME COLUMN", Nil, Nil,
       Map("oldName" -> oldName, "newName" -> newName),
       newColMap = Some { base =>
@@ -971,9 +749,8 @@ final class GraftTable private (
   /** ALTER TABLE ALTER COLUMN … TYPE — type widening
     * ([[TypeWidening]]): metadata-only; no data file is touched at any
     * table size. The recorded schema gets the wider type, the marker
-    * property gates the explicit-schema scan path, and the schema
-    * sidecar must exist from here on (it's what reconciles narrow old
-    * files with wide new ones). */
+    * property gates the explicit-schema scan path, and the recorded
+    * schema is what reconciles narrow old files with wide new ones. */
   def alterColumnType(name: String, to: org.apache.spark.sql.types.DataType): Long = {
     val logical = read().schema
     val f = logical.fields.find(_.name == name).getOrElse(
@@ -1055,15 +832,15 @@ final class GraftTable private (
 
   /** Data skipping at `version`: generated-column augmentation, then
     * [[GraftTable.statsMayMatch]] over each file's footer stats and
-    * partition-value point intervals, then bloom sidecars. The
-    * version's metadata is read at most once per instance — the file
-    * index of a scan holds one and asks it each time Spark lists files.
-    * Filters carry LOGICAL column names. */
+    * partition-value point intervals, then bloom sidecars, all from
+    * the version's snapshot — the file index of a scan holds one and
+    * asks it each time Spark lists files. Filters carry LOGICAL column
+    * names. */
   private final class Skipping(val version: Long, val snap: Snapshot) {
     private type Filter = org.apache.spark.sql.sources.Filter
-    private lazy val cm = colMapOf(version)
-    private lazy val defs = generatedOf(version)
-    private lazy val props = propertiesOf(version)
+    private def cm = snap.meta.colMap
+    private def defs = snap.meta.generated
+    private def props = snap.meta.properties
     private lazy val partitionCols = layoutPartitionColumns(version).toSet
     // footer stats are keyed by the PHYSICAL column name — re-keyed to
     // the logical names through the version's column map (identity map:
@@ -1078,9 +855,9 @@ final class GraftTable private (
           logicalOf.get(ph).map(_ -> b) }).toMap
       }
     }
-    // the schema sidecar answers base-column types without constructing
-    // a scan frame; legacy versions fall back to the frame's schema
-    private lazy val schema = schemaOf(version).filter(_.nonEmpty)
+    // the recorded schema answers base-column types without constructing
+    // a scan frame; a version without one falls back to the frame's schema
+    private lazy val schema = snap.meta.schema.filter(_.nonEmpty)
       .map(phys => logicalSchema(phys, cm))
       .orElse(scala.util.Try(readVersion(version).schema).toOption)
 
@@ -1146,7 +923,7 @@ final class GraftTable private (
       val demandedLogical = BloomIndex.probes(filters)
       if (demandedLogical.isEmpty) return candidates
       // sidecars are keyed by PHYSICAL column name (rename-stable, like
-      // the stats sidecar): re-key the demanded probes through the map
+      // the file stats): re-key the demanded probes through the map
       val demanded =
         if (cm.isIdentity) demandedLogical
         else {
@@ -1310,7 +1087,7 @@ final class GraftTable private (
 
   /** ANALYZE: record per-file approx-distinct (HLL) sketches for
     * `cols` (logical names; default every analyzable column) in ONE
-    * metadata commit. Sketches ride the stats sidecar keyed per file
+    * metadata commit. Sketches ride the file stats keyed per file
     * ([[NdvStats]]), so OPTIMIZE invalidates only rewritten files'
     * entries and [[columnNdv]] unions exactly the surviving files.
     * The sketch job runs in driver-budgeted batches like the bloom
@@ -1370,7 +1147,7 @@ final class GraftTable private (
   }
 
   /** Index `files` over the declared bloom columns; no-op when the
-    * property is unset. Row-count hints ride the stats sidecar's
+    * property is unset. Row-count hints ride the file stats'
     * reserved pseudo-column so filter sizing needs no extra I/O. */
   private def buildBloomsFor(files: Seq[String], props: Map[String, String],
       cm: ColMap,
@@ -1392,19 +1169,18 @@ final class GraftTable private (
   }
 
   /** Force a checkpoint at the current version (Delta's
-    * `DeltaLog.checkpoint()` parity): writes the txn-map sidecar and the
-    * parquet manifest checkpoint that snapshot reconstruction starts
-    * from instead of replaying the whole action log. */
+    * `DeltaLog.checkpoint()` parity): writes the parquet checkpoint that
+    * snapshot reconstruction starts from instead of replaying the log. */
   def checkpoint(): Unit = {
-    require(currentVersion >= 0, "nothing to checkpoint: no committed version")
-    writeCheckpoint(currentVersion)
+    val v = currentVersion
+    require(v >= 0, "nothing to checkpoint: no committed version")
+    writeCheckpoint(v, snapshotAt(v))
   }
 
   // ---- CHECK constraints (Delta table-constraint parity) ---------------
   //
-  // Versioned table metadata: every commit writes the constraint set of
-  // that version as a vN.constraints.tsv sidecar next to the manifest,
-  // so add/drop are commits visible in history() and RESTORE/time
+  // Versioned table metadata: the constraint set is part of every
+  // version's metadata, so add/drop are commits visible in history() and RESTORE/time
   // travel restore the constraint set along with the file list — the
   // same "constraints are metadata actions in the transaction log"
   // contract Delta keeps. Enforced on every row-adding operation
@@ -1412,19 +1188,9 @@ final class GraftTable private (
   // rows. SQL CHECK semantics: a row violates only when the expression
   // is FALSE; NULL passes.
 
-  /** Constraint set committed with `version` (empty for pre-constraint
-    * or nonexistent versions). */
-  def constraintsOf(version: Long): Map[String, String] = {
-    if (version < 0) return Map.empty
-    val p = constraintsPath(version)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val i = l.indexOf('\t'); l.substring(0, i) -> l.substring(i + 1)
-      }.toMap
-    finally in.close()
-  }
+  /** Constraint set committed with `version` (empty before any). */
+  def constraintsOf(version: Long): Map[String, String] =
+    snapshotAt(version).meta.constraints
 
   def constraints: Map[String, String] = constraintsOf(currentVersion)
 
@@ -1454,25 +1220,13 @@ final class GraftTable private (
   // ---- TBLPROPERTIES (Delta metadata-configuration parity) -------------
   //
   // A free-form string map versioned with the commit exactly like
-  // constraints: every commit writes the property set of that version
-  // as a vN.properties.tsv sidecar, SET/UNSET are commits visible in
-  // history(), and RESTORE/CLONE/time travel carry the set of the
-  // version they reference. Keys and values are URL-encoded in the
-  // sidecar so they may contain any character.
+  // constraints: SET/UNSET are commits visible in history(), and
+  // RESTORE/CLONE/time travel carry the set of the version they
+  // reference.
 
   /** Property map committed with `version` (empty before any SET). */
-  def propertiesOf(version: Long): Map[String, String] = {
-    if (version < 0) return Map.empty
-    val p = propertiesPath(version)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val i = l.indexOf('\t')
-        decU(l.substring(0, i)) -> decU(l.substring(i + 1))
-      }.toMap
-    finally in.close()
-  }
+  def propertiesOf(version: Long): Map[String, String] =
+    snapshotAt(version).meta.properties
 
   def properties: Map[String, String] = propertiesOf(currentVersion)
 
@@ -1544,7 +1298,7 @@ final class GraftTable private (
 
   /** Fill NULL identity values of `df` with a fresh contiguous range per
     * column and return the filled frame plus the commit-closure guard:
-    * `newProperties` advancing each mark, and a check that the CLAIMED
+    * `newProperties` advancing each mark, and a check that the
     * predecessor's marks still match what this allocation read (a
     * concurrent identity write moved them ⇒ the baked values could
     * collide ⇒ abort). Costs one extra pass over `df` per identity
@@ -1556,7 +1310,7 @@ final class GraftTable private (
     var out = ids.keys.filterNot(df.columns.contains)
       .foldLeft(df)((d, c) => d.withColumn(c, lit(null).cast("bigint")))
     // only the moved identity keys are recorded, applied as a DELTA over
-    // the claimed base's properties — a concurrent non-identity
+    // the base's properties — a concurrent non-identity
     // SET TBLPROPERTIES survives this write's commit (the guard below
     // still aborts if the identity marks themselves moved)
     var delta = Map.empty[String, String]
@@ -1602,8 +1356,8 @@ final class GraftTable private (
 
   // ---- generated columns (Delta GENERATED ALWAYS AS parity) ------------
   //
-  // Versioned metadata like constraints: a name → expression map in a
-  // vN.generated.tsv sidecar, carried per commit, restored by RESTORE,
+  // Versioned metadata like constraints: a name → expression map in
+  // the version's metadata, carried per commit, restored by RESTORE,
   // copied by CLONE. On write, an ABSENT generated column is computed
   // from its expression; a PRESENT one is validated against it (a
   // writer supplying inconsistent values is rejected). UPDATE recomputes
@@ -1611,17 +1365,8 @@ final class GraftTable private (
   // rows, and validates explicitly-assigned ones.
 
   /** Generated-column set committed with `version`. */
-  def generatedOf(version: Long): Map[String, String] = {
-    if (version < 0) return Map.empty
-    val p = generatedPath(version)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val i = l.indexOf('\t'); l.substring(0, i) -> l.substring(i + 1)
-      }.toMap
-    finally in.close()
-  }
+  def generatedOf(version: Long): Map[String, String] =
+    snapshotAt(version).meta.generated
 
   def generatedColumns: Map[String, String] = generatedOf(currentVersion)
 
@@ -1686,8 +1431,8 @@ final class GraftTable private (
 
   // ---- column DEFAULT values (Delta/ANSI parity) -----------------------
   //
-  // Stored as CURRENT_DEFAULT metadata on the field in the schema
-  // sidecar — the same key Spark itself records for DSv2 column
+  // Stored as CURRENT_DEFAULT metadata on the field in the recorded
+  // schema — the same key Spark itself records for DSv2 column
   // defaults — so defaults version WITH the schema: carried by every
   // commit, restored by RESTORE, copied by CLONE, visible to time
   // travel, and attached to the PHYSICAL field so logical RENAME keeps
@@ -1755,7 +1500,7 @@ final class GraftTable private (
         m.remove(GraftTable.DefaultKey))))
 
   /** Schema of `base` with `name`'s field metadata rewritten through
-    * `f` — resolved against the CLAIMED base inside the commit closure,
+    * `f` — resolved against the base the commit lands on, inside the closure,
     * so a conflict-retry lands on the schema that actually won. */
   private def withFieldMetadata(base: Long, name: String,
       f: org.apache.spark.sql.types.MetadataBuilder =>
@@ -1863,7 +1608,7 @@ final class GraftTable private (
     val df0 = if (currentVersion >= 0 &&
         (manifestFiles().nonEmpty || schemaOf(currentVersion).exists(_.nonEmpty)) &&
         (mode == SaveMode.Append || !overwriteSchema)) {
-      // schema-sidecar fast path: enforcement needs the SCHEMA, not a
+      // recorded-schema fast path: enforcement needs the SCHEMA, not a
       // scan — a blind append to a recorded-schema table never plans a
       // read over the live file list
       val existing = schemaOf(currentVersion).filter(_.nonEmpty)
@@ -1930,8 +1675,6 @@ final class GraftTable private (
           .map(c => col(colMap.physicalOf.getOrElse(c, c))): _*)
       else physDf
     val added = appendDataFiles(physOut)
-    val metrics =
-      Map("numFiles" -> added.size.toString, "numOutputRows" -> "-1") ++ extraMetrics
     // record the physical schema: append and PARTIAL overwrites UNION
     // new columns onto the base schema (mergeSchema evolution; a
     // replaceWhere / dynamic overwrite leaves untouched partitions'
@@ -1944,14 +1687,15 @@ final class GraftTable private (
         physDf.schema.fields.filterNot(f => have(f.name)).foldLeft(cur)(_ add _)
       }
       else Some(_ => physDf.schema)
-    def attempt(): Long = mode match {
+    val v = mode match {
       // a blind append is a pure ADD action: no file-list read at all —
       // this is the O(delta) commit (a one-row append to a million-file
-      // table writes one action line), and the claim race keeps
-      // concurrent commits' actions ordered
-      case SaveMode.Append => commit("APPEND", added.map(_._1), metrics,
+      // table writes one action line). Blind appends are commutative: a
+      // writer losing the put race re-commits ITS files on top of the
+      // winner (Delta's rule for AddFile-only transactions)
+      case SaveMode.Append => commit("APPEND", added.map(_._1), extraMetrics,
         addSizes = added.toMap, newColMap = nextMap, newSchema = nextSchema,
-        newProperties = idProps,
+        newProperties = idProps, retry = true,
         removes = base => { idGuard(base); Nil })
       // replaceWhere: replace EXACTLY the rows matching the predicate in
       // one commit — a partition-column predicate resolves its file set
@@ -1978,10 +1722,10 @@ final class GraftTable private (
           else appendDataFiles(toPhysicalStrict(
             readLive(affected, dvRead).filter(!matches)))
         val allAdds = added ++ kept
-        retryOnConflict()(commit("WRITE", allAdds.map(_._1),
-          metrics ++ Map("replaceWhere" -> w,
+        commit("WRITE", allAdds.map(_._1),
+          extraMetrics ++ Map("replaceWhere" -> w,
             "numFilesReplaced" -> affected.size.toString),
-          addSizes = allAdds.toMap,
+          addSizes = allAdds.toMap, retry = true,
           removes = { base =>
             idGuard(base)
             val nowLive = manifestFiles(base)
@@ -2001,7 +1745,7 @@ final class GraftTable private (
             affected
           },
           newColMap = nextMap, newSchema = nextSchema,
-          newProperties = idProps))
+          newProperties = idProps)
       // dynamic partition overwrite: replace exactly the partitions the
       // incoming data landed in (Delta's partitionOverwriteMode=dynamic)
       // — untouched partitions carry over unread
@@ -2012,7 +1756,7 @@ final class GraftTable private (
         }
         val touched = added.map(a => dirOf(a._1)).toSet
         commit("WRITE", added.map(_._1),
-          metrics ++ Map("partitionOverwriteMode" -> "dynamic",
+          extraMetrics ++ Map("partitionOverwriteMode" -> "dynamic",
             "numPartitionsReplaced" -> touched.size.toString),
           addSizes = added.toMap,
           removes = base => {
@@ -2021,21 +1765,14 @@ final class GraftTable private (
           },
           newColMap = nextMap, newSchema = nextSchema,
           newProperties = idProps)
-      // overwrite removes the CLAIMED predecessor's whole live set —
+      // overwrite removes the predecessor the commit lands on's whole live set —
       // inherently O(live-files), as the operation's semantics demand
-      case _ => commit("WRITE", added.map(_._1), metrics,
+      case _ => commit("WRITE", added.map(_._1), extraMetrics,
         addSizes = added.toMap,
         removes = base => { idGuard(base); manifestFiles(base) },
         newColMap = nextMap, newSchema = nextSchema,
         newProperties = idProps)
     }
-    // blind appends are commutative: a losing concurrent writer re-reads
-    // the new current manifest and re-commits ITS files on top (Delta's
-    // conflict-resolution rule for AddFile-only transactions). Data files
-    // are already on disk — only the manifest commit repeats. Overwrite
-    // and OPTIMIZE/DELETE/MERGE/etc stay single-attempt: their file list
-    // was derived from a snapshot a concurrent commit may invalidate.
-    val v = if (mode == SaveMode.Append) retryOnConflict()(attempt()) else attempt()
     maybeAutoCompact(added.map(_._1))
     v
   }
@@ -2111,13 +1848,12 @@ final class GraftTable private (
     typed.filter(expr(w)).select("__file").collect().map(_.getString(0)).toSeq
   }
 
-  /** Bounded retry for append-like commits losing the version race. A
-    * writer that crashed between its vN.files rename and its vN.json
-    * commit marker leaves the slot permanently claimed — bounded
-    * attempts turn that into a clear error instead of a livelock.
+  /** Bounded retry for commits losing the put race for the next version.
+    * Only a live concurrent writer can win a race — a crashed one leaves
+    * no record — so running out of attempts means sustained contention.
     *
-    * Budget sizing: each lost race re-runs the whole commit, and on a
-    * busy cluster a commit takes seconds — N concurrent writers make N
+    * Budget sizing: each lost race re-runs the attempt, and on a busy
+    * cluster a commit takes seconds — N concurrent writers make N
     * consecutive losses ROUTINE, not exceptional (Delta's own commit
     * retry allows ~10^7 ms for exactly this reason; the old 20×5 ms
     * linear budget gave up after ~1 s of total backoff and failed real
@@ -2131,9 +1867,8 @@ final class GraftTable private (
       catch {
         case e: GraftTable.CommitConflictException =>
           if (attempt >= maxAttempts) throw new IllegalStateException(
-            s"append still conflicting after $maxAttempts attempts " +
-            "(a concurrent writer may have crashed mid-commit, leaving an " +
-            "orphaned vN.files without its vN.json marker)", e)
+            s"commit still conflicting after $maxAttempts attempts: every " +
+            "attempt lost the next version to a concurrent writer", e)
           attempt += 1
           Thread.sleep(math.min(1000L, 5L * attempt * attempt) +
             jitter.nextInt(25).toLong)
@@ -2143,94 +1878,21 @@ final class GraftTable private (
   }
 
   // ---- idempotent writes (Delta txnAppId/txnVersion parity) ------------
-
-  // ---- manifest log checkpoints (Delta's _last_checkpoint parity) ------
   //
-  // Every CheckpointInterval commits, the commit also writes a
-  // vN.ckpt.tsv aggregating the txnAppId → max txnVersion map over
-  // v0..vN, so the SetTransaction lookup reads one checkpoint plus at
-  // most CheckpointInterval commit-record tails instead of every record
-  // since v0 — at thousands of versions the commit / stream-restart
-  // path stays O(interval). `cleanupLog` writes a fresh checkpoint
-  // before truncating, so dropping old commit records never loses
-  // aggregated txn state (file lists / constraints / stats need no
-  // checkpointing: each version's sidecars are already full snapshots).
+  // Txn markers ride the commit info of the commit they protect; every
+  // snapshot folds them into an appId → max txnVersion map, and every
+  // checkpoint carries that map, so the lookup reads no record at all
+  // once the current snapshot is cached, and log truncation never loses
+  // replay protection (exactly-once streams span cleanups).
 
   /** Latest checkpoint at or below `upTo`, if any. */
-  def latestCheckpointVersion(upTo: Long = currentVersion): Option[Long] = {
-    if (!fs.exists(logDir)) return None
-    val vs = fs.listStatus(logDir).flatMap { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("v") && n.endsWith(".ckpt.tsv"))
-        scala.util.Try(n.stripPrefix("v").stripSuffix(".ckpt.tsv").toLong).toOption
-      else None
-    }.filter(_ <= upTo)
-    if (vs.isEmpty) None else Some(vs.max)
-  }
-
-  /** txnAppId (JSON-escaped form) → txnVersion pair of one commit
-    * record, if the commit carried one. */
-  private val TxnRe =
-    """"txnAppId":"((?:[^"\\]|\\.)*)","txnVersion":"(-?\d+)"""".r
-
-  /** MANY-marker form ([[copyInto]]): one commit may carry a bounded
-    * batch of per-source-file markers under "txnMulti" (comma-joined
-    * URL-encoded appIds, all at version 1 — presence semantics). */
-  private val TxnMultiRe = """"txnMulti":"((?:[^"\\]|\\.)*)"""".r
-
-  private def txnOf(v: Long): Seq[(String, Long)] = {
-    val p = new Path(logDir, f"v$v%020d.json")
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    TxnRe.findFirstMatchIn(s).map(m => m.group(1) -> m.group(2).toLong).toSeq ++
-      TxnMultiRe.findFirstMatchIn(s).toSeq.flatMap(_.group(1).split(',')
-        .filter(_.nonEmpty).map(a => jsonEscape(decU(a)) -> 1L))
-  }
-
-  /** Aggregated txn map (escaped appId → max version) through `v`:
-    * latest checkpoint ≤ v, then the commit-record tail. */
-  private def txnMapAt(v: Long): Map[String, Long] = {
-    val ckpt = latestCheckpointVersion(v)
-    val base: Map[String, Long] = ckpt match {
-      case None => Map.empty
-      case Some(c) =>
-        val p = new Path(logDir, f"v$c%020d.ckpt.tsv")
-        val in = fs.open(p)
-        def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty).map(_.split('\t')).collect {
-            case Array(a, tv) => dec(a) -> tv.toLong
-          }.toMap
-        finally in.close()
-    }
-    ((ckpt.getOrElse(-1L) + 1) to v).foldLeft(base) { (m, i) =>
-      txnOf(i).foldLeft(m) { case (mm, (a, tv)) =>
-        if (tv > mm.getOrElse(a, -1L)) mm + (a -> tv) else mm
-      }
-    }
-  }
-
-  /** Write the txn + manifest checkpoints for `v` (best-effort: derived
-    * data — a failure only lengthens replay, never loses state). */
-  private def writeCheckpoint(v: Long): Unit = {
-    try {
-      val content = txnMapAt(v).toSeq.sortBy(_._1)
-        .map { case (a, tv) => s"${encU(a)}\t$tv" }.mkString("\n")
-      LogStore.writeAtomic(fs, new Path(logDir, f"v$v%020d.ckpt.tsv"),
-        content.getBytes(StandardCharsets.UTF_8))
-    } catch { case _: Exception => () }
-    writeManifestCheckpoint(v)
-    ()
-  }
+  def latestCheckpointVersion(upTo: Long = currentVersion): Option[Long] =
+    logNames().flatMap(versionOf(_, ".ckpt.parquet")).filter(_ <= upTo).maxOption
 
   /** Highest transaction version committed for `appId`, −1 if none —
-    * Delta's SetTransaction lookup. Reads the latest checkpoint plus at
-    * most CheckpointInterval commit records. */
-  def lastTxnVersion(appId: String): Long = {
-    if (!fs.exists(logDir)) return -1L
-    txnMapAt(currentVersion).getOrElse(jsonEscape(appId), -1L)
-  }
+    * Delta's SetTransaction lookup, served by the current snapshot. */
+  def lastTxnVersion(appId: String): Long =
+    snapshotAt(currentVersion).txn.getOrElse(appId, -1L)
 
   /** Exactly-once append for streaming sinks: the batch commits only if
     * `txnVersion` is strictly newer than the last committed version for
@@ -2273,15 +1935,16 @@ final class GraftTable private (
         !n.startsWith("_") && !n.startsWith(".")
       }
     def markerOf(p: Path): String = s"graft-copy-into:${p.toUri.getPath}"
-    val known = txnMapAt(currentVersion)
+    val known = snapshotAt(currentVersion).txn
     val fresh = (if (force) listed
-      else listed.filterNot(p => known.contains(jsonEscape(markerOf(p)))))
+      else listed.filterNot(p => known.contains(markerOf(p))))
       .sortBy(_.toUri.getPath)
     var last = currentVersion
     fresh.grouped(GraftTable.CopyIntoBatchFiles).foreach { chunk =>
       val df = spark.read.format(format).options(formatOptions)
         .load(chunk.map(_.toString): _*)
-      val multi = chunk.map(p => encU(markerOf(p))).mkString(",")
+      val multi = chunk.map(p =>
+        java.net.URLEncoder.encode(markerOf(p), "UTF-8")).mkString(",")
       last = write(df, SaveMode.Append, mergeSchema = mergeSchema,
         extraMetrics = Map("txnMulti" -> multi, "sourceOp" -> "COPY INTO"))
     }
@@ -2302,30 +1965,13 @@ final class GraftTable private (
       case Some(f) => GraftTable.partitionValues(f).map(_._1)
       case None =>
         (version to 0L by -1).iterator
-          .flatMap(v => commitMetric(v, "partitionColumns"))
+          .flatMap(v => commitInfo(v).flatMap(_.metrics.get("partitionColumns")))
           .collectFirst { case s if s.nonEmpty => s.split(',').toSeq }
           .getOrElse(Nil)
     }
 
-  private def commitMetric(version: Long, key: String): Option[String] = {
-    val p = new Path(logDir, f"v$version%020d.json")
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    ("\"" + java.util.regex.Pattern.quote(key) + "\":\"([^\"]*)\"").r
-      .findFirstMatchIn(s).map(_.group(1))
-  }
-
-  /** Commit wall-clock of `version` (epoch ms), from its commit record. */
-  def commitTimestamp(version: Long): Option[Long] = {
-    val p = new Path(logDir, f"v$version%020d.json")
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    """"timestamp":"([^"]+)"""".r.findFirstMatchIn(s)
-      .flatMap(m => scala.util.Try(
-        java.time.Instant.parse(m.group(1)).toEpochMilli).toOption)
-  }
+  /** Commit wall-clock of `version` (epoch ms), from its commit info. */
+  def commitTimestamp(version: Long): Option[Long] = commitInfo(version).map(_.timestamp)
 
   /** Latest version committed at or before `epochMs` — Delta's
     * `TIMESTAMP AS OF` resolution. Fails when the timestamp predates
@@ -2371,7 +2017,7 @@ final class GraftTable private (
     None
   }
 
-  /** Physical sidecar schema → logical view (mapped names, map order). */
+  /** Physical recorded schema → logical view (mapped names, map order). */
   private def logicalSchema(phys: StructType, cm: ColMap): StructType =
     if (cm.isIdentity) phys
     else StructType(cm.entries.flatMap { case (l, ph) =>
@@ -2482,8 +2128,8 @@ final class GraftTable private (
     val dvRead = dvOf(currentVersion)
     val sizesNow = snapshotAt(currentVersion).sizes
     // INCREMENTAL optimize: a scoped file already produced by an
-    // OPTIMIZE with the SAME cluster keys (provenance in its stats
-    // sidecar), carrying no deletion vector, and at least half the
+    // OPTIMIZE with the SAME cluster keys (provenance in its file
+    // stats), carrying no deletion vector, and at least half the
     // target size is skipped — repeated OPTIMIZE converges instead of
     // re-churning a 100 TB table, and a post-append OPTIMIZE rewrites
     // only what the append added (liquid-clustering-style per-batch
@@ -2552,7 +2198,7 @@ final class GraftTable private (
     * [[optimizeFullWaved]]: read `todo` live (DVs applied), sort into
     * byte-targeted range bins by (partition columns ++ cluster key),
     * append the files and commit ONE OPTIMIZE version. `provenance`
-    * lands in the ClusteredKey sidecar's third slot — the keys tag for
+    * lands in the ClusteredKey stat's third slot — the keys tag for
     * plain OPTIMIZE (unchanged), the wave epoch for waved re-clusters
     * (what lets a resumed waved run skip completed waves). */
   private def clusterRewriteCommit(todo: Seq[String], clusterBy: Seq[String],
@@ -2577,7 +2223,7 @@ final class GraftTable private (
     // session parallelism, never below `minSplitBytes` per file (4 MiB
     // or target/16) so toy scopes don't shatter into confetti. Split
     // outputs are sub-target BY DESIGN — they commit under the
-    // "keys-split" kind in the ClusteredKey sidecar and the plain-
+    // "keys-split" kind in the ClusteredKey stat and the plain-
     // OPTIMIZE churn guard treats them as converged (the ≥ target/2
     // size test alone would re-churn them forever). At real scale the
     // floor is inert: scope/cores ≥ target makes byBytes ≥ cores.
@@ -2661,7 +2307,7 @@ final class GraftTable private (
     * linear in waves and a kill costs at most the in-flight wave.
     *
     * RESUMABILITY is the epoch tag: every wave's outputs carry `epoch`
-    * in their ClusteredKey sidecar slot, and wave selection skips files
+    * in their ClusteredKey stat slot, and wave selection skips files
     * already tagged with this epoch — a run killed between waves (or
     * mid-wave: the partial wave never committed, its files are vacuum
     * orphans) resumes under the same `epoch` and redoes nothing that
@@ -2788,15 +2434,10 @@ final class GraftTable private (
     // delete (a file already gone counts as swept).
     val onDisk: Seq[(String, Long, Long)] =
       if (lite) {
-        (0L to currentVersion).iterator
-          .filter(v => hasVersion(v) && fs.exists(actionsPath(v)))
-          .flatMap { v =>
-            commitTimestamp(v) match {
-              case Some(ts) if ts <= cutoff =>
-                readActionRecord(v).removes.map(f => (f, 0L, ts))
-              case _ => Nil
-            }
-          }.toSeq.distinctBy(_._1)
+        versions().iterator.map(readRecord)
+          .filter(_.timestamp <= cutoff)
+          .flatMap(r => r.removes.map(f => (f, 0L, r.timestamp)))
+          .toSeq.distinctBy(_._1)
       } else listDataFiles()
     val deletable = onDisk
       .filter { case (f, _, mtime) => !live.contains(f) && mtime <= cutoff }
@@ -2841,6 +2482,13 @@ final class GraftTable private (
             !keepNames(s.getPath.getName) && s.getModificationTime <= cutoff)
           fs.delete(s.getPath, false)
       }
+    }
+    // temp files of log writes that never published (a writer killed
+    // mid-put, a failed checkpoint): hidden `.…tmp` entries of the log
+    if (fs.exists(logDir)) fs.listStatus(logDir).foreach { s =>
+      val n = s.getPath.getName
+      if (n.startsWith(".") && n.endsWith(".tmp") && s.getModificationTime <= cutoff)
+        fs.delete(s.getPath, true)
     }
     val v = commitRewrite("VACUUM", Nil, Nil, Map(
       "numFilesDeleted" -> deletable.size.toString,
@@ -3025,7 +2673,7 @@ final class GraftTable private (
     * — a sub-percent delete on a 100 TB table costs a metadata-sized
     * commit, at the price of a position anti-join on reads of vectored
     * files until OPTIMIZE or [[purge]] materializes them. The vector is
-    * merged INTO the claimed predecessor's vectors at commit time, so a
+    * merged INTO the predecessor's vectors at commit time, so a
     * concurrent merge-on-read delete's positions are never lost (union
     * of position sets ≡ sequential application: deletes are idempotent
     * and row-local). */
@@ -3072,7 +2720,7 @@ final class GraftTable private (
             "re-run against the new snapshot")
           Nil
         },
-        // per-file replacement vectors MERGED into the claimed base's
+        // per-file replacement vectors MERGED into the base's
         // (a concurrent merge-on-read delete's positions are never lost:
         // union of position sets ≡ sequential application)
         dvChanges = Some { base =>
@@ -3570,14 +3218,9 @@ final class GraftTable private (
     * at FILE granularity ([[graft.sources.GraftStreamSource]]'s
     * maxFilesPerTrigger): its change rows are exactly the added files'
     * contents, so any file subset is a sound partial delivery. None
-    * for rewrite / metadata / legacy commits. */
-  def appendOnlyAdds(v: Long): Option[Seq[String]] = {
-    if (v < 0 || !hasVersion(v) || !fs.exists(actionsPath(v))) return None
-    val a = readActionRecord(v)
-    if (a.removes.isEmpty && a.dvChanges.isEmpty && a.adds.nonEmpty)
-      Some(a.adds.map(_._1))
-    else None
-  }
+    * for rewrite and metadata commits. */
+  def appendOnlyAdds(v: Long): Option[Seq[String]] =
+    appendOnlyAddsWithSizes(v).map(_.map(_._1))
 
   /** Live files of `version`'s snapshot with their logged byte sizes,
     * in a deterministic (sorted) order — the unit list an
@@ -3593,16 +3236,14 @@ final class GraftTable private (
 
   /** [[appendOnlyAdds]] plus each file's byte size — the unit
     * `maxBytesPerTrigger` admission counts in. Sizes come from the
-    * commit's action record; a legacy record without one falls back to
-    * a driver fs probe (bounded by that commit's file count). */
+    * commit's record; an add without one falls back to a driver fs probe
+    * (bounded by that commit's file count). */
   def appendOnlyAddsWithSizes(v: Long): Option[Seq[(String, Long)]] = {
-    if (v < 0 || !hasVersion(v) || !fs.exists(actionsPath(v))) return None
-    val a = readActionRecord(v)
-    if (a.removes.isEmpty && a.dvChanges.isEmpty && a.adds.nonEmpty)
-      Some(a.adds.map { case (f, sz) =>
-        f -> sz.getOrElse(
-          scala.util.Try(fs.getFileStatus(dataPath(f)).getLen).getOrElse(0L))
-      })
+    if (!hasVersion(v)) return None
+    val r = readRecord(v)
+    if (r.removes.isEmpty && r.dv.isEmpty && r.adds.nonEmpty && r.adds.forall(_.dataChange))
+      Some(r.adds.map(a => a.path -> a.size.getOrElse(
+        scala.util.Try(fs.getFileStatus(dataPath(a.path)).getLen).getOrElse(0L))))
     else None
   }
 
@@ -3637,7 +3278,7 @@ final class GraftTable private (
     * sidecar when the commit recorded one, the file/vector diff
     * otherwise. */
   private def versionChanges(v: Long, cmTo: ColMap): Option[DataFrame] = {
-    commitMetric(v, "cdc").foreach { id =>
+    commitInfo(v).flatMap(_.metrics.get("cdc")).foreach { id =>
       val dir = new Path(logDir, s"cdc/$id")
       if (fs.exists(dir) &&
           fs.listStatus(dir).exists(_.getPath.getName.endsWith(".parquet"))) {
@@ -3725,7 +3366,7 @@ final class GraftTable private (
     * a sidecar under `_graft_log/cdc/<id>`; the id is recorded in the
     * commit metrics and [[versionChanges]] serves the sidecar instead
     * of inferring from the file diff. The write happens BEFORE the
-    * commit claims its version — an aborted commit leaves an orphaned
+    * commit is published — an aborted commit leaves an orphaned
     * sidecar nobody references (swept with the log's cleanup), never a
     * commit whose feed is missing. */
   private def writeCdc(physParts: Seq[(DataFrame, String)]): String = {
@@ -3797,7 +3438,7 @@ final class GraftTable private (
     def abs(f: String) = if (f.startsWith("/")) f else s"$rootAbs/$f"
     val absFiles = manifestFiles(srcV).map(abs)
     // the source already read these footers at ITS commits: carry its
-    // stats sidecar (keys rewritten to the clone's absolute entries)
+    // file stats (keys rewritten to the clone's absolute entries)
     // instead of re-reading every footer on the driver — this is what
     // keeps "cloning a 100 TB table costs one manifest write" true
     val carried = statsOf(srcV).map { case (f, cols) => abs(f) -> cols }
@@ -3949,43 +3590,28 @@ final class GraftTable private (
   }
 
   /** Log retention (Delta's logRetentionDuration parity, counted in
-    * versions): drop the commit record, manifest and sidecars of every
-    * version more than `keepVersions` below the current one. Bounds the
-    * log's driver-side growth; time travel / CDF / clone-at-version for
-    * dropped versions becomes unavailable (the same contract Delta's log
-    * cleanup imposes), and txn replay protection only spans retained
-    * versions. Data files are untouched — VACUUM owns those. Returns the
-    * number of versions dropped. */
+    * versions): drop the record and checkpoints of every version more
+    * than `keepVersions` below the current one. Bounds the log's growth;
+    * time travel / CDF / clone-at-version for dropped versions becomes
+    * unavailable (the same contract Delta's log cleanup imposes). The
+    * oldest retained version keeps a checkpoint, which carries the txn
+    * map, so replay protection spans cleanups. Data files are untouched
+    * — VACUUM owns those. Returns the number of versions dropped. */
   def cleanupLog(keepVersions: Int = 30): Int = {
     require(keepVersions >= 1, "must keep at least the current version")
-    val cur = currentVersion
-    val cutoff = cur - keepVersions
-    if (cutoff < 0 || !fs.exists(logDir)) return 0
-    // aggregate txn state of the to-be-dropped commit records into a
-    // fresh checkpoint first, so truncation never loses replay
-    // protection (exactly-once streams span cleanups)
-    if (!latestCheckpointVersion(cur).exists(_ > cutoff)) writeCheckpoint(cur)
+    val cutoff = currentVersion - keepVersions
+    if (cutoff < 0) return 0
     // the OLDEST RETAINED version must keep a reconstruction base once
-    // its action ancestry is dropped: checkpoint it first, and if that
-    // write fails keep the whole log (correctness over reclamation)
+    // its ancestry is dropped: checkpoint it first, and if that write
+    // fails keep the whole log (correctness over reclamation)
     val oldest = cutoff + 1
-    if (oldest <= cur && fs.exists(actionsPath(oldest)) &&
-        !fs.exists(legacyFilesPath(oldest)) &&
-        !fs.exists(manifestCkptPath(oldest)) &&
-        !writeManifestCheckpoint(oldest)) return 0
+    if (!fs.exists(checkpointPath(oldest)) && !writeCheckpoint(oldest, snapshotAt(oldest)))
+      return 0
     var dropped = 0
-    (0L to cutoff).foreach { v =>
-      val json = new Path(logDir, f"v$v%020d.json")
-      if (fs.exists(json)) {
-        // delete the commit marker LAST so a crash mid-cleanup never
-        // leaves a committed version with missing sidecars
-        versionSidecars(v).foreach(fs.delete(_, false))
-        fs.delete(json, false)
+    logNames().foreach { n =>
+      if (versionOf(n, ".json").exists(_ <= cutoff) && fs.delete(new Path(logDir, n), false))
         dropped += 1
-      }
-      // superseded checkpoints go with their versions
-      fs.delete(new Path(logDir, f"v$v%020d.ckpt.tsv"), false)
-      fs.delete(manifestCkptPath(v), true)
+      if (versionOf(n, ".ckpt.parquet").exists(_ <= cutoff)) fs.delete(new Path(logDir, n), true)
     }
     // the retention CONTRACT says dropped versions are unavailable —
     // cached snapshots must not keep serving them
@@ -3995,10 +3621,13 @@ final class GraftTable private (
 
   // ---- M3: history -----------------------------------------------------
 
-  /** Audit log as a DataFrame, newest first (maintenance.py:87-91). */
-  def history(): DataFrame =
-    spark.read.json(s"$path/_graft_log/*.json")
+  /** Audit log as a DataFrame, newest first (maintenance.py:87-91): one
+    * row per retained commit, from its commit info. */
+  def history(): DataFrame = {
+    import spark.implicits._
+    spark.read.json(versions().flatMap(commitInfoLine).map(LogRecord.commitInfoJson).toDS())
       .orderBy(desc("version"))
+  }
 
   // ---- D5: DESCRIBE DETAIL equivalent ----------------------------------
 
@@ -4219,8 +3848,9 @@ object GraftTable {
     * long key. */
   private[table] val MergeBroadcastKeyBytes: Long = 32L << 20
 
-  /** Commits between txn-map checkpoints — the SetTransaction lookup
-    * reads one checkpoint + at most this many commit-record tails. */
+  /** Default commits between checkpoints (`graft.checkpointInterval`
+    * overrides it per table) — a cold reader replays at most this many
+    * records after the nearest checkpoint. */
   val CheckpointInterval: Long = 10L
 
   /** COPY INTO loads at most this many source files per commit: bounds
@@ -4228,17 +3858,75 @@ object GraftTable {
     * at commit boundaries. */
   val CopyIntoBatchFiles: Int = 1000
 
+  /** Table metadata of one version — Delta's metaData action: physical
+    * schema (None until a commit records one), column map, CHECK
+    * constraints, generated-column definitions and properties. */
+  final case class Meta(
+      schema: Option[StructType] = None,
+      colMap: ColMap = ColMap(Nil, Nil),
+      constraints: Map[String, String] = Map.empty,
+      generated: Map[String, String] = Map.empty,
+      properties: Map[String, String] = Map.empty)
+
   /** Full table state at one version: live files (manifest order),
     * per-file column stats, per-file deletion-vector runs, per-file
     * byte sizes (Delta's AddFile.size — DESCRIBE DETAIL and OPTIMIZE
     * bin-packing read these instead of issuing one filesystem RPC per
-    * live file; absent for legacy commits, which fall back to the RPC).
-    * Immutable once the version commits — safe to cache JVM-wide. */
+    * live file; absent only for adopted files whose size was unknown),
+    * the metadata, the txn map (appId → highest txnVersion) and the
+    * commit timestamp (epoch ms). Immutable once the version commits —
+    * safe to cache JVM-wide. */
   final case class Snapshot(
       files: Vector[String],
       stats: Map[String, Map[String, (String, String, String)]],
       dv: Map[String, Seq[(Long, Long)]],
-      sizes: Map[String, Long] = Map.empty)
+      sizes: Map[String, Long] = Map.empty,
+      meta: Meta = Meta(),
+      txn: Map[String, Long] = Map.empty,
+      timestamp: Long = 0L)
+
+  object Snapshot {
+    val Empty: Snapshot = Snapshot(Vector.empty, Map.empty, Map.empty)
+  }
+
+  /** Files, stats, vectors and sizes of checkpoint file rows (seq, file,
+    * dv, stats, size), sorted by seq — the seq restores manifest order
+    * exactly, whatever order the parquet rows come back in. */
+  private[table] def checkpointFiles(rows: Seq[org.apache.spark.sql.Row]): Snapshot =
+    Snapshot(rows.map(_.getString(1)).toVector,
+      rows.flatMap { r =>
+        Option(r.getSeq[org.apache.spark.sql.Row](3)).filter(_.nonEmpty).map(st =>
+          r.getString(1) -> st.map(s =>
+            s.getString(0) -> ((s.getString(1), s.getString(2), s.getString(3)))).toMap)
+      }.toMap,
+      rows.filterNot(_.isNullAt(2)).map(r => r.getString(1) -> decodeRuns(r.getString(2)))
+        .filter(_._2.nonEmpty).toMap,
+      rows.filterNot(_.isNullAt(4)).map(r => r.getString(1) -> r.getLong(4)).toMap)
+
+  /** Roll `base` (the state at v-1) forward through commit v's record:
+    * removes leave, adds enter (a re-add of a live file keeps its place
+    * and replaces its stats), vectors are replaced (empty runs clear),
+    * metadata is replaced when the record carries it, txn markers fold
+    * in. */
+  private[table] def applyRecord(base: Snapshot, r: Record): Snapshot = {
+    val removed = r.removes.toSet
+    val kept = base.files.filterNot(removed)
+    val keptSet = kept.toSet
+    val newAdds = r.adds.map(_.path).filterNot(keptSet) // re-adds (RESTORE) dedup here
+    val fileSet = keptSet ++ newAdds
+    val live = r.adds.filter(a => fileSet(a.path))
+    val dv = r.dv.foldLeft(base.dv -- removed) { case (m, (f, runs)) =>
+      if (!fileSet(f)) m else if (runs.isEmpty) m - f else m + (f -> runs)
+    }
+    val txn = r.txns.foldLeft(base.txn) { case (m, (a, tv)) =>
+      if (tv > m.getOrElse(a, -1L)) m + (a -> tv) else m
+    }
+    Snapshot(kept ++ newAdds,
+      (base.stats -- removed) ++ live.collect { case a if a.stats.nonEmpty => a.path -> a.stats },
+      dv,
+      (base.sizes -- removed) ++ live.flatMap(a => a.size.map(a.path -> _)),
+      r.meta.getOrElse(base.meta), txn, r.timestamp)
+  }
 
   // (table root, version) → snapshot, LRU-bounded by entry count AND by
   // approximate WEIGHT (Σ files + stats + dv runs + sizes across cached
@@ -4246,9 +3934,9 @@ object GraftTable {
   // be tens of GB of driver heap, so eviction tracks how big the cached
   // state actually is, not how many versions it spans. The newest entry
   // always survives (it is the planning working set the caller just
-  // materialized anyway). The hot pattern — commit then read — hits
-  // (path, v-1) and rolls one action record forward instead of
-  // replaying from the last checkpoint.
+  // materialized anyway). A commit caches the state it produced, so
+  // commit-then-read replays nothing, and a reader of another writer's
+  // commit rolls one record forward from (path, v-1).
   private val SnapCacheMaxEntries = 48
   // ~4M retained entries ≈ low hundreds of MB: roomy for thousands of
   // normal tables, but two ~2M-file/stat snapshots already exceed it
@@ -4261,7 +3949,7 @@ object GraftTable {
     s.files.size.toLong +
     s.stats.valuesIterator.map(_.size.toLong).sum +
     s.dv.valuesIterator.map(_.size.toLong).sum +
-    s.sizes.size
+    s.sizes.size + s.txn.size
 
   private[graft] def snapshotCacheSize: Int =
     snapCache.synchronized(snapCache.size)
@@ -4323,7 +4011,7 @@ object GraftTable {
   val DistributedStatsThreshold: Int = 12
 
   /** StructField metadata key carrying a column's DEFAULT expression in
-    * the schema sidecar — Spark's own key for DSv2 column defaults, so
+    * the recorded schema — Spark's own key for DSv2 column defaults, so
     * the recorded schema stays interoperable with engines that read it. */
   val DefaultKey: String = "CURRENT_DEFAULT"
 
@@ -4710,10 +4398,10 @@ object GraftTable {
       perCol.toMap
     } catch { case _: Exception => Map.empty } // stats are an optimization, never required
 
-  /** A concurrent writer claimed the version this commit targeted.
-    * Blind appends retry on it (their file list recomputes against the
-    * new manifest); snapshot-derived commits (OPTIMIZE/DELETE/MERGE)
-    * propagate it — their inputs may be stale. */
+  /** A concurrent writer published the version this commit targeted.
+    * Commits that retry recompute against the winner (blind appends
+    * always; snapshot-derived rewrites abort there if their inputs are
+    * gone); single-attempt commits (overwrite, RESTORE) propagate it. */
   final class CommitConflictException(msg: String) extends RuntimeException(msg)
 
   /** Every file under `dir`, depth first in `listStatus` order (the
@@ -4735,7 +4423,7 @@ object GraftTable {
       partitionColumns: Seq[String] = Nil): GraftTable =
     new GraftTable(spark, path, partitionColumns)
 
-  /** CREATE TABLE: commit a file-less v0 whose schema sidecar
+  /** CREATE TABLE: commit a file-less v0 whose recorded schema
     * establishes the table — reads serve an empty frame with this
     * schema and the first write is schema-enforced against it. */
   def create(spark: SparkSession, path: String, schema: StructType,

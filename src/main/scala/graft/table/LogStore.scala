@@ -1,157 +1,128 @@
 package graft.table
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.nio.file.{FileAlreadyExistsException, Files, StandardCopyOption}
+
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
-/** The commit-claim seam: how a writer takes exclusive ownership of
-  * manifest version `v` before computing and publishing it. The whole
-  * ACID story of the table rests on this one primitive — "create this
-  * claim file iff it does not exist, atomically" — and whether that
-  * primitive exists depends on the store:
+/** The commit seam: how a writer publishes the record of version `v`.
+  * A commit IS its record — `_graft_log/v<N>.json` appearing whole — so
+  * the table's ACID story rests on one primitive, "publish these bytes at
+  * this path iff nothing is there, all or nothing", and whether the store
+  * has it:
   *
-  *   - HDFS, GCS, Azure ABFS: create-no-overwrite is atomic — use
-  *     [[AtomicCreateLogStore]] (the default).
-  *   - Local filesystem: Hadoop's `RawLocalFileSystem.create(path,
-  *     overwrite=false)` is check-then-act, NOT atomic —
-  *     [[AtomicCreateLogStore]] detects the local scheme and drops to
-  *     `File.createNewFile()` (O_EXCL) instead.
-  *   - S3: historically HEAD-then-PUT (not atomic). With S3
-  *     conditional writes (`If-None-Match: *`, supported by S3 since
-  *     late 2024 and surfaced by recent Hadoop S3A releases as a
-  *     conditional-create option), the default store is correct. On a
-  *     stack without conditional writes, configure
-  *     [[SingleDriverLogStore]] and route all writers through one
-  *     driver JVM — the same deployment contract Delta documents for
-  *     its S3 single-driver LogStore.
+  *   - Local filesystem: the bytes go to a hidden temp file beside the
+  *     record, then `Files.createLink` publishes them; link(2) is atomic
+  *     and fails when the target exists ([[AtomicCreateLogStore]], the
+  *     default).
+  *   - HDFS, GCS, Azure ABFS: temp file, then `rename`, which does not
+  *     replace an existing target (same default store).
+  *   - S3: rename is copy + delete and replaces silently. Configure
+  *     [[SingleDriverLogStore]] and route every writer through one driver
+  *     JVM — the contract Delta documents for its S3 single-driver
+  *     LogStore — or plug in a store whose put is a conditional PUT
+  *     (`If-None-Match: *`).
   *
-  * Selected per session via `spark.graft.logStore`:
-  * `"atomic"` (default), `"single-driver"`, or a fully-qualified class
-  * name with a no-arg constructor for custom stores.
+  * A writer that dies mid-put leaves at most its temp file, which VACUUM
+  * sweeps; it never leaves anything that blocks the next commit.
   *
-  * Reference: the reference pipeline inherits exactly this seam from
-  * delta-spark's LogStore abstraction (requirements.txt:2); this is the
-  * clean-room equivalent.
+  * Selected per session via `spark.graft.logStore`: `"atomic"` (default),
+  * `"single-driver"`, or a fully-qualified class name with a no-arg
+  * constructor for custom stores. Reference: the reference pipeline
+  * inherits this seam from delta-spark's LogStore (requirements.txt:2);
+  * this is the clean-room equivalent.
   */
 trait LogStore {
 
-  /** Create `path` iff it does not already exist, as one atomic
-    * observable step. Throws [[GraftTable.CommitConflictException]]
-    * when the path is already held by another writer. Implementations
-    * must guarantee that of N concurrent callers on the same path, at
-    * most one returns normally. */
-  def createExclusive(fs: FileSystem, path: Path): Unit
-
-  /** Release a claim previously won via [[createExclusive]] whose commit
-    * did NOT land, so the same version slot can be retried. Called by
-    * the commit failure sweep alongside deleting the claim file. Stores
-    * whose only state is the claim file itself need nothing here; a
-    * store holding JVM-side claim state (e.g. [[SingleDriverLogStore]]'s
-    * registry) must forget `path`, otherwise the first recoverable
-    * commit failure (a CHECK-constraint violation, say) wedges the slot
-    * forever: retries of version v keep throwing "claimed in this JVM"
-    * even though the claim file is gone. */
-  def release(fs: FileSystem, path: Path): Unit = ()
+  /** Publish `bytes` at `path` iff no file is there. Returning normally
+    * means all the bytes are visible at `path`; throwing means none are
+    * (a temp file may remain). Throws
+    * [[GraftTable.CommitConflictException]] when `path` already exists;
+    * of N concurrent callers on one path, at most one returns normally. */
+  def putIfAbsent(fs: FileSystem, path: Path, bytes: Array[Byte]): Unit
 }
 
-/** Default store: relies on the filesystem's own atomic
-  * create-no-overwrite (HDFS/GCS/ABFS/S3-with-conditional-writes);
-  * local paths use O_EXCL via `File.createNewFile`, because Hadoop's
-  * local `create(path, false)` is check-then-act. On a store whose
-  * `create(path, overwrite=false)` is NOT atomic, two racing claimers
-  * can both succeed — that store must not use this implementation
-  * (see [[SingleDriverLogStore]]). */
+/** Default store: a temp file published by an exclusive link (local) or
+  * a non-replacing rename (HDFS/GCS/ABFS). A store whose rename replaces
+  * its target must not use it (see [[SingleDriverLogStore]]). */
 object AtomicCreateLogStore extends LogStore {
-  override def createExclusive(fs: FileSystem, path: Path): Unit = {
-    val conflict = () => new GraftTable.CommitConflictException(
-      s"version already claimed by a concurrent writer ($path)")
-    fs match {
-      case l: org.apache.hadoop.fs.LocalFileSystem =>
-        val f = l.getRaw.asInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-          .pathToFile(path)
-        if (!f.createNewFile()) throw conflict()
-      case other =>
-        try other.create(path, false).close()
-        catch { case _: java.io.IOException => throw conflict() }
-    }
-  }
+  override def putIfAbsent(fs: FileSystem, path: Path, bytes: Array[Byte]): Unit =
+    LogStore.publish(fs, LogStore.writeTemp(fs, path, bytes), path)
 }
 
-/** Fallback for stores WITHOUT atomic create-no-overwrite (plain S3A):
-  * a JVM-wide claim registry is the real mutex — concurrent claimers in
-  * the same driver JVM serialize through it — and an existence probe
-  * rejects claim files left by earlier JVMs. Correct only under the
-  * single-driver deployment contract: every writer to the table runs in
-  * this JVM (Delta's S3 single-driver LogStore carries the same
-  * caveat). The registry grows by one qualified path per successful
-  * claim for the JVM's lifetime — bounded by the number of commits this
-  * driver performs. */
+/** Fallback for stores WITHOUT a non-replacing publish (plain S3A): a JVM
+  * lock held for the whole put serializes the writers of this driver, and
+  * an existence probe under it rejects a record that is already there.
+  * Correct only under the single-driver deployment contract: every
+  * writer to the table runs in this JVM. */
 object SingleDriverLogStore extends LogStore {
-  private val claimed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  override def createExclusive(fs: FileSystem, path: Path): Unit = {
-    def conflict(why: String) = new GraftTable.CommitConflictException(
-      s"version already claimed by a concurrent writer ($path): $why")
-    val key = fs.makeQualified(path).toString
-    if (!claimed.add(key)) throw conflict("claimed in this JVM")
-    var ok = false
-    try {
-      if (fs.exists(path)) throw conflict("claim file already exists")
-      // overwrite=false still requested — a store that CAN enforce it
-      // keeps its own guarantee as a second line of defense
-      try fs.create(path, false).close()
-      catch { case _: java.io.IOException => throw conflict("create failed") }
-      ok = true
-    } finally if (!ok) claimed.remove(key)
-  }
-
-  /** The registry IS this store's mutex — dropping the key is what
-    * makes a failed commit's version slot claimable again. */
-  override def release(fs: FileSystem, path: Path): Unit =
-    claimed.remove(fs.makeQualified(path).toString)
+  override def putIfAbsent(fs: FileSystem, path: Path, bytes: Array[Byte]): Unit =
+    synchronized {
+      if (fs.exists(path)) throw LogStore.conflict(path)
+      AtomicCreateLogStore.putIfAbsent(fs, path, bytes)
+    }
 }
 
 object LogStore {
-  /** Session conf key selecting the commit-claim implementation. */
+  /** Session conf key selecting the store. */
   val ConfKey = "spark.graft.logStore"
 
-  /** Publish `bytes` at `path` in one observable step: write a hidden
-    * temp file beside it, then rename it into place (replacing any file
-    * already there). Every log write goes through here — commit
-    * sidecars and the `.json` marker, txn checkpoints, bloom sidecars.
-    * Throws [[GraftTable.CommitConflictException]] when the rename
-    * fails.
-    *
-    * Local paths use `java.nio` directly, the same special case
-    * [[AtomicCreateLogStore]] makes: Hadoop's local `create` runs a
-    * `chmod` process for the file and again for its `.crc` when the
-    * native library is absent. An older `.crc` of a replaced file is
-    * deleted before the move, since the local filesystem verifies reads
-    * against it. Other stores keep `create` + `rename`. */
-  def writeAtomic(fs: FileSystem, path: Path, bytes: Array[Byte]): Unit = {
-    val tmp = new Path(path.getParent, s".${path.getName}.tmp")
-    def conflict() = new GraftTable.CommitConflictException(
-      s"commit conflict renaming to $path")
+  def conflict(path: Path) = new GraftTable.CommitConflictException(
+    s"version already committed by a concurrent writer ($path)")
+
+  // Local paths use java.nio directly: Hadoop's local `create` runs a
+  // `chmod` process for the file and again for its `.crc` when the native
+  // library is absent, and the log needs no checksum files.
+  private def raw(l: LocalFileSystem) = l.getRaw.asInstanceOf[RawLocalFileSystem]
+
+  /** Write `bytes` to a fresh hidden temp file beside `path`
+    * (`.<name>.<uuid>.tmp`, the shape VACUUM sweeps) and return it. */
+  def writeTemp(fs: FileSystem, path: Path, bytes: Array[Byte]): Path = {
+    val tmp = new Path(path.getParent, s".${path.getName}.${java.util.UUID.randomUUID}.tmp")
     fs match {
-      case l: org.apache.hadoop.fs.LocalFileSystem =>
-        import java.nio.file.{Files, StandardCopyOption}
-        val raw = l.getRaw.asInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-        val target = raw.pathToFile(path).toPath
-        val tmpFile = raw.pathToFile(tmp).toPath
-        Files.createDirectories(target.getParent)
-        Files.write(tmpFile, bytes)
-        Files.deleteIfExists(raw.pathToFile(l.getChecksumFile(path)).toPath)
-        try Files.move(tmpFile, target, StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.io.IOException =>
-          Files.deleteIfExists(tmpFile)
-          throw conflict()
-        }
+      case l: LocalFileSystem =>
+        val f = raw(l).pathToFile(tmp).toPath
+        Files.createDirectories(f.getParent)
+        Files.write(f, bytes)
       case other =>
-        val out = other.create(tmp, true)
+        val out = other.create(tmp, false)
         try out.write(bytes) finally out.close()
+    }
+    tmp
+  }
+
+  /** Move temp file `tmp` to `path` iff `path` does not exist; a losing
+    * `tmp` is deleted. */
+  def publish(fs: FileSystem, tmp: Path, path: Path): Unit = fs match {
+    case l: LocalFileSystem =>
+      val r = raw(l)
+      val t = r.pathToFile(tmp).toPath
+      try Files.createLink(r.pathToFile(path).toPath, t)
+      catch { case _: FileAlreadyExistsException => throw conflict(path) }
+      finally Files.deleteIfExists(t)
+    case other =>
+      if (!other.rename(tmp, path)) {
+        other.delete(tmp, false)
+        throw (if (other.exists(path)) conflict(path)
+          else new java.io.IOException(s"could not publish $path"))
+      }
+  }
+
+  /** Publish `bytes` at `path` in one observable step, REPLACING any file
+    * there — for derived files that are rewritten whole (bloom sidecars).
+    * An older `.crc` of a replaced local file is deleted before the move,
+    * since the local filesystem verifies reads against it. */
+  def writeAtomic(fs: FileSystem, path: Path, bytes: Array[Byte]): Unit = {
+    val tmp = writeTemp(fs, path, bytes)
+    fs match {
+      case l: LocalFileSystem =>
+        Files.deleteIfExists(raw(l).pathToFile(l.getChecksumFile(path)).toPath)
+        Files.move(raw(l).pathToFile(tmp).toPath, raw(l).pathToFile(path).toPath,
+          StandardCopyOption.ATOMIC_MOVE)
+      case other =>
         if (!other.rename(tmp, path)) {
           other.delete(tmp, false)
-          throw conflict()
+          throw conflict(path)
         }
     }
   }

@@ -5,10 +5,11 @@ package graft.table
   * files.
   *
   * Mechanics: each file ADDED while `graft.rowTracking = true` records a
-  * BASE row id in its stats sidecar entry (reserved pseudo-column), and
+  * BASE row id in its file stats (reserved pseudo-column), and
   * a row's id is `base + row_index` — assigned at commit time from a
   * high-water mark carried in reserved TBLPROPERTIES and advanced in the
-  * SAME commit (claim-protected, so concurrent appends never overlap).
+  * SAME commit (the put-if-absent publish orders concurrent appends, so
+  * their ranges never overlap).
   * The design is metadata-only: a 100 TB ingest pays nothing on the
   * write path, and reads attach ids from a broadcast file→base join
   * (rows ∝ file count).

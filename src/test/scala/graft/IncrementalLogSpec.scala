@@ -6,10 +6,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.table.GraftTable
 
-/** The r6 incremental commit log: commits record add/remove ACTIONS
-  * (O(delta) log I/O), snapshots reconstruct from periodic parquet
-  * checkpoints (DataFrame-written/read) plus the action tail, legacy
-  * full-snapshot manifests stay readable, and log truncation preserves
+/** The incremental commit log: each commit writes one record of
+  * add/remove ACTIONS (O(delta) log I/O), snapshots reconstruct from
+  * periodic parquet checkpoints (DataFrame-written/read) plus the record
+  * tail, a version-1 log converts once, and log truncation preserves
   * reconstructability of every retained version.
   */
 class IncrementalLogSpec extends SparkSpec {
@@ -19,6 +19,14 @@ class IncrementalLogSpec extends SparkSpec {
 
   private def hfs(path: String) =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** The JSON lines of commit `v`'s record, by action kind. */
+  private def recordLines(path: String, v: Long): Seq[(String, String)] = {
+    val in = hfs(path).open(logFile(path, f"v$v%020d.json"))
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty)
+      .map(l => l.drop(2).takeWhile(_ != '"') -> l).toList
+    finally in.close()
+  }
 
   test("appends write O(delta) action records, never O(live-files) manifests") {
     import spark.implicits._
@@ -38,20 +46,16 @@ class IncrementalLogSpec extends SparkSpec {
     // every append commit wrote ONE add action — log I/O independent of
     // the live-file count — and no full-snapshot manifest at all
     (1L to 100L).foreach { v =>
-      assert(!fs.exists(logFile(path, f"v$v%020d.files")),
-        s"v$v must not write a full-snapshot manifest")
-      val actions = scala.io.Source.fromInputStream(
-        fs.open(logFile(path, f"v$v%020d.actions.tsv")), "UTF-8")
-        .getLines().filter(_.nonEmpty).toList
-      assert(actions.size == 1 && actions.head.startsWith("a\t"),
-        s"v$v: expected exactly one add action, got $actions")
+      val kinds = recordLines(path, v).map(_._1)
+      assert(kinds == Seq("commitInfo", "add"),
+        s"v$v: expected the commit info and exactly one add action, got $kinds")
     }
+    assert(new java.io.File(path, "_graft_log").list()
+      .count(_.endsWith(".json")) == 101, "one record per commit, nothing else per version")
 
-    // stats sidecars likewise carry only the ADDED file's columns
-    val statLines = scala.io.Source.fromInputStream(
-      fs.open(logFile(path, f"v${50L}%020d.stats.tsv")), "UTF-8")
-      .getLines().filter(_.nonEmpty).toList
-    assert(statLines.map(_.split('\t').head).distinct.size == 1)
+    // stats likewise ride only the ADDED file's action
+    val added = t.readRecord(50).adds
+    assert(added.size == 1 && added.head.stats.contains("id"))
 
     // time travel replays the action log exactly
     assert(t.readVersion(0).count() == 100)
@@ -90,16 +94,13 @@ class IncrementalLogSpec extends SparkSpec {
     t.write((0 until 500).map(_.toLong).toDF("id").repartition(3))
     t.write(Seq(9999L).toDF("id").coalesce(1), org.apache.spark.sql.SaveMode.Append)
 
-    // every add action carries its byte size as a third field
+    // every add action carries its byte size
     (0L to 1L).foreach { v =>
-      val adds = scala.io.Source.fromInputStream(
-        fs.open(logFile(path, f"v$v%020d.actions.tsv")), "UTF-8")
-        .getLines().filter(_.startsWith("a\t")).toList
+      val adds = t.readRecord(v).adds
       assert(adds.nonEmpty)
-      adds.foreach { l =>
-        val parts = l.split('\t')
-        assert(parts.length == 3 && parts(2).toLong > 0, s"sized add expected: $l")
-      }
+      adds.foreach(a => assert(a.size.exists(_ > 0), s"sized add expected: $a"))
+      assert(recordLines(path, v).collect { case ("add", l) => l }
+        .forall(_.contains("\"size\":")))
     }
     // detail() totals match the filesystem ground truth exactly
     val truth = t.manifestFiles().map(f =>
@@ -128,13 +129,15 @@ class IncrementalLogSpec extends SparkSpec {
     val ckpt = logFile(path, f"v${10L}%020d.ckpt.parquet")
     assert(fs.exists(ckpt), "interval checkpoint must exist at v10")
     // the checkpoint IS a plain parquet dataset: one row per live file,
-    // stats and vectors as columns — a distributed artifact, not a
-    // driver text blob
+    // stats and vectors as columns, plus one state row (seq -1) with the
+    // metadata — a distributed artifact, not a driver text blob
     val df = spark.read.parquet(ckpt.toString)
-    assert(df.columns.toSet == Set("seq", "file", "size", "dv", "stats"))
-    assert(df.count() == t.manifestFiles(10).size)
-    assert(df.select("file").as[String].collect().toSet ==
+    assert(df.columns.toSet == Set("seq", "file", "size", "dv", "stats", "state"))
+    val files = df.filter(col("seq") >= 0)
+    assert(files.count() == t.manifestFiles(10).size)
+    assert(files.select("file").as[String].collect().toSet ==
       t.manifestFiles(10).toSet)
+    assert(df.filter(col("seq") === -1).select("state").as[String].head().contains("metaData"))
 
     // cold reconstruction (cache dropped): checkpoint + action tail must
     // reproduce the exact snapshot the incremental path built
@@ -154,14 +157,13 @@ class IncrementalLogSpec extends SparkSpec {
     t.write((0 until 100).map(_.toLong).toDF("id").repartition(2))
     t.delete(col("id") < 10L, mergeOnRead = true)
     val vDel = t.currentVersion
-    // an append AFTER the vectored delete writes an EMPTY dv sidecar —
-    // the surviving vectors carry by replay, not by re-writing
+    assert(recordLines(path, vDel).exists(_._1 == "dv"))
+    // an append AFTER the vectored delete records NO dv action — the
+    // surviving vectors carry by replay, not by re-writing
     t.write(Seq(500L).toDF("id").coalesce(1),
       org.apache.spark.sql.SaveMode.Append)
-    val dvLines = scala.io.Source.fromInputStream(
-      fs.open(logFile(path, f"v${t.currentVersion}%020d.dv.tsv")), "UTF-8")
-      .getLines().filter(_.nonEmpty).toList
-    assert(dvLines.isEmpty, "append must not re-record surviving vectors")
+    assert(!recordLines(path, t.currentVersion).exists(_._1 == "dv"),
+      "append must not re-record surviving vectors")
     assert(t.deletedRowCount() == 10)
     assert(t.read().count() == 91)
 
@@ -193,9 +195,9 @@ class IncrementalLogSpec extends SparkSpec {
     assert(fs.exists(ckpt))
     val (files, dv, stats) = (t.manifestFiles(v), t.dvOf(v), t.statsOf(v))
     assert(dv.values.flatten.map(_._2).sum == 10 && stats.keySet == files.toSet)
-    // without the earlier action records only the checkpoint can serve v
+    // without the earlier records only the checkpoint can serve v
     GraftTable.invalidateSnapshotsFrom(new Path(path).toUri.getPath, 0L)
-    (0L until v).foreach(i => fs.delete(logFile(path, f"v$i%020d.actions.tsv"), false))
+    (0L until v).foreach(i => fs.delete(logFile(path, f"v$i%020d.json"), false))
     val fresh = GraftTable(spark, path)
     assert(fresh.manifestFiles(v) == files)
     assert(fresh.dvOf(v) == dv)
@@ -203,25 +205,89 @@ class IncrementalLogSpec extends SparkSpec {
     assert(fresh.read().count() == 91)
   }
 
-  test("legacy full-snapshot manifests remain readable and take precedence") {
-    import spark.implicits._
-    val path = graft.GraftTmp.dir("il_legacy").toString
+  test("a version-1 log converts once into a v2 checkpoint; the next commit writes v2") {
+    val path = graft.GraftTmp.dir("il_v1").toString
     val fs = hfs(path)
-    val t = GraftTable(spark, path, Nil)
-    t.write((0 until 10).map(_.toLong).toDF("id").repartition(2))
-    t.write(Seq(99L).toDF("id").coalesce(1), org.apache.spark.sql.SaveMode.Append)
-    val v = t.currentVersion
-    val files = t.manifestFiles(v)
+    // two data files, placed where a v1 commit would have put them
+    def dataFile(name: String, from: Long, until: Long): Long = {
+      val tmp = s"$path/.tmp-$name"
+      spark.range(from, until).select(col("id"), (col("id") % 2).as("k"))
+        .coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val target = new java.io.File(path, name)
+      assert(part.renameTo(target))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+      target.length()
+    }
+    val sizeA = dataFile("part-a.parquet", 0, 10)
+    val sizeB = dataFile("part-b.parquet", 10, 15)
+    def put(v: Long, ext: String, body: String): Unit = {
+      val out = fs.create(logFile(path, f"v$v%020d.$ext"), true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    val schema = """{"type":"struct","fields":[""" +
+      """{"name":"id","type":"long","nullable":true,"metadata":{}},""" +
+      """{"name":"k","type":"long","nullable":true,"metadata":{}}]}"""
+    val statsA = "part-a.parquet\tid\tlong\t0\t9\npart-a.parquet\t\trows\t10\t10"
+    val statsB = "part-b.parquet\tid\tlong\t10\t14\npart-b.parquet\t\trows\t5\t5"
+    def commit(v: Long, op: String, actions: String, stats: String = "", dv: String = "",
+        colmap: String = "", metrics: String = ""): Unit = {
+      put(v, "actions.tsv", actions); put(v, "stats.tsv", stats); put(v, "dv.tsv", dv)
+      put(v, "schema", schema); put(v, "colmap.tsv", colmap)
+      put(v, "constraints.tsv", "pos\tid >= 0"); put(v, "generated.tsv", "")
+      put(v, "properties.tsv", "graft.note\ta%20b")
+      put(v, "json", s"""{"version":$v,"timestamp":"2024-01-0${v + 1}T00:00:00Z",""" +
+        s""""operation":"$op","operationMetrics":{$metrics}}""")
+    }
+    commit(0, "WRITE", s"a\tpart-a.parquet\t$sizeA", statsA)
+    commit(1, "APPEND", s"a\tpart-b.parquet\t$sizeB", statsB,
+      metrics = """"txnAppId":"app \"one\"","txnVersion":"7"""")
+    commit(2, "DELETE", "", dv = "part-a.parquet\t0:2")
+    commit(3, "RENAME COLUMN", "", colmap = "id\tid\ta\nkk\tk\ta")
+    put(4, "claim", "")                                  // a killed v1 writer's leftover
 
-    // hand-write a pre-r6 full-snapshot manifest for v (the old format:
-    // plain newline-separated file list) — the reader must prefer it
-    // and reproduce the same snapshot without touching the action log
-    val legacy = logFile(path, f"v$v%020d.files")
-    val out = fs.create(legacy, true)
-    out.write(files.mkString("\n").getBytes("UTF-8")); out.close()
+    val t = GraftTable(spark, path)
+    assert(t.currentVersion == 3)
+    assert(t.read().columns.toSeq == Seq("id", "kk"))
+    assert(t.read().select("id").collect().map(_.getLong(0)).sorted.toSeq == (2L until 15L))
+    assert(t.statsOf(3) == Map(
+      "part-a.parquet" -> Map("id" -> (("long", "0", "9")), "" -> (("rows", "10", "10"))),
+      "part-b.parquet" -> Map("id" -> (("long", "10", "14")), "" -> (("rows", "5", "5")))))
+    assert(t.dvOf(3) == Map("part-a.parquet" -> Seq((0L, 2L))))
+    assert(t.constraints == Map("pos" -> "id >= 0"))
+    assert(t.properties == Map("graft.note" -> "a b"))
+    assert(t.lastTxnVersion("app \"one\"") == 7)
+    assert(t.manifestFilesWithSizes(3).toMap ==
+      Map("part-a.parquet" -> sizeA, "part-b.parquet" -> sizeB))
+    assert(t.commitTimestamp(3).contains(java.time.Instant.parse("2024-01-04T00:00:00Z").toEpochMilli))
+    // converted once: a v2 checkpoint at v3, v3's record rewritten, every
+    // other v1 file gone — earlier versions are removed, as after cleanupLog
+    val log = new java.io.File(path, "_graft_log").list().toSet
+    assert(log == Set(f"v${3L}%020d.json", f"v${3L}%020d.ckpt.parquet"), log)
+    assert(!t.hasVersion(2))
+    assert(recordLines(path, 3).head._1 == "commitInfo")
+    // the next commit is a v2 record on top, and a cold handle agrees
+    import spark.implicits._
+    t.write(Seq((100L, 0L)).toDF("id", "kk"), org.apache.spark.sql.SaveMode.Append)
+    assert(recordLines(path, 4).map(_._1) == Seq("commitInfo", "add"))
     GraftTable.invalidateSnapshotsFrom(new Path(path).toUri.getPath, 0L)
-    assert(t.manifestFiles(v) == files)
-    assert(t.read().count() == 11)
+    val fresh = GraftTable(spark, path)
+    assert(fresh.read().count() == 14)
+    assert(fresh.dvOf(4) == t.dvOf(3) && fresh.lastTxnVersion("app \"one\"") == 7)
+    assert(fresh.constraints == Map("pos" -> "id >= 0"))
+  }
+
+  test("a pre-action v1 file manifest is refused with a clear error") {
+    val path = graft.GraftTmp.dir("il_v1_files").toString
+    val fs = hfs(path)
+    Seq("files" -> "part-a.parquet", "json" ->
+        """{"version":0,"timestamp":"2024-01-01T00:00:00Z","operation":"WRITE"}""")
+      .foreach { case (ext, body) =>
+        val out = fs.create(logFile(path, f"v${0L}%020d.$ext"), true)
+        try out.write(body.getBytes("UTF-8")) finally out.close()
+      }
+    val e = intercept[IllegalStateException](GraftTable(spark, path).currentVersion)
+    assert(e.getMessage.contains("no longer reads"), e.getMessage)
   }
 
   test("log truncation checkpoints the oldest retained version first") {
@@ -239,8 +305,7 @@ class IncrementalLogSpec extends SparkSpec {
     assert(dropped == 20)
     // oldest retained version carries its own base...
     val oldest = 24L - 5L + 1L
-    assert(fs.exists(logFile(path, f"v$oldest%020d.ckpt.parquet")) ||
-      fs.exists(logFile(path, f"v$oldest%020d.files")))
+    assert(fs.exists(logFile(path, f"v$oldest%020d.ckpt.parquet")))
     // ...so every retained version still reconstructs, cold
     GraftTable.invalidateSnapshotsFrom(new Path(path).toUri.getPath, 0L)
     (oldest to 24L).foreach { v =>

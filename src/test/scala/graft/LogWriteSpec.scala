@@ -104,7 +104,7 @@ class LogWriteSpec extends SparkSpec {
       Seq("WRITE", "SET TBLPROPERTIES", "APPEND", "DELETE", "OPTIMIZE", "VACUUM"))
     assert(ops(3).contains("MERGE"), ops(3))
     assert(new java.io.File(path, "_graft_log/index").list().nonEmpty, "bloom sidecars")
-    assert(new java.io.File(path, "_graft_log/v00000000000000000004.ckpt.tsv").isFile)
+    assert(new java.io.File(path, "_graft_log/v00000000000000000004.ckpt.parquet").isDirectory)
     assert(logCrcs(path).isEmpty, s"log .crc files: ${logCrcs(path)}")
     src.unpersist()
   }

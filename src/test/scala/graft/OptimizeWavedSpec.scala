@@ -55,7 +55,7 @@ class OptimizeWavedSpec extends SparkSpec {
       targetFileSizeBytes = 8 * 1024, maxWaveBytes = 16 * 1024,
       epoch = "e1", maxWaves = 1)
     assert(first.size == 1)
-    val wave1Outputs = t.readActionRecord(first.head).adds.map(_._1).toSet
+    val wave1Outputs = t.readRecord(first.head).adds.map(_.path).toSet
     assert(wave1Outputs.nonEmpty)
     // resume under the same epoch: later waves must never rewrite
     // wave 1's outputs
@@ -63,7 +63,7 @@ class OptimizeWavedSpec extends SparkSpec {
       targetFileSizeBytes = 8 * 1024, maxWaveBytes = 16 * 1024,
       epoch = "e1")
     assert(rest.nonEmpty, "remaining files still needed re-clustering")
-    val laterInputs = rest.flatMap(v => t.readActionRecord(v).removes).toSet
+    val laterInputs = rest.flatMap(v => t.readRecord(v).removes).toSet
     assert(laterInputs.intersect(wave1Outputs).isEmpty,
       "resume must not redo a committed wave")
   }
@@ -108,7 +108,7 @@ class OptimizeWavedSpec extends SparkSpec {
       s"expected one file per partition, got $perPart")
     val v = t.currentVersion
     t.optimize(Seq("v"), target)
-    assert(t.readActionRecord(v + 1).adds.isEmpty,
+    assert(t.readRecord(v + 1).adds.isEmpty,
       "second optimize must be metadata-only (no re-churn)")
     assert(t.read().select("id", "k", "v").collect().toSet == before)
   }

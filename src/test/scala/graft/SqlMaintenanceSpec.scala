@@ -61,12 +61,12 @@ class SqlMaintenanceSpec extends SparkSpec {
     assert(w1.toSeq == Seq(v0 + 1), s"expected exactly one wave commit: $w1")
     // re-running the SAME statement resumes the campaign: later waves
     // land as their own commits, none of wave 1's outputs rewritten
-    val wave1Outputs = t.readActionRecord(w1.head).adds.map(_._1).toSet
+    val wave1Outputs = t.readRecord(w1.head).adds.map(_.path).toSet
     val rest = spark.sql(s"OPTIMIZE graft.`$path` ZORDER BY (v) MAX WAVES 10")
       .as[Long].collect()
     assert(rest.nonEmpty, "resume must run the remaining waves")
     val rewritten = rest.flatMap(v =>
-      t.readActionRecord(v).removes.map(_.toString)).toSet
+      t.readRecord(v).removes.map(_.toString)).toSet
     assert(wave1Outputs.intersect(rewritten).isEmpty,
       "resume must not rewrite a committed wave's outputs")
     // one OPTIMIZE commit per wave, epoch-tagged, content preserved
