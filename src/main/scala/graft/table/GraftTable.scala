@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftFileIndex
+import org.apache.spark.sql.graft.{GraftFileIndex, GraftWriter}
 import org.apache.spark.sql.types.StructType
 
 /** Partitioned-parquet table with a versioned commit log — the engine's
@@ -35,9 +35,12 @@ import org.apache.spark.sql.types.StructType
   * plus the records after it into one [[GraftTable.Snapshot]], cached per
   * version, so the common v-1 → v step reads one record.
   *
-  * Every operation writes NEW data files and commits NEW actions; files
-  * leaving the live set become orphans that `vacuum` reclaims after a
-  * retention window. Readers resolve the snapshot and scan only its
+  * Every operation writes NEW files, once, at their final paths through
+  * [[GraftWriter]] (the one writer of data files, change-feed sidecars
+  * and checkpoints), which returns each file's size and footer stats, and
+  * commits NEW actions naming them; a commit reads no data file. Files
+  * leaving the live set, and files of writes that never committed, are
+  * orphans that `vacuum` reclaims after a retention window. Readers resolve the snapshot and scan only its
   * files — this is what makes OPTIMIZE (M1), VACUUM (M2), history (M3)
   * and DESCRIBE DETAIL (D5) expressible over plain parquet. Everything a
   * commit derives from its predecessor is computed against the version
@@ -69,6 +72,7 @@ final class GraftTable private (
   private def rootKey: String = root.toUri.getPath
   private def recordPath(v: Long) = new Path(logDir, f"v$v%020d.json")
   private def checkpointPath(v: Long) = new Path(logDir, f"v$v%020d.ckpt.parquet")
+  private def cdcPath(id: String) = new Path(logDir, s"cdc/$id")
 
   private def versionOf(name: String, ext: String): Option[Long] =
     if (name.startsWith("v") && name.endsWith(ext))
@@ -206,8 +210,7 @@ final class GraftTable private (
     val tmp = new Path(logDir, s".${target.getName}.${java.util.UUID.randomUUID}.tmp")
     val slices = math.max(1, math.min(rows.size / 50000 + 1,
       spark.sparkContext.defaultParallelism))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema)
-      .write.parquet(tmp.toString)
+    GraftWriter.write(spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema), tmp)
     fs.delete(target, true)
     fs.rename(tmp, target) || { fs.delete(tmp, true); false }
   } catch { case scala.util.control.NonFatal(_) => false }
@@ -221,10 +224,12 @@ final class GraftTable private (
   }
 
   /** Commit version `currentVersion + 1`: publish one record through the
-    * [[LogStore]]. Per-add work runs once per operation, before the first
-    * put — footer stats of files this table has never read (skipped for
-    * `carriedStats` files, and entirely when `collectStats = false`;
-    * files without stats are simply never pruned) and bloom sidecars.
+    * [[LogStore]]. The record adds `written` with the size and stats
+    * their write returned, or that a re-add (RESTORE, CLONE: `carried`)
+    * carries; files without stats are simply never pruned. No data file
+    * is read. Bloom sidecars for written files are built once per
+    * operation, before the first put; re-adds keep their sidecars and
+    * the row ids their stats hold.
     * Everything derived from the predecessor — `removes`, `dvChanges`
     * (per-file vector REPLACEMENTS, empty runs clear), metadata,
     * row-tracking ids, `extraStats` (stat additions for live files) — is
@@ -235,64 +240,23 @@ final class GraftTable private (
     * info carries the operation's `metrics` plus `numAddedFiles`,
     * `numRemovedFiles`, `numOutputBytes` and `numOutputRows`, read from
     * the adds' logged sizes and row counts. */
-  private def commit(operation: String, adds: Seq[String],
+  private def commit(operation: String, written: Seq[GraftWriter.Written],
       metrics: Map[String, String],
       removes: Long => Seq[String] = _ => Nil,
       newConstraints: Option[Map[String, String]] = None,
-      carriedStats: Map[String, Map[String, (String, String, String)]] = Map.empty,
-      collectStats: Boolean = true,
+      carried: Boolean = false,
       newGenerated: Option[Map[String, String]] = None,
       dvChanges: Option[Long => Map[String, Seq[(Long, Long)]]] = None,
       newColMap: Option[Long => ColMap] = None,
       newSchema: Option[Long => StructType] = None,
-      addSizes: Map[String, Long] = Map.empty,
       newProperties: Option[Long => Map[String, String]] = None,
-      statsAnnotation: Option[(String, (String, String, String))] = None,
       extraStats: Long => Map[String, Map[String, (String, String, String)]] =
         _ => Map.empty,
       retry: Boolean = false): Long = {
-    // every add records its byte size (Delta's AddFile.size): writers
-    // that staged the files know it for free; adoption paths
-    // (clone/convert/restore) carry it; the residual fallback is one
-    // status RPC per ADDED file — the delta, never the live set
-    val sizes: Map[String, Long] = adds.flatMap(f => addSizes.get(f).orElse(
-      scala.util.Try(fs.getFileStatus(dataPath(f)).getLen).toOption).map(f -> _)).toMap
-    // per-file column min/max stats (Delta data-skipping parity): only
-    // files ADDED by this commit pay a parquet-footer read. Wide commits
-    // (bulk ingest, full-table OPTIMIZE) read footers in a Spark job so
-    // commit latency doesn't scale with driver serial I/O.
-    val needFooter = adds.filterNot(carriedStats.contains)
-    val collected: Map[String, Map[String, (String, String, String)]] =
-      if (!collectStats || needFooter.isEmpty) Map.empty
-      else if (needFooter.size < GraftTable.DistributedStatsThreshold)
-        needFooter.map(f => f -> collectFileStats(f)).toMap
-      else {
-        val items = needFooter.map(f => f -> dataPath(f).toString)
-        val sconf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf())
-        val bc = spark.sparkContext.broadcast(sconf)
-        val slices = math.min(items.size,
-          spark.sparkContext.defaultParallelism * 2)
-        try spark.sparkContext.parallelize(items, slices)
-          .map { case (entry, abs) =>
-            entry -> GraftTable.footerStats(abs, bc.value.value) }
-          .collect().toMap
-        finally bc.destroy()
-      }
-    val preStats0 = adds.flatMap { f =>
-      carriedStats.get(f).orElse(collected.get(f)).map(f -> _)
-    }.toMap
-    // operation-level stats annotation (e.g. OPTIMIZE's cluster-key
-    // provenance) lands on every FRESH add's stats
-    val preStats = statsAnnotation match {
-      case Some((k, triple)) =>
-        adds.filterNot(carriedStats.contains).foldLeft(preStats0) { (m, f) =>
-          m.updated(f, m.getOrElse(f, Map.empty).updated(k, triple))
-        }
-      case None => preStats0
-    }
+    val adds = written.map(_.path)
+    val preStats = written.map(w => w.path -> w.stats).toMap
     fs.mkdirs(logDir)
-    var bloomsBuilt = !collectStats || adds.isEmpty
+    var bloomsBuilt = carried || adds.isEmpty
     def attempt(): Long = {
       val v = currentVersion + 1
       val base = snapshotAt(v - 1)
@@ -331,16 +295,14 @@ final class GraftTable private (
       // row tracking: per-added-file base row ids above the hwm property,
       // advanced in THIS commit (the put decides the order, so concurrent
       // appends can't overlap ranges); carried bases (RESTORE/CLONE) kept
-      val (props, stats) = RowTracking.assign(props0, preStats, adds,
-        carriedStats.contains)
+      val (props, stats) = RowTracking.assign(props0, preStats, adds, _ => carried)
       val meta = Meta(newSchema.map(f => f(v - 1)).orElse(base.meta.schema), cmap,
         newConstraints.getOrElse(base.meta.constraints),
         newGenerated.getOrElse(base.meta.generated), props)
       // bloom index for freshly ADDED files (Delta bloom-index parity), once
       // per operation, under the first attempt's properties and column map.
-      // Adoption paths (clone/convert pass collectStats = false) skip —
-      // their files either already carry sidecars (same data file, same md5
-      // key) or backfill via buildBloomIndex(). Sidecars are pure
+      // Re-adds skip: their files already carry sidecars (same data file,
+      // same md5 key) or backfill via buildBloomIndex(). Sidecars are pure
       // optimization: a build failure must not lose the commit.
       if (!bloomsBuilt) {
         bloomsBuilt = true
@@ -354,8 +316,8 @@ final class GraftTable private (
       // a re-add replaces the file's whole stat map, so each is the
       // predecessor's map plus the additions
       val extra = extraStats(v - 1)
-      val added = adds.map(f => Add(f, sizes.get(f),
-        stats.getOrElse(f, Map.empty) ++ extra.getOrElse(f, Map.empty)))
+      val added = written.map(w => Add(w.path, Some(w.size),
+        stats.getOrElse(w.path, Map.empty) ++ extra.getOrElse(w.path, Map.empty)))
       val restats = extra.collect { case (f, st) if live(f) && !adds.contains(f) =>
         Add(f, base.sizes.get(f), base.stats.getOrElse(f, Map.empty) ++ st, dataChange = false)
       }
@@ -414,7 +376,7 @@ final class GraftTable private (
     * likewise conflicts on DV changes to read files). Put-race losers
     * retry. */
   private def commitRewrite(operation: String, inputs: Seq[String],
-      added: Seq[(String, Long)], metrics: Map[String, String],
+      added: Seq[GraftWriter.Written], metrics: Map[String, String],
       readDv: Map[String, Seq[(Long, Long)]] = Map.empty,
       newConstraints: Option[Map[String, String]] = None,
       newGenerated: Option[Map[String, String]] = None,
@@ -422,14 +384,12 @@ final class GraftTable private (
       newSchema: Option[Long => StructType] = None,
       newProperties: Option[Long => Map[String, String]] = None,
       preCommitCheck: Long => Unit = _ => (),
-      statsAnnotation: Option[(String, (String, String, String))] = None,
       extraStats: Long => Map[String, Map[String, (String, String, String)]] =
         _ => Map.empty): Long =
-    commit(operation, added.map(_._1), metrics,
-      addSizes = added.toMap,
+    commit(operation, added, metrics,
       newConstraints = newConstraints, newGenerated = newGenerated,
       newColMap = newColMap, newSchema = newSchema,
-      newProperties = newProperties, statsAnnotation = statsAnnotation,
+      newProperties = newProperties,
       extraStats = extraStats, retry = true,
       removes = { base =>
         preCommitCheck(base)
@@ -455,12 +415,11 @@ final class GraftTable private (
 
 
   /** All data files currently on disk (relative paths), manifest or
-    * not; the log and leftover staging dirs are not walked. */
+    * not; the log is not walked. */
   private[graft] def listDataFiles(): Seq[(String, Long, Long)] = {
     if (!fs.exists(root)) return Nil
     val rootUri = root.toUri.getPath
-    GraftTable.listTree(fs, root,
-        d => d != "_graft_log" && !d.startsWith(".staging-"))
+    GraftTable.listTree(fs, root, _ != "_graft_log")
       .map(s => (s.getPath.toUri.getPath, s))
       .collect { case (p, s) if p.endsWith(".parquet") =>
         (p.stripPrefix(rootUri).stripPrefix("/"), s.getLen, s.getModificationTime)
@@ -654,7 +613,7 @@ final class GraftTable private (
     * pre-commit physical names, so if the base the commit lands on disagrees — a
     * concurrent commit registered the same logical under a different
     * physical, or took/retired a chosen physical — the commit must
-    * ABORT (the staged files would read back null or alias another
+    * ABORT (the written files would read back null or alias another
     * column); the orphaned files await VACUUM and the caller re-runs
     * against the new snapshot. */
   private def colMapExtension(op: String,
@@ -792,11 +751,6 @@ final class GraftTable private (
   }
 
   private def utf8Compare(a: String, b: String): Int = GraftTable.utf8Compare(a, b)
-
-  /** Footer-derived min/max of one file's top-level primitive columns
-    * (empty map when the footer has no usable stats). */
-  private def collectFileStats(file: String): Map[String, (String, String, String)] =
-    GraftTable.footerStats(dataPath(file).toString, spark.sessionState.newHadoopConf())
 
   /** `filters` plus every filter implied on a generated column by a
     * pushed filter on its base column ([[GeneratedPruning]]): a query
@@ -1642,7 +1596,7 @@ final class GraftTable private (
     enforceConstraints(df0)
     // every incoming row must satisfy the replaceWhere predicate (Delta
     // rejects rows outside the replaced region) — checked BEFORE any
-    // file is staged
+    // file is written
     replaceWhere.foreach { w =>
       val viol = df0.filter(!coalesce(expr(w), lit(false))).count()
       require(viol == 0,
@@ -1693,8 +1647,8 @@ final class GraftTable private (
       // table writes one action line). Blind appends are commutative: a
       // writer losing the put race re-commits ITS files on top of the
       // winner (Delta's rule for AddFile-only transactions)
-      case SaveMode.Append => commit("APPEND", added.map(_._1), extraMetrics,
-        addSizes = added.toMap, newColMap = nextMap, newSchema = nextSchema,
+      case SaveMode.Append => commit("APPEND", added, extraMetrics,
+        newColMap = nextMap, newSchema = nextSchema,
         newProperties = idProps, retry = true,
         removes = base => { idGuard(base); Nil })
       // replaceWhere: replace EXACTLY the rows matching the predicate in
@@ -1703,7 +1657,7 @@ final class GraftTable private (
       // data predicate rewrites only the files that may hold matching
       // rows, keeping their non-matching rows. Conflict-checked like any
       // snapshot-derived rewrite: inputs gone or DV-changed under a
-      // concurrent commit ⇒ abort (orphaned staged files await VACUUM).
+      // concurrent commit ⇒ abort (orphaned written files await VACUUM).
       case _ if replaceWhere.isDefined =>
         val w = replaceWhere.get
         val matches = coalesce(expr(w), lit(false))
@@ -1721,29 +1675,10 @@ final class GraftTable private (
           if (partitionOnly || affected.isEmpty) Nil
           else appendDataFiles(toPhysicalStrict(
             readLive(affected, dvRead).filter(!matches)))
-        val allAdds = added ++ kept
-        commit("WRITE", allAdds.map(_._1),
+        commitRewrite("WRITE", affected, added ++ kept,
           extraMetrics ++ Map("replaceWhere" -> w,
             "numFilesReplaced" -> affected.size.toString),
-          addSizes = allAdds.toMap, retry = true,
-          removes = { base =>
-            idGuard(base)
-            val nowLive = manifestFiles(base)
-            val gone = affected.filterNot(nowLive.toSet)
-            if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
-              s"replaceWhere write aborted: ${gone.size} of its replaced " +
-              s"files (e.g. ${gone.head}) were removed by a concurrent " +
-              "commit; re-run against the new snapshot")
-            val baseDv = dvOf(base)
-            val dvChanged = affected.filter(f =>
-              baseDv.getOrElse(f, Nil) != dvRead.getOrElse(f, Nil))
-            if (dvChanged.nonEmpty)
-              throw new java.util.ConcurrentModificationException(
-                s"replaceWhere write aborted: deletion vectors of " +
-                s"${dvChanged.size} replaced files changed under a " +
-                "concurrent commit; re-run against the new snapshot")
-            affected
-          },
+          readDv = dvRead, preCommitCheck = idGuard,
           newColMap = nextMap, newSchema = nextSchema,
           newProperties = idProps)
       // dynamic partition overwrite: replace exactly the partitions the
@@ -1754,11 +1689,10 @@ final class GraftTable private (
           case -1 => ""
           case i => f.take(i)
         }
-        val touched = added.map(a => dirOf(a._1)).toSet
-        commit("WRITE", added.map(_._1),
+        val touched = added.map(a => dirOf(a.path)).toSet
+        commit("WRITE", added,
           extraMetrics ++ Map("partitionOverwriteMode" -> "dynamic",
             "numPartitionsReplaced" -> touched.size.toString),
-          addSizes = added.toMap,
           removes = base => {
             idGuard(base)
             manifestFiles(base).filter(f => touched(dirOf(f)))
@@ -1767,13 +1701,12 @@ final class GraftTable private (
           newProperties = idProps)
       // overwrite removes the predecessor the commit lands on's whole live set —
       // inherently O(live-files), as the operation's semantics demand
-      case _ => commit("WRITE", added.map(_._1), extraMetrics,
-        addSizes = added.toMap,
+      case _ => commit("WRITE", added, extraMetrics,
         removes = base => { idGuard(base); manifestFiles(base) },
         newColMap = nextMap, newSchema = nextSchema,
         newProperties = idProps)
     }
-    maybeAutoCompact(added.map(_._1))
+    maybeAutoCompact(added.map(_.path))
     v
   }
 
@@ -2283,16 +2216,16 @@ final class GraftTable private (
             .sortWithinPartitions(sortCols: _*), kind)
         else (df.repartition(bins), kind)
       }
-    val added = appendDataFiles(toPhysicalStrict(compacted))
+    // every output file's stats carry the cluster-key provenance
+    val added = appendDataFiles(toPhysicalStrict(compacted)).map(w => w.copy(stats =
+      w.stats.updated(GraftTable.ClusteredKey, (splitKind, keysTag, provenance))))
     commitRewrite("OPTIMIZE", todo, added, Map(
       "numFilesAdded" -> added.size.toString,
       "numFilesRemoved" -> todo.size.toString,
       "numFilesSkipped" -> skippedCount.toString,
       "targetFileSizeBytes" -> targetFileSizeBytes.toString,
       "zOrderBy" -> keysTag,
-      "where" -> whereStr) ++ extraMetrics, readDv = dvRead,
-      statsAnnotation = Some(GraftTable.ClusteredKey ->
-        ((splitKind, keysTag, provenance))))
+      "where" -> whereStr) ++ extraMetrics, readDv = dvRead)
   }
 
   /** OPTIMIZE FULL in byte-budgeted, independently-committed WAVES —
@@ -2409,7 +2342,10 @@ final class GraftTable private (
     * maintenance.py:159-173, including the production-retention guard
     * (168 h default; shorter windows need `retentionCheckEnabled=false`,
     * mirroring spark.databricks.delta.retentionDurationCheck). Never
-    * touches files referenced by the current manifest. */
+    * touches files referenced by the current manifest. A write's files
+    * sit at their final paths, unnamed, until its commit lands: as in
+    * Delta, only the retention window keeps VACUUM off them. Change-feed
+    * sidecars no retained record names go under the same window. */
   def vacuum(retainHours: Double = 168.0,
       retentionCheckEnabled: Boolean = true,
       nowMs: Long = System.currentTimeMillis(),
@@ -2489,6 +2425,14 @@ final class GraftTable private (
       val n = s.getPath.getName
       if (n.startsWith(".") && n.endsWith(".tmp") && s.getModificationTime <= cutoff)
         fs.delete(s.getPath, true)
+    }
+    val cdcDir = new Path(logDir, "cdc")
+    val staleCdc =
+      if (!fs.exists(cdcDir)) Nil
+      else fs.listStatus(cdcDir).toSeq.filter(_.getModificationTime <= cutoff)
+    if (staleCdc.nonEmpty) {
+      val named = versions().flatMap(v => commitInfo(v).flatMap(_.metrics.get("cdc"))).toSet
+      staleCdc.filterNot(s => named(s.getPath.getName)).foreach(s => fs.delete(s.getPath, true))
     }
     val v = commitRewrite("VACUUM", Nil, Nil, Map(
       "numFilesDeleted" -> deletable.size.toString,
@@ -2597,70 +2541,22 @@ final class GraftTable private (
       dv: Map[String, Seq[(Long, Long)]]): DataFrame =
     toLogical(scan(currentVersion, files, dv), colMap)
 
-  /** Physically write `df`'s files into the table layout and return
-    * exactly the relative paths written. Staged through a unique temp
-    * dir: concurrent writers would corrupt each other inside the output
-    * committer's shared `_temporary` if they wrote to the root directly,
-    * and a listing-diff would mis-attribute a concurrent writer's files.
-    * The per-file moves are same-filesystem renames (metadata ops). */
-  private def appendDataFiles(df: DataFrame): Seq[(String, Long)] = {
-    val staging = new Path(root, s".staging-${java.util.UUID.randomUUID}")
-    var writer = df.write.mode(SaveMode.Append)
+  /** Write `df`'s files at their final paths in the table layout and
+    * return each with its size and footer stats ([[GraftWriter]]). The
+    * files join the table only when a commit names them; until then
+    * they are orphans no reader sees, which VACUUM's retention window
+    * keeps while the write is in flight. */
+  private def appendDataFiles(df: DataFrame): Seq[GraftWriter.Written] = {
     // parquet-NATIVE bloom filters on the declared index columns: the
     // sidecar index skips whole FILES at planning; these skip ROW
     // GROUPS inside files that must be read (parquet readers consult
     // them during pushdown, executor-side, no driver involvement)
-    locally {
-      val cm = colMap
-      val physOf = if (cm.isIdentity) (c: String) => Some(c)
-        else cm.entries.toMap.get _
-      BloomIndex.declaredColumns(properties)
-        .flatMap(physOf(_)).filter(df.columns.contains)
-        .foreach { c =>
-          writer = writer.option(s"parquet.bloom.filter.enabled#$c", "true")
-        }
-    }
-    // Concurrent partition writers (r17, guide §5): a dynamic-partition
-    // write whose input isn't already partition-sorted plans a full
-    // SortExec over the rows — stage-counted at sf10: 9.8 s / 260 s cpu
-    // / 1.15 GB spill on the MERGE rewrite, same shape on the bulk
-    // write — only so the single open writer sees one directory at a
-    // time. With up to 16 writers open per task the sort disappears;
-    // tables with more concurrent partition values per task fall back
-    // to the sorted path automatically (Spark sorts the remainder).
-    // Scoped to this write and restored exactly — the session's value
-    // is the user's: a key the user never set is unset again (conf.get
-    // would return the default, and writing that back left the key set
-    // after every partitioned write). Pre-sorted inputs (OPTIMIZE's
-    // range bins) plan no sort either way and are unaffected.
-    val confKey = "spark.sql.maxConcurrentOutputFileWriters"
-    val prior = spark.conf.getAll.get(confKey)
-    try {
-      if (partitionColumns.nonEmpty) {
-        scala.util.Try(spark.conf.set(confKey, "16"))
-        writer.partitionBy(partitionColumns: _*).parquet(staging.toString)
-      } else writer.parquet(staging.toString)
-    } finally scala.util.Try(prior match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None => spark.conf.unset(confKey)
-    })
-    val stagingUri = staging.toUri.getPath
-    // the staging listing already knows each file's length — carried to
-    // the commit's add actions so nothing re-stats the files later
-    val moved = Seq.newBuilder[(String, Long)]
-    GraftTable.listTree(fs, staging).foreach { s =>
-      val p = s.getPath.toUri.getPath
-      if (p.endsWith(".parquet")) {
-        val rel = p.stripPrefix(stagingUri).stripPrefix("/")
-        val target = new Path(root, rel)
-        fs.mkdirs(target.getParent)
-        if (!fs.rename(s.getPath, target))
-          throw new IllegalStateException(s"failed to move staged file to $target")
-        moved += ((rel, s.getLen))
-      }
-    }
-    fs.delete(staging, true)
-    moved.result()
+    val cm = colMap
+    val physOf = if (cm.isIdentity) (c: String) => Some(c) else cm.entries.toMap.get _
+    val blooms = BloomIndex.declaredColumns(properties)
+      .flatMap(physOf(_)).filter(df.columns.contains)
+      .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
+    GraftWriter.write(df, root, partitionColumns, blooms)
   }
 
   /** DELETE FROM … WHERE cond. Rows where `cond` is NULL are kept (SQL
@@ -3279,7 +3175,7 @@ final class GraftTable private (
     * otherwise. */
   private def versionChanges(v: Long, cmTo: ColMap): Option[DataFrame] = {
     commitInfo(v).flatMap(_.metrics.get("cdc")).foreach { id =>
-      val dir = new Path(logDir, s"cdc/$id")
+      val dir = cdcPath(id)
       if (fs.exists(dir) &&
           fs.listStatus(dir).exists(_.getPath.getName.endsWith(".parquet"))) {
         val df = spark.read.parquet(dir.toString)
@@ -3367,16 +3263,25 @@ final class GraftTable private (
     * commit metrics and [[versionChanges]] serves the sidecar instead
     * of inferring from the file diff. The write happens BEFORE the
     * commit is published — an aborted commit leaves an orphaned
-    * sidecar nobody references (swept with the log's cleanup), never a
-    * commit whose feed is missing. */
+    * sidecar nobody references, never a commit whose feed is missing.
+    * `cleanupLog` deletes the sidecars of the records it drops; VACUUM
+    * deletes sidecars no retained record names once they are older
+    * than its retention window. */
   private def writeCdc(physParts: Seq[(DataFrame, String)]): String = {
     val id = java.util.UUID.randomUUID().toString
-    val dir = new Path(logDir, s"cdc/$id")
-    physParts.map { case (df, tpe) =>
+    GraftWriter.write(physParts.map { case (df, tpe) =>
       df.withColumn("_change_type", lit(tpe))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-      .write.mode("overwrite").parquet(dir.toString)
+    }.reduce(_.unionByName(_, allowMissingColumns = true)), cdcPath(id))
     id
+  }
+
+  /** `files` of version `v` re-added under `key`, with the sizes and
+    * stats `v` logged for them (a file logged without a size is probed). */
+  private def readds(v: Long, files: Seq[String],
+      key: String => String = identity): Seq[GraftWriter.Written] = {
+    val snap = snapshotAt(v)
+    files.map(f => GraftWriter.Written(key(f),
+      snap.sizes.getOrElse(f, fs.getFileStatus(dataPath(f)).getLen), snap.stats.getOrElse(f, Map.empty)))
   }
 
   /** RESTORE to an earlier version (Delta's RESTORE TABLE … TO VERSION):
@@ -3395,11 +3300,10 @@ final class GraftTable private (
     // stats instead of paying footer re-reads.
     val restored = manifestFiles(version)
     val restoredSet = restored.toSet
-    commit("RESTORE", restored,
+    commit("RESTORE", readds(version, restored),
       Map("restoredVersion" -> version.toString),
       removes = base => manifestFiles(base).filterNot(restoredSet),
-      carriedStats = statsOf(version),
-      addSizes = snapshotAt(version).sizes,
+      carried = true,
       newConstraints = Some(constraintsOf(version)),
       newGenerated = Some(generatedOf(version)),
       newProperties = Some(_ => propertiesOf(version)),
@@ -3436,17 +3340,14 @@ final class GraftTable private (
       s"$targetPath is already a graft table (v${t.currentVersion})")
     val rootAbs = root.toUri.getPath
     def abs(f: String) = if (f.startsWith("/")) f else s"$rootAbs/$f"
-    val absFiles = manifestFiles(srcV).map(abs)
     // the source already read these footers at ITS commits: carry its
-    // file stats (keys rewritten to the clone's absolute entries)
-    // instead of re-reading every footer on the driver — this is what
-    // keeps "cloning a 100 TB table costs one manifest write" true
-    val carried = statsOf(srcV).map { case (f, cols) => abs(f) -> cols }
+    // file sizes and stats (keys rewritten to the clone's absolute
+    // entries) instead of re-reading every footer on the driver — this
+    // is what keeps "cloning a 100 TB table costs one manifest write" true
     // deletion vectors travel with the clone (keys rewritten like stats):
     // the clone sees the same live rows as the source at srcV
     val carriedDv = dvOf(srcV).map { case (f, runs) => abs(f) -> runs }
-    val carriedSizes = snapshotAt(srcV).sizes.map { case (f, sz) => abs(f) -> sz }
-    t.commit("CLONE", absFiles, Map(
+    t.commit("CLONE", readds(srcV, manifestFiles(srcV), abs), Map(
       "sourcePath" -> path, "sourceVersion" -> srcV.toString),
       newConstraints = Some(constraintsOf(srcV)),
       newGenerated = Some(generatedOf(srcV)),
@@ -3455,8 +3356,7 @@ final class GraftTable private (
       // metadata-only ADD COLUMN or a column DEFAULT would vanish
       // (clone reads would fall back to data-file footers)
       newSchema = Some(_ => physicalSchemaAt(srcV)),
-      carriedStats = carried, collectStats = false,
-      addSizes = carriedSizes,
+      carried = true,
       dvChanges = Some(_ => carriedDv),
       newColMap = Some(_ => colMapOf(srcV)))
     t
@@ -3520,17 +3420,14 @@ final class GraftTable private (
       case (src, rel) => GraftTable.copyFile(src, s"$tgtAbs/$rel", hadoopKVs)
     }
     val renamed = files.map(f => f -> tgtName(f)).toMap
-    t.commit("CLONE", files.map(renamed), Map(
+    t.commit("CLONE", readds(srcV, files, renamed), Map(
       "sourcePath" -> path, "sourceVersion" -> srcV.toString,
       "deep" -> "true"),
       newConstraints = Some(constraintsOf(srcV)),
       newGenerated = Some(generatedOf(srcV)),
       newProperties = Some(_ => propertiesOf(srcV)),
       newSchema = Some(_ => physicalSchemaAt(srcV)),
-      carriedStats = statsOf(srcV).map { case (f, c) => renamed(f) -> c },
-      collectStats = false,
-      addSizes = snapshotAt(srcV).sizes.flatMap { case (f, sz) =>
-        renamed.get(f).map(_ -> sz) },
+      carried = true,
       dvChanges = Some(_ => dvOf(srcV).map { case (f, r) => renamed(f) -> r }),
       newColMap = Some(_ => colMapOf(srcV)))
     t
@@ -3595,7 +3492,8 @@ final class GraftTable private (
     * time travel / CDF / clone-at-version for dropped versions becomes
     * unavailable (the same contract Delta's log cleanup imposes). The
     * oldest retained version keeps a checkpoint, which carries the txn
-    * map, so replay protection spans cleanups. Data files are untouched
+    * map, so replay protection spans cleanups. The change-feed sidecars
+    * the dropped records name go with them. Data files are untouched
     * — VACUUM owns those. Returns the number of versions dropped. */
   def cleanupLog(keepVersions: Int = 30): Int = {
     require(keepVersions >= 1, "must keep at least the current version")
@@ -3609,8 +3507,10 @@ final class GraftTable private (
       return 0
     var dropped = 0
     logNames().foreach { n =>
-      if (versionOf(n, ".json").exists(_ <= cutoff) && fs.delete(new Path(logDir, n), false))
-        dropped += 1
+      versionOf(n, ".json").filter(_ <= cutoff).foreach { v =>
+        commitInfo(v).flatMap(_.metrics.get("cdc")).foreach(id => fs.delete(cdcPath(id), true))
+        if (fs.delete(new Path(logDir, n), false)) dropped += 1
+      }
       if (versionOf(n, ".ckpt.parquet").exists(_ <= cutoff)) fs.delete(new Path(logDir, n), true)
     }
     // the retention CONTRACT says dropped versions are unavailable —
@@ -4004,10 +3904,10 @@ object GraftTable {
       }
     }
 
-  /** Commits adding at least this many new files collect their footer
-    * stats in a Spark job instead of serially on the driver — a bulk
-    * ingest or full-table OPTIMIZE commit reads thousands of footers;
-    * below it, job-launch overhead beats the driver loop. */
+  /** Vacuums deleting at least this many files delete them in a Spark
+    * job instead of serially on the driver — a 100 TB table's retention
+    * sweep removes millions of files; below it, job-launch overhead
+    * beats the driver loop. */
   val DistributedStatsThreshold: Int = 12
 
   /** StructField metadata key carrying a column's DEFAULT expression in
@@ -4286,8 +4186,8 @@ object GraftTable {
 
   /** Footer-derived min/max of one parquet file's top-level primitive
     * columns (empty when the footer has no usable stats). Static, so
-    * the distributed stats-collection job can run it on executors. */
-  private[graft] def footerStats(file: String,
+    * write tasks and CONVERT's footer job run it on executors. */
+  def footerStats(file: String,
       conf: org.apache.hadoop.conf.Configuration)
       : Map[String, (String, String, String)] =
     try {
@@ -4444,9 +4344,10 @@ object GraftTable {
     * no data is read or rewritten, so converting a 100 TB directory
     * costs one file listing. The table must not already be a graft
     * table. */
-  /** `collectStats = false` skips the per-file footer read — converting
-    * a huge directory then costs only the listing; files without stats
-    * are never pruned until a later OPTIMIZE recollects them. */
+  /** The footers of the adopted files are read in one Spark job;
+    * `collectStats = false` skips it — converting a huge directory then
+    * costs only the listing; files without stats are never pruned until
+    * a later OPTIMIZE rewrites them. */
   def convert(spark: SparkSession, path: String,
       partitionColumns: Seq[String] = Nil,
       collectStats: Boolean = true): GraftTable = {
@@ -4455,10 +4356,15 @@ object GraftTable {
       s"$path is already a graft table (v${t.currentVersion})")
     val listed = t.listDataFiles()
     require(listed.nonEmpty, s"no parquet files under $path to convert")
-    t.commit("CONVERT", listed.map(_._1),
-      Map("numFiles" -> listed.size.toString),
-      collectStats = collectStats,
-      addSizes = listed.map { case (f, len, _) => f -> len }.toMap)
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf())
+    val adopted = listed.map { case (f, len, _) => GraftWriter.Written(f, len, Map.empty) }
+    val written = if (!collectStats) adopted else
+      spark.sparkContext.parallelize(adopted.map(w => w -> t.dataPath(w.path).toString),
+          math.min(adopted.size, spark.sparkContext.defaultParallelism * 2))
+        .map { case (w, abs) => w.copy(stats = footerStats(abs, conf.value)) }
+        .collect().toSeq
+    t.commit("CONVERT", written, Map("numFiles" -> listed.size.toString))
     t
   }
 }

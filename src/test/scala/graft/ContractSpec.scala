@@ -105,6 +105,16 @@ class ContractSpec extends AnyFunSuite {
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     }
 
+  test("GraftTable.scala makes no DataFrameWriter call: its parquet goes through GraftWriter") {
+    val writer = """\.write(\.|[ \t]*\n)""".r
+    val src = scala.io.Source.fromFile("src/main/scala/graft/table/GraftTable.scala")(scala.io.Codec.UTF8)
+    val code = try src.getLines().filterNot(isComment).mkString("\n") finally src.close()
+    assert(code.contains("GraftWriter.write("), "no GraftWriter call found: the scan is broken")
+    val calls = writer.findAllMatchIn(code).map(m => code.substring(
+      code.lastIndexOf('\n', m.start) + 1, m.end).trim).toSeq
+    assert(calls.isEmpty, s"DataFrameWriter calls in GraftTable.scala: $calls")
+  }
+
   test("GraftSession.scala is the only place a SparkSession is built") {
     val builder = """SparkSession\s*\.\s*builder\s*\(""".r
     val files = Seq("src/main", "src/test").flatMap(d => scalaFiles(new java.io.File(d)))

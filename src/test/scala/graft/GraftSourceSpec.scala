@@ -296,27 +296,38 @@ class GraftSourceSpec extends SparkSpec {
   }
 
   test("wide commits collect footer stats distributed, identical to the driver path") {
-    val path = graft.GraftTmp.dir("gsrc_dist").toString
-    val t = GraftTable(spark, path)
-    val df = spark.range(0, 6400).toDF("id")
-      .withColumn("v", col("id") * 2.0)
-      .withColumn("s", format_string("s%05d", col("id")))
-    // 16 files >= DistributedStatsThreshold → the commit's stats job
-    // runs on executors instead of a serial driver loop
-    t.write(df.repartitionByRange(16, col("id")).sortWithinPartitions("id"))
-    assert(t.manifestFiles().size == 16)
-    assert(t.manifestFiles().size >= graft.table.GraftTable.DistributedStatsThreshold)
-    val stats = t.statsOf(t.currentVersion)
-    assert(stats.size == 16)
-    // byte-identical to reading every footer on the driver
+    // each write task reads the footers of the files it wrote: the logged
+    // stats equal the driver's read of every footer, and a 16-file write
+    // runs no more jobs than a 1-file write
     val conf = spark.sessionState.newHadoopConf()
-    t.manifestFiles().foreach { f =>
-      assert(stats(f) == graft.table.GraftTable.footerStats(s"$path/$f", conf), f)
+    val jobs = Seq(1, 16).map { n =>
+      val path = graft.GraftTmp.dir(s"gsrc_stats_$n").toString
+      val t = GraftTable(spark, path)
+      val df = spark.range(0, 6400, 1, n).toDF("id")
+        .withColumn("v", col("id") * 2.0)
+        .withColumn("s", format_string("s%05d", col("id")))
+      val started = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          started.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try { t.write(df); org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(listener)
+      assert(t.manifestFiles().size == n)
+      val stats = t.statsOf(t.currentVersion)
+      assert(stats.size == n)
+      t.manifestFiles().foreach { f =>
+        assert(stats(f) == graft.table.GraftTable.footerStats(s"$path/$f", conf), f)
+      }
+      // and the bounds actually prune
+      import org.apache.spark.sql.sources.EqualTo
+      assert(t.dataSkippedFiles(t.currentVersion, Seq(EqualTo("id", 10L))).size == 1)
+      assert(spark.read.format("graft").load(path).filter(col("id") === 10L).count() == 1)
+      started.get
     }
-    // and the bounds actually prune
-    import org.apache.spark.sql.sources.EqualTo
-    assert(t.dataSkippedFiles(t.currentVersion, Seq(EqualTo("id", 10L))).size == 1)
-    assert(spark.read.format("graft").load(path).filter(col("id") === 10L).count() == 1)
+    assert(jobs.head == jobs.last, jobs)
   }
 
   test("one poisoned column drops only its own footer stats, not the file's") {

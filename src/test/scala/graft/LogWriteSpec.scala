@@ -61,11 +61,11 @@ class LogWriteSpec extends SparkSpec {
     // the data-file filter VACUUM and CONVERT used over listFiles
     val rootUri = new Path(path).toUri.getPath
     val expected = listed.map { case (p, len, mtime) => (new Path(p).toUri.getPath, len, mtime) }
-      .collect { case (p, len, mtime) if p.endsWith(".parquet") &&
-          !p.contains("_graft_log") && !p.contains("/.staging-") =>
+      .collect { case (p, len, mtime) if p.endsWith(".parquet") && !p.contains("_graft_log") =>
         (p.stripPrefix(rootUri).stripPrefix("/"), len, mtime)
       }
     assert(expected.exists(_._1.endsWith("/.hidden.parquet")))
+    assert(expected.exists(_._1.startsWith(".staging-leftover/")))
     assert(t.listDataFiles() == expected)
   }
 
