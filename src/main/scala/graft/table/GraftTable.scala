@@ -3,9 +3,9 @@ package graft.table
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{GraftFileIndex, GraftWriter}
+import org.apache.spark.sql.graft.{ColumnBridge, GraftFileIndex, GraftWriter, Materialized}
 import org.apache.spark.sql.types.StructType
 
 /** Partitioned-parquet table with a versioned commit log — the engine's
@@ -239,7 +239,8 @@ final class GraftTable private (
     * Commit I/O is O(adds + removes), never O(live-files). The commit
     * info carries the operation's `metrics` plus `numAddedFiles`,
     * `numRemovedFiles`, `numOutputBytes` and `numOutputRows`, read from
-    * the adds' logged sizes and row counts. */
+    * the adds' logged sizes and row counts, and with `timed` the
+    * `commitTimeMs` from this call to the record it publishes. */
   private def commit(operation: String, written: Seq[GraftWriter.Written],
       metrics: Map[String, String],
       removes: Long => Seq[String] = _ => Nil,
@@ -252,7 +253,9 @@ final class GraftTable private (
       newProperties: Option[Long => Map[String, String]] = None,
       extraStats: Long => Map[String, Map[String, (String, String, String)]] =
         _ => Map.empty,
-      retry: Boolean = false): Long = {
+      retry: Boolean = false,
+      timed: Boolean = false): Long = {
+    val began = System.nanoTime()
     val adds = written.map(_.path)
     val preStats = written.map(w => w.path -> w.stats).toMap
     fs.mkdirs(logDir)
@@ -333,8 +336,11 @@ final class GraftTable private (
       // contract wall clocks alone don't keep (NTP step-backs, multi-writer
       // skew) — Delta's inCommitTimestamp makes the same max(prev+1, now)
       // promise
+      val took =
+        if (timed) Map("commitTimeMs" -> ((System.nanoTime() - began) / 1000000).toString)
+        else Map.empty
       val record = Record(v, math.max(base.timestamp + 1, System.currentTimeMillis()),
-        operation, metrics ++ out, added ++ restats, removed, dvc,
+        operation, metrics ++ out ++ took, added ++ restats, removed, dvc,
         if (v == 0 || meta != base.meta) Some(meta) else None)
       LogStore.resolve(spark).putIfAbsent(fs, recordPath(v),
         LogRecord.encode(record).getBytes(StandardCharsets.UTF_8))
@@ -385,12 +391,13 @@ final class GraftTable private (
       newProperties: Option[Long => Map[String, String]] = None,
       preCommitCheck: Long => Unit = _ => (),
       extraStats: Long => Map[String, Map[String, (String, String, String)]] =
-        _ => Map.empty): Long =
+        _ => Map.empty,
+      timed: Boolean = false): Long =
     commit(operation, added, metrics,
       newConstraints = newConstraints, newGenerated = newGenerated,
       newColMap = newColMap, newSchema = newSchema,
       newProperties = newProperties,
-      extraStats = extraStats, retry = true,
+      extraStats = extraStats, retry = true, timed = timed,
       removes = { base =>
         preCommitCheck(base)
         val nowLive = manifestFiles(base)
@@ -2559,6 +2566,78 @@ final class GraftTable private (
     GraftWriter.write(df, root, partitionColumns, blooms)
   }
 
+  /** Distinct `__path`s of `hits` as manifest entries. Each task
+    * deduplicates its own rows (a file's rows sit in few tasks), so the
+    * query adds no shuffle to the plan it collects. */
+  private def distinctPaths(hits: DataFrame): Seq[String] =
+    hits.select("__path").as(Encoders.STRING)
+      .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(Encoders.STRING)
+      .collect().distinct.map(relPath).toSeq
+
+  /** A DML pass's output, the one frame both its writes read: each row
+    * of `in` yields its new image (kind `newKind`, values `newVals`) and
+    * its old image (kind `oldKind`, values `oldVals`) from one generator;
+    * a NULL kind yields no row. Columns: `fields`, then `extras`, then the
+    * kind `__k` ([[GraftTable.RowCopied]] …). Rows are counted per kind
+    * as the frame is computed (returned accumulators, read after the
+    * writes), so the commit's row metrics cost no job of their own. */
+  private def tagRows(in: DataFrame, fields: Seq[org.apache.spark.sql.types.StructField],
+      newVals: Seq[Column], newKind: Column, oldVals: Seq[Column], oldKind: Column,
+      extras: Seq[Column] = Nil): (DataFrame, IndexedSeq[org.apache.spark.util.LongAccumulator]) = {
+    val counts = IndexedSeq.fill(5)(spark.sparkContext.longAccumulator)
+    val tally = udf((k: Int) => { counts(k).add(1L); k }).asNondeterministic()
+    def image(vals: Seq[Column], kind: Column): Column = when(kind.isNotNull,
+      struct(fields.zip(vals).map { case (f, v) => v.cast(f.dataType).as(f.name) } ++
+        extras :+ kind.as("__k"): _*))
+    (in.select(explode(array(image(newVals, newKind), image(oldVals, oldKind))).as("__r"))
+      .filter(col("__r").isNotNull).select(col("__r.*"))
+      .withColumn("__k", tally(col("__k"))), counts)
+  }
+
+  /** A tagged frame as its writes should read it: computed once into
+    * blocks (added to `held` for release) when more than its data write
+    * reads it — the change-feed write, CHECK constraints, generated-column
+    * checks or identity fills — so the join behind it runs once. */
+  private def materializeTagged(tagged: DataFrame,
+      held: scala.collection.mutable.Buffer[Materialized]): DataFrame =
+    if (cdcSidecarsEnabled || constraints.nonEmpty || generatedColumns.nonEmpty ||
+        identityColumns.nonEmpty) {
+      val m = Materialized.lazily(tagged)
+      held += m
+      m.frame
+    } else tagged
+
+  /** The writes of a tagged frame ([[tagRows]]): its data rows —
+    * `physData`, their physical projection — as table files and, unless
+    * the table opted out, its change rows as this commit's CDC sidecar
+    * under `_graft_log/cdc/<id>` (physical columns plus `_change_type`,
+    * one flat parquet directory [[versionChanges]] serves instead of
+    * inferring from the file diff). Both land BEFORE the commit is
+    * published — an aborted commit leaves orphans nobody references,
+    * never a commit whose feed is missing; `cleanupLog` deletes the
+    * sidecars of the records it drops, and VACUUM deletes sidecars no
+    * retained record names once they are older than its retention
+    * window. The two writes run at once: each of the frame's blocks is
+    * computed by whichever write reaches it first, and read by the
+    * other. Returns the added files and the sidecar id ("" if none). */
+  private def writeTagged(tagged: DataFrame,
+      physData: DataFrame): (Seq[GraftWriter.Written], String) = {
+    if (!cdcSidecarsEnabled) return (appendDataFiles(physData), "")
+    val k = col("__k")
+    val changeType = when(k === GraftTable.RowUpdated, "update_postimage")
+      .when(k === GraftTable.RowInserted, "insert")
+      .when(k === GraftTable.RowPreImage, "update_preimage")
+      .otherwise("delete")
+    val id = java.util.UUID.randomUUID().toString
+    val changes = tagged.filter(k >= GraftTable.RowUpdated).select(
+      tagged.columns.filterNot(_ == "__k").toSeq.zip(physData.columns).map {
+        case (l, p) => col(l).as(p) } :+ changeType.as("_change_type"): _*)
+    val sidecar = GraftWriter.background(spark)(GraftWriter.write(changes, cdcPath(id)))
+    val added = try appendDataFiles(physData) finally scala.util.Try(sidecar())
+    sidecar()
+    (added, id)
+  }
+
   /** DELETE FROM … WHERE cond. Rows where `cond` is NULL are kept (SQL
     * three-valued semantics: DELETE removes only where the predicate is
     * TRUE). Returns the committed version.
@@ -2668,8 +2747,12 @@ final class GraftTable private (
     requireGeneratedTz(generatedColumns, types.get)
     // the match flag is PINNED before any assignment: an assignment that
     // mutates a column the predicate references must not change which
-    // rows the remaining assignments (or recomputes) apply to
-    val marked = readLive(affected, dvRead).withColumn("__upd", matches)
+    // rows the remaining assignments (or recomputes) apply to. The row's
+    // old image rides along in __old for the change feed
+    val live = readLive(affected, dvRead)
+    val fields = live.schema.fields.toIndexedSeq
+    val marked = live.withColumn("__upd", matches)
+      .withColumn("__old", struct(fields.map(f => col(f.name)): _*))
     val hit = col("__upd")
     val afterSet = set.foldLeft(marked) { case (d, (name, value)) =>
       d.withColumn(name, when(hit, value.cast(types(name))).otherwise(col(name)))
@@ -2682,28 +2765,33 @@ final class GraftTable private (
         d.withColumn(name,
           when(hit, expr(e).cast(types(name))).otherwise(col(name)))
       }
-    generatedColumns.filter(g => set.contains(g._1)).foreach { case (name, e) =>
-      val bad = regenerated.filter(hit && !(col(name) <=> expr(e))).count()
-      if (bad > 0) throw new IllegalArgumentException(
-        s"UPDATE assigns generated column $name a value disagreeing with " +
-        s"its definition ($e) on $bad rows; omit it to have it recomputed")
-    }
-    val updated = regenerated.drop("__upd")
-    enforceConstraints(updated)
-    // CDC sidecar (Delta _change_data parity): every matched row's old
-    // and new version, so the change feed surfaces
-    // update_preimage/update_postimage instead of inferred delete+insert
-    val cdcId =
-      if (!cdcSidecarsEnabled) ""
-      else writeCdc(Seq(
-        toPhysicalStrict(marked.filter(hit).drop("__upd")) -> "update_preimage",
-        toPhysicalStrict(regenerated.filter(hit).drop("__upd")) -> "update_postimage"))
-    val added = appendDataFiles(toPhysicalStrict(updated))
-    commitRewrite("UPDATE", affected, added, Map(
-      "numFilesRewritten" -> affected.size.toString,
-      "numFilesAdded" -> added.size.toString) ++
-      (if (cdcId.isEmpty) Map.empty else Map("cdc" -> cdcId)),
-      readDv = dvRead)
+    // one pass over the affected files: every row's new image, plus the
+    // old image of each updated row (update_preimage/update_postimage in
+    // the change feed instead of an inferred delete+insert)
+    val (tagged0, tally) = tagRows(regenerated, fields, fields.map(f => col(f.name)),
+      when(hit, lit(GraftTable.RowUpdated)).otherwise(lit(GraftTable.RowCopied)),
+      fields.map(f => col("__old").getField(f.name)), when(hit, lit(GraftTable.RowPreImage)))
+    val held = scala.collection.mutable.ArrayBuffer.empty[Materialized]
+    try {
+      val tagged = materializeTagged(tagged0, held)
+      generatedColumns.filter(g => set.contains(g._1)).foreach { case (name, e) =>
+        val bad = tagged.filter(col("__k") === GraftTable.RowUpdated &&
+          !(col(name) <=> expr(e))).count()
+        if (bad > 0) throw new IllegalArgumentException(
+          s"UPDATE assigns generated column $name a value disagreeing with " +
+          s"its definition ($e) on $bad rows; omit it to have it recomputed")
+      }
+      val written = tagged.filter(col("__k") <= GraftTable.RowInserted).drop("__k")
+      enforceConstraints(written)
+      val (added, cdcId) = writeTagged(tagged, toPhysicalStrict(written))
+      commitRewrite("UPDATE", affected, added, Map(
+        "numFilesRewritten" -> affected.size.toString,
+        "numFilesAdded" -> added.size.toString,
+        "numUpdatedRows" -> tally(GraftTable.RowUpdated).value.toString,
+        "numCopiedRows" -> tally(GraftTable.RowCopied).value.toString) ++
+        (if (cdcId.isEmpty) Map.empty else Map("cdc" -> cdcId)),
+        readDv = dvRead)
+    } finally held.foreach(_.release())
   }
 
   /** MERGE (plain upsert): WHEN MATCHED THEN UPDATE ALL, WHEN NOT
@@ -2723,9 +2811,15 @@ final class GraftTable private (
     * dropped. Conditions and assignment values may reference both sides
     * as `target.<col>` / `source.<col>`.
     *
-    * Copy-on-write at file granularity like DELETE/UPDATE: only target
-    * files containing a matched key are rewritten, the key semi-join
-    * that finds them broadcasts `source`'s keys when small. */
+    * Copy-on-write at file granularity like DELETE/UPDATE, in one pass
+    * over each input: the source is computed once; only target files
+    * containing a matched row are rewritten, found by a semi-join that
+    * broadcasts `source`'s per-key row counts when small and raises the
+    * multiple-match error as it goes; one join of those files with the
+    * source feeds both the data files and the change feed. The commit
+    * records Delta's row metrics (`numSourceRows`,
+    * `numTargetRowsUpdated/Deleted/Inserted/Copied`) and the ms of
+    * discovery, rewrite and commit. */
   def mergeInto(source: DataFrame, on: Seq[String]): MergeBuilder = {
     require(on.nonEmpty, "MERGE needs at least one key column")
     new MergeBuilder(this, source, on.map(k => k -> k), None)
@@ -2750,7 +2844,7 @@ final class GraftTable private (
     * conjunct are rejected with a clear error. */
   def mergeInto(source: DataFrame, condition: Column): MergeBuilder = {
     val (keys, resid) =
-      org.apache.spark.sql.graft.ColumnBridge.splitMergeCondition(condition)
+      ColumnBridge.splitMergeCondition(condition)
     require(keys.nonEmpty,
       "MERGE condition needs at least one target.<x> = source.<y> equi " +
       s"conjunct to drive file discovery; got: $condition")
@@ -2837,245 +2931,220 @@ final class GraftTable private (
     val fields = tgt.schema.fields.toIndexedSeq
     val tgtType = fields.map(f => f.name -> f.dataType).toMap
     val extraSrc = source.columns.filterNot(fields.map(_.name).toSet).toIndexedSeq
-    // the aligned source MATERIALIZES for the merge's lifetime (r17,
-    // guide §5 caching-for-reuse): it feeds the multi-match guard, the
-    // affected-file discovery, the rewrite join and the insert
-    // anti-join — four actions that each re-ran the source pipeline
-    // (for a sync-shaped merge whose source derives from the TARGET,
-    // that was four extra full-table scans + distincts at sf10). The
-    // cache also gives AQE the source's true (small) size, so the
-    // rewrite join can pick a broadcast it would otherwise miss.
-    // Unpersisted on every exit path below.
-    val src = source.select(fields.map(f =>
+    val aligned = source.select(fields.map(f =>
       (if (missing(f.name)) lit(null) else col(f.name))
         .cast(f.dataType).as(f.name)) ++ extraSrc.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val held = scala.collection.mutable.ArrayBuffer.empty[Materialized]
     def run(): Long = {
+    val began = System.nanoTime()
+    // the aligned source is materialized once, up front, in one job that
+    // counts numSourceRows and measures the bytes the discovery broadcast
+    // (and the planner's choice for the rewrite join) is decided by; the
+    // discovery and rewrite joins read its blocks instead of re-running
+    // the source pipeline (for a sync-shaped merge whose source derives
+    // from the TARGET, each re-run is a full-table scan). Released on
+    // every exit path below, with the tagged frame.
+    val (srcBlocks, numSourceRows) = Materialized.measured(aligned)
+    held += srcBlocks
+    val src = srcBlocks.frame
     val tKeys = keys.map(_._1)
-    // source key values under the target-side names: file discovery and
-    // the residual-free multi-match guard join on these
-    val srcKeyRows = src.select(keys.map { case (t, s) =>
-      col(s).cast(tgtType(t)).as(t) }.toIndexedSeq: _*)
-    val srcKeys = srcKeyRows.distinct()
     def joinCond(tAlias: String, sAlias: String): Column =
       keys.map { case (t, s) => col(s"$tAlias.$t") === col(s"$sAlias.$s") }
         .reduce(_ && _) && residual.getOrElse(lit(true))
-    if (matched.nonEmpty && residual.isEmpty) {
-      // Delta's DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW guard: a
-      // target row updated/deleted by two source rows is nondeterministic.
-      // Key-precise; with a residual the key count over-approximates, so
-      // that variant runs row-precise over the joined affected files below
-      // two-step gate (r17): probe the TARGET's key set only when the
-      // source actually carries duplicate keys — the common deduped
-      // source paid a full-table key distinct (stage-counted at sf10: a
-      // 495 MB exchange + 597 MB spill) to semi-join an EMPTY left side
-      // (AQE submits both join stages concurrently, so the empty left
-      // cannot prune the right)
-      val dupKeys = srcKeyRows.groupBy(tKeys.map(col).toIndexedSeq: _*)
-        .count().filter(col("count") > 1)
-      if (!dupKeys.isEmpty) {
-        val dupMatched = dupKeys
-          .join(tgt.select(tKeys.map(col).toIndexedSeq: _*).distinct(),
-            tKeys, "left_semi")
-        if (!dupMatched.isEmpty)
-          throw new IllegalStateException(
-            "MERGE: multiple source rows match the same target row " +
-            "(nondeterministic update/delete); de-duplicate the source on " +
-            tKeys.mkString(", "))
-      }
-    }
     val dvNow = dvOf(currentVersion)
-    // files to rewrite: those holding a matched key — plus, under NOT
-    // MATCHED BY SOURCE clauses, those holding an unmatched row some
-    // clause applies to (clause conditions reference the target only,
-    // so they evaluate on the scan; a sync-merge whose source covers a
-    // partition's keys rewrites only files with genuinely retired rows)
+    // DISCOVERY: the files to rewrite are those holding a matched row —
+    // plus, under NOT MATCHED BY SOURCE clauses, those holding an
+    // unmatched row some clause applies to (clause conditions reference
+    // the target only, so they evaluate on the scan; a sync-merge whose
+    // source covers a partition's keys rewrites only files with genuinely
+    // retired rows). The same query carries Delta's
+    // DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW guard: a target row
+    // that two source rows would update or delete is nondeterministic.
     val metaScan = extendEvolved(toLogical(
-      scan(currentVersion, manifestFiles(), dvNow, withMeta = true), colMap))
-    // measured broadcast for the key probe (r17, guide §3.1): below
-    // the gate an explicit broadcast keeps the planner from shuffling
-    // the whole __path-carrying meta scan against the key side —
-    // stage-counted at sf10: a 495 MB exchange + 597 MB sort spill to
-    // probe 190 K keys. The gate is in BYTES, so a wide or composite
-    // key cannot slip a huge broadcast under it. The key side is a
-    // distinct over the CACHED source: its estimate is the cache's
-    // measured bytes scaled to the key columns' share of the row once
-    // the multi-match guard above has materialized the cache, else the
-    // source plan's estimate (unknown reads as huge). No job runs to
-    // decide. Above the gate the shuffle is the right plan.
-    val srcKeysB =
-      if (srcKeys.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          GraftTable.MergeBroadcastKeyBytes) broadcast(srcKeys)
-      else srcKeys
-    val affected = (if (notMatchedBySource.isEmpty)
-        metaScan.join(srcKeysB, tKeys, "left_semi")
-      else {
-        // MATCHED means keys AND residual, so the not-matched-by-source
-        // flag must see the full condition; residual-free merges keep
-        // the cheaper distinct-keys probe
-        val (flagSrc, cond) =
-          if (residual.isEmpty)
-            (srcKeysB,
-              tKeys.map(t => col(s"target.$t") === col(s"source.$t")).reduce(_ && _))
-          else (src, joinCond("target", "source"))
-        val flagged = metaScan.alias("target")
-          .join(flagSrc.withColumn("__sk", lit(1)).alias("source"), cond, "left")
-        val nmbsApplies = notMatchedBySource
-          .foldLeft(lit(false))((acc, c) => acc || holds(c.cond))
-        flagged.filter(col("__sk").isNotNull || nmbsApplies)
-      })
-      .select("__path").distinct()
-      .collect().map(r => relPath(r.getString(0))).toSeq
-    // rewritten rows of affected files: first applicable matched clause
-    // for source-matched rows, first applicable not-matched-by-source
-    // clause for the rest
-    val marked = src.withColumn("__m", lit(1))
-    var cdcDeletes: Option[DataFrame] = None
-    var cdcPre: Option[DataFrame] = None
-    var cdcPost: Option[DataFrame] = None
-    val rewritten = if (affected.isEmpty) None else {
-      val live = if (matched.nonEmpty && residual.isDefined)
-        extendEvolved(readLive(affected, dvNow))
-          .withColumn("__tid", monotonically_increasing_id())
-      else extendEvolved(readLive(affected, dvNow))
-      val joined = live.alias("target").join(marked.alias("source"),
-        joinCond("target", "source"), "left")
-      val isMatched = col("source.__m").isNotNull
-      if (matched.nonEmpty && residual.isDefined) {
-        // row-precise multi-match guard (the key-level check above is
-        // too strict when a residual can disqualify one of the key dups)
-        val dup = joined.filter(isMatched).groupBy(col("__tid"))
-          .count().filter(col("count") > 1)
-        if (!dup.isEmpty)
+      scan(currentVersion, manifestFiles(), dvNow, withMeta = true), colMap)).alias("target")
+    val nmbsApplies = notMatchedBySource.foldLeft(lit(false))((acc, c) => acc || holds(c.cond))
+    val affected = try {
+      if (residual.isEmpty) {
+        // per-key source row counts under the target-side names. The
+        // source is materialized, so their size estimate is its measured
+        // bytes scaled to the key columns' share of the row: under the
+        // gate they are counted in one task and broadcast, which keeps
+        // the planner from shuffling the whole __path-carrying meta scan
+        // against them (stage-counted at sf10: a 495 MB exchange + 597 MB
+        // sort spill to probe 190 K keys). The gate is in BYTES, so a
+        // wide or composite key cannot slip a huge broadcast under it;
+        // above it the shuffle is the right plan.
+        val keyRows = src.select(keys.map { case (t, s) =>
+          col(s).cast(tgtType(t)).as(t) }.toIndexedSeq: _*)
+        val small = keyRows.queryExecution.optimizedPlan.stats.sizeInBytes <=
+          GraftTable.MergeBroadcastKeyBytes
+        val counts = (if (small) keyRows.coalesce(1) else keyRows)
+          .groupBy(tKeys.map(col).toIndexedSeq: _*)
+          .agg(org.apache.spark.sql.functions.count(lit(1)).as("__n"))
+        val keyCounts = (if (small) broadcast(counts) else counts).alias("source")
+        // key-precise guard: a matched key counted twice raises on the
+        // executor. The raise cites the target row's file — a column no
+        // key equality can substitute — so it stays in the join condition
+        // and runs on matched pairs only
+        val guard =
+          if (matched.isEmpty) lit(true)
+          else when(col("source.__n") > 1,
+            raise_error(concat(lit(GraftTable.MultiMatchTag), col("target.__path"))))
+            .otherwise(lit(true))
+        val cond = tKeys.map(k => col(s"target.$k") === col(s"source.$k")).reduce(_ && _) && guard
+        distinctPaths(
+          if (notMatchedBySource.isEmpty) metaScan.join(keyCounts, cond, "left_semi")
+          else metaScan.join(keyCounts, cond, "left")
+            .filter(col("source.__n").isNotNull || nmbsApplies))
+      } else {
+        // row-precise guard: with a residual a key count over-counts (the
+        // residual can disqualify one of two key dups), so discovery
+        // joins on the full condition and counts each target row's
+        // (__path, __pos) matches
+        val perFile = metaScan
+          .join(src.withColumn("__sk", lit(1)).alias("source"), joinCond("target", "source"),
+            if (notMatchedBySource.isEmpty) "inner" else "left")
+          .groupBy(col("__path"), col("__pos"))
+          .agg(org.apache.spark.sql.functions.count(col("source.__sk")).as("__n"),
+            max(nmbsApplies.cast("int")).as("__nb"))
+          .filter(col("__n") > 0 || col("__nb") > 0)
+          .groupBy(col("__path")).agg(max(col("__n")))
+          .collect()
+        if (matched.nonEmpty && perFile.exists(_.getLong(1) > 1))
           throw new IllegalStateException(
             "MERGE: multiple source rows match the same target row under " +
             "the merge condition (nondeterministic update/delete); " +
             "de-duplicate the source")
+        perFile.map(r => relPath(r.getString(0))).toSeq
       }
-      val clauseIdx = matched.zipWithIndex
-        .foldLeft(lit(-1)) { case (acc, (m, i)) =>
-          when(isMatched && holds(m.cond) && acc === -1, lit(i)).otherwise(acc) }
-      val nmbsIdx = notMatchedBySource.zipWithIndex
-        .foldLeft(lit(-1)) { case (acc, (c, i)) =>
-          when(!isMatched && holds(c.cond) && acc === -1, lit(i)).otherwise(acc) }
-      val deleteIdx = matched.zipWithIndex.collect { case (m, i) if m.delete => i }
-      val nmbsDeleteIdx = notMatchedBySource.zipWithIndex
-        .collect { case (c, i) if c.delete => i }
-      val indexed = joined.withColumn("__ci", clauseIdx).withColumn("__ni", nmbsIdx)
-      val isDeleted =
-        (if (deleteIdx.isEmpty) lit(false) else col("__ci").isin(deleteIdx: _*)) ||
-        (if (nmbsDeleteIdx.isEmpty) lit(false)
-         else col("__ni").isin(nmbsDeleteIdx: _*))
-      // a row is UPDATED when a non-delete clause applied (carried rows,
-      // __ci = __ni = -1, are rewritten verbatim and are NOT changes)
-      val isUpdated = !isDeleted && (col("__ci") >= 0 || col("__ni") >= 0)
-      def targetRow(d: DataFrame): DataFrame = d.select(fields.map(f =>
-        col(s"target.${f.name}").cast(f.dataType).as(f.name)): _*)
-      val kept = indexed.filter(!isDeleted)
-      val picked = kept.select(fields.map { f =>
-        val withMatched = matched.zipWithIndex.filterNot(_._1.delete)
-          .foldLeft(when(lit(false), lit(null))) { case (acc, (m, i)) =>
-            val v = m.set match {
-              case None => col(s"source.${f.name}") // UPDATE ALL
-              case Some(s) => s.getOrElse(f.name, col(s"target.${f.name}"))
-            }
-            acc.when(col("__ci") === i, v)
-          }
-        notMatchedBySource.zipWithIndex.filterNot(_._1.delete)
-          .foldLeft(withMatched) { case (acc, (c, i)) =>
-            acc.when(col("__ni") === i,
-              c.set.get.getOrElse(f.name, col(s"target.${f.name}")))
-          }.otherwise(col(s"target.${f.name}")).cast(f.dataType).as(f.name)
-      } :+ col("__ni") :+ isUpdated.as("__chg"): _*)
-      // generated columns a not-matched-by-source UPDATE didn't assign
-      // recompute from their definitions over the updated row (same
-      // semantics as UPDATE); matched-clause rows keep the r5 contract
-      // (full source rows, validated below)
-      val types = fields.map(f => f.name -> f.dataType).toMap
-      val regen = generatedColumns.foldLeft(picked) { case (d, (g, e)) =>
-        val omitted = notMatchedBySource.zipWithIndex.collect {
-          case (MergeBuilder.NotMatchedBySource(_, Some(s), _), i)
-            if !s.contains(g) => i }
-        if (omitted.isEmpty) d
-        else d.withColumn(g, when(col("__ni").isin(omitted: _*),
-          expr(e).cast(types(g))).otherwise(col(g)))
-      }.drop("__ni")
-      // CDC images of this merge's row-level changes (written later with
-      // the inserts): deleted rows' old versions, updated rows' old and
-      // new versions
-      cdcDeletes = Some(targetRow(indexed.filter(isDeleted)))
-      cdcPre = Some(targetRow(indexed.filter(isUpdated)))
-      cdcPost = Some(regen.filter(col("__chg")).drop("__chg"))
-      Some(regen.drop("__chg"))
+    } catch {
+      case e: Exception if Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(c => Option(c.getMessage).exists(_.contains(GraftTable.MultiMatchTag))) =>
+        throw new IllegalStateException(
+          "MERGE: multiple source rows match the same target row " +
+          "(nondeterministic update/delete); de-duplicate the source on " +
+          tKeys.mkString(", "), e)
     }
-    // unmatched source rows: first applicable not-matched clause inserts
-    // (INSERT ALL copies the aligned source row; an explicit column list
-    // inserts its assignments, NULL for unmentioned columns, and
-    // unmentioned GENERATED columns recompute from their definitions)
-    val nmIdx = notMatched.zipWithIndex
-      .foldLeft(lit(-1)) { case (acc, (nm, i)) =>
-        when(holds(nm.cond) && acc === -1, lit(i)).otherwise(acc) }
-    val types = fields.map(f => f.name -> f.dataType).toMap
-    val insertsPicked = (if (affected.isEmpty) src
-      else src.alias("source")
-        .join(extendEvolved(readLive(affected, dvNow)).alias("target"),
-          joinCond("target", "source"), "left_anti"))
-      .alias("source")
-      .withColumn("__nmi", nmIdx)
-      .filter(col("__nmi") >= 0)
-      .select(fields.map { f =>
-        notMatched.zipWithIndex
-          .foldLeft(when(lit(false), lit(null))) { case (acc, (nm, i)) =>
-            val v = nm.set match {
-              case None => col(s"source.${f.name}")
-              case Some(s) => s.getOrElse(f.name, lit(null))
-            }
-            acc.when(col("__nmi") === i, v)
-          }.otherwise(lit(null)).cast(f.dataType).as(f.name)
-      } :+ col("__nmi"): _*)
-    val inserts = generatedColumns.foldLeft(insertsPicked) { case (d, (g, e)) =>
-      val omitted = notMatched.zipWithIndex.collect {
+    val discovered = System.nanoTime()
+    // REWRITE: one join of the affected files' live rows with the source
+    // yields matched pairs, unmatched target rows (carried, or NOT
+    // MATCHED BY SOURCE) and, when an insert clause exists, unmatched
+    // source rows (FULL OUTER; without insert clauses a left join, whose
+    // source side may broadcast). Matched clauses apply to matched pairs,
+    // not-matched-by-source clauses to target-only rows, insert clauses
+    // to source-only rows; in each set the first applicable clause wins.
+    // Without a matched clause nothing keeps a target row from matching
+    // several source rows, yet it is written once: the joined rows are
+    // cut to one per target row (its file and position) and one per
+    // unmatched source row
+    val once = matched.isEmpty && affected.nonEmpty
+    val live =
+      if (affected.isEmpty) spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), tgt.schema)
+      else extendEvolved(toLogical(scan(currentVersion, affected, dvNow, withMeta = once), colMap))
+    val hasT = col("target.__t").isNotNull
+    val hasS = col("source.__s").isNotNull
+    def firstClause(conds: Seq[Option[Column]], applies: Column): Column =
+      conds.zipWithIndex.foldLeft(when(lit(false), lit(-1))) { case (acc, (c, i)) =>
+        acc.when(applies && holds(c), lit(i)) }.otherwise(lit(-1))
+    // insert clauses see the source row alone: bare names in them are
+    // source columns
+    def fromSource(c: Column): Column = ColumnBridge.qualifyBare(c, "source")
+    val joined = live.withColumn("__t", lit(true)).alias("target")
+      .join((if (once) src.withColumn("__sid", monotonically_increasing_id()) else src)
+        .withColumn("__s", lit(true)).alias("source"), joinCond("target", "source"),
+        if (notMatched.isEmpty) "left" else "full")
+    val indexed = (if (!once) joined
+      else joined.withColumn("__row", when(hasT, concat_ws(":", col("__path"), col("__pos")))
+        .otherwise(col("__sid").cast("string"))).dropDuplicates("__row"))
+      .withColumn("__ci", firstClause(matched.map(_.cond), hasT && hasS))
+      .withColumn("__ni", firstClause(notMatchedBySource.map(_.cond), hasT && !hasS))
+      .withColumn("__nmi", firstClause(notMatched.map(_.cond.map(fromSource)), !hasT && hasS))
+    def clauseIn(c: String, idx: Seq[Int]): Column =
+      if (idx.isEmpty) lit(false) else col(c).isin(idx: _*)
+    val isDeleted =
+      clauseIn("__ci", matched.zipWithIndex.collect { case (m, i) if m.delete => i }) ||
+      clauseIn("__ni", notMatchedBySource.zipWithIndex.collect { case (c, i) if c.delete => i })
+    // a row is UPDATED when a non-delete clause applied (carried rows,
+    // __ci = __ni = -1, are rewritten verbatim and are NOT changes)
+    val isUpdated = !isDeleted && (col("__ci") >= 0 || col("__ni") >= 0)
+    val newVals = fields.map { f =>
+      val target = col(s"target.${f.name}")
+      val byMatched = matched.zipWithIndex.filterNot(_._1.delete).map { case (m, i) =>
+        (col("__ci") === i) -> m.set.fold(col(s"source.${f.name}"))(_.getOrElse(f.name, target)) }
+      val byNmbs = notMatchedBySource.zipWithIndex.filterNot(_._1.delete).map { case (c, i) =>
+        (col("__ni") === i) -> c.set.get.getOrElse(f.name, target) }
+      // INSERT ALL copies the aligned source row; an explicit column list
+      // inserts its assignments, NULL for unmentioned columns
+      val byInsert = notMatched.zipWithIndex.map { case (nm, i) =>
+        (col("__nmi") === i) -> nm.set.fold(col(s"source.${f.name}"))(
+          _.get(f.name).map(fromSource).getOrElse(lit(null))) }
+      (byMatched ++ byNmbs ++ byInsert).foldLeft(when(lit(false), lit(null))) {
+        case (acc, (c, v)) => acc.when(c, v) }.otherwise(target)
+    }
+    val (tagged0, tally) = tagRows(indexed, fields, newVals,
+      when(col("__nmi") >= 0, lit(GraftTable.RowInserted))
+        .when(isUpdated, lit(GraftTable.RowUpdated))
+        .when(hasT && !isDeleted, lit(GraftTable.RowCopied)),
+      fields.map(f => col(s"target.${f.name}")),
+      when(isDeleted, lit(GraftTable.RowDeleted)).when(isUpdated, lit(GraftTable.RowPreImage)),
+      if (generatedColumns.isEmpty) Nil else Seq(col("__ni"), col("__nmi")))
+    // generated columns a not-matched-by-source UPDATE or an explicit
+    // INSERT list didn't assign recompute from their definitions over the
+    // new row (same semantics as UPDATE); matched-clause rows keep the
+    // full-source-row contract (validated below)
+    val tagged1 = generatedColumns.foldLeft(tagged0) { case (d, (g, e)) =>
+      val nmbsOmit = notMatchedBySource.zipWithIndex.collect {
+        case (MergeBuilder.NotMatchedBySource(_, Some(s), _), i) if !s.contains(g) => i }
+      val insOmit = notMatched.zipWithIndex.collect {
         case (MergeBuilder.NotMatched(_, Some(s)), i) if !s.contains(g) => i }
-      if (omitted.isEmpty) d
-      else d.withColumn(g, when(col("__nmi").isin(omitted: _*),
-        expr(e).cast(types(g))).otherwise(col(g)))
-    }.drop("__nmi")
+      if (nmbsOmit.isEmpty && insOmit.isEmpty) d
+      else d.withColumn(g, when(
+        (col("__k") === GraftTable.RowUpdated && clauseIn("__ni", nmbsOmit)) ||
+        (col("__k") === GraftTable.RowInserted && clauseIn("__nmi", insOmit)),
+        expr(e).cast(tgtType(g))).otherwise(col(g)))
+    }.drop("__ni", "__nmi")
+    val out0 = materializeTagged(tagged1, held)
     // identity fills apply to INSERTED rows only: rewritten rows keep
     // their existing values, and legacy NULLs (rows predating the
     // identity column) stay NULL exactly as Delta leaves them
-    val (insertsId, idProps, idGuard) = assignIdentity(inserts)
-    val out = rewritten.map(_.unionByName(insertsId)).getOrElse(insertsId)
+    val (out, idProps, idGuard) =
+      if (identityColumns.isEmpty) (out0, None, (_: Long) => ())
+      else {
+        val isInsert = col("__k") === GraftTable.RowInserted
+        val (ins, p, g) = assignIdentity(out0.filter(isInsert))
+        (out0.filter(!isInsert).unionByName(ins), p, g)
+      }
+    val written = out.filter(col("__k") <= GraftTable.RowInserted).drop("__k")
     // every written row now carries a value for each generated column
     // (copied, recomputed, or explicitly assigned): validate the set
     generatedColumns.foreach { case (name, e) =>
-      val bad = out.filter(!(col(name) <=> expr(e))).count()
+      val bad = written.filter(!(col(name) <=> expr(e))).count()
       if (bad > 0) throw new IllegalArgumentException(
         s"MERGE writes generated column $name disagreeing with its " +
         s"definition ($e) on $bad rows")
     }
-    enforceConstraints(out)
+    enforceConstraints(written)
     // schema evolution commits WITH the rewrite: the output frame's new
     // columns get fresh physical names (write()'s mergeSchema path) and
     // the evolved schema + map additions land in the merge's own commit
     // — an aborted merge leaves the schema untouched
-    def phys(d: DataFrame): DataFrame =
-      if (evolveCols.isEmpty) toPhysicalStrict(d) else toPhysical(d, colMap)._1
     val (physOut, mapAdds) =
-      if (evolveCols.isEmpty) (toPhysicalStrict(out), Nil)
-      else toPhysical(out, colMap)
-    // CDC sidecar: deletes' old rows, updates' old+new rows, inserts
-    val cdcId =
-      if (!cdcSidecarsEnabled) ""
-      else writeCdc(
-        cdcDeletes.map(phys(_) -> "delete").toSeq ++
-        cdcPre.map(phys(_) -> "update_preimage").toSeq ++
-        cdcPost.map(phys(_) -> "update_postimage").toSeq :+
-        (phys(insertsId) -> "insert"))
-    val added = appendDataFiles(physOut)
+      if (evolveCols.isEmpty) (toPhysicalStrict(written), Nil)
+      else toPhysical(written, colMap)
+    val (added, cdcId) = writeTagged(out, physOut)
+    val rewritten = System.nanoTime()
     commitRewrite("MERGE", affected, added, extraMetrics ++ Map(
       "numFilesRewritten" -> affected.size.toString,
       "numFilesAdded" -> added.size.toString,
-      "numColumnsEvolved" -> evolveCols.size.toString) ++
+      "numColumnsEvolved" -> evolveCols.size.toString,
+      "numSourceRows" -> numSourceRows.toString,
+      "numTargetRowsUpdated" -> tally(GraftTable.RowUpdated).value.toString,
+      "numTargetRowsDeleted" -> tally(GraftTable.RowDeleted).value.toString,
+      "numTargetRowsInserted" -> tally(GraftTable.RowInserted).value.toString,
+      "numTargetRowsCopied" -> tally(GraftTable.RowCopied).value.toString,
+      "discoveryTimeMs" -> ((discovered - began) / 1000000).toString,
+      "rewriteTimeMs" -> ((rewritten - discovered) / 1000000).toString) ++
       (if (cdcId.isEmpty) Map.empty else Map("cdc" -> cdcId)),
       readDv = dvNow,
       newProperties = idProps, preCommitCheck = idGuard,
@@ -3089,10 +3158,11 @@ final class GraftTable private (
           val have = cur.fieldNames.toSet
           physOut.schema.fields.filterNot(f => have(f.name))
             .foldLeft(cur)(_ add _)
-        })
+        },
+      timed = true)
     }
     try run()
-    finally { scala.util.Try(src.unpersist(false)); () }
+    finally held.foreach(_.release())
   }
 
   /** Change data feed between two committed versions (Delta CDF
@@ -3257,23 +3327,6 @@ final class GraftTable private (
   private def cdcSidecarsEnabled: Boolean =
     !propertiesOf(currentVersion)
       .get(GraftTable.ChangeDataFeedProp).contains("false")
-
-  /** Write this commit's CDC rows (physical layout + `_change_type`) as
-    * a sidecar under `_graft_log/cdc/<id>`; the id is recorded in the
-    * commit metrics and [[versionChanges]] serves the sidecar instead
-    * of inferring from the file diff. The write happens BEFORE the
-    * commit is published — an aborted commit leaves an orphaned
-    * sidecar nobody references, never a commit whose feed is missing.
-    * `cleanupLog` deletes the sidecars of the records it drops; VACUUM
-    * deletes sidecars no retained record names once they are older
-    * than its retention window. */
-  private def writeCdc(physParts: Seq[(DataFrame, String)]): String = {
-    val id = java.util.UUID.randomUUID().toString
-    GraftWriter.write(physParts.map { case (df, tpe) =>
-      df.withColumn("_change_type", lit(tpe))
-    }.reduce(_.unionByName(_, allowMissingColumns = true)), cdcPath(id))
-    id
-  }
 
   /** `files` of version `v` re-added under `key`, with the sizes and
     * stats `v` logged for them (a file logged without a size is probed). */
@@ -3529,6 +3582,11 @@ final class GraftTable private (
       .orderBy(desc("version"))
   }
 
+  /** The operation metrics commit `version` recorded (empty once its
+    * record is gone): what `history()` shows as `operationMetrics`. */
+  def operationMetrics(version: Long): Map[String, String] =
+    commitInfo(version).map(_.metrics).getOrElse(Map.empty)
+
   // ---- D5: DESCRIBE DETAIL equivalent ----------------------------------
 
   final case class Detail(
@@ -3747,6 +3805,18 @@ object GraftTable {
     * broadcasts it: the footprint of the former 4 M-key gate for one
     * long key. */
   private[table] val MergeBroadcastKeyBytes: Long = 32L << 20
+
+  /** Message prefix of the executor-side MERGE multi-match raise, which
+    * the merge turns back into its IllegalStateException. */
+  private[table] val MultiMatchTag = "GRAFT_MERGE_MULTIPLE_SOURCE_ROWS: "
+
+  /** Row kinds of a DML pass's tagged frame: the first three are written
+    * to the table, the last four are change rows. */
+  private[table] val RowCopied = 0
+  private[table] val RowUpdated = 1
+  private[table] val RowInserted = 2
+  private[table] val RowPreImage = 3
+  private[table] val RowDeleted = 4
 
   /** Default commits between checkpoints (`graft.checkpointInterval`
     * overrides it per table) — a cold reader replays at most this many

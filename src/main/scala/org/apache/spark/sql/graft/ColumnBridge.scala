@@ -47,6 +47,22 @@ object ColumnBridge {
       .map(n => Column(n)))
   }
 
+  /** `c` with every one-part column name qualified (`x` → `qualifier.x`),
+    * so a bare reference keeps resolving to one side of a join whose
+    * sides share column names. Lambda bodies are left alone: their bare
+    * names are the lambda's own variables. */
+  def qualifyBare(c: Column, qualifier: String): Column = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    def q(e: Expression): Expression = e match {
+      case l: LambdaFunction => l
+      case a: UnresolvedAttribute if a.nameParts.size == 1 =>
+        UnresolvedAttribute(qualifier +: a.nameParts)
+      case other => other.mapChildren(q)
+    }
+    column(q(org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)))
+  }
+
   /** Build a streaming-tagged DataFrame from a batch plan's InternalRow
     * RDD — what every DSv1 streaming Source returns from `getBatch`
     * (`internalCreateDataFrame` is public bytecode, `private[sql]` in

@@ -2,11 +2,12 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSet, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.types.LongType
 
 import graft.sources.GraftV2Table
 import graft.table.GraftTable
@@ -184,6 +185,25 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
 }
 
 private[graft] object GraftDml {
+  /** Output of a DML command's metrics row: one non-null long per name. */
+  def metricsOutput(names: String*): Seq[Attribute] =
+    names.map(n => AttributeReference(n, LongType, nullable = false)())
+
+  /** The row of commit `metrics` under `keys`; `numTargetRowsAffected` is
+    * the sum of a MERGE's updated, deleted and inserted rows. A MERGE into
+    * an empty table commits as a write, so its inserted rows are the rows
+    * written; any other key the commit did not record (a no-op UPDATE)
+    * reads 0. */
+  def metricsRow(metrics: Map[String, String], keys: String*): Row = {
+    def n(k: String): Long = metrics.get(k).map(_.toLong).getOrElse(k match {
+      case "numTargetRowsAffected" =>
+        Seq("numTargetRowsUpdated", "numTargetRowsDeleted", "numTargetRowsInserted").map(n).sum
+      case "numTargetRowsInserted" => metrics.get("numOutputRows").map(_.toLong).getOrElse(0L)
+      case _ => 0L
+    })
+    Row.fromSeq(keys.map(n))
+  }
+
   /** Table handle with the hive layout recovered from the manifest, so
     * rewrites land in the right partition directories. */
   def tableAt(session: SparkSession, path: String): GraftTable = {
@@ -218,9 +238,12 @@ private[graft] object GraftDml {
 
 case class GraftUpdateCommand(path: String, cond: Column,
     set: Map[String, Column]) extends LeafRunnableCommand {
+  override val output: Seq[Attribute] = GraftDml.metricsOutput("num_affected_rows")
+
+  /** One row, Delta's: the rows the UPDATE changed. */
   override def run(session: SparkSession): Seq[Row] = {
-    GraftDml.tableAt(session, path).update(cond, set)
-    Nil
+    val t = GraftDml.tableAt(session, path)
+    Seq(GraftDml.metricsRow(t.operationMetrics(t.update(cond, set)), "numUpdatedRows"))
   }
 }
 
@@ -242,11 +265,17 @@ case class GraftMergeCommand(path: String, source: LogicalPlan,
     schemaEvolution: Boolean = false)
     extends LeafRunnableCommand {
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
+  override val output: Seq[Attribute] = GraftDml.metricsOutput("num_affected_rows",
+    "num_updated_rows", "num_deleted_rows", "num_inserted_rows")
+
+  /** Runs the merge; returns one row, Delta's: the rows it changed in
+    * all, then updated, deleted and inserted. */
 
   override def run(session: SparkSession): Seq[Row] = {
     val classic = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val sourceDf = org.apache.spark.sql.classic.Dataset.ofRows(classic, source)
-    val b0 = GraftDml.tableAt(session, path).mergeIntoOn(sourceDf, keys, residual)
+    val t = GraftDml.tableAt(session, path)
+    val b0 = t.mergeIntoOn(sourceDf, keys, residual)
     val b = if (schemaEvolution) b0.withSchemaEvolution() else b0
     matched.foreach {
       case GraftMergeCommand.MatchedSpec(Some(c), None, true) => b.whenMatchedDelete(c)
@@ -270,7 +299,8 @@ case class GraftMergeCommand(path: String, source: LogicalPlan,
       case other => throw new UnsupportedOperationException(
         s"unsupported NOT MATCHED BY SOURCE spec $other")
     }
-    b.execute()
-    Nil
+    val v = b.execute()
+    Seq(GraftDml.metricsRow(t.operationMetrics(v), "numTargetRowsAffected",
+      "numTargetRowsUpdated", "numTargetRowsDeleted", "numTargetRowsInserted"))
   }
 }

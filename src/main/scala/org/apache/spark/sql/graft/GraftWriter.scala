@@ -51,6 +51,19 @@ object GraftWriter {
     protocol.written
   }
 
+  private lazy val pool = org.apache.spark.util.ThreadUtils
+    .newDaemonCachedThreadPool("graft-write", 4, 60)
+
+  /** Runs `body` — typically a [[write]] — on a background thread that
+    * carries the caller's job group and local properties, so its jobs
+    * are attributed like the caller's own. The returned function waits
+    * for it and returns its result or throws its failure. */
+  def background[T](session: org.apache.spark.sql.SparkSession)(body: => T): () => T = {
+    val f = SQLExecution.withThreadLocalCaptured(
+      session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool)(body)
+    () => try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+  }
+
   /** Tasks name their files `<root>/<partition dirs>/part-<task>-<uuid><ext>`,
     * report each file's size and stats on commit and delete their files
     * on abort; the job commit collects the reports. */

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.ingest.BarSource
 import graft.table.GraftTable
@@ -33,7 +34,12 @@ class SqlDmlSpec extends SparkSpec {
     val aaplNonNull = t.read()
       .filter(col("ticker") === "AAPL" && col("close").isNotNull).count()
 
-    spark.sql(s"UPDATE graft.`$path` SET close = close + 1000 WHERE ticker = 'AAPL'")
+    val aapl = t.read().filter(col("ticker") === "AAPL").count()
+    val upd = spark.sql(s"UPDATE graft.`$path` SET close = close + 1000 WHERE ticker = 'AAPL'")
+    // one Delta-style metrics row: every AAPL row was updated (a NULL
+    // close stays NULL, but its row still took the assignment)
+    assert(upd.columns.toSeq == Seq("num_affected_rows"))
+    assert(upd.collect().toSeq == Seq(Row(aapl)))
     assert(t.read().count() == total)
     assert(t.read().filter(col("ticker") === "AAPL" && col("close") > 900).count()
       == aaplNonNull)
@@ -42,7 +48,8 @@ class SqlDmlSpec extends SparkSpec {
     // NULL-predicate rows kept (three-valued semantics reach SQL UPDATE):
     // close has injected nulls, so `close > 1e12` is NULL there
     val before = t.read().agg(sum("volume")).collect().head.getLong(0)
-    spark.sql(s"UPDATE graft.`$path` SET volume = 0 WHERE close > 1e12")
+    assert(spark.sql(s"UPDATE graft.`$path` SET volume = 0 WHERE close > 1e12")
+      .collect().toSeq == Seq(Row(0L)))
     assert(t.read().agg(sum("volume")).collect().head.getLong(0) == before)
     // pre-update version stays time-travelable
     assert(t.readVersion(0).filter(col("close") > 900).count() == 0)
@@ -60,21 +67,26 @@ class SqlDmlSpec extends SparkSpec {
         .withColumn("timestamp_ms", col("timestamp_ms") + 999999))
       .createOrReplaceTempView("dml_src")
 
-    spark.sql(
+    val merged = spark.sql(
       s"""MERGE INTO graft.`$path` AS t
          |USING dml_src AS s
          |ON t.ticker = s.ticker AND t.timestamp_ms = s.timestamp_ms
          |WHEN MATCHED THEN UPDATE SET volume = s.volume
          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    // one Delta-style metrics row: affected, updated, deleted, inserted
+    assert(merged.columns.toSeq == Seq("num_affected_rows", "num_updated_rows",
+      "num_deleted_rows", "num_inserted_rows"))
+    assert(merged.collect().toSeq == Seq(Row(6L, 5L, 0L, 1L)))
     assert(t.read().count() == total + 1)
     assert(t.read().filter(col("volume") === 777L).count() == 5)
 
     // conditional DELETE clause
-    spark.sql(
+    val deleted = spark.sql(
       s"""MERGE INTO graft.`$path` AS t
          |USING dml_src AS s
          |ON t.ticker = s.ticker AND t.timestamp_ms = s.timestamp_ms
          |WHEN MATCHED AND t.volume = 777 THEN DELETE""".stripMargin)
+    assert(deleted.collect().toSeq == Seq(Row(5L, 0L, 5L, 0L)))
     // all five updated rows deleted; the inserted row kept its original
     // volume and survives the conditional delete
     assert(t.read().filter(col("volume") === 777L).count() === 0)

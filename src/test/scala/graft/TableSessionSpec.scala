@@ -91,6 +91,37 @@ class TableSessionSpec extends SparkSpec {
     assert(!broadcastsProbe(mergeWide(400000)))
   }
 
+  test("the daily bar-corrections MERGE runs at most 7 jobs and evaluates its source once") {
+    val t = GraftTable(spark, GraftTmp.dir("merge_census").toString,
+      Seq("ticker", "trade_date"))
+    val src = bars(spark)
+    t.write(src)
+    // every evaluation of the source pipeline counts its rows here
+    val evaluated = spark.sparkContext.longAccumulator
+    val seen = udf((ts: Long) => { evaluated.add(1); ts })
+    val corrections = src.filter(col("timestamp_ms") % 7 === 0)
+      .withColumn("timestamp_ms", seen(col("timestamp_ms")))
+      .withColumn("volume", col("volume") + 1)
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val v = try {
+      val v = t.merge(corrections, Seq("ticker", "timestamp_ms"))
+      org.apache.spark.ListenerBusDrain(sc)
+      v
+    } finally sc.removeSparkListener(listener)
+    val ran = evaluated.value
+    val n = corrections.count()
+    assert(jobs.size <= 7, jobs.toArray.mkString("\n"))
+    assert(ran == n, s"the source pipeline ran over $ran rows for $n")
+    assert(t.operationMetrics(v)("numTargetRowsUpdated").toLong == n)
+  }
+
   test("MERGE gate: the daily bar corrections' key set is broadcast") {
     val t = GraftTable(spark, GraftTmp.dir("merge_gate_bars").toString,
       Seq("ticker", "trade_date"))
