@@ -13,8 +13,10 @@ object GraftSession {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       // the shipped extensions: the graft SQL parser, the registered
-      // functions and the scan-stats rule — the user-facing configuration
-      // a production session built per the README gets
+      // functions, SQL DML and the read rules (every SQL, catalog and
+      // format("graft") read resolves to the log-planned columnar scan)
+      // — the user-facing configuration a production session built per
+      // the README gets
       .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")

@@ -190,9 +190,10 @@ object StockPipeline {
 
   /** Metadata-only grouped aggregates through the DSv2 catalog: the
     * per-ticker COUNT/MIN/MAX over a partitioned bar table answers from
-    * the manifest (grouped aggregate pushdown — GraftScanBuilder
-    * .groupedAnswerFor), and the require() makes the driver's oracle
-    * gate itself prove the plan never opened a data file. */
+    * the manifest (`GraftMetadataAggRule`, whose plan is a
+    * `GraftMetadataAggScan` and no file scan), and the require() makes
+    * the driver's oracle gate itself prove the plan never opened a data
+    * file. */
   def barPartitionStats(spark: SparkSession, dir: String): DataFrame = {
     val path = tmpDir("graft_bars_pstats")
     val bars = dumpBarsForOracle(seededBars(spark))
@@ -203,8 +204,8 @@ object StockPipeline {
          |       MIN(volume) AS min_volume, MAX(volume) AS max_volume
          |FROM graft.`$path`
          |GROUP BY ticker ORDER BY ticker""".stripMargin)
-    require(out.queryExecution.executedPlan.toString
-      .contains("GraftMetadataAggScan"),
+    val plan = out.queryExecution.executedPlan.toString
+    require(plan.contains("GraftMetadataAggScan") && !plan.contains("FileScan"),
       "grouped partition aggregate must answer from the manifest")
     out
   }

@@ -4,14 +4,13 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder}
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
-import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.table.GraftTable
 
@@ -31,11 +30,12 @@ import graft.table.GraftTable
   *    `INSERT OVERWRITE` logically replaces, through the V1 write shim
   *    onto the same commit protocol as every other writer.
   *
-  * Scans bridge through DSv2's official [[V1Scan]] migration shim onto
-  * the same pinned-snapshot pruned/filtered scan as [[GraftRelation]],
-  * so column pruning, filter pushdown, and hive-partition pruning reach
-  * the parquet reader identically on both paths (GraftSourceSpec
-  * asserts the pruning on the DSv2 plan too).
+  * Reads need the graft session extensions: [[GraftReadRule]] resolves
+  * a read of a catalog table (time travel included) to its pinned
+  * version's frame, the same log-planned columnar parquet scan as
+  * `GraftTable.read()` and `format("graft")`, with the same partition
+  * pruning, data skipping, statistics and metadata answers
+  * ([[GraftPrepareScan]], [[GraftMetadataAggRule]]).
   *
   * Catalog DDL (CREATE/ALTER/DROP via this catalog) is rejected: graft
   * tables are path-addressed and carry no catalog-persisted schema, so
@@ -155,12 +155,12 @@ final case class GraftV2Table(spark: SparkSession, path: String,
 
   private val table = GraftTable(spark, path)
   private val pinnedVersion: Long = versionAsOf.getOrElse(table.currentVersion)
-  private val snapshot: DataFrame = table.readVersion(pinnedVersion)
+  private val pinnedSchema: StructType = frame.schema
 
   override def name(): String =
     s"graft.`$path`" + versionAsOf.map(v => s" VERSION AS OF $v").getOrElse("")
 
-  override def schema(): StructType = snapshot.schema
+  override def schema(): StructType = pinnedSchema
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
@@ -180,13 +180,17 @@ final case class GraftV2Table(spark: SparkSession, path: String,
       Map("provider" -> "graft", "location" -> path,
         "version" -> pinnedVersion.toString)).asJava
 
+  /** A fresh frame of the pinned version: what [[GraftReadRule]] resolves
+    * a read of this table to. */
+  def frame: DataFrame = table.readVersion(pinnedVersion)
+
+  /** Only SQL DELETE plans this scan, for its schema: reads resolve to
+    * [[frame]], so executing it means the session lacks the extensions. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(snapshot,
-      filters => table.scanStats(pinnedVersion, filters),
-      filters => table.columnNdv(pinnedVersion, filters),
-      column => table.foldedBounds(pinnedVersion, column),
-      cols => table.partitionGroupCounts(pinnedVersion, cols),
-      (cols, c) => table.partitionGroupBounds(pinnedVersion, cols, c))
+    () => new Scan {
+      override def readSchema(): StructType = schema()
+      override def toBatch: Batch = throw GraftReadRule.missing(name())
+    }
 
   /** SQL `DELETE FROM graft.\`/p\` WHERE …` — the analyzer hands the
     * WHERE clause as source filters when it is fully translatable
@@ -259,390 +263,5 @@ final case class GraftV2Table(spark: SparkSession, path: String,
             }
         }
     }
-  }
-}
-
-/** Standard DSv2 pushdown negotiation; the filters are accepted as
-  * pushed (best-effort translation at scan build) AND returned as
-  * residual so Spark re-applies them — translation stays a performance
-  * hint, never a correctness dependency (same contract as the DSv1
-  * relation). */
-final class GraftScanBuilder(snapshot: DataFrame,
-    scanStats: Seq[Filter] => (Long, Option[Long]),
-    columnNdv: Seq[Filter] => Map[String, Long] = _ => Map.empty,
-    foldedBounds: String => Option[(String, String, String)] = _ => None,
-    partitionGroupCounts: Seq[String] => Option[Seq[(Seq[Option[String]], Long)]] =
-      _ => None,
-    partitionGroupBounds: (Seq[String], String) =>
-      Option[Seq[(Seq[Option[String]], (String, String, String))]] =
-      (_, _) => None)
-    extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
-
-  private var required: StructType = snapshot.schema
-  private var pushed: Array[Filter] = Array.empty
-  private var aggAnswer: Option[(StructType, Seq[Seq[Any]])] = None
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(GraftFilters.translate(_).isDefined)
-    filters // all residual: Spark re-applies above the scan
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  // ---- metadata-only global aggregates (Delta's "metadata-optimized
-  // query" shape): an unfiltered COUNT(*) / MIN / MAX over the table is
-  // answered from the manifest — row counts from the stats sidecar
-  // minus deletion-vector cardinality, bounds from the folded footer
-  // stats — so the query never opens a data file. Accepted only when
-  // the whole answer is provable (every file carries the needed stats,
-  // no DV can hide an extremum, no residual filter); otherwise the
-  // ordinary scan plan stands.
-
-  import org.apache.spark.sql.connector.expressions.aggregate._
-
-  // answerFor walks the whole manifest driver-side; Spark calls
-  // supportCompletePushDown and pushAggregation back-to-back with the
-  // same aggregation, so memoize on the aggregation's rendered form
-  // (+ the pushed-filter state it reads) — one manifest fold, not two
-  private var answerMemo: Option[(String, Option[(StructType, Seq[Seq[Any]])])] =
-    None
-
-  private def answerMemoized(agg: Aggregation)
-      : Option[(StructType, Seq[Seq[Any]])] = {
-    // the filter component keys on the RENDERED pushed filters, not
-    // their count: answerFor bails on pushed.nonEmpty today, but if
-    // metadata answers ever start honoring filters, two different
-    // same-length filter sets must not alias to one memoized answer
-    val key = agg.aggregateExpressions.map(_.describe).mkString(",") + "|" +
-      agg.groupByExpressions.map(_.describe).mkString(",") + "|" +
-      pushed.map(_.toString).mkString(";")
-    answerMemo match {
-      case Some((k, r)) if k == key => r
-      case _ =>
-        val r = answerFor(agg)
-        answerMemo = Some((key, r))
-        r
-    }
-  }
-
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    answerMemoized(agg).isDefined
-
-  override def pushAggregation(agg: Aggregation): Boolean = {
-    val a = answerMemoized(agg)
-    a.foreach(x => aggAnswer = Some(x))
-    a.isDefined
-  }
-
-  private def namedCol(e: org.apache.spark.sql.connector.expressions.Expression)
-      : Option[String] = e match {
-    case nr: org.apache.spark.sql.connector.expressions.NamedReference
-        if nr.fieldNames.length == 1 => Some(nr.fieldNames.head)
-    case _ => None
-  }
-
-  /** Exactly-encoded footer-stat value → external value of the column's
-    * type; None on a type/tag mismatch (no proof). */
-  private def typedStat(tag: String, dt: DataType, raw: Long): Option[Any] =
-    (tag, dt) match {
-      case ("long", LongType) => Some(raw)
-      case ("long", IntegerType) => Some(raw.toInt)
-      case ("long", ShortType) => Some(raw.toShort)
-      case ("long", ByteType) => Some(raw.toByte)
-      case ("date", DateType) =>
-        Some(java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(raw)))
-      case _ => None // type/tag mismatch: no proof
-    }
-
-  // per-column folds fetched ONCE and reused across the MIN and MAX
-  // sides of the same aggregation (each is a full per-file manifest
-  // walk — a COUNT+MIN+MAX query was paying it per aggregate)
-  private val foldedBoundsCache =
-    scala.collection.mutable.Map.empty[String, Option[(String, String, String)]]
-  private val groupBoundsCache = scala.collection.mutable.Map.empty[
-    (Seq[String], String),
-    Option[Seq[(Seq[Option[String]], (String, String, String))]]]
-
-  private def boundValue(c: String, lo: Boolean): Option[(DataType, Any)] = {
-    val dt = snapshot.schema.find(_.name == c).map(_.dataType).getOrElse(return None)
-    foldedBoundsCache.getOrElseUpdate(c, foldedBounds(c)).flatMap {
-      case (tag, mn, mx) =>
-        typedStat(tag, dt, (if (lo) mn else mx).toLong).map(v => (dt, v))
-    }
-  }
-
-  private def answerFor(agg: Aggregation): Option[(StructType, Seq[Seq[Any]])] = {
-    if (pushed.nonEmpty) return None
-    if (agg.groupByExpressions.nonEmpty) return groupedAnswerFor(agg)
-    val parts: Seq[Option[(StructField, Any)]] =
-      agg.aggregateExpressions.toSeq.map {
-        case _: CountStar =>
-          scanStats(Seq.empty)._2.map(n =>
-            (StructField("count(*)", LongType, nullable = false), n))
-        case m: Min => namedCol(m.column).flatMap(c =>
-          boundValue(c, lo = true).map { case (dt, v) =>
-            (StructField(s"min($c)", dt), v) })
-        case m: Max => namedCol(m.column).flatMap(c =>
-          boundValue(c, lo = false).map { case (dt, v) =>
-            (StructField(s"max($c)", dt), v) })
-        case _ => None
-      }
-    if (parts.isEmpty || parts.exists(_.isEmpty)) None
-    else Some((StructType(parts.flatten.map(_._1)),
-      Seq(parts.flatten.map(_._2))))
-  }
-
-  /** `GROUP BY <partition cols> → COUNT(*) / MIN / MAX` from the
-    * manifest — one row per live partition value: counts fold footer
-    * rows minus deletion-vector cardinality, MIN/MAX fold per-file
-    * footer bounds per group (the table layer refuses bounds whenever
-    * ANY deletion vector exists — a masked row could hold a group's
-    * extremum). Hive-path group strings cast to the table's partition
-    * types driver-side. Anything unproven — non-partition grouping
-    * expressions, uncastable types, missing stats — keeps the ordinary
-    * scan plan. */
-  private def groupedAnswerFor(agg: Aggregation)
-      : Option[(StructType, Seq[Seq[Any]])] = {
-    // an empty aggregate list is DISTINCT <partition cols> — the group
-    // keys alone are the answer
-    val colsOpt = agg.groupByExpressions.toSeq.map(namedCol)
-    if (colsOpt.exists(_.isEmpty)) return None
-    val cols = colsOpt.flatten
-    val fields = cols.map(c => snapshot.schema.find(_.name == c))
-    if (fields.exists(_.isEmpty)) return None
-    val casts: Seq[String => Any] = fields.flatten.map { f =>
-      f.dataType match {
-        case StringType => (s: String) => s
-        case LongType => (s: String) => s.toLong
-        case IntegerType => (s: String) => s.toInt
-        case ShortType => (s: String) => s.toShort
-        case ByteType => (s: String) => s.toByte
-        case BooleanType => (s: String) => s.toBoolean
-        case DateType => (s: String) => java.sql.Date.valueOf(s)
-        case _ => return None // no exact path-string decode → no proof
-      }
-    }
-    // per-aggregate answer: group values → (field, value)
-    type GroupKey = Seq[Option[String]]
-    def boundsFor(c: String, lo: Boolean, name: String)
-        : Option[(StructField, Map[GroupKey, Any])] = {
-      val dt = snapshot.schema.find(_.name == c).map(_.dataType)
-        .getOrElse(return None)
-      groupBoundsCache.getOrElseUpdate((cols, c),
-          partitionGroupBounds(cols, c)).flatMap { groups =>
-        val typed = groups.map { case (k, (tag, mn, mx)) =>
-          typedStat(tag, dt, (if (lo) mn else mx).toLong).map(k -> _)
-        }
-        if (typed.exists(_.isEmpty)) None
-        else Some((StructField(s"$name($c)", dt), typed.flatten.toMap))
-      }
-    }
-    lazy val counts = partitionGroupCounts(cols)
-    val answers: Seq[Option[(StructField, Map[GroupKey, Any])]] =
-      agg.aggregateExpressions.toSeq.zipWithIndex.map {
-        case (_: CountStar, i) => counts.map(gs =>
-          (StructField(s"count($i)", LongType, nullable = false),
-            gs.map { case (k, n) => (k: GroupKey) -> (n: Any) }.toMap))
-        case (m: Min, _) =>
-          namedCol(m.column).flatMap(c => boundsFor(c, lo = true, "min"))
-        case (m: Max, _) =>
-          namedCol(m.column).flatMap(c => boundsFor(c, lo = false, "max"))
-        case _ => None
-      }
-    if (answers.exists(_.isEmpty)) return None
-    val resolved = answers.flatten
-    // every aggregate folds over the same live file set → same groups;
-    // with no aggregates (DISTINCT) the manifest's group list answers
-    val keySet: Set[GroupKey] =
-      if (resolved.nonEmpty) {
-        val ks = resolved.map(_._2.keySet).distinct
-        if (ks.length != 1) return None
-        ks.head
-      } else counts.getOrElse(return None).map(_._1).toSet
-    val rows = scala.util.Try(keySet.toSeq.map { k =>
-      k.zip(casts).map { case (v, c) => v.map(c).orNull } ++
-        resolved.map(_._2(k))
-    }).toOption // a value the cast rejects (adopted layout) → no proof
-    rows.map { rs =>
-      (StructType(fields.flatten.map(f => StructField(f.name, f.dataType)) ++
-        resolved.map(_._1)), rs)
-    }
-  }
-
-  override def build(): Scan = aggAnswer match {
-    case Some((schema, values)) => new GraftMetadataAggScan(schema, values)
-    case None =>
-      new GraftV1ScanShim(snapshot, required, pushed, scanStats, columnNdv)
-  }
-}
-
-/** Scan carrying a metadata-answered aggregate — one row for the global
-  * `SELECT COUNT(*)/MIN/MAX FROM t`, one row per live partition value
-  * for `GROUP BY <partition cols> → COUNT(*)`; either way the plan
-  * never touches a data file. */
-final class GraftMetadataAggScan(schema: StructType, rows: Seq[Seq[Any]])
-    extends V1Scan {
-  override def readSchema(): StructType = schema
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = GraftMetadataAggScan.this.schema
-      override def buildScan(): RDD[Row] =
-        context.sparkContext.parallelize(rows.map(Row.fromSeq), 1)
-    }.asInstanceOf[T]
-}
-
-/** DSv2 scan executing through the V1 relation machinery ([[V1Scan]],
-  * the built-in migration shim): the pinned snapshot frame, filtered
-  * and pruned, becomes the scan RDD, so predicate pushdown, partition
-  * pruning and the file index's data skipping hit the parquet scan
-  * exactly as in the DSv1 path. */
-final class GraftV1ScanShim(snapshot: DataFrame,
-    required: StructType, filters: Array[Filter],
-    scanStats: Seq[Filter] => (Long, Option[Long]),
-    columnNdv: Seq[Filter] => Map[String, Long] = _ => Map.empty)
-    extends V1Scan
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-
-  override def readSchema(): StructType = required
-
-  /** Manifest-derived size/rows of the files SURVIVING data skipping
-    * for the pushed filters (deletion-vector cardinality subtracted
-    * from rows): join strategy sees the pruned scan, so a selective
-    * point lookup over a huge table still auto-broadcasts. Delta's
-    * PrepareDeltaScan plays the same stats into Catalyst. ANALYZE'd
-    * columns additionally report distinct counts (union of the
-    * surviving files' HLL sketches) — `transformV2Stats` turns them
-    * into per-attribute ColumnStat, which is what CBO join estimation
-    * and join reordering consume. */
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val (bytes, rows) = scanStats(filters.toIndexedSeq)
-    val ndv = columnNdv(filters.toIndexedSeq)
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong =
-        rows.fold(java.util.OptionalLong.empty)(java.util.OptionalLong.of)
-      override def columnStats(): java.util.Map[
-          org.apache.spark.sql.connector.expressions.NamedReference,
-          org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
-        val m = new java.util.HashMap[
-          org.apache.spark.sql.connector.expressions.NamedReference,
-          org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-        ndv.foreach { case (c, n) =>
-          m.put(org.apache.spark.sql.connector.expressions.Expressions.column(c),
-            new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
-              override def distinctCount(): java.util.OptionalLong =
-                java.util.OptionalLong.of(n)
-            })
-        }
-        m
-      }
-    }
-  }
-
-  /** The filtered + pruned snapshot frame this scan executes. Exposed so
-    * plan audits can assert that pushed predicates reach the underlying
-    * parquet scan as PartitionFilters/PushedFilters (the V1 shim node
-    * hides the inner plan from the outer executedPlan string). */
-  def scanFrame: DataFrame =
-    GraftFilters.scan(snapshot, filters.toIndexedSeq, required.fieldNames.toIndexedSeq)
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = required
-      override def buildScan(): RDD[Row] = scanFrame.rdd
-    }.asInstanceOf[T]
-}
-
-/** Post-pushdown, V2ScanRelationPushDown wraps every V1Scan in
-  * `V1ScanWrapper` — which does NOT implement
-  * SupportsReportStatistics, so the scan relation's `computeStats`
-  * falls back to `spark.sql.defaultSizeInBytes` (8 EiB) and every
-  * statistic the shim reports (post-pruning bytes and rows, ANALYZE
-  * distinct counts) vanishes from join planning. This subclass puts
-  * them back by unwrapping to the shim. A `copy()` degrades to the
-  * base class: a rule copying the node loses stats precision, never
-  * correctness. */
-final class GraftStatsScanRelation(
-    relation0: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation,
-    scan0: Scan,
-    output0: scala.collection.immutable.Seq[
-      org.apache.spark.sql.catalyst.expressions.AttributeReference],
-    kgp0: Option[scala.collection.immutable.Seq[
-      org.apache.spark.sql.catalyst.expressions.Expression]],
-    ordering0: Option[scala.collection.immutable.Seq[
-      org.apache.spark.sql.catalyst.expressions.SortOrder]])
-    extends org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation(
-      relation0, scan0, output0, kgp0, ordering0) {
-
-  override def computeStats(): org.apache.spark.sql.catalyst.plans.logical.Statistics =
-    scan match {
-      case w: org.apache.spark.sql.execution.datasources.v2.V1ScanWrapper =>
-        w.v1Scan match {
-          case s: org.apache.spark.sql.connector.read.SupportsReportStatistics =>
-            org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-              .transformV2Stats(s.estimateStatistics(), None,
-                conf.defaultSizeInBytes, output)
-          case _ => super.computeStats()
-        }
-      case _ => super.computeStats()
-    }
-
-  // TreeNode.transform keeps the ORIGINAL node whenever the rewritten
-  // one is ==-equal (fastEquals), and the inherited case-class equality
-  // compares fields only — so without these overrides the stats rule's
-  // replacement would be silently discarded. Symmetric: a stats node
-  // never equals a plain one, in either direction.
-  override def canEqual(other: Any): Boolean =
-    other.isInstanceOf[GraftStatsScanRelation]
-  override def equals(other: Any): Boolean = other match {
-    case o: GraftStatsScanRelation => super.equals(o)
-    case _ => false
-  }
-}
-
-/** Optimizer rule for the "User Provided Optimizers" batch (the only
-  * extension point AFTER early scan pushdown — which creates the V1
-  * wrapper — and before physical planning's JoinSelection): swap graft
-  * scan relations whose stats were swallowed by the wrapper for
-  * [[GraftStatsScanRelation]], so the join-strategy decision sees the
-  * manifest's pruned-size/row/NDV estimates. CBO's join REORDER batch
-  * runs earlier and is not reached — build-side choice is. */
-final class GraftScanStatsRule
-    extends org.apache.spark.sql.catalyst.rules.Rule[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-  import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, V1ScanWrapper}
-
-  override def apply(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    plan.transform {
-      case r: DataSourceV2ScanRelation if !r.isInstanceOf[GraftStatsScanRelation] =>
-        r.scan match {
-          case w: V1ScanWrapper if w.v1Scan.isInstanceOf[GraftV1ScanShim] =>
-            new GraftStatsScanRelation(r.relation, r.scan, r.output,
-              r.keyGroupedPartitioning, r.ordering)
-          case _ => r
-        }
-    }
-}
-
-object GraftScanStatsRule {
-  /** Idempotently append the rule to `session.experimental
-    * .extraOptimizations` (read fresh by the optimizer on every run,
-    * so registration any time before the first optimization sticks). */
-  def register(session: SparkSession): Unit = session.synchronized {
-    val cur = session.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[GraftScanStatsRule]))
-      session.experimental.extraOptimizations = cur :+ new GraftScanStatsRule
   }
 }

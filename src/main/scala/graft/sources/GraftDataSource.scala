@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SQLContext}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SQLContext}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -20,10 +19,11 @@ import graft.table.GraftTable
   *   spark.sql(s"CREATE TABLE t USING graft LOCATION '$path'")
   * }}}
   *
-  * Reads delegate to the manifest-resolved parquet scan, so column
-  * pruning reaches the parquet reader; supported filters are translated
-  * onto the scan (and re-applied by Spark above — translation is a
-  * performance hint, never a correctness dependency). Writes map
+  * Reads (`USING graft` tables, time travel, `readChangeFeed`,
+  * `withRowIds` included) need the graft session extensions: their
+  * scan-less [[GraftRelation]] resolves ([[GraftReadRule]]) to the
+  * pinned version's columnar scan, the plan `GraftTable.read()` builds.
+  * Writes need no extension: they map
   * SaveMode onto the manifest commit (logical overwrite / append with
   * schema enforcement).
   */
@@ -37,43 +37,41 @@ final class GraftDataSource extends RelationProvider
     parameters.getOrElse("path", throw new IllegalArgumentException(
       "graft source requires a path (load(path) or OPTIONS (path ...))"))
 
+  /** The read form: [[GraftReadRule]] is the only read path. */
   override def createRelation(sqlContext: SQLContext,
       parameters: Map[String, String]): BaseRelation = {
+    GraftReadRule.require(sqlContext.sparkSession, s"graft table ${pathOf(parameters)}")
+    relation(sqlContext, parameters)
+  }
+
+  private def relation(sqlContext: SQLContext,
+      parameters: Map[String, String]): GraftRelation = {
     val path = pathOf(parameters)
+    val t = GraftTable(sqlContext.sparkSession, path)
     // batch change-feed read (Delta's readChangeFeed batch option):
     // rows changed between two committed versions, cost ∝ changed files
     if (parameters.get("readChangeFeed").exists(_.toBoolean)) {
-      val t = GraftTable(sqlContext.sparkSession, path)
       val from = parameters.get("startingVersion").map(_.toLong).getOrElse(0L)
       val to = parameters.get("endingVersion").map(_.toLong)
         .getOrElse(t.currentVersion)
-      return GraftChangesRelation(sqlContext, path, from, to)
-    }
-    // withRowIds (row tracking): serve the snapshot with the stable
-    // `_row_id` column attached (file base + row position)
-    if (parameters.get("withRowIds").exists(_.toBoolean)) {
-      val ctx = sqlContext
-      val t = GraftTable(ctx.sparkSession, path)
-      val v = parameters.get("versionAsOf").map(_.toLong)
-        .getOrElse(t.currentVersion)
-      val frame = t.readWithRowIds(v)
-      return new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = ctx
-        override def schema: StructType = frame.schema
-        override def buildScan(): RDD[Row] = frame.rdd
-      }
+      return GraftRelation(sqlContext, path, () => t.changes(from, to))
     }
     // timestampAsOf (ISO-8601 instant or epoch millis) resolves to the
     // latest version committed at or before it — Delta's TIMESTAMP AS OF
     val byTime = parameters.get("timestampAsOf").map { ts =>
       val ms = scala.util.Try(ts.toLong).getOrElse(
         java.time.Instant.parse(ts).toEpochMilli)
-      GraftTable(sqlContext.sparkSession, path).versionAtTime(ms)
+      t.versionAtTime(ms)
     }
     require(byTime.isEmpty || !parameters.contains("versionAsOf"),
       "specify either versionAsOf or timestampAsOf, not both")
-    GraftRelation(sqlContext, path,
-      byTime.orElse(parameters.get("versionAsOf").map(_.toLong)))
+    val v = byTime.orElse(parameters.get("versionAsOf").map(_.toLong))
+      .getOrElse(t.currentVersion)
+    // withRowIds (row tracking): the snapshot with the stable `_row_id`
+    // column attached (file base + row position)
+    if (parameters.get("withRowIds").exists(_.toBoolean))
+      GraftRelation(sqlContext, path, () => t.readWithRowIds(v))
+    else GraftRelation(sqlContext, path, () => t.readVersion(v))
   }
 
   // ---- streaming read: readStream.format("graft").load(path) -----------
@@ -200,7 +198,7 @@ final class GraftDataSource extends RelationProvider
           replaceWhere = replaceWhere,
           dynamicPartitionOverwrite = dynamic)
     }
-    createRelation(sqlContext, parameters)
+    relation(sqlContext, parameters)
   }
 }
 
@@ -581,64 +579,21 @@ final class GraftStreamSink(path: String, partitionColumns: Seq[String],
   override def toString: String = s"GraftStreamSink[$path]"
 }
 
+/** What `format("graft")` and `USING graft` resolve to: a relation with
+  * no scan of its own. [[GraftReadRule]] replaces it with the plan of
+  * `read()`, the pinned frame (a version, its change feed, or its rows
+  * with row ids); the version is pinned when the relation is made, so
+  * schema and rows come from one committed version. */
 final case class GraftRelation(sqlContext: SQLContext, path: String,
-    versionAsOf: Option[Long]) extends BaseRelation with PrunedFilteredScan {
-
-  // snapshot pinned ONCE at relation creation: schema and every
-  // buildScan serve the same committed version, so a concurrent write
-  // or schema evolution between planning and execution can't make scan
-  // rows diverge from the relation's advertised schema
-  private val pinnedVersion: Long = {
-    val t = GraftTable(sqlContext.sparkSession, path)
-    versionAsOf.getOrElse(t.currentVersion)
-  }
-  private val snapshot: DataFrame =
-    GraftTable(sqlContext.sparkSession, path).readVersion(pinnedVersion)
-
-  override val schema: StructType = snapshot.schema
-
-  /** Manifest-summed live bytes of the pinned version (commit-log
-    * sizes, no per-file RPCs) — without this, `BaseRelation` defaults
-    * to `spark.sql.defaultSizeInBytes` (≈Long.Max) and a kilobyte-sized
-    * graft dimension table never qualifies for auto-broadcast. */
-  override lazy val sizeInBytes: Long =
-    GraftTable(sqlContext.sparkSession, path).sizeInBytes(pinnedVersion)
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] =
-    GraftFilters.scan(snapshot, filters.toIndexedSeq, requiredColumns.toIndexedSeq).rdd
+    read: () => DataFrame) extends BaseRelation {
+  override lazy val schema: StructType = read().schema
 }
 
-/** Batch change-feed relation (`readChangeFeed=true` +
-  * `startingVersion`/`endingVersion`): serves
-  * [[GraftTable.changes]] between the two pinned versions — the four
-  * Delta change types (`insert`, `delete`, `update_preimage`,
-  * `update_postimage`; UPDATE/MERGE commits record CDC sidecars). Cost
-  * scales with the files that CHANGED between the versions, never the
-  * whole table. */
-final case class GraftChangesRelation(sqlContext: SQLContext, path: String,
-    from: Long, to: Long) extends BaseRelation with TableScan {
-  private def changes: DataFrame =
-    GraftTable(sqlContext.sparkSession, path).changes(from, to)
-  override val schema: StructType = changes.schema
-  override def buildScan(): RDD[Row] = changes.rdd
-}
-
-/** Best-effort translation of source filters into Column predicates so
-  * they push into the parquet scan; untranslated filters return None
-  * (Spark re-applies everything above the scan regardless). Shared by
-  * the DSv1 relation and the DSv2 scan shim. */
+/** Source filters as Column predicates (None when a filter does not
+  * translate) and as SQL text: the bridges from the catalog table's
+  * SQL DELETE and static-partition INSERT OVERWRITE to the table's
+  * commits. */
 private[sources] object GraftFilters {
-  /** The rows of a relation's pinned snapshot `frame` under the pushed
-    * `filters`, projected to `required` (one constant `__one` column when
-    * no column is required). The translated filters reach the frame's
-    * parquet scan, where the table's file index skips files by them. */
-  def scan(frame: DataFrame, filters: Seq[Filter], required: Seq[String]): DataFrame = {
-    val filtered = filters.flatMap(translate).foldLeft(frame)(_.filter(_))
-    if (required.isEmpty) filtered.select(lit(1).as("__one"))
-    else filtered.select(required.map(col): _*)
-  }
-
   def translate(f: Filter): Option[Column] = f match {
     case EqualTo(a, v) => Some(col(a) === lit(v))
     case GreaterThan(a, v) => Some(col(a) > lit(v))

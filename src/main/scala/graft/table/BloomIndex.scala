@@ -3,7 +3,7 @@ package graft.table
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -156,7 +156,10 @@ object BloomIndex {
   }
 
   /** Build missing sidecars for `files` (manifest keys) over PHYSICAL
-    * columns `physCols`; `absOf` resolves a key to its absolute path.
+    * columns `physCols`; `read` scans a batch of them under the logged
+    * schema, `absOf` resolves a key to its absolute path, and a file is
+    * indexed only over the columns it `carries` by its logged stats (one
+    * written before ADD COLUMN gets no filter for the new column).
     * Returns the number of sidecars written. Each round is one
     * distributed aggregation over a driver-budgeted slice of the files
     * (partial aggregation keeps the shuffle at bloom-size × tasks, not
@@ -164,9 +167,9 @@ object BloomIndex {
     * files × filter-size — a whole-table backfill must not OOM the
     * driver). Sidecars land per round, so an interrupted backfill
     * resumes where it stopped (existing sidecars are skipped). */
-  private[table] def build(spark: SparkSession, fs: FileSystem, logDir: Path,
-      files: Seq[String], absOf: String => Path, physCols: Seq[String],
-      rowsHint: Map[String, Long], props: Map[String, String]): Int = {
+  private[table] def build(read: Seq[String] => DataFrame, fs: FileSystem, logDir: Path,
+      files: Seq[String], absOf: String => Path, carries: String => Set[String],
+      physCols: Seq[String], rowsHint: Map[String, Long], props: Map[String, String]): Int = {
     val todo = files.filterNot(f => fs.exists(indexPath(logDir, f)))
     if (todo.isEmpty || physCols.isEmpty) return 0
     val fpp = props.get(FppProp).map(_.toDouble).getOrElse(DefaultFpp)
@@ -185,12 +188,11 @@ object BloomIndex {
     val perFileBytes = physCols.size.toLong * (numBits / 8 + 64)
     var written = 0
     buildBatches(todo, perFileBytes, budget).foreach { batch =>
-      val df = spark.read.parquet(batch.map(f => absOf(f).toString): _*)
-      // only atomic columns present in these files are indexable; a file
-      // written before ADD COLUMN simply has no filter for the new column
-      // (reads align the column in as NULL, which `=` never matches)
+      val df = read(batch)
+      // only atomic columns some file of the batch carries are indexable
       val schema = df.schema
-      val indexable = physCols.filter(c => schema.fields.exists { f =>
+      val present = batch.flatMap(carries).toSet
+      val indexable = physCols.filter(c => present(c) && schema.fields.exists { f =>
         import org.apache.spark.sql.types._
         f.name == c && (f.dataType match {
           case _: StructType | _: ArrayType | _: MapType | _: BinaryType |
@@ -205,8 +207,9 @@ object BloomIndex {
         val byPath = batch.map(f => absOf(f).toUri.getPath -> f).toMap
         rows.foreach { r =>
           byPath.get(new Path(r.getString(0)).toUri.getPath).foreach { fileKey =>
+            val has = carries(fileKey)
             val blooms = indexable.zipWithIndex.flatMap { case (c, i) =>
-              Option(r.get(i + 1)).map(b => c -> b.asInstanceOf[Array[Byte]])
+              Option(r.get(i + 1)).filter(_ => has(c)).map(b => c -> b.asInstanceOf[Array[Byte]])
             }
             if (blooms.nonEmpty) {
               try {

@@ -310,7 +310,12 @@ final class GraftTable private (
       if (!bloomsBuilt) {
         bloomsBuilt = true
         if (BloomIndex.declaredColumns(props).nonEmpty)
-          try buildBloomsFor(adds, props, cmap, stats)
+          try {
+            val sizes = written.map(w => w.path -> w.size).toMap
+            val schema = meta.schema.getOrElse(new StructType())
+            buildBloomsFor(adds, props, cmap, stats, schema, batch => filesScan(schema, batch, sizes,
+              batch.headOption.map(GraftTable.partitionValues(_).map(_._1)).getOrElse(Nil)))
+          }
           catch { case scala.util.control.NonFatal(e) =>
             org.slf4j.LoggerFactory.getLogger(getClass)
               .warn(s"bloom index build skipped for $v: ${e.getMessage}") }
@@ -920,13 +925,19 @@ final class GraftTable private (
     val kept = dataSkippedFiles(version, filters)
     val bytes = kept.iterator.map(f =>
       snap.sizes.getOrElse(f, fs.getFileStatus(dataPath(f)).getLen)).sum
-    val perFile = kept.map(f =>
+    (bytes, liveRows(version, kept))
+  }
+
+  /** Rows of `files` at `version`: footer counts minus deletion-vector
+    * cardinality, None when a file logged no count. */
+  private[graft] def liveRows(version: Long, files: Seq[String]): Option[Long] = {
+    val snap = snapshotAt(version)
+    val perFile = files.map(f =>
       snap.stats.get(f).flatMap(_.get("")).collect { case ("rows", lo, _) =>
         math.max(0L, lo.toLong -
           snap.dv.getOrElse(f, Nil).iterator.map(_._2).sum)
       })
-    val rows = if (perFile.forall(_.isDefined)) Some(perFile.flatten.sum) else None
-    (bytes, rows)
+    if (perFile.forall(_.isDefined)) Some(perFile.flatten.sum) else None
   }
 
   /** Per-partition-value row counts for a metadata-only
@@ -1043,7 +1054,9 @@ final class GraftTable private (
     val logical = BloomIndex.declaredColumns(props)
     require(logical.nonEmpty,
       s"set TBLPROPERTIES('${BloomIndex.ColumnsProp}'='col,…') before building")
-    buildBloomsFor(manifestFiles(), props, colMap, statsOf(currentVersion))
+    val v = currentVersion
+    buildBloomsFor(manifestFiles(v), props, colMapOf(v), statsOf(v), physicalSchemaAt(v),
+      batch => scan(v, batch, Map.empty))
   }
 
   /** ANALYZE: record per-file approx-distinct (HLL) sketches for
@@ -1054,11 +1067,12 @@ final class GraftTable private (
     * The sketch job runs in driver-budgeted batches like the bloom
     * backfill. Returns the committed version. */
   def analyzeColumns(cols: Seq[String] = Nil): Long = {
-    require(currentVersion >= 0, "nothing to analyze: empty table")
-    val files = manifestFiles()
+    val v = currentVersion
+    require(v >= 0, "nothing to analyze: empty table")
+    val files = manifestFiles(v)
     require(files.nonEmpty, "nothing to analyze: no live files")
-    val schema = read().schema
-    val cm = colMap
+    val schema = readVersion(v).schema
+    val cm = colMapOf(v)
     val physOf: Map[String, String] =
       if (cm.isIdentity) schema.fieldNames.map(c => c -> c).toMap
       else cm.entries.toMap
@@ -1075,7 +1089,8 @@ final class GraftTable private (
     }
     require(physCols.nonEmpty,
       s"no analyzable columns among ${chosen.map(_.name).mkString(", ")}")
-    val entries = NdvStats.sketchFiles(spark, files, dataPath, physCols)
+    val entries = NdvStats.sketchFiles(batch => scan(v, batch, Map.empty),
+      files, dataPath, carriedColumns(physicalSchemaAt(v), statsOf(v)), physCols)
     commitRewrite("ANALYZE", Nil, Nil, Map(
       "analyzedColumns" -> chosen.map(_.name).sorted.mkString(","),
       "numFiles" -> entries.size.toString),
@@ -1087,32 +1102,45 @@ final class GraftTable private (
       })
   }
 
-  /** Pruning-aware approx distinct counts (logical column → NDV) at
-    * `version`: the union of the surviving files' ANALYZE sketches.
-    * Columns not sketched in EVERY surviving file are omitted — a
+  /** Approx distinct counts (logical column → NDV) of `files` of
+    * `version` (default: all its live files): the union of their
+    * ANALYZE sketches. Columns not sketched in EVERY file are omitted — a
     * partial union under-claims NDV, which over-claims join
     * selectivity, the direction that mis-plans. */
   def columnNdv(version: Long = currentVersion,
-      filters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
-      : Map[String, Long] = {
+      files: Option[Seq[String]] = None): Map[String, Long] = {
     if (version < 0) return Map.empty
     val snap = snapshotAt(version)
-    if (snap.files.isEmpty) return Map.empty
-    val kept =
-      if (filters.isEmpty) snap.files else dataSkippedFiles(version, filters)
     val cm = colMapOf(version)
     val logicalOf: String => Option[String] =
       if (cm.isIdentity) Some(_)
       else cm.entries.map(_.swap).toMap.get _
-    NdvStats.cachedUnion(rootKey, version, kept, snap.stats, logicalOf)
+    NdvStats.cachedUnion(rootKey, version, files.getOrElse(snap.files), snap.stats, logicalOf)
+  }
+
+  /** The physical columns of `schema` a file carries, as its `stats`
+    * tell: those they name, plus those of types footer stats may not
+    * describe (boolean, binary, floating, timestamp, wide decimal). */
+  private def carriedColumns(schema: StructType,
+      stats: Map[String, Map[String, (String, String, String)]]): String => Set[String] = {
+    import org.apache.spark.sql.types._
+    val (described, other) = schema.fields.map(_.name).toSet.partition(c =>
+      schema(c).dataType match {
+        case ByteType | ShortType | IntegerType | LongType | DateType | StringType => true
+        case d: DecimalType => d.precision <= 18
+        case _ => false
+      })
+    f => stats.get(f).filter(_.nonEmpty).fold(described ++ other)(_.keySet ++ other)
   }
 
   /** Index `files` over the declared bloom columns; no-op when the
-    * property is unset. Row-count hints ride the file stats'
-    * reserved pseudo-column so filter sizing needs no extra I/O. */
+    * property is unset. `read` scans a batch of them under the logged
+    * physical `schema`. Row-count hints ride the file stats' reserved
+    * pseudo-column so filter sizing needs no extra I/O. */
   private def buildBloomsFor(files: Seq[String], props: Map[String, String],
       cm: ColMap,
-      stats: Map[String, Map[String, (String, String, String)]]): Int = {
+      stats: Map[String, Map[String, (String, String, String)]],
+      schema: StructType, read: Seq[String] => DataFrame): Int = {
     val logical = BloomIndex.declaredColumns(props)
     if (logical.isEmpty || files.isEmpty) return 0
     val physOf = if (cm.isIdentity) logical.map(c => c -> c).toMap
@@ -1121,8 +1149,8 @@ final class GraftTable private (
     val rowsHint = stats.flatMap { case (f, cols) =>
       cols.get("").collect { case ("rows", lo, _) => f -> lo.toLong }
     }
-    val n = BloomIndex.build(spark, fs, logDir, files, dataPath, phys,
-      rowsHint, props)
+    val n = BloomIndex.build(read, fs, logDir, files, dataPath,
+      carriedColumns(schema, stats), phys, rowsHint, props)
     // cached NEGATIVE lookups (probed before the sidecar existed) must
     // not mask the fresh filters
     if (n > 0) BloomIndex.invalidate(rootKey)
@@ -1977,7 +2005,7 @@ final class GraftTable private (
         physicalSchemaAt(version).isEmpty))
       throw new IllegalStateException(
         s"graft table at $path has no committed version $version")
-    toLogical(scan(version, files, dvOf(version)), colMapOf(version))
+    toLogical(scan(version, files, dvOf(version), pinned = true), colMapOf(version))
   }
 
   /** Snapshot read surfacing each row's stable `_row_id`
@@ -1994,8 +2022,8 @@ final class GraftTable private (
     val baseRows = RowTracking.bases(statsOf(version)).toSeq
       .map { case (f, b) => (dataPath(f).toUri.getPath, b) }
     import spark.implicits._
-    toLogical(scan(version, manifestFiles(version), dvOf(version), withMeta = true),
-        colMapOf(version))
+    toLogical(scan(version, manifestFiles(version), dvOf(version), withMeta = true,
+        pinned = true), colMapOf(version))
       .join(broadcast(baseRows.toDF("__path", "__base")), Seq("__path"), "left")
       .withColumn("_row_id",
         when(col("__base").isNotNull, col("__base") + col("__pos"))
@@ -2488,30 +2516,20 @@ final class GraftTable private (
     * codegen'd [[DvDeleted]] predicate over `_metadata` (no join, whatever
     * the vector size; see [[DeletionVectors]]). `withMeta` keeps `__path`
     * (the file's filesystem path, scheme stripped) and `__pos` (its
-    * `_metadata.row_index`) on every row. Physical column names. */
+    * `_metadata.row_index`) on every row. `pinned` marks a scan of the
+    * whole version under its own vectors (see [[GraftFileIndex]]).
+    * Physical column names. */
   private def scan(version: Long, files: Seq[String],
-      dv: Map[String, Seq[(Long, Long)]], withMeta: Boolean = false): DataFrame = {
-    val schema = physicalSchemaAt(version)
-    val layout = files.headOption.map(GraftTable.partitionValues(_).map(_._1))
-      .getOrElse(layoutPartitionColumns(version))
-    val partSchema = StructType(layout.flatMap(c => schema.find(_.name == c)))
-    val partCols = partSchema.fieldNames.toSeq
+      dv: Map[String, Seq[(Long, Long)]], withMeta: Boolean = false,
+      pinned: Boolean = false): DataFrame = {
     val sizes = snapshotAt(version).sizes
-    val entries = files.map { f =>
-      val vals = GraftTable.partitionValues(f).toMap
-      GraftFileIndex.Entry(fs.makeQualified(dataPath(f)),
-        sizes.getOrElse(f, fs.getFileStatus(dataPath(f)).getLen),
-        partCols.map(c => vals.get(c).flatten))
-    }
     val skipping = skippingAt(version)
-    lazy val keyOf = entries.iterator.map(_.path).zip(files).toMap
-    val index = new GraftFileIndex(entries, partSchema,
-      spark.sessionState.conf.sessionLocalTimeZone, { filters =>
-        val survivors = skipping.kept(skipping.augment(skipping.logical(filters)), files).toSet
-        p => keyOf.get(p).forall(survivors)
-      })
-    val all = GraftFileIndex.scan(spark, index,
-      StructType(schema.filterNot(f => partCols.contains(f.name))))
+    val all = filesScan(physicalSchemaAt(version), files,
+      f => sizes.getOrElse(f, fs.getFileStatus(dataPath(f)).getLen),
+      files.headOption.map(GraftTable.partitionValues(_).map(_._1))
+        .getOrElse(layoutPartitionColumns(version)),
+      filters => skipping.kept(skipping.augment(skipping.logical(filters)), files).toSet,
+      if (pinned) Some(GraftFileIndex.Snapshot(path, version)) else None)
     lazy val live = files.toSet
     val runs = dv.collect {
       case (f, rs) if rs.nonEmpty && live(f) => dataPath(f).toUri.getPath -> rs
@@ -2525,6 +2543,26 @@ final class GraftTable private (
       else meta.filter(!DeletionVectors.deletedColumn(spark, runs,
         col("__path"), col("__pos")))
     if (withMeta) kept else kept.drop("__path", "__pos")
+  }
+
+  /** `files` (log keys) read under physical `schema` through a
+    * [[GraftFileIndex]]: `sizeOf` gives each file's byte size, its hive
+    * path its values of the `layout` partition columns, and `skip` the
+    * files that may hold rows under a scan's filters. */
+  private def filesScan(schema: StructType, files: Seq[String], sizeOf: String => Long,
+      layout: Seq[String],
+      skip: Seq[org.apache.spark.sql.sources.Filter] => String => Boolean = _ => _ => true,
+      snapshot: Option[GraftFileIndex.Snapshot] = None): DataFrame = {
+    val partSchema = StructType(layout.flatMap(c => schema.find(_.name == c)))
+    val partCols = partSchema.fieldNames.toSeq
+    val entries = files.map { f =>
+      val vals = GraftTable.partitionValues(f).toMap
+      GraftFileIndex.Entry(f, fs.makeQualified(dataPath(f)), sizeOf(f),
+        partCols.map(c => vals.get(c).flatten))
+    }
+    val index = new GraftFileIndex(entries, partSchema,
+      spark.sessionState.conf.sessionLocalTimeZone, skip, snapshot)
+    GraftFileIndex.scan(spark, index, StructType(schema.filterNot(f => partCols.contains(f.name))))
   }
 
   /** Manifest files holding at least one LIVE row for which `cond`
@@ -3246,9 +3284,13 @@ final class GraftTable private (
   private def versionChanges(v: Long, cmTo: ColMap): Option[DataFrame] = {
     commitInfo(v).flatMap(_.metrics.get("cdc")).foreach { id =>
       val dir = cdcPath(id)
-      if (fs.exists(dir) &&
-          fs.listStatus(dir).exists(_.getPath.getName.endsWith(".parquet"))) {
-        val df = spark.read.parquet(dir.toString)
+      val parts = if (!fs.exists(dir)) Nil
+        else fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+      if (parts.nonEmpty) {
+        // the sidecar holds v's physical columns plus the change type
+        val files = parts.map(s => s.getPath.toUri.getPath -> s.getLen)
+        val df = filesScan(physicalSchemaAt(v).add("_change_type", "string"),
+          files.map(_._1), files.toMap, Nil)
         return Some(
           if (cmTo.isIdentity) df
           else {

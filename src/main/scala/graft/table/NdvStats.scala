@@ -1,7 +1,7 @@
 package graft.table
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -52,20 +52,22 @@ object NdvStats {
     }
 
   /** Per-file sketch entries for `files` over physical columns
-    * `physCols` (name → normalizer): batched aggregation rounds bound
-    * the driver collect exactly like the bloom backfill — a whole-table
-    * ANALYZE is many bounded jobs, never one files × sketch-size
-    * collect. */
-  private[table] def sketchFiles(spark: SparkSession, files: Seq[String],
-      absOf: String => Path, physCols: Seq[(String, Column => Column)])
+    * `physCols` (name → normalizer), each file over the columns it
+    * `carries`; `read` scans a batch under the logged schema. Batched
+    * aggregation rounds bound the driver collect exactly like the bloom
+    * backfill — a whole-table ANALYZE is many bounded jobs, never one
+    * files × sketch-size collect. */
+  private[table] def sketchFiles(read: Seq[String] => DataFrame, files: Seq[String],
+      absOf: String => Path, carries: String => Set[String],
+      physCols: Seq[(String, Column => Column)])
       : Map[String, Map[String, (String, String, String)]] = {
     if (files.isEmpty || physCols.isEmpty) return Map.empty
     val perFileBytes = physCols.size.toLong * (4L << LgK)
     val b64 = java.util.Base64.getEncoder
     val out = Map.newBuilder[String, Map[String, (String, String, String)]]
     BloomIndex.buildBatches(files, perFileBytes, 256L << 20).foreach { batch =>
-      val df = spark.read.parquet(batch.map(f => absOf(f).toString): _*)
-      val present = df.schema.fieldNames.toSet
+      val df = read(batch)
+      val present = batch.flatMap(carries).toSet
       val cols = physCols.filter(p => present(p._1))
       if (cols.nonEmpty) {
         val aggs = cols.map { case (c, norm) =>
@@ -75,8 +77,9 @@ object NdvStats {
         val byPath = batch.map(f => absOf(f).toUri.getPath -> f).toMap
         rows.foreach { r =>
           byPath.get(new Path(r.getString(0)).toUri.getPath).foreach { fk =>
+            val has = carries(fk)
             val entries = cols.zipWithIndex.flatMap { case ((c, _), i) =>
-              Option(r.get(i + 1)).map { v =>
+              Option(r.get(i + 1)).filter(_ => has(c)).map { v =>
                 val arr = v.asInstanceOf[Array[Byte]]
                 val est = org.apache.datasketches.hll.HllSketch.heapify(arr)
                   .getEstimate.round

@@ -19,6 +19,11 @@ import org.apache.spark.sql.types.StructType
   * on them; it then skips the files `skip` rules out for the scan's
   * filters, translated to source filters over the scan's column names.
   *
+  * `snapshot` names the table version when the index lists all of its
+  * live files under its deletion vectors (a `readVersion` scan): only
+  * such a scan gets the log's statistics and metadata answers
+  * ([[graft.sources.GraftPrepareScan]], [[graft.sources.GraftMetadataAggRule]]).
+  *
   * Two indexes over the same files and partition schema are equal, so a
   * plan reading one snapshot twice still reuses exchanges and caches;
   * `skip` only drops files no row of the scan can come from, so it
@@ -28,7 +33,8 @@ final class GraftFileIndex(
     val files: Seq[GraftFileIndex.Entry],
     partitionColumns: StructType,
     timeZoneId: String,
-    skip: Seq[Filter] => Path => Boolean) extends FileIndex {
+    skip: Seq[Filter] => String => Boolean,
+    val snapshot: Option[GraftFileIndex.Snapshot] = None) extends FileIndex {
 
   /** File columns are always nullable, as in every Spark file source. */
   override val partitionSchema: StructType = partitionColumns.asNullable
@@ -76,8 +82,17 @@ final class GraftFileIndex(
       .flatMap(DataSourceStrategy.translateFilter(_, supportNestedPredicatePushdown = false))
     if (proofs.isEmpty) return dirs
     val kept = skip(proofs)
-    dirs.map(d => d.copy(files = d.files.filter(f => kept(f.getPath))))
+    dirs.map(d => d.copy(files = d.files.filter(f => kept(keyOf(f.getPath)))))
       .filter(_.files.nonEmpty)
+  }
+
+  private lazy val keyOf = files.iterator.map(e => e.path -> e.key).toMap
+
+  /** The files a scan under `filters` reads, as an index whose
+    * `sizeInBytes` is their bytes. It names no snapshot. */
+  def prunedBy(filters: Seq[Expression]): GraftFileIndex = {
+    val kept = listFiles(filters, Nil).flatMap(_.files.map(_.getPath)).toSet
+    new GraftFileIndex(files.filter(e => kept(e.path)), partitionColumns, timeZoneId, skip)
   }
 
   override def equals(other: Any): Boolean = other match {
@@ -90,9 +105,13 @@ final class GraftFileIndex(
 
 object GraftFileIndex {
 
-  /** One table file: qualified path, logged byte size, and the raw
-    * (unescaped) value of each partition column, None for null. */
-  final case class Entry(path: Path, size: Long, partitionValues: Seq[Option[String]])
+  /** One table file: its log key, qualified path, logged byte size, and
+    * the raw (unescaped) value of each partition column, None for null. */
+  final case class Entry(key: String, path: Path, size: Long,
+      partitionValues: Seq[Option[String]])
+
+  /** Version `version` of the table at `path`. */
+  final case class Snapshot(path: String, version: Long)
 
   /** A parquet scan of `index`'s files read under `dataSchema` plus the
     * index's partition columns — the schema is given, never inferred. */

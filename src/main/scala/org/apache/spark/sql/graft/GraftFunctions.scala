@@ -78,8 +78,11 @@ object GraftFunctions {
 /** Builder-time injection: `SparkSession.builder().withExtensions(new
   * GraftExtensions)` (or `spark.sql.extensions=
   * org.apache.spark.sql.graft.GraftExtensions`) makes the functions
-  * available in every session and enables SQL UPDATE / MERGE INTO on
-  * graft tables (see [[GraftDmlRule]]). */
+  * available in every session, enables SQL UPDATE / MERGE INTO on
+  * graft tables (see [[GraftDmlRule]]) and plans SQL, catalog, `USING
+  * graft` and `format("graft")` reads, as Delta's extension does: see
+  * [[graft.sources.GraftReadRule]], [[graft.sources.GraftMetadataAggRule]]
+  * and [[graft.sources.GraftPrepareScan]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, builder, usage) =>
@@ -88,19 +91,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", null, name, usage, ""),
         builder))
     }
-    e.injectPostHocResolutionRule { session =>
-      // restore scan statistics swallowed by the V1Scan wrapper so join
-      // strategy sees pruned bytes, rows, and ANALYZE column NDV. The
-      // rule must run AFTER "Early Filter and Projection Push-Down"
-      // (which creates the wrapper) and before physical planning's
-      // JoinSelection — of the extension points only the "User Provided
-      // Optimizers" batch (experimental.extraOptimizations) is there;
-      // injectOptimizerRule lands pre-pushdown and injectPreCBORule even
-      // earlier. Registered once per session, piggybacking this
-      // build-time hook.
-      graft.sources.GraftScanStatsRule.register(session)
-      new GraftDmlRule(session)
-    }
+    // reads first: a MERGE's source resolves to its scan before the DML
+    // rule turns the statement into a command
+    e.injectPostHocResolutionRule(_ => new graft.sources.GraftReadRule)
+    e.injectPostHocResolutionRule(session => new GraftDmlRule(session))
+    e.injectPreCBORule(session => new graft.sources.GraftMetadataAggRule(session))
+    e.injectPreCBORule(session => new graft.sources.GraftPrepareScan(session))
+    e.injectPlannerStrategy(_ => graft.sources.GraftMetadataAggStrategy)
     e.injectParser((_, delegate) => new GraftSqlParser(delegate))
     // CDF table-valued function: SELECT * FROM table_changes(path, v1[, v2])
     e.injectTableFunction((

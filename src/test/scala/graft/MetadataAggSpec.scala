@@ -38,7 +38,7 @@ class MetadataAggSpec extends SparkSpec {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("GraftMetadataAggScan"),
       s"expected the one-row metadata scan:\n$plan")
-    assert(!plan.contains("GraftV1ScanShim"),
+    assert(!plan.contains("FileScan"),
       s"metadata aggregate must not plan a data scan:\n$plan")
 
     // stays correct across a copy-on-write delete (counts re-fold)
@@ -62,7 +62,7 @@ class MetadataAggSpec extends SparkSpec {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("GraftMetadataAggScan"),
       s"grouped partition count must answer from the manifest:\n$plan")
-    assert(!plan.contains("GraftV1ScanShim"), s"no data scan expected:\n$plan")
+    assert(!plan.contains("FileScan"), s"no data scan expected:\n$plan")
 
     // subset grouping (one of two partition levels): files aggregate
     // across the other level
@@ -101,7 +101,7 @@ class MetadataAggSpec extends SparkSpec {
       s"SELECT volume % 2 AS b, COUNT(*) AS n FROM graft.`$p` " +
         "GROUP BY 1 ORDER BY 1")
     assert(byVol.queryExecution.executedPlan.toString
-      .contains("GraftV1ScanShim"))
+      .contains("FileScan"))
     assert(byVol.collect().toSeq ==
       t.read().groupBy((col("volume") % 2).as("b"))
         .agg(count(lit(1)).as("n")).orderBy("b").collect().toSeq)
@@ -141,7 +141,7 @@ class MetadataAggSpec extends SparkSpec {
     val gmin = spark.sql(
       s"SELECT ticker, MIN(volume) AS m FROM graft.`$p` GROUP BY 1 ORDER BY 1")
     assert(gmin.queryExecution.executedPlan.toString
-      .contains("GraftV1ScanShim"))
+      .contains("FileScan"))
     assert(gmin.collect().toSeq ==
       t.read().groupBy("ticker").agg(min("volume").as("m"))
         .orderBy("ticker").collect().toSeq)
@@ -178,6 +178,6 @@ class MetadataAggSpec extends SparkSpec {
     assert(mm.collect().head.getLong(0) ==
       t.read().agg(min("volume")).collect().head.getLong(0))
     assert(mm.queryExecution.executedPlan.toString
-      .contains("GraftV1ScanShim"), "DV table must scan for MIN")
+      .contains("FileScan"), "DV table must scan for MIN")
   }
 }
