@@ -39,22 +39,25 @@ object BenchScale {
   private def shifted(df: DataFrame, c: Int, keys: String*): DataFrame =
     keys.foldLeft(df)((d, k) => d.withColumn(k, col(k) + lit(c * Shift)))
 
-  /** One transformed copy of every fact table (dims excluded). */
+  /** One transformed copy of every fact table (dims excluded). Copies
+    * read the plain scan, not `Tables.table`: a union of single-partition
+    * children is itself one partition (`spark.sql.unionOutputPartitioning`),
+    * which would serialize the generation ahead of its repartition. */
   private def copyOf(spark: SparkSession, src: String, c: Int)
       : Map[String, DataFrame] = {
-    import graft.tables.Tables.table
+    import graft.tables.Tables.scan
     val (from, to) = caesar(c)
     Map(
-      "customer" -> shifted(table(spark, src, "customer"), c, "c_custkey"),
-      "supplier" -> shifted(table(spark, src, "supplier"), c, "s_suppkey"),
-      "part"     -> shifted(table(spark, src, "part"), c, "p_partkey"),
-      "orders"   -> shifted(table(spark, src, "orders"), c, "o_orderkey", "o_custkey"),
-      "lineitem" -> shifted(table(spark, src, "lineitem"), c,
+      "customer" -> shifted(scan(spark, src, "customer"), c, "c_custkey"),
+      "supplier" -> shifted(scan(spark, src, "supplier"), c, "s_suppkey"),
+      "part"     -> shifted(scan(spark, src, "part"), c, "p_partkey"),
+      "orders"   -> shifted(scan(spark, src, "orders"), c, "o_orderkey", "o_custkey"),
+      "lineitem" -> shifted(scan(spark, src, "lineitem"), c,
         "l_orderkey", "l_partkey", "l_suppkey"),
-      "events"   -> shifted(table(spark, src, "events"), c, "event_id", "user_id"),
-      "documents" -> shifted(table(spark, src, "documents"), c, "doc_id")
+      "events"   -> shifted(scan(spark, src, "events"), c, "event_id", "user_id"),
+      "documents" -> shifted(scan(spark, src, "documents"), c, "doc_id")
         .withColumn("text", translate(col("text"), from, to)),
-      "embeddings" -> shifted(table(spark, src, "embeddings"), c, "vec_id")
+      "embeddings" -> shifted(scan(spark, src, "embeddings"), c, "vec_id")
         .withColumn("embedding",
           // rotate dims by c: norm and within-copy dot products unchanged
           concat(
@@ -110,7 +113,7 @@ object BenchScale {
 
   private def copyOf10(spark: SparkSession, src: String, c: Int)
       : Map[String, DataFrame] = {
-    import graft.tables.Tables.table
+    import graft.tables.Tables.scan
     def caesar10(d: DataFrame): DataFrame =
       if (c == 0) d
       else {
@@ -123,19 +126,19 @@ object BenchScale {
         s"transform(embedding, (x, i) -> " +
           s"IF((($c >> (i % 4)) & 1) = 1, -x, x))"))
     Map(
-      "customer" -> shifted10(table(spark, src, "customer"), c, "c_custkey"),
-      "supplier" -> shifted10(table(spark, src, "supplier"), c, "s_suppkey"),
-      "part"     -> shifted10(table(spark, src, "part"), c, "p_partkey"),
-      "orders"   -> shifted10(table(spark, src, "orders"), c,
+      "customer" -> shifted10(scan(spark, src, "customer"), c, "c_custkey"),
+      "supplier" -> shifted10(scan(spark, src, "supplier"), c, "s_suppkey"),
+      "part"     -> shifted10(scan(spark, src, "part"), c, "p_partkey"),
+      "orders"   -> shifted10(scan(spark, src, "orders"), c,
         "o_orderkey", "o_custkey"),
-      "lineitem" -> shifted10(table(spark, src, "lineitem"), c,
+      "lineitem" -> shifted10(scan(spark, src, "lineitem"), c,
         "l_orderkey", "l_partkey", "l_suppkey"),
-      "events"   -> shifted10(table(spark, src, "events"), c,
+      "events"   -> shifted10(scan(spark, src, "events"), c,
         "event_id", "user_id"),
       "documents" -> caesar10(
-        shifted10(table(spark, src, "documents"), c, "doc_id")),
+        shifted10(scan(spark, src, "documents"), c, "doc_id")),
       "embeddings" -> signFlip(
-        shifted10(table(spark, src, "embeddings"), c, "vec_id")))
+        shifted10(scan(spark, src, "embeddings"), c, "vec_id")))
   }
 
   /** Generate the ×10-of-sf1 dir if absent (marker-gated); the source
@@ -145,7 +148,7 @@ object BenchScale {
     if (marker.exists()) return outDir
     new java.io.File(outDir).mkdirs()
     for (dim <- Seq("region", "nation"))
-      graft.tables.Tables.table(spark, sf1Dir, dim)
+      graft.tables.Tables.scan(spark, sf1Dir, dim)
         .write.mode("overwrite").parquet(s"$outDir/$dim.parquet")
     val copies = (0 until Factor10).map(c => copyOf10(spark, sf1Dir, c))
     for (name <- copies.head.keys) {
@@ -190,7 +193,7 @@ object BenchScale {
     val marker = new java.io.File(outDir, "_GRAFT_SKEW_OK")
     if (marker.exists()) return outDir
     new java.io.File(outDir).mkdirs()
-    val base = graft.tables.Tables.table(spark, srcDir, "documents")
+    val base = graft.tables.Tables.scan(spark, srcDir, "documents")
     val planted = spark.range(SkewCopies)
       .select((col("id") + lit(SkewIdBase)).as("doc_id"),
         lit(SkewTemplate).as("text"), lit("en").as("lang"),
@@ -256,7 +259,7 @@ object BenchScale {
     val marker = new java.io.File(outDir, "_GRAFT_SKEWVEC_OK")
     val want = s"src=$srcDir copies=$SkewVecCopies layout=$SkewVecLayout"
     new java.io.File(outDir).mkdirs()
-    val base = graft.tables.Tables.table(spark, srcDir, "embeddings")
+    val base = graft.tables.Tables.scan(spark, srcDir, "embeddings")
     val template = base.filter(col("vec_id") === 0).drop("vec_id").limit(1)
     val planted = spark.range(SkewVecCopies)
       .crossJoin(broadcast(template))
@@ -275,7 +278,7 @@ object BenchScale {
     if (marker.exists()) return outDir
     new java.io.File(outDir).mkdirs()
     for (dim <- Seq("region", "nation"))
-      graft.tables.Tables.table(spark, srcDir, dim)
+      graft.tables.Tables.scan(spark, srcDir, dim)
         .write.mode("overwrite").parquet(s"$outDir/$dim.parquet")
     val copies = (0 until Factor).map(c => copyOf(spark, srcDir, c))
     for (name <- copies.head.keys) {

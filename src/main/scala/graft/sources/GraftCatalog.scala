@@ -7,8 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -28,7 +27,8 @@ import graft.table.GraftTable
   *    properties to the analyzer;
   *  - SQL DML: `INSERT INTO graft.`/p`` … ` appends and
   *    `INSERT OVERWRITE` logically replaces, through the V1 write shim
-  *    onto the same commit protocol as every other writer.
+  *    onto the same commit protocol as every other writer; `DELETE`,
+  *    `UPDATE` and `MERGE INTO` run as graft commands (`GraftDmlRule`).
   *
   * Reads need the graft session extensions: [[GraftReadRule]] resolves
   * a read of a catalog table (time travel included) to its pinned
@@ -150,17 +150,16 @@ final class GraftCatalog extends TableCatalog {
   * retry all apply identically to SQL and API writers. */
 final case class GraftV2Table(spark: SparkSession, path: String,
     versionAsOf: Option[Long]) extends Table
-    with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete {
+    with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite {
 
   private val table = GraftTable(spark, path)
   private val pinnedVersion: Long = versionAsOf.getOrElse(table.currentVersion)
-  private val pinnedSchema: StructType = frame.schema
+  private val pinned = new PinnedFrame(() => table.readVersion(pinnedVersion))
 
   override def name(): String =
     s"graft.`$path`" + versionAsOf.map(v => s" VERSION AS OF $v").getOrElse("")
 
-  override def schema(): StructType = pinnedSchema
+  override def schema(): StructType = pinned.schema
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
@@ -180,39 +179,14 @@ final case class GraftV2Table(spark: SparkSession, path: String,
       Map("provider" -> "graft", "location" -> path,
         "version" -> pinnedVersion.toString)).asJava
 
-  /** A fresh frame of the pinned version: what [[GraftReadRule]] resolves
-    * a read of this table to. */
-  def frame: DataFrame = table.readVersion(pinnedVersion)
+  /** A frame of the pinned version: what [[GraftReadRule]] resolves a
+    * read of this table to. */
+  def frame(): DataFrame = pinned.next()
 
-  /** Only SQL DELETE plans this scan, for its schema: reads resolve to
-    * [[frame]], so executing it means the session lacks the extensions. */
+  /** Reads resolve to [[frame]] and DELETE to a command, both by the
+    * session extensions: only a session without them plans a scan. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new Scan {
-      override def readSchema(): StructType = schema()
-      override def toBatch: Batch = throw GraftReadRule.missing(name())
-    }
-
-  /** SQL `DELETE FROM graft.\`/p\` WHERE …` — the analyzer hands the
-    * WHERE clause as source filters when it is fully translatable
-    * ([[canDeleteWhere]]); the delete then runs through
-    * [[GraftTable.delete]]'s copy-on-write path with the same
-    * affected-file pruning, snapshot-conflict abort and constraint
-    * semantics as the API DELETE. A non-translatable predicate fails
-    * analysis with Spark's standard cannot-delete error rather than
-    * silently deleting the wrong rows. `DELETE FROM t` with no WHERE
-    * arrives as AlwaysTrue and logically truncates the table. */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    versionAsOf.isEmpty && filters.forall(GraftFilters.translate(_).isDefined)
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    require(versionAsOf.isEmpty,
-      s"cannot delete from a time-travel relation (${name()})")
-    val cond = filters.flatMap(GraftFilters.translate)
-      .foldLeft(lit(true))(_ && _)
-    GraftTable(spark, path, hivePartitionCols(table.currentVersion))
-      .delete(cond)
-    ()
-  }
+    throw GraftReadRule.missing(name())
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SQLContext}
+import org.apache.spark.sql.{DataFrame, SaveMode, SQLContext}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -54,7 +54,7 @@ final class GraftDataSource extends RelationProvider
       val from = parameters.get("startingVersion").map(_.toLong).getOrElse(0L)
       val to = parameters.get("endingVersion").map(_.toLong)
         .getOrElse(t.currentVersion)
-      return GraftRelation(sqlContext, path, () => t.changes(from, to))
+      return GraftRelation(sqlContext, path, new PinnedFrame(() => t.changes(from, to)))
     }
     // timestampAsOf (ISO-8601 instant or epoch millis) resolves to the
     // latest version committed at or before it — Delta's TIMESTAMP AS OF
@@ -70,8 +70,8 @@ final class GraftDataSource extends RelationProvider
     // withRowIds (row tracking): the snapshot with the stable `_row_id`
     // column attached (file base + row position)
     if (parameters.get("withRowIds").exists(_.toBoolean))
-      GraftRelation(sqlContext, path, () => t.readWithRowIds(v))
-    else GraftRelation(sqlContext, path, () => t.readVersion(v))
+      GraftRelation(sqlContext, path, new PinnedFrame(() => t.readWithRowIds(v)))
+    else GraftRelation(sqlContext, path, new PinnedFrame(() => t.readVersion(v)))
   }
 
   // ---- streaming read: readStream.format("graft").load(path) -----------
@@ -581,39 +581,26 @@ final class GraftStreamSink(path: String, partitionColumns: Seq[String],
 
 /** What `format("graft")` and `USING graft` resolve to: a relation with
   * no scan of its own. [[GraftReadRule]] replaces it with the plan of
-  * `read()`, the pinned frame (a version, its change feed, or its rows
-  * with row ids); the version is pinned when the relation is made, so
-  * schema and rows come from one committed version. */
+  * the pinned frame (a version, its change feed, or its rows with row
+  * ids); the version is pinned when the relation is made, so schema and
+  * rows come from one committed version. */
 final case class GraftRelation(sqlContext: SQLContext, path: String,
-    read: () => DataFrame) extends BaseRelation {
-  override lazy val schema: StructType = read().schema
+    pinned: PinnedFrame) extends BaseRelation {
+  override def schema: StructType = pinned.schema
 }
 
-/** Source filters as Column predicates (None when a filter does not
-  * translate) and as SQL text: the bridges from the catalog table's
-  * SQL DELETE and static-partition INSERT OVERWRITE to the table's
-  * commits. */
-private[sources] object GraftFilters {
-  def translate(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === lit(v))
-    case GreaterThan(a, v) => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v) => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case In(a, vs) => Some(col(a).isInCollection(vs.toIndexedSeq))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case And(l, r) => for (cl <- translate(l); cr <- translate(r)) yield cl && cr
-    case Or(l, r) => for (cl <- translate(l); cr <- translate(r)) yield cl || cr
-    case Not(c) => translate(c).map(!_)
-    case StringStartsWith(a, v) => Some(col(a).startsWith(v))
-    case StringEndsWith(a, v) => Some(col(a).endsWith(v))
-    case StringContains(a, v) => Some(col(a).contains(v))
-    case _: AlwaysTrue => Some(lit(true))
-    case _: AlwaysFalse => Some(lit(false))
-    case _ => None
-  }
+/** A pinned version's frame, built once: its schema is the relation's
+  * schema, and the first read that resolves the relation plans it; any
+  * later read builds a fresh frame, so no two reads share attribute ids. */
+final class PinnedFrame(build: () => DataFrame) {
+  private val first = new java.util.concurrent.atomic.AtomicReference(build())
+  val schema: StructType = first.get.schema
+  def next(): DataFrame = Option(first.getAndSet(null)).getOrElse(build())
+}
 
+/** Source filters as SQL text: the bridge from the catalog table's
+  * static-partition INSERT OVERWRITE to the table's replaceWhere commit. */
+private[sources] object GraftFilters {
   /** Render a pushed filter as SQL text — the bridge from `INSERT
     * OVERWRITE … PARTITION (p = v)`'s static spec to the replaceWhere
     * commit. Unsupported shapes throw: replacing the WRONG files on a

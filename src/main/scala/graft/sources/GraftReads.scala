@@ -34,9 +34,9 @@ final class GraftReadRule extends Rule[LogicalPlan] {
   }
 
   private def resolveReads(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
-    case LogicalRelation(r: GraftRelation, output, _, false, _) => pinned(r.read(), output)
+    case LogicalRelation(r: GraftRelation, output, _, false, _) => pinned(r.pinned.next(), output)
     case r: DataSourceV2Relation if r.table.isInstanceOf[GraftV2Table] =>
-      pinned(r.table.asInstanceOf[GraftV2Table].frame, r.output)
+      pinned(r.table.asInstanceOf[GraftV2Table].frame(), r.output)
   }
 
   // a new frame per read: two reads of one relation share no attribute ids

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Structured-Streaming surface (SURVEY.md §7.5 — the reference is
   * batch-only; this is the streaming re-expression of its ingest+rollup).
@@ -18,31 +17,14 @@ import org.apache.spark.sql.types._
   */
 object Streaming {
 
-  /** events schema as stored, with `ts` matching the file's physical
-    * encoding (epoch-nanos long under nanosAsLong, or TIMESTAMP_NTZ for
-    * the micros encoding) — readStream needs the schema up front, so the
-    * batch reader's inference decides which variant this dir carries. */
-  private def eventsSchema(tsType: org.apache.spark.sql.types.DataType) =
-    StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", tsType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-
-  private def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    val tsType = spark.read.parquet(s"$dir/events.parquet")
-      .schema("ts").dataType
-    val raw = spark.readStream
-      .schema(eventsSchema(tsType))
+  /** The events file as a stream, `ts` normalized as the batch reader
+    * normalizes it. readStream needs the schema up front: it is the
+    * batch reader's, read from the footer with no Spark job. */
+  private def eventStream(spark: SparkSession, dir: String): DataFrame =
+    graft.tables.Tables.normalizedTs(spark.readStream
+      .schema(graft.tables.Tables.scan(spark, dir, "events").schema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    tsType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
-  }
+      .parquet(dir))
 
   private var counter = 0
   private def freshName(): String = synchronized { counter += 1; s"graft_stream_$counter" }

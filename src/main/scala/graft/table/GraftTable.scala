@@ -2692,10 +2692,12 @@ final class GraftTable private (
     * and row-local). */
   def delete(cond: Column, mergeOnRead: Boolean = false): Long = {
     val matches = coalesce(cond, lit(false))
-    val dvRead = dvOf(currentVersion)
+    val base = currentVersion
+    val dvRead = dvOf(base)
     val affected = affectedFiles(cond, dvRead)
     if (affected.isEmpty)
-      return commitRewrite("DELETE", Nil, Nil, Map("numFilesRewritten" -> "0"))
+      return commitRewrite("DELETE", Nil, Nil,
+        Map("numFilesRewritten" -> "0", "numDeletedRows" -> "0"))
     if (mergeOnRead) {
       // positions of newly deleted rows among LIVE rows (already-vectored
       // positions excluded by the dv-applied scan). The RLE compression
@@ -2744,9 +2746,14 @@ final class GraftTable private (
     }
     val added = appendDataFiles(toPhysicalStrict(
       readLive(affected, dvRead).filter(!matches)))
+    // rows in the rewritten files minus rows written back, both from the
+    // footer counts; absent when a rewritten file logged no count
+    val kept = added.map(_.stats.get("").collect { case ("rows", n, _) => n.toLong })
+    val deleted = liveRows(base, affected).filter(_ => kept.forall(_.isDefined))
+      .map(n => "numDeletedRows" -> (n - kept.flatten.sum).toString)
     commitRewrite("DELETE", affected, added, Map(
       "numFilesRewritten" -> affected.size.toString,
-      "numFilesAdded" -> added.size.toString), readDv = dvRead)
+      "numFilesAdded" -> added.size.toString) ++ deleted, readDv = dvRead)
   }
 
   /** REORG … APPLY (PURGE) parity: materialize deletion vectors by
@@ -3029,11 +3036,16 @@ final class GraftTable private (
           else when(col("source.__n") > 1,
             raise_error(concat(lit(GraftTable.MultiMatchTag), col("target.__path"))))
             .otherwise(lit(true))
-        val cond = tKeys.map(k => col(s"target.$k") === col(s"source.$k")).reduce(_ && _) && guard
+        val keyEq = tKeys.map(k => col(s"target.$k") === col(s"source.$k")).reduce(_ && _)
         distinctPaths(
-          if (notMatchedBySource.isEmpty) metaScan.join(keyCounts, cond, "left_semi")
-          else metaScan.join(keyCounts, cond, "left")
-            .filter(col("source.__n").isNotNull || nmbsApplies))
+          if (notMatchedBySource.isEmpty) metaScan.join(keyCounts, keyEq && guard, "left_semi")
+          // the guard filters the left join's rows: in its condition it
+          // would vanish with the join, which the optimizer drops (the
+          // counts are unique per key) when nothing above reads the
+          // source side, as under an unconditional NOT MATCHED BY SOURCE
+          // clause
+          else metaScan.join(keyCounts, keyEq, "left")
+            .filter(guard && (col("source.__n").isNotNull || nmbsApplies)))
       } else {
         // row-precise guard: with a residual a key count over-counts (the
         // residual can disqualify one of two key dups), so discovery

@@ -2,17 +2,37 @@ package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Readers for the driver-provided testdata tables (TESTDATA.md).
   *
-  * Each sf dir holds one parquet file per table. At 100 TB these would be
-  * partitioned datasets; `spark.read.parquet` on a directory works
-  * identically, so nothing here assumes single-file inputs.
+  * Each sf dir holds one parquet dataset per table: one file at the
+  * fixture scales, several files at the generated sf1/sf10 decades. Two
+  * things set these reads apart from a bare `spark.read.parquet`:
+  *  - the schema is read from the files' footers on the driver
+  *    ([[org.apache.spark.sql.graft.FooterSchema]], the same schema
+  *    Spark's inference gives under the session's conf) instead of by an
+  *    inference job per read;
+  *  - a scan Spark plans as exactly one split (its own `maxSplitBytes`
+  *    decision; every fixture table but sf0.1 `lineitem`) is marked as
+  *    one partition, so no exchange is planned above it for aggregates,
+  *    windows, sorts or joins. A multi-split scan is returned unchanged,
+  *    so a multi-file dataset reads exactly as `spark.read.parquet`
+  *    would read it.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The table's plain scan: footer schema, Spark's splits. */
+  def scan(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(org.apache.spark.sql.graft.FooterSchema(spark, path)).parquet(path)
+  }
+
+  /** The table's scan; one split reads as one partition (`coalesce(1)`
+    * reports `SinglePartition`, which every distribution accepts). */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val df = scan(spark, sfDir, name)
+    if (df.rdd.getNumPartitions == 1) df.coalesce(1) else df
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")
@@ -31,17 +51,18 @@ object Tables {
     *    integer `DIV 1000` to micros (epoch-ns ~1.7e18 exceeds double's
     *    exact range) — matches DuckDB's own ns→µs conversion.
     * The reader sets no session conf. */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = table(spark, dir, "events")
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizedTs(table(spark, dir, "events"))
+
+  /** `raw` with its `ts` normalized as [[events]] documents. */
+  def normalizedTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
+      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
       case _ => raw
     }
-  }
+
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 

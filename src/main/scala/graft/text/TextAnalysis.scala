@@ -348,7 +348,10 @@ object TextAnalysis {
   val CollocMinCo = 5
 
   def collocations(spark: SparkSession, dir: String): DataFrame = {
-    val arr = documents(spark, dir)
+    // the plain scan, not the one-partition read: the unigram census
+    // feeds both word joins, and only the exchange under it lets the
+    // two share one computation (a reused exchange)
+    val arr = scan(spark, dir, "documents")
       .select(split(lower(trim(col("text"))), "\\s+").as("a"))
     val toks = arr.select(explode(col("a")).as("word"))
       .filter(col("word") =!= "")
@@ -484,7 +487,9 @@ object TextAnalysis {
   val KnTopK = 50
 
   def ngramLmCounts(spark: SparkSession, dir: String): DataFrame = {
-    val arr = graft.tables.Tables.spread(documents(spark, dir), col("doc_id"), 256 * 1024)
+    // the plain scan, as in [[collocations]]: the trigram census feeds
+    // the two continuation censuses and the join, once via its exchange
+    val arr = graft.tables.Tables.spread(scan(spark, dir, "documents"), col("doc_id"), 256 * 1024)
       .select(split(lower(trim(col("text"))), "\\s+").as("a"))
       .filter(size(col("a")) >= 3)
     val tri = arr.select(explode(expr(

@@ -12,10 +12,11 @@ import org.apache.spark.sql.types.LongType
 import graft.sources.GraftV2Table
 import graft.table.GraftTable
 
-/** SQL `UPDATE` / `MERGE INTO` for graft tables — the Delta pattern: an
-  * analyzer rule rewrites the resolved `UpdateTable` / `MergeIntoTable`
-  * plans over a graft DSv2 relation into runnable commands that execute
-  * through [[GraftTable.update]] / [[GraftTable.mergeInto]], so SQL DML
+/** SQL `DELETE` / `UPDATE` / `MERGE INTO` for graft tables — the Delta
+  * pattern: an analyzer rule rewrites the resolved `DeleteFromTable` /
+  * `UpdateTable` / `MergeIntoTable` plans over a graft DSv2 relation into
+  * runnable commands that execute through [[GraftTable.delete]] /
+  * [[GraftTable.update]] / [[GraftTable.mergeInto]], so SQL DML
   * gets the same copy-on-write file pruning, constraint validation,
   * generated-column handling and commit-conflict semantics as the API.
   * (Stock Spark rejects these statements for DSv2 tables without
@@ -31,8 +32,8 @@ import graft.table.GraftTable
   * / DELETE — the merge condition may use differently-named keys plus
   * an arbitrary residual (at least one target=source equi conjunct is
   * required to drive file discovery), and WITH SCHEMA EVOLUTION unions
-  * new source columns into the target schema with NULL backfill.
-  * DELETE stays on the SupportsDelete path (S12).
+  * new source columns into the target schema with NULL backfill. A
+  * DELETE's WHERE clause is any predicate the API DELETE takes.
   */
 class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -57,6 +58,13 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
     })
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case d @ DeleteFromTable(target, condition)
+        if d.resolved && graftTable(target).isDefined =>
+      val t = graftTable(target).get
+      require(t.versionAsOf.isEmpty,
+        s"cannot DELETE from a time-travel relation (${t.name()})")
+      GraftDeleteCommand(t.path, unresolve(condition))
+
     case u @ UpdateTable(target, assignments, condition)
         if u.resolved && graftTable(target).isDefined =>
       val t = graftTable(target).get
@@ -233,6 +241,16 @@ private[graft] object GraftDml {
     t.changes(from, to)
       .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
+  }
+}
+
+case class GraftDeleteCommand(path: String, cond: Column) extends LeafRunnableCommand {
+  override val output: Seq[Attribute] = GraftDml.metricsOutput("num_affected_rows")
+
+  /** One row, Delta's: the rows the DELETE removed. */
+  override def run(session: SparkSession): Seq[Row] = {
+    val t = GraftDml.tableAt(session, path)
+    Seq(GraftDml.metricsRow(t.operationMetrics(t.delete(cond)), "numDeletedRows"))
   }
 }
 

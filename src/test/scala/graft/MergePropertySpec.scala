@@ -172,6 +172,17 @@ class MergePropertySpec extends SparkSpec {
     (ok: Prop) :| s"case $c\nmodel $expected\ngot $got\n$seen"
   }
 
+  test("two source rows on one target key raise under an unconditional NOT MATCHED BY SOURCE clause") {
+    // a generated case that once passed the guard: the discovery join it
+    // sat in was dropped, nothing above it reading the source side
+    val c = Case(Seq((Some(4), 1, 83), (Some(2), 0, 3), (None, 1, 2)),
+      Seq((Some(4), 1, 18), (Some(4), 1, 45), (Some(5), 0, 35)), resid = false,
+      Seq(Clause(0, Some(matchedConds.head))), Nil, Seq(Clause(1, None)))
+    assert(model(c) == Left("multiple-match"))
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(1), check(c))
+    assert(res.passed, res.toString)
+  }
+
   test("random MERGEs match the reference model: rows, change feed, metrics, multiple-match error") {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(40)
       .withWorkers(1), Prop.forAll(cases)(check))

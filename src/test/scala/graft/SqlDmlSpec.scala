@@ -8,7 +8,7 @@ import graft.ingest.BarSource
 import graft.table.GraftTable
 import graft.transform.Enrich
 
-/** SQL UPDATE / MERGE INTO on graft tables through the GraftDmlRule
+/** SQL DELETE / UPDATE / MERGE INTO on graft tables through the GraftDmlRule
   * analyzer extension (Delta's pattern) — verifies routing onto the
   * copy-on-write API paths, clause surface, and clear rejection of the
   * unsupported surface. The test session enables the extension via
@@ -53,6 +53,33 @@ class SqlDmlSpec extends SparkSpec {
     assert(t.read().agg(sum("volume")).collect().head.getLong(0) == before)
     // pre-update version stays time-travelable
     assert(t.readVersion(0).filter(col("close") > 900).count() == 0)
+  }
+
+  test("SQL DELETE with a predicate no source filter expresses matches the API DELETE") {
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    val li = graft.tables.Tables.lineitem(spark, sf)
+    val viaSql = GraftTable(spark, graft.GraftTmp.dir("dml_del_sql").toString, Nil)
+    val viaApi = GraftTable(spark, graft.GraftTmp.dir("dml_del_api").toString, Nil)
+    viaSql.write(li)
+    viaApi.write(li)
+    val n0 = viaSql.read().count()
+    val hit = li.filter(col("l_orderkey") % 89 === 0).count()
+    assert(hit > 0 && hit < n0)
+    val del = spark.sql(s"DELETE FROM graft.`${viaSql.path}` WHERE l_orderkey % 89 = 0")
+    assert(del.columns.toSeq == Seq("num_affected_rows"))
+    assert(del.collect().toSeq == Seq(Row(hit)))
+    val v = viaApi.delete(col("l_orderkey") % 89 === 0)
+    assert(viaApi.operationMetrics(v)("numDeletedRows") == hit.toString)
+    def rows(t: GraftTable) = t.read().collect().map(_.toString).sorted.toSeq
+    assert(viaSql.read().count() == n0 - hit)
+    assert(rows(viaSql) == rows(viaApi))
+    // a predicate that matches nothing affects no row; time travel is rejected
+    assert(spark.sql(s"DELETE FROM graft.`${viaSql.path}` WHERE l_orderkey % 89 = 0")
+      .collect().toSeq == Seq(Row(0L)))
+    intercept[Exception] {
+      spark.sql(s"DELETE FROM graft.`${viaSql.path}` VERSION AS OF 0 WHERE l_orderkey = 1")
+    }
+    assert(viaSql.readVersion(0).count() == n0)
   }
 
   test("SQL MERGE INTO: update + delete + insert clauses") {
